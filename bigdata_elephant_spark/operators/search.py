@@ -32,9 +32,10 @@ make float comparison stable across engines.
 
 from __future__ import annotations
 
-from collections import Counter
+import threading
+from collections import Counter, OrderedDict
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_elephant_spark.functions.text import tokenize_str
@@ -80,22 +81,11 @@ def search(
     q = vocab.join(F.broadcast(q_terms), "word", "inner").select(
         "word_id", "q_tf", "df"
     )
-
-    if scoring == "reference":
-        partial = (F.col("tf") / F.col("df")) * (F.col("q_tf") / F.col("df"))
-    elif scoring == "smooth":
-        if n_docs is None:
-            raise ValueError("scoring='smooth' needs n_docs (corpus size)")
-        idf = F.log((F.lit(float(n_docs) + 1.0)) / (F.col("df") + 1.0)) + 1.0
-        partial = (F.col("tf") * idf) * (F.col("q_tf") * idf)
-    else:
+    if scoring not in ("reference", "smooth"):
         raise ValueError(f"unknown scoring mode: {scoring}")
-
-    scores = (
-        postings.join(F.broadcast(q), "word_id")
-        .withColumn("partial", partial)
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("partial"), SCORE_DECIMALS).alias("score"))
+    scores = summed_scores(
+        postings.join(F.broadcast(q), "word_id"),
+        term_partial(scoring, n_docs),
     )
     # Faithful-diff mode: the reference's per-reducer counter uses
     # `count > pages` (Query.java:229-234, flaw F2) and emits K+1
@@ -108,6 +98,56 @@ def search(
     if doc_meta is not None:
         ranked = project_meta(ranked, doc_meta)
     return ranked
+
+
+def term_partial(
+    scoring: str,
+    n_docs: float | None = None,
+    avgdl: Column | None = None,
+    k1: float = 1.2,
+    b: float = 0.75,
+) -> Column:
+    """One matched posting row's contribution to its document's score
+    — the ONE definition of every scoring mode, shared by the inline
+    scorers (:func:`search`, :func:`bm25_search`,
+    :func:`bm25_search_batch`) and :class:`TextIndex`.
+
+    The row carries ``tf``, ``df`` and ``q_tf`` (and ``dl`` for
+    ``"bm25"``); ``avgdl`` defaults to the same-named column, and a
+    :class:`TextIndex` passes its driver scalar as a literal.
+    ``"bm25"`` is Okapi BM25: the classic
+    ``ln((N - df + 0.5) / (df + 0.5) + 1)`` idf times the saturating
+    (k1), length-normalized (b) term frequency, weighted by the
+    query-term multiplicity."""
+    tf, df, q_tf = F.col("tf"), F.col("df"), F.col("q_tf")
+    if scoring == "reference":
+        return (tf / df) * (q_tf / df)
+    if scoring not in ("smooth", "bm25"):
+        raise ValueError(f"unknown scoring mode: {scoring}")
+    if n_docs is None:
+        raise ValueError(f"scoring={scoring!r} needs n_docs (corpus size)")
+    if scoring == "smooth":
+        idf = F.log((F.lit(float(n_docs) + 1.0)) / (df + 1.0)) + 1.0
+        return (tf * idf) * (q_tf * idf)
+    avgdl = F.col("avgdl") if avgdl is None else avgdl
+    idf = F.log((F.lit(float(n_docs)) - df + 0.5) / (df + 0.5) + 1.0)
+    frac = (tf * (k1 + 1.0)) / (
+        tf + k1 * (1.0 - b + b * (F.col("dl") / avgdl))
+    )
+    return idf * frac * q_tf
+
+
+def summed_scores(
+    matched: DataFrame, partial: Column, keys: tuple[str, ...] = ("doc_id",)
+) -> DataFrame:
+    """``(*keys, score)``: the per-row partials summed per key and
+    rounded to ``SCORE_DECIMALS`` (stable float comparison across
+    engines)."""
+    return (
+        matched.withColumn("partial", partial)
+        .groupBy(*keys)
+        .agg(F.round(F.sum("partial"), SCORE_DECIMALS).alias("score"))
+    )
 
 
 def project_meta(
@@ -191,21 +231,13 @@ def bm25_search(
         "word_id", "q_tf", "df"
     )
     dl, n_docs, avgdl = _bm25_corpus_stats(postings, dl)
-    idf = F.log(
-        (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        + 1.0
-    )
-    frac = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf")
-        + k1 * (1.0 - b + b * (F.col("dl") / F.col("avgdl")))
-    )
     return (
-        postings.join(F.broadcast(q), "word_id")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(avgdl))
-        .withColumn("partial", idf * frac * F.col("q_tf"))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("partial"), SCORE_DECIMALS).alias("score"))
+        summed_scores(
+            postings.join(F.broadcast(q), "word_id")
+            .join(dl, "doc_id")
+            .crossJoin(F.broadcast(avgdl)),
+            term_partial("bm25", n_docs, k1=k1, b=b),
+        )
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
     )
@@ -271,8 +303,6 @@ def bm25_search_batch(
     At 100 TB the index is scanned once for the whole batch instead
     of once per query (the text-side analogue of ``knn_batch``).
     """
-    from pyspark.sql import Window
-
     q_terms = spark.createDataFrame(
         query_term_rows(queries),
         "query_id long, word string, q_tf double",
@@ -283,22 +313,24 @@ def bm25_search_batch(
         "query_id", "word_id", "q_tf", "df"
     )
     dl, n_docs, avgdl = _bm25_corpus_stats(postings, dl)
-    idf = F.log(
-        (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        + 1.0
+    return per_query_topk(
+        summed_scores(
+            postings.join(F.broadcast(q), "word_id")
+            .join(dl, "doc_id")
+            .crossJoin(F.broadcast(avgdl)),
+            term_partial("bm25", n_docs, k1=k1, b=b),
+            keys=("query_id", "doc_id"),
+        ),
+        k,
     )
-    frac = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf")
-        + k1 * (1.0 - b + b * (F.col("dl") / F.col("avgdl")))
-    )
-    scored = (
-        postings.join(F.broadcast(q), "word_id")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(avgdl))
-        .withColumn("partial", idf * frac * F.col("q_tf"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("partial"), SCORE_DECIMALS).alias("score"))
-    )
+
+
+def per_query_topk(scored: DataFrame, k: int) -> DataFrame:
+    """``(query_id, doc_id, score, rank)``: each query's top-k by score
+    (ties by ``doc_id``), as a ``row_number() <= k`` window that Spark
+    plans as ``WindowGroupLimit``."""
+    from pyspark.sql import Window
+
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
@@ -467,3 +499,259 @@ def more_like_this(
         .orderBy(F.desc("cos_sim"), F.asc("doc_id"))
         .limit(k)
     )
+
+
+# ------------------------------------------- session-scoped text index
+#
+# The staged CLI answers every query over the same saved artifacts,
+# yet an inline query re-derives everything per call: three artifact
+# opens (one schema-inference job each), a persisted doc-length
+# aggregate over the WHOLE postings table, and a metadata semi-join.
+# A TextIndex pays those once per index version and keeps them in the
+# session (the Shark keep-hot-state-resident design); each query then
+# touches only its own terms' postings and its own k metadata rows.
+
+# Open handles, least recently used first, keyed by the artifact
+# paths. Each holds one persisted doc-length table (doc-sized), so the
+# bound caps what a long-lived process keeps cached.
+TEXT_INDEX_LRU_MAX = 4
+_TEXT_INDEXES: OrderedDict[tuple, TextIndex] = OrderedDict()
+# guards the check-then-act on _TEXT_INDEXES across threads
+_TEXT_INDEXES_LOCK = threading.Lock()
+
+
+def _data_files(spark: SparkSession, path: str) -> tuple:
+    """``(path, size, mtime)`` of every data file under ``path``, read
+    through the Hadoop ``FileSystem`` (so any Hadoop-visible path
+    works, not only local ones), skipping ``_``/``.``-prefixed names
+    as Spark's own file index does (a JVM-side glob, so checksum and
+    marker files cost no round trip). A rebuild writes new part files
+    (fresh names, sizes and mtimes), so an unchanged listing means an
+    unchanged artifact. No Spark job."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    out, todo = [], [Path(path)]
+    while todo:
+        for st in fs.globStatus(Path(todo.pop(), "[!_.]*")) or ():
+            p = st.getPath()
+            if st.isDirectory():
+                todo.append(p)
+            else:
+                out.append((p.toString(), st.getLen(), st.getModificationTime()))
+    return tuple(sorted(out))
+
+
+def _sql_in(col: str, values) -> str:
+    """``col IN (...)`` over int or string literals as SQL text — one
+    expression to parse, where ``Column.isin`` costs a py4j round trip
+    per literal; ``false`` when ``values`` is empty."""
+    lits = [
+        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        if isinstance(v, str) else str(int(v))
+        for v in values
+    ]
+    return f"{col} IN ({', '.join(lits)})" if lits else "false"
+
+
+class TextIndex:
+    """Session-scoped handle over saved vocab/postings[/meta] artifacts.
+
+    Opening reads the three artifacts once and persists
+    :func:`doc_lengths` of the postings under the handle's own
+    lifecycle (not ``session._TRACKED_CACHES``); ``n_docs`` (docs with
+    at least one vocab token) and ``total_dl`` (Σdl) are driver
+    scalars from the same pass. A query then resolves its terms with
+    one pushed-down ``word IN (...)`` vocab collect, scores only the
+    ``word_id IN (...)`` postings with ``df``/``q_tf`` as literals
+    (joined to the cached doc lengths for BM25), collects the top-k
+    and fetches exactly those k metadata rows by id. Answers equal the
+    inline :func:`search` / :func:`bm25_search` /
+    :func:`bm25_search_batch` over the same frames: they share
+    :func:`term_partial` and :func:`summed_scores`.
+
+    Get one with :func:`open_text_index`, which revalidates it against
+    the artifacts' file listing on every call."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        vocab: str,
+        index: str,
+        meta: str | None,
+        files: tuple,
+    ):
+        from pyspark.storagelevel import StorageLevel
+
+        self.spark, self.index, self.files = spark, index, files
+        self.vocab = spark.read.parquet(vocab)
+        self.postings = spark.read.parquet(index)
+        self.meta = spark.read.parquet(meta) if meta else None
+        self.dl = doc_lengths(self.postings).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        row = self.dl.agg(
+            F.count("dl").alias("n"), F.sum("dl").alias("s")
+        ).first()
+        self.n_docs, self.total_dl = int(row["n"]), int(row["s"] or 0)
+        self._partials: dict[tuple, Column] = {}
+
+    def _matched(self, queries: dict[int, str], scoring: str, n_docs):
+        """``(matched, partial)`` for a probe set: one
+        ``(doc_id, word_id, tf, [dl,] query_id, q_tf, df)`` row per
+        (query, posting of one of its terms) and its score partial.
+        The terms resolve with ONE vocab collect; each term's
+        ``(query_id, q_tf, df)`` structs then ride in the plan as a
+        literal map keyed by ``word_id`` (no joined table, no broadcast
+        job). The IN-lists and the map are SQL text: built column by
+        column they cost hundreds of py4j round trips per query."""
+        rows = query_term_rows(queries)
+        words = sorted({w for _, w, _ in rows})
+        hits = {
+            r["word"]: (r["word_id"], r["df"])
+            for r in self.vocab.where(_sql_in("word", words))
+            .select("word", "word_id", "df")
+            .collect()
+        }
+        fan: dict = {}
+        for qid, w, q_tf in rows:
+            if w in hits:
+                wid, df = hits[w]
+                fan.setdefault(wid, []).append(
+                    f"named_struct('query_id', {int(qid)}L, "
+                    f"'q_tf', {q_tf!r}D, 'df', {int(df)}L)"
+                )
+        key_type = self.postings.schema["word_id"].dataType.simpleString()
+        terms = ", ".join(
+            f"CAST({w} AS {key_type}), array({', '.join(v)})"
+            for w, v in fan.items()
+        )
+        matched = self.postings.where(_sql_in("word_id", fan))
+        if scoring == "bm25":
+            # The cached doc lengths are a groupBy(doc_id) output, so
+            # already hash-partitioned by doc_id: a shuffled hash join
+            # built on the query's matched postings streams them in
+            # place and the score aggregate reuses that partitioning.
+            # A broadcast would re-ship the doc-sized table per query
+            # (one more job, and unbounded at corpus scale).
+            matched = matched.hint("shuffle_hash").join(self.dl, "doc_id")
+        matched = matched.select("*", F.inline(F.expr(
+            f"map({terms})[word_id]" if fan else
+            "CAST(NULL AS array<struct<query_id:bigint,q_tf:double,df:bigint>>)"
+        )))
+        # the partial only reads columns and handle scalars: build it
+        # once per handle (hundreds of py4j calls), reuse per query
+        key = (scoring, n_docs)
+        if key not in self._partials:
+            self._partials[key] = term_partial(
+                scoring,
+                self.n_docs if n_docs is None else n_docs,
+                # the same double as the inline sum(dl) / count(dl); an
+                # empty index has no postings to score (max: no 0 / 0)
+                avgdl=F.lit(float(self.total_dl) / float(max(self.n_docs, 1))),
+            )
+        return matched, self._partials[key]
+
+    def query(
+        self,
+        query: str,
+        k: int = 10,
+        scoring: str = "bm25",
+        n_docs: int | None = None,
+    ) -> DataFrame:
+        """Top-k for one query as a k-row local frame:
+        ``doc_id, score`` plus every metadata column when the handle
+        has metadata, in rank order (score desc, doc_id asc).
+        ``n_docs`` overrides the handle's N for ``"smooth"``."""
+        import pyarrow as pa
+
+        top = (
+            summed_scores(*self._matched({0: query}, scoring, n_docs))
+            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+            .limit(k)
+            .toArrow()
+        )
+        if self.meta is not None:
+            ids = top.column("doc_id").to_pylist()
+            meta = self.meta.where(_sql_in("doc_id", ids)).toArrow()
+            # left join in rank order, as project_meta: a doc with
+            # several metadata rows fans out, one with none gets nulls
+            where: dict = {}
+            for j, d in enumerate(meta.column("doc_id").to_pylist()):
+                where.setdefault(d, []).append(j)
+            left, right = [], []
+            for i, d in enumerate(ids):
+                for j in where.get(d, [None]):
+                    left.append(i)
+                    right.append(j)
+            extra = meta.drop_columns(["doc_id"]).take(
+                pa.array(right, pa.int64())
+            )
+            top = top.take(pa.array(left, pa.int64()))
+            for name, col in zip(extra.column_names, extra.columns):
+                top = top.append_column(name, col)
+        return self.spark.createDataFrame(top)
+
+    def query_batch(self, queries: dict[int, str], k: int = 10) -> DataFrame:
+        """BM25 for a probe set: ``(query_id, doc_id, score, rank)``
+        with per-query top-k, as :func:`bm25_search_batch`."""
+        matched, partial = self._matched(queries, "bm25", None)
+        return per_query_topk(
+            summed_scores(matched, partial, keys=("query_id", "doc_id")), k
+        )
+
+
+def _retire(keys) -> None:
+    """Drop these handles. Spark caches by plan, which for a file scan
+    means by path, so every handle over one index path shares ONE
+    cached doc-length table: a dropped handle's entry is unpersisted
+    only when no remaining handle reads the same index."""
+    for h in [_TEXT_INDEXES.pop(k) for k in keys]:
+        if all(o.index != h.index for o in _TEXT_INDEXES.values()):
+            h.dl.unpersist()
+
+
+def open_text_index(
+    spark: SparkSession,
+    vocab: str,
+    index: str,
+    meta: str | None = None,
+) -> TextIndex:
+    """The session's :class:`TextIndex` over these artifact paths.
+
+    Handles live in a module-level LRU (``TEXT_INDEX_LRU_MAX``) keyed
+    by ``(vocab, index, meta)``. Every call re-lists the artifacts'
+    data files (:func:`_data_files`, no Spark job) and compares them
+    with the handle's, so an artifact rebuilt at the same path is never
+    served stale. A changed index listing retires EVERY handle over
+    that index path first (they share one cache entry, see
+    :func:`_retire`), so no key can reopen onto the stale entry.
+    ``session.release_caches()`` closes every handle."""
+    key = (vocab, index, meta)
+    # (vocab, index[, meta]) listings
+    files = tuple(
+        _data_files(spark, p) for p in (vocab, index, meta) if p
+    )
+    with _TEXT_INDEXES_LOCK:
+        _retire([
+            k for k, o in _TEXT_INDEXES.items()
+            if o.index == index
+            and (o.spark is not spark or o.files[1] != files[1])
+        ])
+        h = _TEXT_INDEXES.get(key)
+        if h is not None and h.files != files:  # vocab or meta rebuilt
+            _retire([key])
+            h = None
+        if h is None:
+            h = TextIndex(spark, vocab, index, meta, files)
+        _TEXT_INDEXES[key] = h
+        _TEXT_INDEXES.move_to_end(key)
+        _retire(list(_TEXT_INDEXES)[:-TEXT_INDEX_LRU_MAX])
+        return h
+
+
+def close_text_indexes() -> None:
+    """Close every open :class:`TextIndex`, unpersisting its doc
+    lengths; the next :func:`open_text_index` reopens."""
+    with _TEXT_INDEXES_LOCK:
+        while _TEXT_INDEXES:
+            _TEXT_INDEXES.popitem()[1].dl.unpersist()

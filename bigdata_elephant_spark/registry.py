@@ -73,89 +73,62 @@ def resolve_oracle(spec: QuerySpec) -> str | None:
 # covered by the driver-faithful local gate (tests/test_oracle_parity
 # + tests/parity.py).
 GATE_PRIORITY = (
-    # ROUND-15 ROTATION (optimization round 2). Composition:
-    #   - the ENTIRE remaining r9 cohort (34 queries) — all at the
-    #     age-6 bound this round (the window MUST drain them or
-    #     gate_coverage --max-age 6 breaks at r16), including the r14
-    #     displaced trio (boilerplate_flags_relative, dedup_lsh_recall,
-    #     kmv_distinct_users) whose r15 drain the r14 window comment
-    #     promised (now also pinned by tests/test_gate_plan.py).
-    #   - 13 must-gates: the six r14 helper-changed queries the r14
-    #     verdict mandated (dedup_groups, dup_group_size_histogram,
-    #     table_diff_orders, quality_logit_filter, kn_perplexity [r9,
-    #     above], knn_ivfpq) plus this round's changed definitions
-    #     (BPE driver twin: bpe_merges/bpe_encode_sample/
-    #     bpe_fertility_by_source [r9, above] + bpe_subword_vocab;
-    #     ivf_topk_batch restructure: knn_ivf_batch +
-    #     ivf_recall_report; ivfpq LUT equi-join + manifest read:
-    #     knn_ivfpq, knn_ivfpq_indexed, knn_ivfpq_incremental;
-    #     concurrency_timeline single-scan explode; pagerank driver-
-    #     twin repr-rounding: pagerank_dupgraph — also the graph
-    #     family carrier; hll_distinct_users persist revert;
-    #     search_more_like_this corpus-side n_docs [r9, above]).
-    #     Two otherwise-ready optimizations were REVERTED because no
-    #     slot remained for their changed queries (knn_ivfpq_batch
-    #     LUT join, embedding_novelty_indexed probe LocalRelation —
-    #     see OPTIMIZATION_r15.md).
-    #   - 3 family carriers (oldest member of each otherwise-
-    #     uncovered family): events_range_join (temporal, r10),
-    #     events_stream_sessions (stateful, r11),
-    #     weighted_sample_orders (layout, r12).
-    #
-    # --- this round's changed definitions (must-gate) ---
-    "hll_distinct_users",
-    "bpe_subword_vocab",
-    "knn_ivf_batch",
-    "ivf_recall_report",
-    "knn_ivfpq",
-    "knn_ivfpq_indexed",
-    "knn_ivfpq_incremental",
-    "concurrency_timeline",
-    "pagerank_dupgraph",
-    # --- r14 helper-changed must-gates (r14 verdict item 2) ---
-    "dedup_groups",
-    "dup_group_size_histogram",
-    "table_diff_orders",
-    "quality_logit_filter",
-    # --- the full r9 cohort (mandatory age-bound drain) ---
-    "boilerplate_flags_relative",
-    "bpe_encode_sample",
-    "bpe_fertility_by_source",
-    "bpe_merges",
-    "dedup_lsh_recall",
-    "dsir_select_indexed",
-    "emb_stream_novelty",
-    "embedding_novelty",
-    "events_stream_enrich",
-    "gopher_ngram_filters",
-    "ivf_cell_histogram",
-    "kmv_distinct_users",
-    "kn_perplexity",
-    "media_features",
-    "minhash_est_error",
-    "novelty_threshold_sweep",
-    "postings_build",
-    "q11_important_parts",
-    "q19_disjunctive_revenue",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "search_batch_indexed",
-    "search_bm25",
-    "search_more_like_this",
-    "search_phrase",
-    "search_reference_indexed",
-    "search_reingest",
-    "search_smooth",
-    "top_customers",
-    "vocab_build",
-    "window_value_funcs",
-    # --- family carriers (oldest otherwise-uncovered member) ---
-    "events_range_join",
-    "events_stream_sessions",
-    "weighted_sample_orders",
+    # ROUND-16 ROTATION: exactly the `tools/gate_coverage.py --plan 50`
+    # proposal (oldest-first drain, families repaired) — the whole r10
+    # cohort (39 queries, at the age-6 bound next round), then the
+    # oldest r11 rows, the r12 stateful carrier docs_stream_curate and
+    # the r13 layout carrier zorder_orders_layout. Check with
+    # `tools/gate_coverage.py --assume-gated --max-age 6` (exit 0).
+    "activity_heatmap",
+    "anti_customers_no_orders",
+    "conditional_aggs_lineitem",
+    "cube_priority_status",
+    "date_parts_orders",
+    "dedup_lsh_edges",
+    "dedup_survivors",
+    "docs_stream_dedup_admit",
+    "emb_stream_gram",
+    "embedding_pca2",
+    "embedding_top_eigvec",
+    "events_hourly",
+    "events_json_extract",
+    "full_outer_nation_suppliers",
+    "gap_fill_hourly_values",
+    "gram_incremental",
+    "grouping_sets_revenue",
+    "incremental_dedup_edges",
+    "lsh_bucket_histogram",
+    "minhash_signatures",
+    "multimodal_bytes",
+    "pca_variance_explained",
+    "priority_revenue_share",
+    "profile_orders",
+    "q10_returned_items",
+    "q13_order_count_distribution",
+    "q18_large_orders",
+    "q5_region_revenue",
+    "rollup_returns",
+    "scalar_funcs_part",
+    "scalar_subquery_rich_customers",
+    "search_reference",
+    "semi_customers_open_orders",
+    "setop_common_nations",
+    "setop_nations_without_suppliers",
+    "text_stats",
+    "window_frames_orders",
+    "window_order_rank",
+    "window_running_sum",
+    "bloom_customer_probe",
+    "boilerplate_flags",
+    "bpe_pair_counts",
+    "cms_heavy_hitters",
+    "containment_pairs",
+    "dedup_simhash_pairs",
+    "doc_embedding_join",
+    "doc_fingerprints",
+    "dupgraph_triangles",
+    "docs_stream_curate",
+    "zorder_orders_layout",
 )
 
 

@@ -39,10 +39,16 @@ def persist_tracked(
 
 
 def release_caches() -> None:
-    """Unpersist every tracked intermediate (safe to call anytime:
-    an in-flight plan recomputes instead of failing)."""
+    """Unpersist every tracked intermediate and close every open text
+    index handle (``operators.search.open_text_index``), unpersisting
+    its doc lengths — safe to call anytime: an in-flight plan
+    recomputes instead of failing, and the next query reopens its
+    handle."""
+    from bigdata_elephant_spark.operators.search import close_text_indexes
+
     while _TRACKED_CACHES:
         _TRACKED_CACHES.pop().unpersist()
+    close_text_indexes()
 
 
 def get_spark(
