@@ -36,6 +36,14 @@ unpersists their doc lengths; the next query reopens. The cache lives
 in the process: called repeatedly through ``main(argv, spark=...)`` it
 pays the open once, while one process per query gains only the job
 cuts.
+
+``ann-query`` and ``ann-batch`` over a plain IVF index share one query
+core (``operators.similarity._ivf_indexed_search``): a single query is
+a batch of one through the same probe, candidate and scoring stages,
+and only the top-k step differs (``orderBy.limit`` for one query, a
+per-query rank window for more). ``ann-query`` still enters through
+``ivf_topk_indexed``, and ``ann-batch`` through
+``ivf_topk_batch_indexed``.
 """
 
 from __future__ import annotations
@@ -112,12 +120,27 @@ def _literal_vec_source(p, spark, args):
     Spark job per query); pre-manifest dirs fall back to one
     centroids footer read. Validation is best-effort: a missing or
     unreadable index path skips the check and surfaces as the query
-    function's usual error. ONE definition for every index kind."""
+    function's usual error. ONE definition for every index kind.
+
+    Components must be finite numbers, checked before any Spark
+    work: an empty component is a usage error, and a NaN or ±Inf
+    component would score every candidate ``nan`` — the same
+    finite-floats contract ``ann-build`` enforces on stored
+    vectors."""
+    import math
+
     from bigdata_elephant_spark.operators.similarity import (
         read_index_manifest,
     )
 
-    vec = [float(x) for x in args.vec.split(",")]
+    try:
+        vec = [float(x) for x in args.vec.split(",")]
+    except ValueError:
+        p.error(f"--vec {args.vec!r}: every comma-separated component "
+                "must be a number")
+    if not all(math.isfinite(x) for x in vec):
+        p.error(f"--vec {args.vec!r}: components must be finite "
+                "(no nan or inf)")
     dim = (read_index_manifest(args.index) or {}).get("dim")
     if dim is None:
         from pyspark.sql import functions as F
@@ -641,17 +664,24 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
             ivf_topk_batch_indexed,
         )
 
+        try:
+            ids = [int(s) for s in args.vec_ids.split(",") if s.strip()]
+        except ValueError as e:  # names the bad id
+            p.error(f"--vec-ids: {e}")
         _print_rows(
             ivf_topk_batch_indexed(
-                spark, args.index,
-                [int(s) for s in args.vec_ids.split(",") if s.strip()],
+                spark, args.index, ids,
                 n_probe=args.probe, k=args.k,
                 source=(
                     spark.read.parquet(args.embeddings)
                     if args.embeddings
                     else None
                 ),
-            ).orderBy(
+            )
+            # |Q| x k rows: one sorted partition, not a global sort
+            # (no range-partition sampling job)
+            .coalesce(1)
+            .sortWithinPartitions(
                 F.asc("q_id"), F.desc("cos_sim"), F.asc("vec_id")
             ),
             out,
@@ -705,9 +735,9 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
         import os
 
         from bigdata_elephant_spark.operators.similarity import (
+            _index_rows,
             _parquet_files_exist,
             _table_path,
-            _tombstones,
             index_kind,
             read_index_manifest,
         )
@@ -730,7 +760,7 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
             if _parquet_files_exist(cur)
             else 0
         )
-        tomb = _tombstones(spark, args.index)
+        tomb = _index_rows(spark, args.index, "tombstones")
         stats = [
             ("kind", kind),
             ("dim", str(man.get("dim", "?"))),

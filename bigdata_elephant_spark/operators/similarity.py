@@ -45,9 +45,12 @@ def _norm2(a: Column) -> Column:
     )
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Cosine similarity with deterministic fold order."""
-    return _dot(a, b) / (F.sqrt(_norm2(a)) * F.sqrt(_norm2(b)))
+def _cos6(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """The one cosine score: ``round(dot(a, b) / (na * nb), 6)``
+    with the deterministic fold order, over norms the caller has
+    already projected (and filtered to > 0: under ANSI mode a zero
+    divisor raises)."""
+    return F.round(_dot(a, b) / (na * nb), 6)
 
 
 # Vector-validity classes, most-broken-first (first match wins).
@@ -140,20 +143,20 @@ def _exact_rerank(
     zero-norm vector has no cosine — unrankable — and under ANSI
     mode the division would RAISE rather than null out; one dead-doc
     embedding must not abort a corpus-scale retrieval. A zero-norm
-    query yields the empty result, not an error; the oracles carry
+    query yields the empty result, not an error (``q`` is a
+    :func:`_query_vectors` frame, which drops it); the oracles carry
     the same norm>0 predicate."""
     return (
         candidates.select(
             id_col, vec_col, F.sqrt(_norm2(F.col(vec_col))).alias("_nrm")
         )
         .filter(F.col("_nrm") > 0)
-        .crossJoin(F.broadcast(q.filter(F.col("_qnrm") > 0)))
+        .crossJoin(F.broadcast(q))
         .select(
             id_col,
-            F.round(
-                _dot(F.col(vec_col), F.col("_qvec"))
-                / (F.col("_nrm") * F.col("_qnrm")),
-                6,
+            _cos6(
+                F.col(vec_col), F.col("_qvec"),
+                F.col("_nrm"), F.col("_qnrm"),
             ).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc(id_col))
@@ -161,18 +164,22 @@ def _exact_rerank(
     )
 
 
-def _query_frame(
-    embeddings: DataFrame,
-    query_vec_id: int,
+def _query_vectors(
+    src: DataFrame,
+    ids: list[int] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """One-row broadcastable ``(_qvec, _qnrm)`` frame for a stored
-    query vector."""
-    return embeddings.filter(F.col(id_col) == query_vec_id).select(
+    """Broadcastable ``(q_id, _qvec, _qnrm)`` query frame: the rows of
+    ``src`` whose id is in ``ids`` (every row when ``ids`` is None),
+    zero-norm queries dropped — a zero vector has no cosine."""
+    if ids is not None:
+        src = src.filter(F.col(id_col).isin(ids))
+    return src.select(
+        F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("_qvec"),
         F.sqrt(_norm2(F.col(vec_col))).alias("_qnrm"),
-    )
+    ).filter(F.col("_qnrm") > 0)
 
 
 def cosine_topk(
@@ -188,7 +195,7 @@ def cosine_topk(
     plans the sort+limit as TakeOrderedAndProject — per-partition
     heaps, no global sort shuffle.
     """
-    q = _query_frame(embeddings, query_vec_id, id_col, vec_col)
+    q = _query_vectors(embeddings, [query_vec_id], id_col, vec_col)
     return _exact_rerank(
         embeddings.filter(F.col(id_col) != query_vec_id),
         q, k, id_col, vec_col,
@@ -228,7 +235,7 @@ def mmr_topk(
     pick is ``λ·rel`` (empty-selection penalty = 0). ``lam=1``
     degenerates to plain relevance top-k (unit-tested)."""
     spark = embeddings.sparkSession
-    q = _query_frame(embeddings, query_vec_id, id_col, vec_col)
+    q = _query_vectors(embeddings, [query_vec_id], id_col, vec_col)
     cand = (
         embeddings.filter(F.col(id_col) != query_vec_id)
         .select(
@@ -239,16 +246,16 @@ def mmr_topk(
         # a zero-norm (or null) vector has no cosine — unrankable,
         # and under ANSI mode the division would RAISE rather than
         # null out; guard both sides of the divisor before dividing
-        # (a zero-norm query yields the empty result, not an error)
+        # (_query_vectors drops a zero-norm query: empty result, not
+        # an error)
         .filter(F.col("_nrm") > 0)
-        .crossJoin(F.broadcast(q.filter(F.col("_qnrm") > 0)))
+        .crossJoin(F.broadcast(q))
         .select(
             id_col,
             vec_col,
-            F.round(
-                _dot(F.col(vec_col), F.col("_qvec"))
-                / (F.col("_nrm") * F.col("_qnrm")),
-                6,
+            _cos6(
+                F.col(vec_col), F.col("_qvec"),
+                F.col("_nrm"), F.col("_qnrm"),
             ).alias("rel"),
         )
         .orderBy(F.desc("rel"), F.asc(id_col))
@@ -282,8 +289,10 @@ def mmr_topk(
             .select(
                 "ia",
                 "ib",
-                F.round(
-                    cosine_expr(F.col("va"), F.col("vb")), 6
+                _cos6(
+                    F.col("va"), F.col("vb"),
+                    F.sqrt(_norm2(F.col("va"))),
+                    F.sqrt(_norm2(F.col("vb"))),
                 ).alias("s"),
             )
             .collect()
@@ -411,10 +420,9 @@ def near_dup_pairs(
         pairs.select(
             F.col(f"{id_col}_a").alias("id_a"),
             F.col(f"{id_col}_b").alias("id_b"),
-            F.round(
-                _dot(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b"))
-                / (F.col("_nrm_a") * F.col("_nrm_b")),
-                6,
+            _cos6(
+                F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b"),
+                F.col("_nrm_a"), F.col("_nrm_b"),
             ).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
@@ -500,10 +508,8 @@ def semantic_dedup_pairs(
             "cell_id",
             "id_a",
             "id_b",
-            F.round(
-                _dot(F.col("_va"), F.col("_vb"))
-                / (F.col("_na") * F.col("_nb")),
-                6,
+            _cos6(
+                F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")
             ).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
@@ -714,27 +720,22 @@ def ivf_assign(
     )
 
 
-def ivf_topk(
+def _nearest_cells(
+    cents: DataFrame,
     embeddings: DataFrame,
     query_vec_id: int,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
 ) -> DataFrame:
-    """IVF approximate top-k: score only vectors in the ``n_probe``
-    cells nearest the query.
-
-    At 100 TB the embedding table is *partitioned by cell_id* so the
-    probe is partition pruning — the scan touches n_probe/n_cells of
-    the data; the per-cell lists are the inverted file. Here the cell
-    assignment is computed inline (the testdata is unpartitioned) but
-    the plan below the scan is identical.
-    """
-    cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    q = _query_frame(embeddings, query_vec_id, id_col, vec_col)
-    probe_cells = (
+    """Lazy ``(cell_id)`` frame of the ``n_probe`` cells nearest the
+    stored vector ``query_vec_id``: rounded squared L2, ``cell_id``
+    tie-break, planned as TakeOrderedAndProject — the inline probe,
+    evaluated inside the query's own plan."""
+    q = embeddings.filter(F.col(id_col) == query_vec_id).select(
+        F.col(vec_col).alias("_qvec")
+    )
+    return (
         cents.crossJoin(F.broadcast(q))
         .select(
             "cell_id",
@@ -744,38 +745,31 @@ def ivf_topk(
         .limit(n_probe)
         .select("cell_id")
     )
-    assigned = ivf_assign(embeddings, cents, id_col, vec_col)
-    candidates = embeddings.join(assigned, id_col).join(
-        F.broadcast(probe_cells), "cell_id"
-    )
-    return _exact_rerank(
-        candidates.filter(F.col(id_col) != query_vec_id),
-        q, k, id_col, vec_col,
-    )
 
 
-def _allowed_ids(allowed: DataFrame, id_col: str) -> DataFrame:
-    """Normalize a metadata-side filter result (any single-column
-    frame of ids) to a distinct ``id_col`` long column."""
-    return allowed.select(
-        allowed[allowed.columns[0]].cast("long").alias(id_col)
-    ).distinct()
-
-
-def ivf_topk_filtered(
+def ivf_topk(
     embeddings: DataFrame,
     query_vec_id: int,
-    allowed: DataFrame,
     n_cells: int = 16,
     n_probe: int = 4,
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    allowed: DataFrame | None = None,
 ) -> DataFrame:
-    """FILTERED ANN — a metadata predicate composed with vector
-    search (the vector-DB "filtered search" / FAISS ``IDSelector``
-    shape, and the curation question "nearest neighbors among docs
-    WHERE lang='en' AND quality > q"). ``allowed`` is a
+    """IVF approximate top-k: score only vectors in the ``n_probe``
+    cells nearest the query.
+
+    At 100 TB the embedding table is *partitioned by cell_id* so the
+    probe is partition pruning — the scan touches n_probe/n_cells of
+    the data; the per-cell lists are the inverted file. Here the cell
+    assignment is computed inline (the testdata is unpartitioned) but
+    the plan below the scan is identical.
+
+    ``allowed`` (optional) is FILTERED ANN — a metadata predicate
+    composed with vector search (the vector-DB "filtered search" /
+    FAISS ``IDSelector`` shape, and the curation question "nearest
+    neighbors among docs WHERE lang='en' AND quality > q"): a
     single-column frame of ids satisfying the predicate, evaluated
     on the METADATA side (e.g. ``documents.filter(...).select
     ("doc_id")``) — keeping the operator modality-agnostic and the
@@ -793,31 +787,32 @@ def ivf_topk_filtered(
     column) exactly as the vector-DB filtered-search playbook says.
     """
     cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    q = _query_frame(embeddings, query_vec_id, id_col, vec_col)
-    probe_cells = (
-        cents.crossJoin(F.broadcast(q))
-        .select(
-            "cell_id",
-            F.round(_l2sq(F.col("cvec"), F.col("_qvec")), 6).alias("d"),
-        )
-        .orderBy("d", "cell_id")
-        .limit(n_probe)
-        .select("cell_id")
+    probe = _nearest_cells(
+        cents, embeddings, query_vec_id, n_probe, id_col, vec_col
     )
+    q = _query_vectors(embeddings, [query_vec_id], id_col, vec_col)
     assigned = ivf_assign(embeddings, cents, id_col, vec_col)
-    candidates = (
-        embeddings.join(assigned, id_col)
-        .join(F.broadcast(probe_cells), "cell_id")
-        .join(
+    candidates = embeddings.join(assigned, id_col).join(
+        F.broadcast(probe), "cell_id"
+    )
+    if allowed is not None:
+        candidates = candidates.join(
             F.broadcast(_allowed_ids(allowed, id_col)),
             id_col,
             "left_semi",
         )
-    )
     return _exact_rerank(
         candidates.filter(F.col(id_col) != query_vec_id),
         q, k, id_col, vec_col,
     )
+
+
+def _allowed_ids(allowed: DataFrame, id_col: str) -> DataFrame:
+    """Normalize a metadata-side filter result (any single-column
+    frame of ids) to a distinct ``id_col`` long column."""
+    return allowed.select(
+        allowed[allowed.columns[0]].cast("long").alias(id_col)
+    ).distinct()
 
 
 def write_index_manifest(path: str, **fields) -> None:
@@ -912,54 +907,40 @@ def _parquet_files_exist(d: str) -> bool:
     )
 
 
-def _index_rows(spark, path: str, sub: str) -> DataFrame | None:
-    """The index's current ``sub`` generation, or ``None`` when it
-    holds no parquet files — the legitimate EMPTY-INDEX state a
+def _index_rows(
+    spark, path: str, sub: str, id_col: str | None = None
+) -> DataFrame | None:
+    """The index's current ``sub`` table (``vectors`` / ``codes`` /
+    ``tombstones``), resolved through the manifest's ``tables``
+    pointer, or ``None`` when that generation holds no parquet files.
+
+    ``None`` is a legitimate state, never an error: the EMPTY INDEX a
     compaction leaves behind when every row was tombstoned (a
-    partitioned write of zero rows emits no schema-bearing file, so
-    a blind ``read.parquet`` would die with UNABLE_TO_INFER_SCHEMA).
-    Readers translate ``None`` into an empty, correctly-typed
-    result; appends into the empty generation work unchanged (the
-    partitioned layout is re-established by the first delta)."""
+    partitioned write of zero rows emits no schema-bearing file, so a
+    blind ``read.parquet`` would die with UNABLE_TO_INFER_SCHEMA —
+    readers translate ``None`` into an empty, correctly-typed result;
+    appends into the empty generation work unchanged), and "no
+    deletes pending" for ``tombstones`` (no dir, or an interrupted
+    write). Anything else must READ: a swallowed read error would
+    silently resurface deleted rows (and let update_* re-append
+    tombstoned ids), so genuine faults (permissions, corrupt footer)
+    propagate loudly. The compaction that physically applies the
+    tombstones retires them for new readers in the same manifest
+    commit that publishes the rewritten rows; an in-flight reader
+    keeps the matched (rows, tombstones) pair it planned with.
+
+    With ``id_col`` the result is the LIVE rows — the ids deleted by
+    :func:`delete_from_index` since the last compaction are hidden,
+    for every indexed read. The tombstone set is bounded by
+    deletes-since-last-compaction — index METADATA under the
+    maintenance contract (compact when it grows), hence the explicit
+    broadcast: the anti-join is a map-side filter on the corpus
+    scan, never a shuffle of it."""
     d = _table_path(path, sub)
     if not _parquet_files_exist(d):
         return None
-    return spark.read.parquet(d)
-
-
-def _tombstones(spark, path: str) -> DataFrame | None:
-    """The index's PENDING tombstone set — ids deleted by
-    :func:`delete_from_index` since the last compaction — or ``None``
-    when no deletes are pending. Resolved through the manifest's
-    ``tables`` pointer like every other index table, so the
-    compaction that physically applied the tombstones atomically
-    retires them for new readers (the flipped pointer names a fresh,
-    still-empty generation) in the same manifest commit that
-    publishes the rewritten vectors; an in-flight reader keeps the
-    matched (vectors, tombstones) pair it planned with."""
-    import os as _os
-
-    d = _table_path(path, "tombstones")
-    # The only legitimate "no deletes pending" states are no dir and
-    # a dir with no parquet files (interrupted write). Anything else
-    # must READ — a swallowed read error here would silently
-    # resurface deleted rows (and let update_* re-append tombstoned
-    # ids), so genuine faults (permissions, corrupt footer) must
-    # propagate loudly instead of degrading to "no tombstones".
-    if not _parquet_files_exist(d):
-        return None
-    return spark.read.parquet(d)
-
-
-def _live_rows(
-    spark, path: str, df: DataFrame, id_col: str
-) -> DataFrame:
-    """Hide tombstoned ids from an indexed read. The tombstone set is
-    bounded by deletes-since-last-compaction — index METADATA under
-    the maintenance contract (compact when it grows), hence the
-    explicit broadcast: the anti-join is a map-side filter on the
-    corpus scan, never a shuffle of it."""
-    tomb = _tombstones(spark, path)
+    df = spark.read.parquet(d)
+    tomb = _index_rows(spark, path, "tombstones") if id_col else None
     if tomb is None:
         return df
     tcol = tomb.columns[0]
@@ -1007,7 +988,7 @@ def delete_from_index(
         tomb = spark.createDataFrame(
             [(int(i),) for i in ids], f"{id_col} long"
         ).distinct()
-    existing = _tombstones(spark, path)
+    existing = _index_rows(spark, path, "tombstones")
     if existing is not None:
         tcol = existing.columns[0]
         tomb = tomb.join(
@@ -1026,35 +1007,85 @@ def delete_from_index(
     )
 
 
-def _reject_tombstoned_delta(
-    spark, path: str, delta: DataFrame, id_col: str, op: str
-) -> None:
-    """Refuse an append whose ids intersect the pending tombstones
-    (see :func:`delete_from_index`). One delta-sized semi-join
-    against the broadcast tombstone set, and only when deletes are
-    actually pending — the common no-tombstone append pays a single
-    ``isdir``."""
-    tomb = _tombstones(spark, path)
-    if tomb is None:
-        return
-    tcol = tomb.columns[0]
-    hit = (
-        delta.join(
-            F.broadcast(tomb.select(F.col(tcol).alias(id_col))),
-            id_col,
-            "left_semi",
+def _checked_delta(
+    spark,
+    path: str,
+    man: dict,
+    delta: DataFrame,
+    id_col: str,
+    vec_col: str,
+    op: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The shared front of every append (``update_ivf_index`` /
+    ``update_ivfsq8_index`` / ``update_ivfpq_index``) →
+    ``(delta, centroids)``:
+
+    1. drop NULL / nonfinite / zero delta vectors — the day-2 twin of
+       :func:`_gate_build_input`, the classes that would silently
+       poison the frozen layout (a NaN vector NaN-sinks into some
+       cell and then passes every read-side ``norm > 0`` guard).
+       Wrong-dim is deliberately NOT dead-lettered: an id-targeted
+       delta with the wrong dimensionality is a caller bug worth
+       failing loudly (the FAISS ``add()`` d-assertion), not a
+       corpus-quality row to drop;
+    2. an in-plan dimension guard against the manifest's ``dim``
+       (pre-manifest dirs: the centroid width), validated in the same
+       pass that assigns cells (no extra delta scan): a wrong-length
+       vector would otherwise null-pad through zip_with, get a null
+       L2 to every centroid, and silently sink into one cell with
+       null scores forever;
+    3. refuse ids that intersect the pending tombstones (see
+       :func:`delete_from_index`): one delta-sized semi-join against
+       the broadcast tombstone set, and only when deletes are
+       actually pending — the common no-tombstone append pays a
+       single ``isdir``."""
+    delta, _ = quarantine_embeddings(delta, vec_col, expected_dim=None)
+    cents = spark.read.parquet(f"{path}/centroids")
+    dim = man.get("dim")
+    if dim is None:
+        row = cents.select(F.size("cvec").alias("d")).first()
+        dim = None if row is None else int(row["d"])
+    if dim is not None:
+        delta = delta.withColumn(
+            vec_col,
+            F.when(
+                F.size(vec_col) == dim, F.col(vec_col)
+            ).otherwise(
+                F.raise_error(
+                    F.concat(
+                        F.lit(f"{op}: delta vector id="),
+                        F.col(id_col).cast("string"),
+                        F.lit(" has "),
+                        F.size(vec_col).cast("string"),
+                        F.lit(
+                            f" components but the index stores "
+                            f"{dim}-dimensional vectors"
+                        ),
+                    )
+                )
+            ),
         )
-        .select(id_col)
-        .first()
-    )
-    if hit is not None:
-        raise ValueError(
-            f"{op}: delta id={hit[id_col]} is tombstoned by a "
-            f"pending delete_from_index at {path!r}; run "
-            "compact_index first to apply the delete, then re-add "
-            "(an append-only tombstone table cannot order a delete "
-            "against a later re-add of the same id)"
+    tomb = _index_rows(spark, path, "tombstones")
+    if tomb is not None:
+        tcol = tomb.columns[0]
+        hit = (
+            delta.join(
+                F.broadcast(tomb.select(F.col(tcol).alias(id_col))),
+                id_col,
+                "left_semi",
+            )
+            .select(id_col)
+            .first()
         )
+        if hit is not None:
+            raise ValueError(
+                f"{op}: delta id={hit[id_col]} is tombstoned by a "
+                f"pending delete_from_index at {path!r}; run "
+                "compact_index first to apply the delete, then re-add "
+                "(an append-only tombstone table cannot order a delete "
+                "against a later re-add of the same id)"
+            )
+    return delta, cents
 
 
 def _verify_pointer_reset(path: str, sub: str, op: str) -> None:
@@ -1160,22 +1191,6 @@ def _gate_build_input(
     return clean, dim
 
 
-def _gate_delta_input(delta: DataFrame, vec_col: str) -> DataFrame:
-    """Day-2 twin of :func:`_gate_build_input` for the append paths
-    (``update_ivf_index`` / ``update_ivfsq8_index`` /
-    ``update_ivfpq_index``): drop NULL / nonfinite / zero delta
-    vectors — the classes that would silently poison the frozen
-    layout (a NaN vector NaN-sinks into some cell and then passes
-    every read-side ``norm > 0`` guard). Wrong-dim is deliberately
-    NOT dead-lettered here: each update keeps its explicit in-plan
-    raise guard, because an id-targeted delta with the wrong
-    dimensionality is a caller bug worth failing loudly (the FAISS
-    ``add()`` d-assertion), not a corpus-quality row to drop.
-    Delta-sized column predicate, no extra pass."""
-    clean, _ = quarantine_embeddings(delta, vec_col, expected_dim=None)
-    return clean
-
-
 def build_ivf_index(
     embeddings: DataFrame,
     path: str,
@@ -1248,39 +1263,8 @@ def update_ivf_index(
             "IVFPQ add needs the delta PQ-encoded into codes/, "
             "which is a rebuild"
         )
-    delta = _gate_delta_input(delta, vec_col)
-    cents = spark.read.parquet(f"{path}/centroids")
-    dim = man.get("dim")
-    if dim is None:
-        row = cents.select(F.size("cvec").alias("d")).first()
-        dim = None if row is None else int(row["d"])
-    if dim is not None:
-        # In-plan dimension guard, validated in the same pass that
-        # assigns cells (no extra delta scan): a wrong-length vector
-        # would otherwise null-pad through zip_with, get a null L2
-        # to every centroid, and silently sink into one cell with
-        # null scores forever. FAISS add() asserts d; so do we.
-        delta = delta.withColumn(
-            vec_col,
-            F.when(
-                F.size(vec_col) == dim, F.col(vec_col)
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("update_ivf_index: delta vector id="),
-                        F.col(id_col).cast("string"),
-                        F.lit(" has "),
-                        F.size(vec_col).cast("string"),
-                        F.lit(
-                            f" components but the index stores "
-                            f"{dim}-dimensional vectors"
-                        ),
-                    )
-                )
-            ),
-        )
-    _reject_tombstoned_delta(
-        spark, path, delta, id_col, "update_ivf_index"
+    delta, cents = _checked_delta(
+        spark, path, man, delta, id_col, vec_col, "update_ivf_index"
     )
     assigned = ivf_assign(delta, cents, id_col, vec_col)
     (
@@ -1352,7 +1336,7 @@ def compact_index(spark, path: str) -> None:
         # and permanently refuse re-adding those ids (the ValueError
         # in update_* prescribes "run compact_index first", which
         # must therefore work here).
-        if _tombstones(spark, path) is not None:
+        if _index_rows(spark, path, "tombstones") is not None:
             tcur = (
                 tables.get("tombstones", "tombstones")
                 if isinstance(tables, dict)
@@ -1386,7 +1370,7 @@ def compact_index(spark, path: str) -> None:
     # see a half-applied state. In-flight readers keep their
     # matched (rows, tombstones) pair; both retiring dirs are
     # retained one generation.
-    tomb = _tombstones(spark, path)
+    tomb = _index_rows(spark, path, "tombstones")
     tcur = (
         tables.get("tombstones", "tombstones")
         if isinstance(tables, dict)
@@ -1427,46 +1411,73 @@ def compact_index(spark, path: str) -> None:
         _expire_versions(path, "tombstones", keep=(tcur,))
 
 
-def _probe_cell_ids(
-    cents: DataFrame, q: DataFrame, n_probe: int
-) -> list:
-    """The ``n_probe`` cell ids nearest the query — index METADATA
-    (ints collected off the broadcast centroid table) so the
-    candidate scan can filter ``cell_id IN (...)`` as STATIC
-    partition pruning. ONE definition pins the probe contract
-    (rounded L2, cell_id tie-break) across every indexed layout;
-    a tie-break fix applied here cannot diverge the layouts from
-    their shared oracles. ``q`` is a 1-row frame with ``_qvec``."""
-    return [
-        r["cell_id"]
-        for r in (
-            cents.crossJoin(F.broadcast(q))
-            .select(
-                "cell_id",
-                F.round(
-                    _l2sq(F.col("cvec"), F.col("_qvec")), 6
-                ).alias("d"),
-            )
-            .orderBy("d", "cell_id")
-            .limit(n_probe)
-            .collect()
+def _probe_cells(cents: DataFrame, q: DataFrame, n_probe: int) -> dict:
+    """The probe stage shared by every indexed layout →
+    ``{cell_id: [q_id, ...]}``: each query's ``n_probe`` nearest
+    cells. Spark computes the ``|Q| x n_cells`` rounded distances
+    (``round(_l2sq, 6)`` — the driver never re-implements Spark's
+    rounding); the driver then ranks each query's rows by
+    ``(d, cell_id)`` in Spark's ascending order (nulls first, NaN
+    last). ONE definition pins the probe contract (rounded L2,
+    cell_id tie-break) across the IVF, IVF-PQ and IVF,SQ8 layouts
+    and their shared oracles. The rows are index METADATA (the
+    centroid table is n_cells rows), and the collected cells become
+    a STATIC partition filter on the cell_id layout. ``q`` is a
+    :func:`_query_vectors` frame; empty when it has no rows."""
+    rows = (
+        cents.crossJoin(F.broadcast(q.select("q_id", "_qvec")))
+        .select(
+            "q_id",
+            "cell_id",
+            F.round(_l2sq(F.col("cvec"), F.col("_qvec")), 6).alias("d"),
         )
-    ]
+        .collect()
+    )
+
+    def spark_asc(r):
+        d = r["d"]
+        nan = d is not None and math.isnan(d)
+        return (d is not None, nan, 0.0 if d is None or nan else d,
+                r["cell_id"])
+
+    per_query: dict = {}
+    for r in sorted(rows, key=spark_asc):
+        per_query.setdefault(r["q_id"], []).append(r["cell_id"])
+    cells: dict = {}
+    for qid in sorted(per_query):
+        for c in per_query[qid][:n_probe]:
+            cells.setdefault(c, []).append(qid)
+    return cells
 
 
-def _pruned_candidates(
+def _probe_candidates(
     rows: DataFrame,
-    probe_ids: list,
-    query_vec_id: int,
+    cells: dict,
     id_col: str,
     allowed: DataFrame | None,
 ) -> DataFrame:
-    """Shared candidate restriction for the indexed layouts: prune to
-    the probed cells, drop the query row, compose the optional
-    filtered-search id set as a broadcast semi-join ON the pruned
-    scan."""
-    cand = rows.filter(F.col("cell_id").isin(probe_ids)).filter(
-        F.col(id_col) != query_vec_id
+    """The candidate stage shared by every indexed layout: ``rows``
+    (a cell_id-partitioned index table) pruned to the probed cells by
+    a static ``cell_id IN (...)`` filter, each row fanned out as
+    ``q_id`` to the queries probing its cell through a literal SQL
+    ``map(cell_id -> array(q_id))`` and ``explode`` (no join, no
+    extra job), the self-match dropped, and the optional
+    filtered-search id set applied as a broadcast semi-join ON the
+    pruned scan. ``cells`` is a non-empty :func:`_probe_cells` map.
+    The map and the IN-list are SQL text: one py4j call each, however
+    many cells or queries."""
+    ids = sorted(cells)
+    fan = ", ".join(
+        f"{int(c)}L, array({', '.join(f'{int(i)}L' for i in cells[c])})"
+        for c in ids
+    )
+    cand = (
+        rows.filter(f"cell_id IN ({', '.join(str(int(c)) for c in ids)})")
+        .withColumn(
+            "q_id",
+            F.explode(F.expr(f"map({fan})[CAST(cell_id AS BIGINT)]")),
+        )
+        .filter(F.col(id_col) != F.col("q_id"))
     )
     if allowed is not None:
         cand = cand.join(
@@ -1475,6 +1486,80 @@ def _pruned_candidates(
             "left_semi",
         )
     return cand
+
+
+def _ivf_indexed_search(
+    spark,
+    index_path: str,
+    query_ids: list[int],
+    source: DataFrame | None,
+    n_probe: int,
+    k: int,
+    allowed: DataFrame | None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The one IVF query core over a :func:`build_ivf_index` layout →
+    ``(q_id, vec_id, cos_sim)`` top-k per query, in four stages:
+
+    1. query frame — :func:`_query_vectors` over ``source`` (the base
+       table or the caller's own vectors; the index's live rows when
+       None), zero-norm queries dropped;
+    2. probe — :func:`_probe_cells`, the driver-ranked probe map;
+    3. candidates — :func:`_probe_candidates`: one statically
+       partition-pruned scan of the probed cells' vectors, each
+       scored only for the queries probing its cell;
+    4. score and top-k — the one cosine (:func:`_cos6`), then
+       ``orderBy.limit(k)`` (TakeOrderedAndProject) when the batch
+       holds exactly one query, else the ``row_number() <= k``
+       window (``WindowGroupLimit`` map-side heaps). The input size
+       picks the branch; both rank by (rounded cosine desc, id).
+
+    Tombstoned ids are hidden from the candidates (and from the
+    query frame when it comes from the index). Empty cases — an
+    all-tombstoned compacted index, zero-norm or absent queries —
+    return the typed empty frame without building a probe map."""
+    from pyspark.sql import Window
+
+    # centroids first: a bogus/missing index path must surface as
+    # the read error, not be mistaken for the (legitimate) empty
+    # generation a delete-everything compaction leaves behind
+    cents = spark.read.parquet(f"{index_path}/centroids")
+    vecs = _index_rows(spark, index_path, "vectors", id_col)
+    empty = f"q_id long, {id_col} long, cos_sim double"
+    if vecs is None:  # every row tombstoned + compacted: empty index
+        return spark.createDataFrame([], empty)
+    q = _query_vectors(
+        source if source is not None else vecs, query_ids, id_col, vec_col
+    )
+    cells = _probe_cells(cents, q, n_probe)
+    if not cells:  # zero-norm or absent queries: no probe map
+        return spark.createDataFrame([], empty)
+    vecs = vecs.withColumn("_nrm", F.sqrt(_norm2(F.col(vec_col))))
+    scored = (
+        _probe_candidates(
+            vecs.filter(F.col("_nrm") > 0), cells, id_col, allowed
+        )
+        .join(F.broadcast(q), "q_id")
+        .select(
+            "q_id",
+            id_col,
+            _cos6(
+                F.col(vec_col), F.col("_qvec"),
+                F.col("_nrm"), F.col("_qnrm"),
+            ).alias("cos_sim"),
+        )
+    )
+    if len({i for qs in cells.values() for i in qs}) == 1:
+        return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    w = Window.partitionBy("q_id").orderBy(
+        F.desc("cos_sim"), F.asc(id_col)
+    )
+    return (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn")
+    )
 
 
 def ivf_topk_indexed(
@@ -1488,43 +1573,21 @@ def ivf_topk_indexed(
     source: DataFrame | None = None,
     allowed: DataFrame | None = None,
 ) -> DataFrame:
-    """Read-side IVF top-k over a :func:`build_ivf_index` layout.
-
-    ``allowed`` (optional) composes a metadata predicate with the
-    probe — :func:`ivf_topk_filtered` semantics on the materialized
-    layout: the semi-join lands ON the statically pruned scan, so
-    filtered search still touches only the probed partitions.
-
-    The query vector comes from ``source`` (the base table — at scale
-    a point lookup / the caller's own vector), never from a scan of
-    the index. Probe-cell selection collects exactly ``n_probe`` cell
-    ids (index *metadata*, same scale class as the broadcast centroid
-    table); the candidate scan then filters ``cell_id IN probe`` —
-    static partition pruning on the index layout.
-
-    Scoring is identical to :func:`ivf_topk`, so results match the
-    inline variant row-for-row (equivalence-tested).
-    """
-    # centroids first: a bogus/missing index path must surface as
-    # the read error, not be mistaken for the (legitimate) empty
-    # generation a delete-everything compaction leaves behind
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    raw = _index_rows(spark, index_path, "vectors")
-    if raw is None:  # every row tombstoned + compacted: empty index
-        return spark.createDataFrame(
-            [], f"{id_col} long, cos_sim double"
-        )
-    vecs = _live_rows(spark, index_path, raw, id_col)
-    src = source if source is not None else vecs
-    q = src.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("_qvec"),
-        F.sqrt(_norm2(F.col(vec_col))).alias("_qnrm"),
-    )
-    probe = _probe_cell_ids(cents, q, n_probe)
-    candidates = _pruned_candidates(
-        vecs, probe, query_vec_id, id_col, allowed
-    )
-    return _exact_rerank(candidates, q, k, id_col, vec_col)
+    """Read-side IVF top-k over a :func:`build_ivf_index` layout →
+    ``(vec_id, cos_sim)``: the batch of one through
+    :func:`_ivf_indexed_search`, the same code that answers
+    :func:`ivf_topk_batch_indexed`. The query vector comes from
+    ``source`` (the base table — at scale a point lookup / the
+    caller's own vector), never from a scan of the index unless
+    ``source`` is None. ``allowed`` composes a metadata predicate
+    with the probe (:func:`ivf_topk`'s filtered-search semantics):
+    the semi-join lands ON the statically pruned scan, so filtered
+    search still touches only the probed partitions. Results match
+    the inline :func:`ivf_topk` row-for-row (equivalence-tested)."""
+    return _ivf_indexed_search(
+        spark, index_path, [query_vec_id], source, n_probe, k, allowed,
+        id_col, vec_col,
+    ).drop("q_id")
 
 
 def ivf_topk_batch_indexed(
@@ -1537,84 +1600,17 @@ def ivf_topk_batch_indexed(
     vec_col: str = "embedding",
     source: DataFrame | None = None,
 ) -> DataFrame:
-    """Batch IVF top-k over a :func:`build_ivf_index` layout — the
-    high-QPS shape (:func:`ivf_topk_batch`: one plan for the whole
-    probe set) on the amortized layout (:func:`ivf_topk_indexed`:
-    cell assignment persisted, probes prune partitions).
-
-    Probe selection mirrors the inline batch form (per-query rank
-    window over the |Q| x n_cells distance table — metadata-sized,
-    broadcast); the UNION of every query's probe cells is collected
-    driver-side (<= n_cells ids, index metadata) and becomes one
-    static partition filter on the cell_id-partitioned vectors, so
-    the whole batch costs a single pruned scan. Each candidate is
-    then scored only for the queries probing its cell (broadcast
-    equi-join), per-query top-k via the ``row_number() <= k`` window
-    (plans as ``WindowGroupLimit``). Results match
-    :func:`ivf_topk_batch` row-for-row when the index was built with
-    the same ``n_cells`` (equivalence-tested; shares its oracle)."""
-    from pyspark.sql import Window
-
-    # centroids first: see ivf_topk_indexed (missing path must raise)
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    raw = _index_rows(spark, index_path, "vectors")
-    if raw is None:  # every row tombstoned + compacted: empty index
-        return spark.createDataFrame(
-            [], f"q_id long, {id_col} long, cos_sim double"
-        )
-    vecs = _live_rows(spark, index_path, raw, id_col)
-    src = source if source is not None else vecs
-    q = src.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("_qvec"),
-        F.sqrt(_norm2(F.col(vec_col))).alias("_qnrm"),
-    ).filter(F.col("_qnrm") > 0)
-    w_p = Window.partitionBy("q_id").orderBy(
-        F.col("d").asc(), F.col("cell_id").asc()
-    )
-    probes = (
-        cents.crossJoin(F.broadcast(q))
-        .select(
-            "q_id",
-            "cell_id",
-            F.round(_l2sq(F.col("cvec"), F.col("_qvec")), 6).alias(
-                "d"
-            ),
-        )
-        .withColumn("_rn", F.row_number().over(w_p))
-        .filter(F.col("_rn") <= n_probe)
-        .select("q_id", "cell_id")
-    )
-    cell_union = [
-        r["cell_id"]
-        for r in probes.select("cell_id").distinct().collect()
-    ]
-    candidates = (
-        vecs.filter(F.col("cell_id").isin(cell_union))
-        .withColumn("_nrm", F.sqrt(_norm2(F.col(vec_col))))
-        # zero-norm guard on the data side (_exact_rerank contract);
-        # norm projected once, reused by the score
-        .filter(F.col("_nrm") > 0)
-        .join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(q), "q_id")
-        .filter(F.col(id_col) != F.col("q_id"))
-    )
-    scored = candidates.select(
-        "q_id",
-        id_col,
-        F.round(
-            _dot(F.col(vec_col), F.col("_qvec"))
-            / (F.col("_nrm") * F.col("_qnrm")),
-            6,
-        ).alias("cos_sim"),
-    )
-    w_k = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w_k))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
+    """Batch IVF top-k over a :func:`build_ivf_index` layout →
+    ``(q_id, vec_id, cos_sim)`` — the high-QPS shape: the union of
+    every query's probe cells is ONE static partition filter, so the
+    whole batch costs a single pruned scan (see
+    :func:`_ivf_indexed_search`, which also answers the single-query
+    :func:`ivf_topk_indexed`). Results match :func:`ivf_topk_batch`
+    row-for-row when the index was built with the same ``n_cells``
+    (equivalence-tested; shares its oracle)."""
+    return _ivf_indexed_search(
+        spark, index_path, query_ids, source, n_probe, k, None,
+        id_col, vec_col,
     )
 
 
@@ -1650,17 +1646,6 @@ def cell_mean_centroids(
     )
 
 
-def _centroids_from_long(cents_long: DataFrame) -> DataFrame:
-    """(cell_id, d, c) long format -> (cell_id, cvec array) for the
-    next assignment round (array rebuilt in dimension order)."""
-    return cents_long.groupBy("cell_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "c"))),
-            lambda s: s.getField("c"),
-        ).alias("cvec")
-    )
-
-
 def kmeans(
     embeddings: DataFrame,
     n_cells: int = 16,
@@ -1689,7 +1674,14 @@ def kmeans(
         out = cell_mean_centroids(
             embeddings, assigned, id_col, vec_col
         ).localCheckpoint()
-        cents = _centroids_from_long(out)
+        # long (cell_id, d, c) -> (cell_id, cvec) for the next
+        # assignment round, the array rebuilt in dimension order
+        cents = out.groupBy("cell_id").agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("d", "c"))),
+                lambda s: s.getField("c"),
+            ).alias("cvec")
+        )
     return out
 
 
@@ -2058,7 +2050,7 @@ def pq_topk(
         .limit(shortlist)
         .select(id_col)
     )
-    q = _query_frame(embeddings, query_vec_id, id_col, vec_col)
+    q = _query_vectors(embeddings, [query_vec_id], id_col, vec_col)
     return _exact_rerank(
         embeddings.join(short, id_col), q, k, id_col, vec_col
     )
@@ -2178,13 +2170,12 @@ def _sq8_score_tail(
         .select(id_col, _sq8_recon(F.col("codes"), st).alias("_recon"))
         .withColumn("_nrm", F.sqrt(_norm2(F.col("_recon"))))
         .filter(F.col("_nrm") > 0)
-        .crossJoin(F.broadcast(q.filter(F.col("_qnrm") > 0)))
+        .crossJoin(F.broadcast(q))
         .select(
             id_col,
-            F.round(
-                _dot(F.col("_recon"), F.col("_qvec"))
-                / (F.col("_nrm") * F.col("_qnrm")),
-                6,
+            _cos6(
+                F.col("_recon"), F.col("_qvec"),
+                F.col("_nrm"), F.col("_qnrm"),
             ).alias("sq8_sim"),
         )
         .orderBy(F.desc("sq8_sim"), F.asc(id_col))
@@ -2213,7 +2204,7 @@ def sq8_topk(
         )
     stats = sq8_stats(embeddings, dim, vec_col)
     codes = sq8_encode(embeddings, stats, id_col, vec_col)
-    q = _query_frame(embeddings, query_vec_id, id_col, vec_col)
+    q = _query_vectors(embeddings, [query_vec_id], id_col, vec_col)
     return _sq8_score_tail(
         codes.filter(F.col(id_col) != query_vec_id), stats, q, k, id_col
     )
@@ -2242,23 +2233,16 @@ def ivf_sq8_topk(
             id_col, F.lit(0.0).alias("sq8_sim")
         )
     cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    q = _query_frame(embeddings, query_vec_id, id_col, vec_col)
-    probe_cells = (
-        cents.crossJoin(F.broadcast(q))
-        .select(
-            "cell_id",
-            F.round(_l2sq(F.col("cvec"), F.col("_qvec")), 6).alias("d"),
-        )
-        .orderBy("d", "cell_id")
-        .limit(n_probe)
-        .select("cell_id")
+    probe = _nearest_cells(
+        cents, embeddings, query_vec_id, n_probe, id_col, vec_col
     )
+    q = _query_vectors(embeddings, [query_vec_id], id_col, vec_col)
     assigned = ivf_assign(embeddings, cents, id_col, vec_col)
     stats = sq8_stats(embeddings, dim, vec_col)
     codes = sq8_encode(embeddings, stats, id_col, vec_col)
     candidates = (
         codes.join(assigned, id_col)
-        .join(F.broadcast(probe_cells), "cell_id")
+        .join(F.broadcast(probe), "cell_id")
         .filter(F.col(id_col) != query_vec_id)
     )
     return _sq8_score_tail(candidates, stats, q, k, id_col)
@@ -2297,11 +2281,7 @@ def sq8_topk_batch(
         .withColumn("_nrm", F.sqrt(_norm2(F.col("_rv"))))
         .filter(F.col("_nrm") > 0)
     )
-    q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("_qvec"),
-        F.sqrt(_norm2(F.col(vec_col))).alias("_qnrm"),
-    ).filter(F.col("_qnrm") > 0)
+    q = _query_vectors(embeddings, query_ids, id_col, vec_col)
     wtop = Window.partitionBy("q_id").orderBy(
         F.desc("sq8_sim"), F.asc(id_col)
     )
@@ -2311,10 +2291,9 @@ def sq8_topk_batch(
         .select(
             "q_id",
             id_col,
-            F.round(
-                _dot(F.col("_rv"), F.col("_qvec"))
-                / (F.col("_nrm") * F.col("_qnrm")),
-                6,
+            _cos6(
+                F.col("_rv"), F.col("_qvec"),
+                F.col("_nrm"), F.col("_qnrm"),
             ).alias("sq8_sim"),
         )
         .withColumn("_r", F.row_number().over(wtop))
@@ -2467,8 +2446,9 @@ def update_ivfsq8_index(
             "update_ivfsq8_index appends SQ8 codes — use "
             "update_ivf_index / update_ivfpq_index for those layouts"
         )
-    delta = _gate_delta_input(delta, vec_col)
-    cents = spark.read.parquet(f"{path}/centroids")
+    delta, cents = _checked_delta(
+        spark, path, man, delta, id_col, vec_col, "update_ivfsq8_index"
+    )
     stats = spark.read.parquet(f"{path}/sq8_stats")
     if "vmax" not in stats.columns:
         # pre-vmax stats artifact: reconstruct the trained maxima.
@@ -2485,36 +2465,6 @@ def update_ivfsq8_index(
                 lambda mn, st: mn + st * F.lit(255.0),
             ),
         )
-    dim = man.get("dim")
-    if dim is None:
-        row = cents.select(F.size("cvec").alias("d")).first()
-        dim = None if row is None else int(row["d"])
-    if dim is not None:
-        # same in-plan dimension guard as update_ivf_index
-        delta = delta.withColumn(
-            vec_col,
-            F.when(
-                F.size(vec_col) == dim, F.col(vec_col)
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "update_ivfsq8_index: delta vector id="
-                        ),
-                        F.col(id_col).cast("string"),
-                        F.lit(" has "),
-                        F.size(vec_col).cast("string"),
-                        F.lit(
-                            f" components but the index stores "
-                            f"{dim}-dimensional vectors"
-                        ),
-                    )
-                )
-            ),
-        )
-    _reject_tombstoned_delta(
-        spark, path, delta, id_col, "update_ivfsq8_index"
-    )
     bounds = F.arrays_zip(F.col("vmin"), F.col("vmax"))
     viol = (
         delta.crossJoin(F.broadcast(stats))
@@ -2570,20 +2520,19 @@ def ivfsq8_topk_indexed(
     vector comes exact from ``source``; only quantized codes are
     read corpus-side. Scoring is identical to :func:`ivf_sq8_topk`,
     row-for-row (equivalence-tested); ``allowed`` composes filtered
-    search on the pruned scan exactly like the IVF/IVF-PQ layouts."""
+    search on the pruned scan exactly like the IVF/IVF-PQ layouts.
+    Probe and candidates are the IVF core's stages
+    (:func:`_probe_cells`, :func:`_probe_candidates`)."""
     cents = spark.read.parquet(f"{index_path}/centroids")
     stats = spark.read.parquet(f"{index_path}/sq8_stats")
-    raw = _index_rows(spark, index_path, "codes")
-    if raw is None:  # every row tombstoned + compacted: empty index
+    codes = _index_rows(spark, index_path, "codes", id_col)
+    q = _query_vectors(source, [query_vec_id], id_col, vec_col)
+    cells = _probe_cells(cents, q, n_probe) if codes is not None else {}
+    if not cells:  # empty compacted index, zero-norm/absent query
         return spark.createDataFrame(
             [], f"{id_col} long, sq8_sim double"
         )
-    codes = _live_rows(spark, index_path, raw, id_col)
-    q = _query_frame(source, query_vec_id, id_col, vec_col)
-    probe_ids = _probe_cell_ids(cents, q, n_probe)
-    cand = _pruned_candidates(
-        codes, probe_ids, query_vec_id, id_col, allowed
-    )
+    cand = _probe_candidates(codes, cells, id_col, allowed)
     return _sq8_score_tail(
         cand.select(id_col, "codes"), stats, q, k, id_col
     )
@@ -2638,10 +2587,9 @@ def cosine_topk_lsh(
         )
         .select(
             id_col,
-            F.round(
-                _dot(F.col(vec_col), F.col("_qvec"))
-                / (F.col("_nrm") * F.col("_qnrm")),
-                6,
+            _cos6(
+                F.col(vec_col), F.col("_qvec"),
+                F.col("_nrm"), F.col("_qnrm"),
             ).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc(id_col))
@@ -2673,11 +2621,7 @@ def cosine_topk_batch(
     ROUNDED score (6 decimals) with ``vec_id`` tie-break, so results
     are deterministic and engine-portable.
     """
-    q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("_qvec"),
-        F.sqrt(_norm2(F.col(vec_col))).alias("_qnrm"),
-    ).filter(F.col("_qnrm") > 0)
+    q = _query_vectors(embeddings, query_ids, id_col, vec_col)
     scored = (
         embeddings.select(
             id_col,
@@ -2691,10 +2635,9 @@ def cosine_topk_batch(
         .select(
             "q_id",
             id_col,
-            F.round(
-                _dot(F.col(vec_col), F.col("_qvec"))
-                / (F.col("_nrm") * F.col("_qnrm")),
-                6,
+            _cos6(
+                F.col(vec_col), F.col("_qvec"),
+                F.col("_nrm"), F.col("_qnrm"),
             ).alias("cos_sim"),
         )
     )
@@ -2836,7 +2779,7 @@ def ivfpq_topk(
         .limit(shortlist)
         .select(id_col)
     )
-    qx = _query_frame(embeddings, query_vec_id, id_col, vec_col)
+    qx = _query_vectors(embeddings, [query_vec_id], id_col, vec_col)
     return _exact_rerank(
         embeddings.join(short, id_col), qx, k, id_col, vec_col
     )
@@ -3066,8 +3009,9 @@ def update_ivfpq_index(
             "update_ivfpq_index appends PQ codes — use "
             "update_ivf_index for a plain IVF layout"
         )
-    delta = _gate_delta_input(delta, vec_col)
-    cents = spark.read.parquet(f"{path}/centroids")
+    delta, cents = _checked_delta(
+        spark, path, man, delta, id_col, vec_col, "update_ivfpq_index"
+    )
     cbooks = spark.read.parquet(f"{path}/codebooks")
     # PQ geometry from the manifest; pre-manifest dirs infer it from
     # the codebook table itself (n_sub distinct subspaces, each
@@ -3083,38 +3027,8 @@ def update_ivfpq_index(
         )
         n_sub = int(row["ns"])
         sub_dim = int(row["sd"])
-    dim = man.get("dim")
-    if dim is None:
-        row = cents.select(F.size("cvec").alias("d")).first()
-        dim = None if row is None else int(row["d"])
-    if dim is not None:
-        # same in-plan dimension guard as update_ivf_index
-        delta = delta.withColumn(
-            vec_col,
-            F.when(
-                F.size(vec_col) == dim, F.col(vec_col)
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "update_ivfpq_index: delta vector id="
-                        ),
-                        F.col(id_col).cast("string"),
-                        F.lit(" has "),
-                        F.size(vec_col).cast("string"),
-                        F.lit(
-                            f" components but the index stores "
-                            f"{dim}-dimensional vectors"
-                        ),
-                    )
-                )
-            ),
-        )
     from bigdata_elephant_spark.session import persist_tracked
 
-    _reject_tombstoned_delta(
-        spark, path, delta, id_col, "update_ivfpq_index"
-    )
     assign = ivf_assign(delta, cents, id_col, vec_col)
     resid = persist_tracked(
         delta.join(assign, id_col)
@@ -3158,15 +3072,18 @@ def ivfpq_topk_indexed(
     ``source`` (the raw vector table; point lookups at scale).
     ``n_sub``/``sub_dim`` come off the codebooks artifact, so the
     query needs no training parameters. Scoring is identical to
-    :func:`ivfpq_topk`, row-for-row (equivalence-tested)."""
+    :func:`ivfpq_topk`, row-for-row (equivalence-tested). Probe and
+    candidates are the IVF core's stages (:func:`_probe_cells`,
+    :func:`_probe_candidates`)."""
     cents = spark.read.parquet(f"{index_path}/centroids")
     cbooks = spark.read.parquet(f"{index_path}/codebooks")
-    raw = _index_rows(spark, index_path, "codes")
-    if raw is None:  # every row tombstoned + compacted: empty index
+    codes = _index_rows(spark, index_path, "codes", id_col)
+    q = _query_vectors(source, [query_vec_id], id_col, vec_col)
+    cells = _probe_cells(cents, q, n_probe) if codes is not None else {}
+    if not cells:  # empty compacted index, zero-norm/absent query
         return spark.createDataFrame(
             [], f"{id_col} long, cos_sim double"
         )
-    codes = _live_rows(spark, index_path, raw, id_col)
     # PQ geometry is index METADATA: build_ivfpq_index writes n_sub/
     # sub_dim into the manifest, so reading them back is a file read,
     # not a Spark job — the old codebooks aggregate+collect cost one
@@ -3184,27 +3101,18 @@ def ivfpq_topk_indexed(
             ).collect()[0]
         )
         n_sub, sub_dim = int(meta["n_sub"]), int(meta["sub_dim"])
-    q = source.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qv")
-    )
-    probe = (
-        cents.crossJoin(F.broadcast(q))
+    # the query's residual in each probed cell
+    qres = (
+        cents.filter(F.col("cell_id").isin(sorted(cells)))
+        .crossJoin(F.broadcast(q))
         .select(
             "cell_id",
-            "cvec",
-            "qv",
-            F.round(_l2sq(F.col("cvec"), F.col("qv")), 6).alias("d"),
+            F.zip_with(
+                F.col("_qvec"),
+                F.col("cvec"),
+                lambda a, b: a.cast("double") - b.cast("double"),
+            ).alias("qres"),
         )
-        .orderBy("d", "cell_id")
-        .limit(n_probe)
-    )
-    qres = probe.select(
-        "cell_id",
-        F.zip_with(
-            F.col("qv"),
-            F.col("cvec"),
-            lambda a, b: a.cast("double") - b.cast("double"),
-        ).alias("qres"),
     )
     qslices = qres.select(
         "cell_id",
@@ -3232,24 +3140,11 @@ def ivfpq_topk_indexed(
         .cast("decimal(18,6)")
         .alias("pd"),
     )
-    # Probe-cell ids are index METADATA (n_probe ints) — collect
-    # them so the codes scan is STATIC partition pruning on the
-    # cell_id layout, not a join the planner may or may not prune.
-    probe_ids = [r["cell_id"] for r in probe.select("cell_id").collect()]
-    cand_codes = codes.filter(F.col("cell_id").isin(probe_ids)).filter(
-        F.col(id_col) != query_vec_id
-    )
-    if allowed is not None:
-        # filtered search (see ivf_topk_filtered): the predicate's id
-        # set excludes candidates on the pruned codes scan; the ADC
-        # shortlist then forms over allowed ids only
-        cand_codes = cand_codes.join(
-            F.broadcast(_allowed_ids(allowed, id_col)),
-            id_col,
-            "left_semi",
-        )
+    # filtered search (see ivf_topk): the predicate's id set excludes
+    # candidates on the pruned codes scan; the ADC shortlist then
+    # forms over allowed ids only
     short = (
-        cand_codes
+        _probe_candidates(codes, cells, id_col, allowed)
         .join(F.broadcast(lut), ["cell_id", "sub", "code"])
         .groupBy(id_col)
         .agg(F.sum("pd").alias("adc"))
@@ -3257,9 +3152,8 @@ def ivfpq_topk_indexed(
         .limit(shortlist)
         .select(id_col)
     )
-    qx = _query_frame(source, query_vec_id, id_col, vec_col)
     return _exact_rerank(
-        source.join(short, id_col), qx, k, id_col, vec_col
+        source.join(short, id_col), q, k, id_col, vec_col
     )
 
 
@@ -3308,11 +3202,7 @@ def ivf_topk_batch(
     from pyspark.sql import Window
 
     cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("_qvec"),
-        F.sqrt(_norm2(F.col(vec_col))).alias("_qnrm"),
-    ).filter(F.col("_qnrm") > 0)
+    q = _query_vectors(embeddings, query_ids, id_col, vec_col)
     w_p = Window.partitionBy("q_id").orderBy(
         F.col("d").asc(), F.col("cell_id").asc()
     )
@@ -3369,10 +3259,9 @@ def ivf_topk_batch(
     scored = candidates.select(
         "q_id",
         id_col,
-        F.round(
-            _dot(F.col(vec_col), F.col("_qvec"))
-            / (F.col("_nrm") * F.col("_qnrm")),
-            6,
+        _cos6(
+            F.col(vec_col), F.col("_qvec"),
+            F.col("_nrm"), F.col("_qnrm"),
         ).alias("cos_sim"),
     )
     w_k = Window.partitionBy("q_id").orderBy(
@@ -3401,11 +3290,7 @@ def _exact_rerank_batch(
     ``WindowGroupLimit`` map-side heaps)."""
     from pyspark.sql import Window
 
-    q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("_qvec"),
-        F.sqrt(_norm2(F.col(vec_col))).alias("_qnrm"),
-    ).filter(F.col("_qnrm") > 0)
+    q = _query_vectors(embeddings, query_ids, id_col, vec_col)
     wtop = Window.partitionBy("q_id").orderBy(
         F.desc("cos_sim"), F.asc(id_col)
     )
@@ -3424,10 +3309,9 @@ def _exact_rerank_batch(
         .select(
             "q_id",
             id_col,
-            F.round(
-                _dot(F.col(vec_col), F.col("_qvec"))
-                / (F.col("_nrm") * F.col("_qnrm")),
-                6,
+            _cos6(
+                F.col(vec_col), F.col("_qvec"),
+                F.col("_nrm"), F.col("_qnrm"),
             ).alias("cos_sim"),
         )
         .withColumn("_r", F.row_number().over(wtop))
@@ -3555,11 +3439,7 @@ def ivf_probe_recall_sweep(
     from pyspark.sql import Window
 
     cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("_qvec"),
-        F.sqrt(_norm2(F.col(vec_col))).alias("_qnrm"),
-    ).filter(F.col("_qnrm") > 0)
+    q = _query_vectors(embeddings, query_ids, id_col, vec_col)
     wcell = Window.partitionBy("q_id").orderBy("d", "cell_id")
     cell_rank = (
         cents.crossJoin(F.broadcast(q.select("q_id", "_qvec")))
@@ -3590,10 +3470,9 @@ def ivf_probe_recall_sweep(
             "q_id",
             id_col,
             "crank",
-            F.round(
-                _dot(F.col(vec_col), F.col("_qvec"))
-                / (F.col("_nrm") * F.col("_qnrm")),
-                6,
+            _cos6(
+                F.col(vec_col), F.col("_qvec"),
+                F.col("_nrm"), F.col("_qnrm"),
             ).alias("cos_sim"),
         )
     )
@@ -3690,11 +3569,7 @@ def embedding_novelty_admission(
     )
 
     cap = BROADCAST_HINT_CAP_BYTES if cap_bytes is None else cap_bytes
-    q = delta.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("_qvec"),
-        F.sqrt(_norm2(F.col(vec_col))).alias("_qnrm"),
-    ).filter(F.col("_qnrm") > 0)
+    q = _query_vectors(delta, None, id_col, vec_col)
     scored = (
         base.select(
             id_col,
@@ -3705,10 +3580,9 @@ def embedding_novelty_admission(
         .crossJoin(maybe_broadcast(q, size_of=delta, cap_bytes=cap))
         .select(
             "q_id",
-            F.round(
-                _dot(F.col(vec_col), F.col("_qvec"))
-                / (F.col("_nrm") * F.col("_qnrm")),
-                6,
+            _cos6(
+                F.col(vec_col), F.col("_qvec"),
+                F.col("_nrm"), F.col("_qnrm"),
             ).alias("sim"),
         )
     )
@@ -3752,9 +3626,14 @@ def embedding_novelty_indexed(
     family.
 
     Probe semantics are the index family's shared contract (rounded
-    L2, cell_id tie-break, per-query rank window — the batch form of
-    ``ivf_topk_batch_indexed``), and the oracle REPLAYS the probe, so
-    the driver hash pins the pruned search exactly; the
+    L2, cell_id tie-break), and the oracle REPLAYS the probe, so
+    the driver hash pins the pruned search exactly. Unlike the
+    retrievers' :func:`_probe_cells`, which collects the
+    ``|Q| x n_cells`` distance rows and ranks them on the driver,
+    the probe here stays a Spark-side per-query rank window: the
+    query set is a delta batch that can be corpus-sized, so its
+    distance rows cannot be collected to the driver (only the union
+    of probed cells, at most n_cells ids, is). The
     recall-vs-threshold trade of probing is measured separately
     (``ivf_probe_recall_sweep``), same as every indexed retriever
     here. Verdicts mirror the exact operator: zero-norm delta
@@ -3771,11 +3650,7 @@ def embedding_novelty_indexed(
     """
     from bigdata_elephant_spark.session import maybe_broadcast
 
-    q = delta.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("_qvec"),
-        F.sqrt(_norm2(F.col(vec_col))).alias("_qnrm"),
-    ).filter(F.col("_qnrm") > 0)
+    q = _query_vectors(delta, None, id_col, vec_col)
     verdict = lambda nn: (  # noqa: E731 — shared verdict projection
         q.select("q_id")
         .join(nn, F.col("q_id") == F.col("_nnid"), "left")
@@ -3788,15 +3663,14 @@ def embedding_novelty_indexed(
         )
     )
     # centroids first: a bogus index path must raise, not read as
-    # the legitimately-empty compacted index (ivf_topk_indexed rule)
+    # the legitimately-empty compacted index (_ivf_indexed_search rule)
     cents = spark.read.parquet(f"{index_path}/centroids")
-    raw = _index_rows(spark, index_path, "vectors")
-    if raw is None:  # every row tombstoned + compacted: empty index
+    vecs = _index_rows(spark, index_path, "vectors", id_col)
+    if vecs is None:  # every row tombstoned + compacted: empty index
         empty_nn = spark.createDataFrame(
             [], "_nnid long, nn_sim double"
         )
         return verdict(empty_nn)
-    vecs = _live_rows(spark, index_path, raw, id_col)
     w_p = Window.partitionBy("q_id").orderBy(
         F.col("d").asc(), F.col("cell_id").asc()
     )
@@ -3824,7 +3698,7 @@ def embedding_novelty_indexed(
     #
     # union of probed cells: index METADATA (<= n_cells ints) —
     # becomes the static partition filter on the cell-partitioned
-    # layout, exactly the ivf_topk_batch_indexed pruning
+    # layout, the same pruning as the IVF core's candidate stage
     cell_union = [
         r["cell_id"]
         for r in probes.select("cell_id").distinct().collect()
@@ -3836,10 +3710,9 @@ def embedding_novelty_indexed(
         .join(maybe_broadcast(q, size_of=delta), "q_id")
         .select(
             "q_id",
-            F.round(
-                _dot(F.col(vec_col), F.col("_qvec"))
-                / (F.sqrt(_norm2(F.col(vec_col))) * F.col("_qnrm")),
-                6,
+            _cos6(
+                F.col(vec_col), F.col("_qvec"),
+                F.sqrt(_norm2(F.col(vec_col))), F.col("_qnrm"),
             ).alias("sim"),
         )
     )
@@ -4168,10 +4041,9 @@ def hard_negative_topk(
             "q_id",
             id_col,
             label_col,
-            F.round(
-                _dot(F.col(vec_col), F.col("_qvec"))
-                / (F.col("_nrm") * F.col("_qnrm")),
-                6,
+            _cos6(
+                F.col(vec_col), F.col("_qvec"),
+                F.col("_nrm"), F.col("_qnrm"),
             ).alias("cos_sim"),
         )
     )

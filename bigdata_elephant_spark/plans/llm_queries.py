@@ -1998,7 +1998,7 @@ def _lang_allowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED ANN under the oracle gate (operators/similarity.py
-    ``ivf_topk_filtered``): top-k among the probed cells' vectors
+    ``ivf_topk`` with ``allowed``): top-k among the probed cells' vectors
     whose DOCUMENT (doc_id == vec_id) is English — the predicate is
     evaluated on the metadata table and semi-joined into the
     candidate set, while probe geometry stays computed on the full
@@ -2006,9 +2006,9 @@ def q_knn_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset), too late (post-filtering the unfiltered top-k), or not
     at all each produces a different ranking and hash-mismatches."""
     emb = read_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk_filtered(
-        emb, KNN_QUERY_VEC_ID, _lang_allowed(spark, sf_dir),
-        n_cells=IVF_CELLS, n_probe=IVF_PROBE, k=KNN_K,
+    return similarity.ivf_topk(
+        emb, KNN_QUERY_VEC_ID, n_cells=IVF_CELLS, n_probe=IVF_PROBE,
+        k=KNN_K, allowed=_lang_allowed(spark, sf_dir),
     )
 
 

@@ -4,14 +4,36 @@ them) must produce the same ranking as the inline pipeline."""
 from __future__ import annotations
 
 import io
+import uuid
 
 from bigdata_elephant_spark.cli import main
+
+# Measured: a warm `ann-query --vec` runs 6 Spark jobs and `ann-batch`
+# 7 (14 before the shared IVF query core) for any batch size — the
+# probe is one collect and the candidates one pruned scan for the
+# whole batch.
+WARM_ANN_QUERY_MAX_JOBS = 6
+ANN_BATCH_MAX_JOBS = 8
 
 
 def _run(spark, argv):
     buf = io.StringIO()
     assert main(argv, spark=spark, out=buf) == 0
     return buf.getvalue()
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by the status tracker under
+    a job group of its own."""
+    sc = spark.sparkContext
+    group = f"cli-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _parse(out: str) -> list[dict]:
@@ -192,13 +214,15 @@ def test_cli_ann_pq_build_then_query(spark, sf_dir, tmp_path):
     ]
 
 
-def test_cli_ann_vec_dim_validation(spark, sf_dir, tmp_path):
+def test_cli_ann_vec_dim_validation(spark, sf_dir, tmp_path, capsys):
     """ann-build writes a manifest.json; ann-query --vec validates
     the literal vector's dimension against it with a plain file read
     (no Spark job per query), falls back to one centroids footer
     read on pre-manifest index dirs, and skips validation entirely
     on an unreadable index path so the query's own error surfaces
-    instead of a confusing failure inside validation."""
+    instead of a confusing failure inside validation. Non-finite or
+    empty --vec components and a non-integer --vec-ids entry are
+    usage errors (exit 2) raised before any Spark job."""
     import io
     import json
     import os
@@ -220,6 +244,22 @@ def test_cli_ann_vec_dim_validation(spark, sf_dir, tmp_path):
     # manifest path: mismatch is an argparse error (SystemExit)
     with pytest.raises(SystemExit):
         main(bad, spark=spark, out=io.StringIO())
+
+    tail = ",0.1" * (man["dim"] - 1)
+    for argv, message in [
+        (["ann-query", "--index", idx, f"--vec=nan{tail}"], "finite"),
+        (["ann-query", "--index", idx, f"--vec=inf{tail}"], "finite"),
+        (["ann-query", "--index", idx, f"--vec=-inf{tail}"], "finite"),
+        (["ann-query", "--index", idx, f"--vec=1,,2{tail}"], "number"),
+        (["ann-batch", "--index", idx, "--vec-ids", "1,x"], "'x'"),
+    ]:
+        def usage_error():
+            with pytest.raises(SystemExit) as exc:
+                main(argv, spark=spark, out=io.StringIO())
+            assert exc.value.code == 2, argv
+
+        assert _jobs(spark, usage_error) == 0, argv
+        assert message in capsys.readouterr().err, argv
 
     # pre-manifest dir: the footer fallback still catches it
     os.remove(os.path.join(idx, "manifest.json"))
@@ -400,12 +440,11 @@ def test_cli_ann_delete_then_compact(spark, sf_dir, tmp_path):
 
 def test_cli_ann_query_allowed_filter(spark, sf_dir, tmp_path):
     """ann-query --allowed restricts candidates to the id set
-    (filtered search); matches the ivf_topk_filtered operator."""
+    (filtered search); matches the inline ivf_topk operator with
+    the same allowed set."""
     from pyspark.sql import functions as F
 
-    from bigdata_elephant_spark.operators.similarity import (
-        ivf_topk_filtered,
-    )
+    from bigdata_elephant_spark.operators.similarity import ivf_topk
 
     idx = str(tmp_path / "ivf")
     emb_path = f"{sf_dir}/embeddings.parquet"
@@ -422,9 +461,9 @@ def test_cli_ann_query_allowed_filter(spark, sf_dir, tmp_path):
     ]))
     assert len(rows) == 5
     assert all(int(r["vec_id"]) % 2 == 0 for r in rows)
-    want = ivf_topk_filtered(
-        emb, 0, emb.filter(F.col("vec_id") % 2 == 0).select("vec_id"),
-        n_cells=8, n_probe=3, k=5,
+    want = ivf_topk(
+        emb, 0, n_cells=8, n_probe=3, k=5,
+        allowed=emb.filter(F.col("vec_id") % 2 == 0).select("vec_id"),
     ).collect()
     assert [r["vec_id"] for r in rows] == [
         str(r["vec_id"]) for r in want
@@ -475,6 +514,35 @@ def test_cli_ann_batch_matches_single_queries(spark, sf_dir, tmp_path):
         ]))
         got = [r["vec_id"] for r in rows if r["q_id"] == q]
         assert got == [r["vec_id"] for r in single]
+
+
+def test_cli_ann_job_budget(spark, sf_dir, tmp_path):
+    """A warm `ann-query --vec` runs at most WARM_ANN_QUERY_MAX_JOBS
+    Spark jobs; `ann-batch` runs the same number of jobs for 2 ids
+    as for 20, and at most ANN_BATCH_MAX_JOBS — per-query probe jobs
+    or a per-query scan would grow the count with the batch."""
+    idx = str(tmp_path / "ivf")
+    emb_path = f"{sf_dir}/embeddings.parquet"
+    _run(spark, ["ann-build", "--embeddings", emb_path,
+                 "--out", idx, "--cells", "8"])
+    row = spark.read.parquet(emb_path).filter("vec_id = 5").first()
+    vec = ",".join(repr(float(x)) for x in row["embedding"])
+    query = ["ann-query", "--index", idx, f"--vec={vec}", "-k", "5"]
+    _run(spark, query)  # warm-up
+    assert 0 < _jobs(spark, lambda: _run(spark, query)) <= (
+        WARM_ANN_QUERY_MAX_JOBS
+    )
+
+    def batch(n):
+        ids = ",".join(str(i) for i in range(n))
+        return _jobs(spark, lambda: _run(spark, [
+            "ann-batch", "--index", idx, "--vec-ids", ids, "-k", "5",
+        ]))
+
+    batch(2)  # warm-up
+    two, twenty = batch(2), batch(20)
+    assert two == twenty, (two, twenty)
+    assert 0 < twenty <= ANN_BATCH_MAX_JOBS, twenty
 
 
 def test_cli_bpe_train_and_encode(spark, sf_dir, tmp_path):

@@ -475,7 +475,16 @@ def test_ivf_batch_indexed_matches_inline_batch(spark, sf_dir, tmp_path):
     """The indexed batch scorer is the inline batch scorer over the
     materialized layout — identical rows per query, and the whole
     batch must read the index through ONE statically partition-pruned
-    scan (the probed-cell union in PartitionFilters)."""
+    scan (the probed-cell union in PartitionFilters).
+
+    The single-query ivf_topk_indexed is the same core run as a batch
+    of one, so for every query of every batch it must equal that
+    query's batch rows: stored, literal, zero-norm and absent query
+    ids, k above the candidate count, n_probe above n_cells,
+    tombstoned rows (and a tombstoned query id) and an allowed
+    filter."""
+    from pyspark.sql import functions as F
+
     from bigdata_elephant_spark.operators import similarity as sim
     from bigdata_elephant_spark.sources.corpus import read_table
 
@@ -498,6 +507,107 @@ def test_ivf_batch_indexed_matches_inline_batch(spark, sf_dir, tmp_path):
     assert any(
         "cell_id" in ln and " in " in ln.lower() for ln in scan_lines
     ), f"no partition filter on cell_id:\n{plan[:2000]}"
+
+    dim = len(emb.filter("vec_id = 3").first()["embedding"])
+    literal = spark.createDataFrame(
+        [(-1, [0.05 * (i % 7) - 0.1 for i in range(dim)])],
+        "vec_id long, embedding array<float>",
+    )
+    zero = spark.createDataFrame(
+        [(-2, [0.0] * dim)], "vec_id long, embedding array<float>"
+    )
+    src = emb.select("vec_id", "embedding").unionByName(literal)
+    src = src.unionByName(zero)
+    qids = [0, 7, -1, -2, 999_999]
+    allowed = emb.filter(F.col("vec_id") % 3 != 0).select("vec_id")
+
+    def per_query(rows):
+        by_q: dict[int, list] = {q: [] for q in qids}
+        for r in rows:
+            by_q[r["q_id"]].append((r["vec_id"], r["cos_sim"]))
+        return {q: sorted(v) for q, v in by_q.items()}
+
+    def check(n_probe, k, source, filt=None):
+        if filt is None:
+            batch = sim.ivf_topk_batch_indexed(
+                spark, path, qids, n_probe=n_probe, k=k, source=source
+            ).collect()
+        else:  # the batch shape of the core, with a filter
+            batch = sim._ivf_indexed_search(
+                spark, path, qids, source, n_probe, k, filt
+            ).collect()
+        want = per_query(batch)
+        for q in qids:
+            single = sim.ivf_topk_indexed(
+                spark, path, q, n_probe=n_probe, k=k,
+                # the literal query alone, as the CLI's --vec source
+                source=literal if q == -1 and source is not None
+                else source,
+                allowed=filt,
+            ).collect()
+            got = [(r["vec_id"], r["cos_sim"]) for r in single]
+            assert sorted(got) == want[q], (n_probe, k, q)
+        return want
+
+    want = check(2, 5, src)
+    assert want[-2] == [] and want[999_999] == []
+    assert len(want[-1]) == 5
+    # n_probe above n_cells and k above the candidate count: every
+    # allowed row is scored
+    full = check(12, 10_000, src, allowed)
+    assert len(full[0]) == allowed.count()
+    assert all(v % 3 != 0 for rows in full.values() for v, _ in rows)
+    victims = sorted({v for rows in want.values() for v, _ in rows})[:4]
+    sim.delete_from_index(spark, path, victims + [7])
+    after = check(2, 5, None)  # queries read from the live index
+    assert after[7] == []  # a tombstoned query id is absent
+    assert not {v for rows in after.values() for v, _ in rows} & set(
+        victims
+    )
+
+
+def test_probe_cells_matches_spark_probe(spark):
+    """The driver-ranked probe equals Spark's own per-query
+    ``orderBy(round(_l2sq, 6), cell_id).limit(n_probe)``: exact ties
+    and ties made by the 6-decimal rounding go to the lower cell_id,
+    a null distance (a centroid of another dimension) ranks first and
+    a NaN distance last, as in Spark's ascending sort."""
+    from pyspark.sql import functions as F
+
+    from bigdata_elephant_spark.operators import similarity as sim
+
+    # repartition: keeps the optimizer from folding the local rows
+    # through the interpreted higher-order functions (seconds each)
+    cents = spark.createDataFrame(
+        [
+            (5, [1.0, 0.0]), (2, [0.0, 1.0]), (9, [-1.0, 0.0]),
+            (3, [0.0, 0.5]), (7, [2.0, 0.0]), (8, [0.0, 0.0]),
+            (4, [1e-7, 0.0]), (6, [float("nan"), 0.0]), (1, [1.0]),
+        ],
+        "cell_id long, cvec array<float>",
+    ).repartition(1)
+    src = spark.createDataFrame(
+        [(10, [0.0, 0.001]), (11, [1.0, 1.0]), (12, [0.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    ).repartition(1)
+    q = sim._query_vectors(src, [10, 11, 12, 13])
+    dists = cents.crossJoin(q).select(
+        "q_id",
+        "cell_id",
+        F.round(sim._l2sq(F.col("cvec"), F.col("_qvec")), 6).alias("d"),
+    )
+    for n_probe in (2, 6, 9, 12):
+        want: dict = {}
+        for qid in (10, 11):
+            for r in (
+                dists.filter(F.col("q_id") == qid)
+                .orderBy("d", "cell_id")
+                .limit(n_probe)
+                .collect()
+            ):
+                want.setdefault(r["cell_id"], []).append(qid)
+        assert sim._probe_cells(cents, q, n_probe) == want, n_probe
+    assert sim._probe_cells(cents, q.filter("q_id = 12"), 3) == {}
 
 
 def test_ivf_incremental_update_equals_full_build(spark, sf_dir, tmp_path):
@@ -819,7 +929,7 @@ def test_rebuild_resets_tombstones(spark, sf_dir, tmp_path):
     victim = top[0]["vec_id"]
     sim.delete_from_index(spark, path, [victim])
     sim.build_ivf_index(emb, path, n_cells=8)
-    assert sim._tombstones(spark, path) is None
+    assert sim._index_rows(spark, path, "tombstones") is None
     again = sim.ivf_topk_indexed(
         spark, path, 0, n_probe=3, k=5, source=emb
     ).collect()
@@ -900,8 +1010,8 @@ def test_filtered_ann_inline_and_indexed(spark, sf_dir, tmp_path):
 
     emb = read_table(spark, sf_dir, "embeddings")
     allowed = emb.filter(F.col("vec_id") % 2 == 0).select("vec_id")
-    got = sim.ivf_topk_filtered(
-        emb, 0, allowed, n_cells=8, n_probe=3, k=5
+    got = sim.ivf_topk(
+        emb, 0, n_cells=8, n_probe=3, k=5, allowed=allowed
     ).collect()
     assert len(got) == 5
     assert all(r["vec_id"] % 2 == 0 for r in got)
@@ -921,8 +1031,8 @@ def test_filtered_ann_inline_and_indexed(spark, sf_dir, tmp_path):
     # an error (the documented n_probe-escalation dial)
     tiny = emb.filter(F.col("vec_id").isin([2, 4])).select("vec_id")
     assert (
-        sim.ivf_topk_filtered(
-            emb, 0, tiny, n_cells=8, n_probe=1, k=5
+        sim.ivf_topk(
+            emb, 0, n_cells=8, n_probe=1, k=5, allowed=tiny
         ).count()
         <= 2
     )
@@ -996,7 +1106,7 @@ def test_delete_empty_set_is_a_noop(spark, sf_dir, tmp_path):
     sim.build_ivf_index(emb, path, n_cells=4)
     sim.delete_from_index(spark, path, [])
     sim.delete_from_index(spark, path, emb.filter("vec_id > 999").select("vec_id"))
-    assert sim._tombstones(spark, path) is None
+    assert sim._index_rows(spark, path, "tombstones") is None
     # re-deleting only already-tombstoned ids is also append-free
     sim.delete_from_index(spark, path, [3])
     import glob
@@ -1028,7 +1138,7 @@ def test_compact_on_empty_generation_retires_tombstones(
     with _pytest.raises(ValueError, match="tombstoned"):
         sim.update_ivf_index(spark, path, emb.filter("vec_id = 5"))
     sim.compact_index(spark, path)  # must retire, not no-op
-    assert sim._tombstones(spark, path) is None
+    assert sim._index_rows(spark, path, "tombstones") is None
     sim.update_ivf_index(spark, path, emb.filter("vec_id = 5"))
     assert (
         sim.ivf_topk_indexed(
