@@ -109,6 +109,22 @@ def _print_rows(df: DataFrame, file) -> None:
         )
 
 
+def _at_least(lo: int):
+    """argparse ``type`` for a count option with a floor: a value
+    below ``lo`` (``-k`` below 0, ``--probe``/``--shortlist`` below
+    1) is a usage error (exit 2) raised while parsing, before any
+    Spark work."""
+
+    def parse(s: str) -> int:
+        v = int(s)
+        if v < lo:
+            raise argparse.ArgumentTypeError(f"must be >= {lo}, got {v}")
+        return v
+
+    parse.__name__ = "int"  # argparse names the type in its errors
+    return parse
+
+
 def _literal_vec_source(p, spark, args):
     """Parse ``--vec`` into the one-row sentinel source table (id -1
     cannot collide with stored vectors — ids are non-negative on
@@ -189,7 +205,7 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
     sp.add_argument("--vocab", required=True)
     sp.add_argument("--index", required=True)
     sp.add_argument("--meta", default=None)
-    sp.add_argument("-k", type=int, default=10)
+    sp.add_argument("-k", type=_at_least(0), default=10)
     sp.add_argument(
         "--scoring", default="reference",
         choices=("reference", "smooth", "bm25"),
@@ -206,7 +222,7 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
     )
     sp.add_argument("--vocab", required=True)
     sp.add_argument("--index", required=True)
-    sp.add_argument("-k", type=int, default=10)
+    sp.add_argument("-k", type=_at_least(0), default=10)
     sp.add_argument("queries", nargs="+")
 
     sp = sub.add_parser("search", help="one-shot inline search")
@@ -262,15 +278,15 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
     g.add_argument("--vec", default=None,
                    help="query by a literal vector: comma-separated "
                         "floats, e.g. '0.1,-0.2,0.3'")
-    sp.add_argument("-k", type=int, default=10)
-    sp.add_argument("--probe", type=int, default=4)
+    sp.add_argument("-k", type=_at_least(0), default=10)
+    sp.add_argument("--probe", type=_at_least(1), default=4)
     sp.add_argument("--pq", action="store_true",
                     help="query a --pq index (ADC over codes + exact "
                          "re-rank); needs --embeddings for the "
                          "re-rank and --vec-id for the query")
     sp.add_argument("--embeddings", default=None,
                     help="raw vector table for --pq re-rank")
-    sp.add_argument("--shortlist", type=int, default=50,
+    sp.add_argument("--shortlist", type=_at_least(1), default=50,
                     help="ADC shortlist size before exact re-rank "
                          "(with --pq)")
     sp.add_argument("--allowed", default=None,
@@ -304,8 +320,8 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
     sp.add_argument("--index", required=True)
     sp.add_argument("--vec-ids", required=True,
                     help="comma-separated stored vector ids to query")
-    sp.add_argument("-k", type=int, default=10)
-    sp.add_argument("--probe", type=int, default=4)
+    sp.add_argument("-k", type=_at_least(0), default=10)
+    sp.add_argument("--probe", type=_at_least(1), default=4)
     sp.add_argument("--embeddings", default=None,
                     help="source table for the query vectors "
                          "(defaults to the index's own rows)")

@@ -221,8 +221,10 @@ def test_cli_ann_vec_dim_validation(spark, sf_dir, tmp_path, capsys):
     read on pre-manifest index dirs, and skips validation entirely
     on an unreadable index path so the query's own error surfaces
     instead of a confusing failure inside validation. Non-finite or
-    empty --vec components and a non-integer --vec-ids entry are
-    usage errors (exit 2) raised before any Spark job."""
+    empty --vec components, a non-integer --vec-ids entry, and an
+    out-of-range -k (below 0, for query, batch, ann-query and
+    ann-batch), --probe or --shortlist (below 1) are usage errors
+    (exit 2) raised before any Spark job."""
     import io
     import json
     import os
@@ -252,6 +254,22 @@ def test_cli_ann_vec_dim_validation(spark, sf_dir, tmp_path, capsys):
         (["ann-query", "--index", idx, f"--vec=-inf{tail}"], "finite"),
         (["ann-query", "--index", idx, f"--vec=1,,2{tail}"], "number"),
         (["ann-batch", "--index", idx, "--vec-ids", "1,x"], "'x'"),
+        (["ann-query", "--index", idx, "--vec-id", "0", "--probe", "-1"],
+         "argument --probe: must be >= 1, got -1"),
+        (["ann-query", "--index", idx, "--vec-id", "0", "--probe", "0"],
+         "argument --probe: must be >= 1, got 0"),
+        (["ann-query", "--index", idx, "--vec-id", "0", "-k", "-1"],
+         "argument -k: must be >= 0, got -1"),
+        (["ann-query", "--index", idx, "--vec-id", "0", "--pq",
+          "--shortlist", "0"], "argument --shortlist: must be >= 1"),
+        (["ann-batch", "--index", idx, "--vec-ids", "1,2", "-k", "-1"],
+         "argument -k: must be >= 0"),
+        (["ann-batch", "--index", idx, "--vec-ids", "1,2", "--probe",
+          "0"], "argument --probe: must be >= 1"),
+        (["query", "--vocab", idx, "--index", idx, "-k", "-1", "a"],
+         "argument -k: must be >= 0"),
+        (["batch", "--vocab", idx, "--index", idx, "-k", "-1", "a", "b"],
+         "argument -k: must be >= 0"),
     ]:
         def usage_error():
             with pytest.raises(SystemExit) as exc:

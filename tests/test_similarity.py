@@ -445,30 +445,120 @@ def test_ivfpq_indexed_matches_inline(spark, sf_dir):
         shutil.rmtree(path, ignore_errors=True)
 
 
-def test_ivf_batch_matches_single(spark, sf_dir):
-    """Per query, the batched IVF scorer must return exactly the
-    single-query ivf_topk rows (same cells, probes, scoring)."""
-    from bigdata_elephant_spark.operators import similarity as sim
+# family -> (single-query call, batch call, score column); the IVF
+# calls probe 3 of 8 cells, the PQ calls shortlist 20
+_ZERO_ID, _ABSENT_ID = 10_000, 20_000
+
+
+def _allowed(emb):
+    return emb.filter(F.col("vec_id") % 3 != 0).select("vec_id")
+
+
+_FAMILIES = {
+    "cosine": (
+        lambda e, i: similarity.cosine_topk(e, i, k=5),
+        lambda e, ids: similarity.cosine_topk_batch(e, ids, k=5),
+        "cos_sim",
+    ),
+    "ivf": (
+        lambda e, i: similarity.ivf_topk(e, i, n_cells=8, n_probe=3, k=5),
+        lambda e, ids: similarity.ivf_topk_batch(
+            e, ids, n_cells=8, n_probe=3, k=5
+        ),
+        "cos_sim",
+    ),
+    "ivf_allowed": (
+        lambda e, i: similarity.ivf_topk(
+            e, i, n_cells=8, n_probe=3, k=5, allowed=_allowed(e)
+        ),
+        lambda e, ids: similarity.ivf_topk_batch(
+            e, ids, n_cells=8, n_probe=3, k=5, allowed=_allowed(e)
+        ),
+        "cos_sim",
+    ),
+    "pq": (
+        lambda e, i: similarity.pq_topk(e, i, shortlist=20, k=5),
+        lambda e, ids: similarity.pq_topk_batch(
+            e, ids, shortlist=20, k=5
+        ),
+        "cos_sim",
+    ),
+    "sq8": (
+        lambda e, i: similarity.sq8_topk(e, i, k=5),
+        lambda e, ids: similarity.sq8_topk_batch(e, ids, k=5),
+        "sq8_sim",
+    ),
+    "ivf_sq8": (
+        lambda e, i: similarity.ivf_sq8_topk(
+            e, i, n_cells=8, n_probe=3, k=5
+        ),
+        lambda e, ids: similarity.sq8_topk_batch(
+            e, ids, k=5, n_cells=8, n_probe=3
+        ),
+        "sq8_sim",
+    ),
+    "ivfpq": (
+        lambda e, i: similarity.ivfpq_topk(
+            e, i, n_cells=8, n_probe=3, shortlist=20, k=5
+        ),
+        lambda e, ids: similarity.ivfpq_topk_batch(
+            e, ids, n_cells=8, n_probe=3, shortlist=20, k=5
+        ),
+        "cos_sim",
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def emb_with_zero(spark, sf_dir):
+    """The testdata embeddings plus one all-zero vector."""
     from bigdata_elephant_spark.sources.corpus import read_table
 
-    emb = read_table(spark, sf_dir, "embeddings").cache()
-    qids = [0, 3, 7]
-    batch = sim.ivf_topk_batch(
-        emb, qids, n_cells=8, n_probe=3, k=5
-    ).collect()
+    emb = read_table(spark, sf_dir, "embeddings")
+    dim = len(emb.first()["embedding"])
+    zero = spark.createDataFrame([(_ZERO_ID, [0.0] * dim, 0)], emb.schema)
+    return emb.unionByName(zero).cache()
+
+
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_batch_of_one_matches_single(emb_with_zero, family):
+    """Each single-query function is its family core run as a batch
+    of one, so per query it must return exactly that query's rows of
+    a batch: for a normal id, a zero-norm vector and an absent id
+    (both empty), and an id repeated in the batch (answered once)."""
+    single, batch, score = _FAMILIES[family]
+    qids = [0, 3, _ZERO_ID, _ABSENT_ID, 3]
     by_q: dict[int, list] = {}
-    for r in batch:
-        by_q.setdefault(r["q_id"], []).append(
-            (r["vec_id"], r["cos_sim"])
-        )
-    for qid in qids:
-        single = [
-            (r["vec_id"], r["cos_sim"])
-            for r in sim.ivf_topk(
-                emb, qid, n_cells=8, n_probe=3, k=5
-            ).collect()
+    for r in batch(emb_with_zero, qids).collect():
+        by_q.setdefault(r["q_id"], []).append((r["vec_id"], r[score]))
+    assert len(by_q[0]) == 5 and len(by_q[3]) == 5, by_q
+    assert set(by_q) == {0, 3}
+    for qid in (0, 3, _ZERO_ID, _ABSENT_ID):
+        got = [
+            (r["vec_id"], r[score])
+            for r in single(emb_with_zero, qid).collect()
         ]
-        assert sorted(by_q.get(qid, [])) == sorted(single), qid
+        assert sorted(by_q.get(qid, [])) == sorted(got), qid
+
+
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_core_cuts_follow_batch_size(spark, sf_dir, family):
+    """Plan-shape guard on the input-size rule of the one top-k
+    helper: a one-query call plans every cut (probe, shortlist,
+    top-k) as TakeOrderedAndProject, with no Window anywhere; a
+    4-query call plans them as WindowGroupLimit rank windows."""
+    from bigdata_elephant_spark.sources.corpus import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    _, batch, _ = _FAMILIES[family]
+
+    def plan(ids):
+        df = batch(emb, ids)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    one = plan([3])
+    assert "TakeOrderedAndProject" in one and "Window" not in one, one
+    assert "WindowGroupLimit" in plan([0, 3, 7, 11])
 
 
 def test_ivf_batch_indexed_matches_inline_batch(spark, sf_dir, tmp_path):
