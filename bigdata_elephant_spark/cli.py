@@ -43,7 +43,20 @@ a batch of one through the same probe, candidate and scoring stages,
 and only the top-k step differs (``orderBy.limit`` for one query, a
 per-query rank window for more). ``ann-query`` still enters through
 ``ivf_topk_indexed``, and ``ann-batch`` through
-``ivf_topk_batch_indexed``.
+``ivf_topk_batch_indexed``. Both read the index through a
+session-scoped ANN handle (``operators.similarity.open_ann_index``).
+It caches the index kind and dimension, the centroids as a driver-side
+array and the live-rows frame (tombstones hidden, norms added), and
+persists nothing. Handles sit in an LRU keyed by index path with the
+text handles' bound (``TEXT_INDEX_LRU_MAX``), revalidated on every call
+against the index's data-file listing: a rebuild, an ``ann-add``, an
+``ann-delete`` or an ``ann-compact`` is seen by the next query.
+``session.release_caches()`` closes them too. The probe runs on the
+driver, and a literal ``--vec`` enters the plan as a SQL literal, so a
+warm ``ann-query --vec`` is 1 Spark job (6 before). The n_cells x dim
+centroids live on the driver, which suits a query or a batch; the
+corpus-sized delta of ``embedding_novelty_indexed`` keeps its probe in
+Spark.
 """
 
 from __future__ import annotations
@@ -125,25 +138,27 @@ def _at_least(lo: int):
     return parse
 
 
-def _literal_vec_source(p, spark, args):
-    """Parse ``--vec`` into the one-row sentinel source table (id -1
-    cannot collide with stored vectors — ids are non-negative on
-    ingest), validating length against the index dimension up front:
-    zip_with pads mismatched arrays with nulls, so a wrong-length
-    vector would silently yield null distances and arbitrary probe
-    cells instead of an error. The dimension comes from the
-    manifest.json written at ann-build time (a plain file read — no
-    Spark job per query); pre-manifest dirs fall back to one
-    centroids footer read. Validation is best-effort: a missing or
-    unreadable index path skips the check and surfaces as the query
-    function's usual error. ONE definition for every index kind.
+def _literal_vec(p, spark, args) -> list[float]:
+    """Parse ``--vec`` into the literal query vector, validating its
+    length against the index dimension up front: zip_with pads
+    mismatched arrays with nulls, so a wrong-length vector would
+    silently yield null distances and arbitrary probe cells instead
+    of an error. The dimension comes from the manifest.json written
+    at ann-build time (a plain file read — no Spark job per query);
+    pre-manifest dirs fall back to one centroids footer read.
+    Validation is best-effort: a missing or unreadable index path
+    skips the check and surfaces as the query function's usual
+    error. ONE definition for every index kind: the IVF reader takes
+    the vector itself (``ivf_topk_indexed(vec=...)``, a SQL literal
+    in the plan), the IVF,SQ8 reader a one-row source table with the
+    sentinel id -1 (ids are non-negative on ingest).
 
-    Components must be finite numbers, checked before any Spark
-    work: an empty component is a usage error, and a NaN or ±Inf
-    component would score every candidate ``nan`` — the same
-    finite-floats contract ``ann-build`` enforces on stored
-    vectors."""
-    import math
+    Components must be finite numbers, also once rounded to the
+    stored float32, checked before any Spark work: an empty
+    component is a usage error, and a NaN or ±Inf component would
+    score every candidate ``nan`` — the same finite-floats contract
+    ``ann-build`` enforces on stored vectors."""
+    import numpy as np
 
     from bigdata_elephant_spark.operators.similarity import (
         read_index_manifest,
@@ -154,9 +169,11 @@ def _literal_vec_source(p, spark, args):
     except ValueError:
         p.error(f"--vec {args.vec!r}: every comma-separated component "
                 "must be a number")
-    if not all(math.isfinite(x) for x in vec):
+    with np.errstate(over="ignore"):
+        finite = np.isfinite(np.asarray(vec, np.float32)).all()
+    if not finite:
         p.error(f"--vec {args.vec!r}: components must be finite "
-                "(no nan or inf)")
+                "(no nan or inf, and within float32 range)")
     dim = (read_index_manifest(args.index) or {}).get("dim")
     if dim is None:
         from pyspark.sql import functions as F
@@ -175,9 +192,7 @@ def _literal_vec_source(p, spark, args):
             f"--vec has {len(vec)} components but index "
             f"'{args.index}' stores {dim}-dimensional vectors"
         )
-    return spark.createDataFrame(
-        [(-1, vec)], "vec_id long, embedding array<float>"
-    )
+    return vec
 
 
 def main(argv: list[str] | None = None, spark=None, out=None) -> int:
@@ -626,11 +641,11 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
         allowed = (
             spark.read.parquet(args.allowed) if args.allowed else None
         )
-        vec_id, source = args.vec_id, None
+        vec_id, vec = args.vec_id, None
         if args.vec is not None:
-            vec_id, source = -1, _literal_vec_source(p, spark, args)
+            vec_id, vec = -1, _literal_vec(p, spark, args)
         if kind == "ivfpq":
-            if source is not None or args.embeddings is None:
+            if vec is not None or args.embeddings is None:
                 p.error(
                     "an ivfpq index needs --vec-id and --embeddings "
                     "(ADC probes the codes; the exact re-rank reads "
@@ -648,14 +663,18 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
         elif kind == "ivfsq8":
             # asymmetric scan: the query must come exact from a raw
             # source (--embeddings for a stored id, or --vec)
-            if source is None:
-                if args.embeddings is None:
-                    p.error(
-                        "an --sq8 index stores quantized codes "
-                        "only: query by --vec, or pass --embeddings "
-                        "so --vec-id can fetch the exact query "
-                        "vector"
-                    )
+            if vec is not None:
+                source = spark.createDataFrame(
+                    [(vec_id, vec)], "vec_id long, embedding array<float>"
+                )
+            elif args.embeddings is None:
+                p.error(
+                    "an --sq8 index stores quantized codes "
+                    "only: query by --vec, or pass --embeddings "
+                    "so --vec-id can fetch the exact query "
+                    "vector"
+                )
+            else:
                 source = spark.read.parquet(args.embeddings)
             _print_rows(
                 ivfsq8_topk_indexed(
@@ -668,8 +687,8 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
             _print_rows(
                 ivf_topk_indexed(
                     spark, args.index, vec_id,
-                    n_probe=args.probe, k=args.k, source=source,
-                    allowed=allowed,
+                    n_probe=args.probe, k=args.k, allowed=allowed,
+                    vec=vec,
                 ),
                 out,
             )

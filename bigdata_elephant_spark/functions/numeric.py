@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import os
 from contextlib import contextmanager
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -107,3 +108,28 @@ def davg(col: Column | str, digits: int = 6) -> Column:
     return F.round(
         F.sum(money(c)).cast("double") / F.count(c), digits
     )
+
+
+# room for every finite double at any scale: quantize raises instead
+# of rounding when the result needs more digits than the context has
+_ROUND_CTX = Context(prec=400)
+
+
+def spark_round(x: float | Decimal, scale: int = 6) -> Decimal:
+    """Driver twin of Spark's ``round(x, scale)`` as the exact
+    decimal: HALF_UP on the shortest decimal repr of a double
+    (``BigDecimal.valueOf(d).setScale(scale, HALF_UP)``), or on a
+    ``Decimal`` as given (Spark's decimal round). Python's ``repr``
+    and Java's ``Double.toString`` both emit a shortest decimal that
+    round-trips, so the quantize inputs agree; ``Decimal(x)`` (the
+    exact binary expansion) could land on the other side of a
+    halfway point. NaN and ±Inf pass through, as in Spark, and a
+    result of zero is unsigned (``BigDecimal`` has no -0).
+    ``float()`` of the result is the double Spark returns."""
+    d = x if isinstance(x, Decimal) else Decimal(repr(float(x)))
+    if not d.is_finite():
+        return d
+    r = d.quantize(
+        Decimal(1).scaleb(-scale), rounding=ROUND_HALF_UP, context=_ROUND_CTX
+    )
+    return r.copy_abs() if r.is_zero() else r

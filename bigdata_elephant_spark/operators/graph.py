@@ -144,7 +144,7 @@ def _pr_state(
 # (2 joins + an aggregate + a checkpoint job) at ANY cluster size.
 # The driver twin mirrors the distributed arithmetic exactly:
 # IEEE-double products, HALF_UP decimal rounding per round (Spark's
-# Round on doubles == Decimal(x).quantize(1e-9, HALF_UP)), and the
+# Round on doubles == functions.numeric.spark_round(x, 9)), and the
 # exact-decimal dangling-mass sum; equality is pinned by tests on
 # real and random graphs. Above the gate the loop below is
 # unchanged — the 100 TB path.
@@ -169,21 +169,14 @@ def _pr_driver(
     a few rows vs the distributed/oracle order (observed 2/2000 at
     sf0.01). Without the correction, verified rank-exact against
     the DuckDB oracle at sf0.001 and sf0.01."""
-    from decimal import ROUND_HALF_UP, Decimal
+    from decimal import Decimal
 
-    Q9 = Decimal("1e-9")
-    Q6 = Decimal("1e-6")
+    from bigdata_elephant_spark.functions.numeric import spark_round
 
-    def rnd(x: float, q: Decimal) -> float:
-        # Spark's Round(double, s) goes through BigDecimal.valueOf,
-        # i.e. the SHORTEST-STRING decimal repr of the double, not
-        # its exact binary expansion — Decimal(repr(x)) mirrors that
-        # (r14 ADVICE: Decimal(x) could land on the other side of a
-        # halfway point for a value whose binary expansion sits just
-        # under its shortest repr). Python's repr and Java's
-        # Double.toString both emit a shortest decimal that
-        # round-trips, so the quantize inputs agree.
-        return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
+    def rnd(x: float, scale: int) -> float:
+        # Spark's Round(double, s): HALF_UP on the shortest decimal
+        # repr (see spark_round)
+        return float(spark_round(x, scale))
 
     try:
         tbl = e.toArrow()
@@ -225,7 +218,7 @@ def _pr_driver(
         [v for v in nodes if v not in outdeg] if handle_dangling else None
     )
     base = float(1.0 - damping) / n
-    ranks = {v: rnd(1.0 / n, Q9) for v in nodes}
+    ranks = {v: rnd(1.0 / n, 9) for v in nodes}
     for _ in range(iterations):
         inflow = {v: 0.0 for v in nodes}
         for s, d, wt in w:
@@ -234,25 +227,20 @@ def _pr_driver(
             # exact decimal sum of the 9-decimal ranks (the
             # decimal(20,9) cast + SUM in _pr_round)
             dm = sum(
-                (
-                    Decimal(repr(ranks[v])).quantize(
-                        Q9, rounding=ROUND_HALF_UP
-                    )
-                    for v in dang
-                ),
+                (spark_round(ranks[v], 9) for v in dang),
                 Decimal(0),
             )
             dmn = float(dm) / float(n)
             ranks = {
-                v: rnd(base + damping * (inflow[v] + dmn), Q9)
+                v: rnd(base + damping * (inflow[v] + dmn), 9)
                 for v in nodes
             }
         else:
             ranks = {
-                v: rnd(base + damping * inflow[v], Q9) for v in nodes
+                v: rnd(base + damping * inflow[v], 9) for v in nodes
             }
     return e.sparkSession.createDataFrame(
-        [(v, rnd(ranks[v], Q6)) for v in nodes], schema
+        [(v, rnd(ranks[v], 6)) for v in nodes], schema
     )
 
 

@@ -98,20 +98,13 @@ def fake_feature_fingerprint(
     ``quantize(1e-6, ROUND_HALF_UP)`` agree digit-for-digit, so the
     fixed-scale string (e.g. ``-1.234560``) is identical on both
     sides; the one divergence — Python's signed ``-0.000000`` where
-    BigDecimal has no negative zero — is normalized away. This is
+    BigDecimal has no negative zero — is normalized away; both live
+    in :func:`~bigdata_elephant_spark.functions.numeric.spark_round`. This is
     what makes a DuckDB VALUES-table oracle for the (deliberately
     non-SQL) RNG decode possible."""
-    from decimal import ROUND_HALF_UP, Decimal
+    from bigdata_elephant_spark.functions.numeric import spark_round
 
-    q = Decimal("0.000001")
-
-    def fmt(x: float) -> str:
-        d = Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP)
-        if d == 0:
-            d = Decimal("0.000000")  # BigDecimal has no -0
-        return str(d)
-
-    s = ",".join(fmt(x) for x in _fake_features(payload, dim))
+    s = ",".join(str(spark_round(x)) for x in _fake_features(payload, dim))
     return hashlib.md5(s.encode("utf-8")).hexdigest()
 
 

@@ -30,10 +30,16 @@ from __future__ import annotations
 
 import math
 import random
-from decimal import ROUND_HALF_UP, Decimal
+import threading
+from collections import OrderedDict
+from decimal import Decimal
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from bigdata_elephant_spark.functions.numeric import spark_round
+from bigdata_elephant_spark.operators import search as _search
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -131,6 +137,17 @@ def quarantine_embeddings(
     return clean, quarantined
 
 
+def _check_count(n: int, name: str = "k") -> None:
+    """``ValueError`` for a ``k`` below 0, or an ``n_probe`` or
+    ``shortlist`` below 1 (``limit(-1)`` would raise an
+    ``AnalysisException`` and the rank window return nothing). Entry
+    points call it first, so an empty index or an absent query
+    rejects the value too."""
+    lo = 0 if name == "k" else 1
+    if n < lo:
+        raise ValueError(f"{name} must be >= {lo}, got {n}")
+
+
 def _topk(
     df: DataFrame,
     n: int,
@@ -145,14 +162,9 @@ def _topk(
     heaps, no window, no global sort); any other batch by the
     ``row_number() <= n`` window Spark plans as ``WindowGroupLimit``
     (map-side per-query heaps before the exchange). The input size
-    picks the branch — no flag — and both keep the same rows.
-
-    ``n`` below 0 for ``k``, or below 1 for ``n_probe`` and
-    ``shortlist``, raises ``ValueError`` (``limit(-1)`` would raise
-    an ``AnalysisException`` and the window return nothing)."""
-    lo = 0 if name == "k" else 1
-    if n < lo:
-        raise ValueError(f"{name} must be >= {lo}, got {n}")
+    picks the branch — no flag — and both keep the same rows. An
+    out-of-range ``n`` raises (:func:`_check_count`)."""
+    _check_count(n, name)
     if single:
         return df.orderBy(*order).limit(n)
     w = Window.partitionBy("q_id").orderBy(*order)
@@ -1519,41 +1531,49 @@ def compact_index(spark, path: str) -> None:
         _expire_versions(path, "tombstones", keep=(tcur,))
 
 
-def _probe_cells(cents: DataFrame, q: DataFrame, n_probe: int) -> dict:
-    """The probe stage shared by every indexed layout →
-    ``{cell_id: [q_id, ...]}``: each query's ``n_probe`` nearest
-    cells. Spark computes the ``|Q| x n_cells`` rounded distances
-    (``round(_l2sq, 6)`` — the driver never re-implements Spark's
-    rounding); the driver then ranks each query's rows by
-    ``(d, cell_id)`` in Spark's ascending order (nulls first, NaN
-    last). ONE definition pins the probe contract (rounded L2,
-    cell_id tie-break) across the IVF, IVF-PQ and IVF,SQ8 layouts
-    and their shared oracles. The rows are index METADATA (the
-    centroid table is n_cells rows), and the collected cells become
-    a STATIC partition filter on the cell_id layout. ``q`` is a
-    :func:`_query_vectors` frame; empty when it has no rows.
-    ``n_probe`` below 1 raises ``ValueError``."""
-    if n_probe < 1:
-        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
-    rows = (
-        cents.crossJoin(F.broadcast(q.select("q_id", "_qvec")))
-        .select(
-            "q_id",
-            "cell_id",
-            F.round(_l2sq(F.col("cvec"), F.col("_qvec")), 6).alias("d"),
+def _driver_vectors(df: DataFrame, id_name: str, vec_name: str) -> list:
+    """``[(id, vector)]`` of a metadata-sized frame (centroids, a
+    query batch), collected once over Arrow. ``array<float>`` widens
+    to double exactly; a vector that is null or holds a null element
+    becomes ``None`` (null distance to everything, as in Spark)."""
+    tbl = df.select(id_name, vec_name).toArrow()
+    return [
+        (i, None if v is None or None in v else v)
+        for i, v in zip(
+            tbl.column(id_name).to_pylist(), tbl.column(vec_name).to_pylist()
         )
-        .collect()
-    )
+    ]
 
-    def spark_asc(r):
-        d = r["d"]
-        nan = d is not None and math.isnan(d)
-        return (d is not None, nan, 0.0 if d is None or nan else d,
-                r["cell_id"])
 
+def _probe_cells(cents: list, queries: list, n_probe: int) -> dict:
+    """The probe stage shared by every indexed layout →
+    ``{cell_id: [q_id, ...]}``, on the driver over
+    :func:`_driver_vectors` pairs: each query's ``n_probe`` nearest
+    cells, exactly as Spark's per-query
+    ``orderBy(round(_l2sq, 6), cell_id).limit(n_probe)`` — a
+    left-fold double sum (``np.cumsum``; ``np.sum`` is pairwise) of
+    the widened float32 inputs, :func:`spark_round`, then
+    ``(d, cell_id)`` in Spark's ascending order: nulls (a null element
+    or another dimension, which ``zip_with`` pads with nulls) first,
+    NaN last. ONE definition pins the probe contract across the IVF,
+    IVF-PQ and IVF,SQ8 layouts and their oracles; the cells become a
+    STATIC partition filter on the cell_id layout."""
+    _check_count(n_probe, "n_probe")
+    ranked = []
+    for qid, qv in queries:
+        for cid, cv in cents:
+            d = None
+            if qv is not None and cv is not None and len(qv) == len(cv):
+                diff = np.subtract(cv, qv, dtype=np.float64)
+                d = np.cumsum(diff * diff)[-1] if len(diff) else 0.0
+                d = float(spark_round(d))
+            nan = d is not None and math.isnan(d)
+            ranked.append(
+                (qid, d is not None, nan, 0.0 if d is None or nan else d, cid)
+            )
     per_query: dict = {}
-    for r in sorted(rows, key=spark_asc):
-        per_query.setdefault(r["q_id"], []).append(r["cell_id"])
+    for r in sorted(ranked):
+        per_query.setdefault(r[0], []).append(r[-1])
     cells: dict = {}
     for qid in sorted(per_query):
         for c in per_query[qid][:n_probe]:
@@ -1599,6 +1619,78 @@ def _probe_candidates(
     return cand
 
 
+# ------------------------------------------- session-scoped ANN index
+#
+# The vector twin of operators.search.open_text_index (Shark's
+# keep-hot-state-resident design): reopening a saved index per query
+# costs two schema jobs and a probe job before the one scan that
+# matters. Open handles, least recently used first, keyed by path; a
+# handle persists nothing, so retiring one just drops it.
+_ANN_INDEXES: OrderedDict[str, AnnIndex] = OrderedDict()
+_ANN_INDEXES_LOCK = threading.Lock()
+
+
+class AnnIndex:
+    """Session-scoped handle over a plain IVF index: its ``kind`` and
+    ``dim`` (manifest, else the centroid width), the centroids as
+    driver-side ``cents`` pairs (:func:`_driver_vectors` — n_cells ×
+    dim floats on the driver) and the ``live`` rows frame (tombstones
+    hidden by :func:`_index_rows`, ``_nrm`` added; ``None`` for the
+    empty index). Get one with :func:`open_ann_index`."""
+
+    def __init__(self, spark, path, files, id_col, vec_col):
+        self.spark, self.files, self.cols = spark, files, (id_col, vec_col)
+        self.kind = index_kind(path)
+        if self.kind != "ivf":
+            raise ValueError(
+                f"index at {path!r} is kind={self.kind!r}: the ANN "
+                "handle serves the plain IVF layout only"
+            )
+        # centroids first: a bogus/missing index path must surface as
+        # the read error, not be mistaken for the (legitimate) empty
+        # generation a delete-everything compaction leaves behind
+        self.cents = _driver_vectors(
+            spark.read.parquet(f"{path}/centroids"), "cell_id", "cvec"
+        )
+        self.dim = (read_index_manifest(path) or {}).get("dim") or next(
+            (len(v) for _, v in self.cents if v is not None), None
+        )
+        live = _index_rows(spark, path, "vectors", id_col)
+        self.live = None if live is None else live.withColumn(
+            "_nrm", F.sqrt(_norm2(F.col(vec_col)))
+        )
+
+
+def open_ann_index(
+    spark, path: str, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> AnnIndex:
+    """The session's :class:`AnnIndex` over the IVF index at ``path``,
+    from an LRU with the text handles' bound
+    (``search.TEXT_INDEX_LRU_MAX``). Every call re-lists the index's
+    data files (``search._data_files``, no Spark job) and reopens on
+    any change: a rebuild, an :func:`update_ivf_index` append and a
+    :func:`delete_from_index` tombstone add files without touching
+    the manifest, and a :func:`compact_index` flip rewrites it.
+    ``session.release_caches()`` closes every handle."""
+    files = _search._data_files(spark, path)
+    with _ANN_INDEXES_LOCK:
+        h = _ANN_INDEXES.pop(path, None)
+        if h is None or (h.spark, h.files, h.cols) != (
+            spark, files, (id_col, vec_col)
+        ):
+            h = AnnIndex(spark, path, files, id_col, vec_col)
+        _ANN_INDEXES[path] = h
+        while len(_ANN_INDEXES) > _search.TEXT_INDEX_LRU_MAX:
+            _ANN_INDEXES.popitem(last=False)
+        return h
+
+
+def close_ann_indexes() -> None:
+    """Drop every open :class:`AnnIndex`."""
+    with _ANN_INDEXES_LOCK:
+        _ANN_INDEXES.clear()
+
+
 def _ivf_indexed_search(
     spark,
     index_path: str,
@@ -1609,53 +1701,66 @@ def _ivf_indexed_search(
     allowed: DataFrame | None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    vec: list[float] | None = None,
 ) -> DataFrame:
     """The one IVF query core over a :func:`build_ivf_index` layout →
-    ``(q_id, vec_id, cos_sim)`` top-k per query, in four stages:
+    ``(q_id, vec_id, cos_sim)`` top-k per query, over the session's
+    :func:`open_ann_index` handle, in four stages:
 
-    1. query frame — :func:`_query_vectors` over ``source`` (the base
-       table or the caller's own vectors; the index's live rows when
-       None), zero-norm queries dropped;
-    2. probe — :func:`_probe_cells`, the driver-ranked probe map;
+    1. queries — a literal ``vec`` is query ``query_ids[0]``, rounded
+       to float32 (Spark sees ``array<float>``), its norm a driver
+       double; otherwise the :func:`_query_vectors` frame over
+       ``source`` (the live rows when None), collected once;
+    2. probe — :func:`_probe_cells` on the driver;
     3. candidates — :func:`_probe_candidates`: one statically
-       partition-pruned scan of the probed cells' vectors, each
+       partition-pruned scan of the probed cells' live vectors, each
        scored only for the queries probing its cell;
-    4. score and top-k — the one cosine (:func:`_cos6`), then
-       :func:`_topk`: ``orderBy.limit(k)`` when exactly one query
-       reached the probe, else the rank window.
+    4. score and top-k — the one cosine (:func:`_cos6`) against the
+       ``vec`` as one ``array(CAST(… AS FLOAT), …)`` SQL literal, or
+       the broadcast query frame; then :func:`_topk`.
 
-    Tombstoned ids are hidden from the candidates (and from the
-    query frame when it comes from the index). Empty cases — an
-    all-tombstoned compacted index, zero-norm or absent queries —
-    return the typed empty frame without building a probe map."""
-    # centroids first: a bogus/missing index path must surface as
-    # the read error, not be mistaken for the (legitimate) empty
-    # generation a delete-everything compaction leaves behind
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    vecs = _index_rows(spark, index_path, "vectors", id_col)
+    An all-tombstoned compacted index and zero-norm or absent queries
+    give the typed empty frame. Bad ``k``/``n_probe``, and a ``vec``
+    of the wrong length or not finite in float32, raise
+    ``ValueError``."""
+    _check_count(k)
+    _check_count(n_probe, "n_probe")
+    h = open_ann_index(spark, index_path, id_col, vec_col)
     empty = f"q_id long, {id_col} long, cos_sim double"
-    if vecs is None:  # every row tombstoned + compacted: empty index
+    if vec is not None:
+        qv = np.asarray(vec, np.float32).astype(np.float64)
+        if h.dim not in (None, len(qv)) or not np.isfinite(qv).all():
+            raise ValueError(
+                f"vec needs {h.dim} finite float32 components, got {vec!r}"
+            )
+        qnrm = math.sqrt(np.cumsum(qv * qv)[-1]) if len(qv) else 0.0
+        queries = [(query_ids[0], qv)] if qnrm > 0 else []
+    if h.live is None:  # every row tombstoned + compacted: empty index
         return spark.createDataFrame([], empty)
-    q = _query_vectors(
-        source if source is not None else vecs, query_ids, id_col, vec_col
-    )
-    cells = _probe_cells(cents, q, n_probe)
+    if vec is None:
+        q = _query_vectors(
+            source if source is not None else h.live,
+            query_ids, id_col, vec_col,
+        )
+        queries = _driver_vectors(q, "q_id", "_qvec")
+    cells = _probe_cells(h.cents, queries, n_probe)
     if not cells:  # zero-norm or absent queries: no probe map
         return spark.createDataFrame([], empty)
-    vecs = vecs.withColumn("_nrm", F.sqrt(_norm2(F.col(vec_col))))
-    scored = (
-        _probe_candidates(
-            vecs.filter(F.col("_nrm") > 0), cells, id_col, allowed
-        )
-        .join(F.broadcast(q), "q_id")
-        .select(
-            "q_id",
-            id_col,
-            _cos6(
-                F.col(vec_col), F.col("_qvec"),
-                F.col("_nrm"), F.col("_qnrm"),
-            ).alias("cos_sim"),
-        )
+    cand = _probe_candidates(
+        h.live.filter(F.col("_nrm") > 0), cells, id_col, allowed
+    )
+    if vec is not None:
+        qvec = F.expr("array(" + ", ".join(
+            f"CAST({x!r}D AS FLOAT)" for x in qv.tolist()
+        ) + ")")
+        qnrm = F.lit(qnrm)
+    else:
+        cand = cand.join(F.broadcast(q), "q_id")
+        qvec, qnrm = F.col("_qvec"), F.col("_qnrm")
+    scored = cand.select(
+        "q_id",
+        id_col,
+        _cos6(F.col(vec_col), qvec, F.col("_nrm"), qnrm).alias("cos_sim"),
     )
     return _topk(
         scored, k, [F.desc("cos_sim"), F.asc(id_col)],
@@ -1673,21 +1778,25 @@ def ivf_topk_indexed(
     vec_col: str = "embedding",
     source: DataFrame | None = None,
     allowed: DataFrame | None = None,
+    vec: list[float] | None = None,
 ) -> DataFrame:
     """Read-side IVF top-k over a :func:`build_ivf_index` layout →
     ``(vec_id, cos_sim)``: the batch of one through
     :func:`_ivf_indexed_search`, the same code that answers
-    :func:`ivf_topk_batch_indexed`. The query vector comes from
-    ``source`` (the base table — at scale a point lookup / the
-    caller's own vector), never from a scan of the index unless
-    ``source`` is None. ``allowed`` composes a metadata predicate
+    :func:`ivf_topk_batch_indexed`. The query vector is ``vec`` when
+    given: a literal scored as id ``query_vec_id`` (the CLI's -1)
+    that enters the plan as a SQL literal, so a warm query over the
+    session's :func:`open_ann_index` handle is ONE Spark job. Else
+    it comes from ``source`` (the base table — at scale a point
+    lookup / the caller's own vector), or from the index's live rows
+    when ``source`` is None. ``allowed`` composes a metadata predicate
     with the probe (:func:`ivf_topk`'s filtered-search semantics):
     the semi-join lands ON the statically pruned scan, so filtered
     search still touches only the probed partitions. Results match
     the inline :func:`ivf_topk` row-for-row (equivalence-tested)."""
     return _ivf_indexed_search(
         spark, index_path, [query_vec_id], source, n_probe, k, allowed,
-        id_col, vec_col,
+        id_col, vec_col, vec,
     ).drop("q_id")
 
 
@@ -1955,8 +2064,6 @@ def kmeans_parallel_seeds(
     }
 
     # local weighted farthest-point greedy over the candidate set.
-    import numpy as np
-
     ids = sorted(cand)
     mat = np.array([cand[i] for i in ids], dtype=np.float64)
     w = np.array([weights.get(i, 0) for i in ids], dtype=np.float64)
@@ -2296,6 +2403,9 @@ def sq8_topk_batch(
     predicate). Such a vector has no defined cosine against anything
     — excluding it is the ranking the exact scorer would give the
     true zero vector. Empty input returns the typed empty frame."""
+    _check_count(k)
+    if n_cells is not None:
+        _check_count(n_probe, "n_probe")
     dim = _vec_dim(embeddings, vec_col)
     if dim is None:
         return embeddings.sparkSession.createDataFrame(
@@ -2581,11 +2691,16 @@ def ivfsq8_topk_indexed(
     search on the pruned scan exactly like the IVF/IVF-PQ layouts.
     Probe and candidates are the IVF core's stages
     (:func:`_probe_cells`, :func:`_probe_candidates`)."""
+    _check_count(k)
+    _check_count(n_probe, "n_probe")
     cents = spark.read.parquet(f"{index_path}/centroids")
     stats = spark.read.parquet(f"{index_path}/sq8_stats")
     codes = _index_rows(spark, index_path, "codes", id_col)
     q = _query_vectors(source, [query_vec_id], id_col, vec_col)
-    cells = _probe_cells(cents, q, n_probe) if codes is not None else {}
+    cells = _probe_cells(
+        _driver_vectors(cents, "cell_id", "cvec"),
+        _driver_vectors(q, "q_id", "_qvec"), n_probe,
+    ) if codes is not None else {}
     if not cells:  # empty compacted index, zero-norm/absent query
         return spark.createDataFrame(
             [], f"{id_col} long, sq8_sim double"
@@ -2940,11 +3055,17 @@ def ivfpq_topk_indexed(
     :func:`ivfpq_topk`, row-for-row (equivalence-tested). Probe and
     candidates are the IVF core's stages (:func:`_probe_cells`,
     :func:`_probe_candidates`)."""
+    _check_count(k)
+    _check_count(n_probe, "n_probe")
+    _check_count(shortlist, "shortlist")
     cents = spark.read.parquet(f"{index_path}/centroids")
     cbooks = spark.read.parquet(f"{index_path}/codebooks")
     codes = _index_rows(spark, index_path, "codes", id_col)
     q = _query_vectors(source, [query_vec_id], id_col, vec_col)
-    cells = _probe_cells(cents, q, n_probe) if codes is not None else {}
+    cells = _probe_cells(
+        _driver_vectors(cents, "cell_id", "cvec"),
+        _driver_vectors(q, "q_id", "_qvec"), n_probe,
+    ) if codes is not None else {}
     if not cells:  # empty compacted index, zero-norm/absent query
         return spark.createDataFrame(
             [], f"{id_col} long, cos_sim double"
@@ -3227,12 +3348,11 @@ def embedding_novelty_indexed(
     Probe semantics are the index family's shared contract (rounded
     L2, cell_id tie-break), and the oracle REPLAYS the probe, so
     the driver hash pins the pruned search exactly. Unlike the
-    retrievers' :func:`_probe_cells`, which collects the
-    ``|Q| x n_cells`` distance rows and ranks them on the driver,
-    the probe here stays a Spark-side per-query rank window: the
-    query set is a delta batch that can be corpus-sized, so its
-    distance rows cannot be collected to the driver (only the union
-    of probed cells, at most n_cells ids, is). The
+    retrievers' :func:`_probe_cells`, which collects the queries and
+    ranks every query's cells on the driver, the probe here stays a
+    Spark-side per-query rank window: the query set is a delta batch
+    that can be corpus-sized, so it cannot be collected to the driver
+    (only the union of probed cells, at most n_cells ids, is). The
     recall-vs-threshold trade of probing is measured separately
     (``ivf_probe_recall_sweep``), same as every indexed retriever
     here. Verdicts mirror the exact operator: zero-norm delta
@@ -3363,23 +3483,9 @@ def power_iteration_top_eigvec(
     ).orderBy("i")
 
 
-_Q6 = Decimal("0.000001")
-
-
-def _round6_double(d: float) -> float:
-    """Spark's ``round(double, 6)``: HALF_UP on the shortest decimal
-    repr (``BigDecimal.valueOf(d).setScale(6, HALF_UP)``). Python's
-    ``repr`` is the same shortest-round-trip decimal, so quantizing
-    it reproduces the JVM result."""
-    return float(
-        Decimal(repr(float(d))).quantize(_Q6, rounding=ROUND_HALF_UP)
-    )
-
-
 def _int6(d) -> int:
     """A value with ≤6 decimal places → exact 1e-6-scaled int."""
-    src = d if isinstance(d, Decimal) else Decimal(repr(float(d)))
-    return int(src.quantize(_Q6, rounding=ROUND_HALF_UP).scaleb(6))
+    return int(spark_round(d).scaleb(6))
 
 
 def _collect_sym(gram: DataFrame, dim: int) -> list[list[int]]:
@@ -3413,12 +3519,7 @@ def _matvec_py(G: list[list[int]], x: list[int]) -> list[int]:
     for row in G:
         s = sum(g * xj for g, xj in zip(row, x))
         out.append(
-            int(
-                Decimal(s)
-                .scaleb(-12)
-                .quantize(_Q6, rounding=ROUND_HALF_UP)
-                .scaleb(6)
-            )
+            int(spark_round(Decimal(s).scaleb(-12)).scaleb(6))
         )
     return out
 
@@ -3436,11 +3537,11 @@ def _power_iterate_py(
         if n2 > 0:
             # decimal→double cast is correctly rounded on both
             # runtimes; sqrt/divide are IEEE; the 6-dp round is
-            # Spark's round-on-double (see _round6_double)
+            # Spark's round-on-double (see spark_round)
             n = math.sqrt(float(Decimal(n2).scaleb(-12)))
             x = [
                 _int6(
-                    _round6_double(float(Decimal(wi).scaleb(-6)) / n)
+                    float(spark_round(float(Decimal(wi).scaleb(-6)) / n))
                 )
                 for wi in w
             ]
@@ -3453,7 +3554,7 @@ def _eigval_py(G: list[list[int]], x: list[int]) -> float:
     """``round(||G v||, 6)`` — the Rayleigh estimate for unit v."""
     w = _matvec_py(G, x)
     n2 = sum(wi * wi for wi in w)
-    return _round6_double(math.sqrt(float(Decimal(n2).scaleb(-12))))
+    return float(spark_round(math.sqrt(float(Decimal(n2).scaleb(-12)))))
 
 
 def pca2_projection(
@@ -3501,9 +3602,9 @@ def pca2_projection(
     for i in range(dim):
         gi = G[i]
         for j in range(dim):
-            inner = _round6_double(eig * v1f[i] * v1f[j])
+            inner = float(spark_round(eig * v1f[i] * v1f[j]))
             gd = float(Decimal(gi[j]).scaleb(-6))
-            G2[i][j] = _int6(_round6_double(gd - inner))
+            G2[i][j] = _int6(float(spark_round(gd - inner)))
     x2 = _power_iterate_py(G2, dim, iters)
     c1 = spark.createDataFrame(
         [(i, Decimal(xi).scaleb(-6)) for i, xi in enumerate(x1)],

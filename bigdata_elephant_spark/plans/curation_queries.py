@@ -612,11 +612,11 @@ def q_pca_variance_explained(
     metadata-sized Spark jobs."""
     from decimal import Decimal
 
+    from bigdata_elephant_spark.functions.numeric import spark_round
     from bigdata_elephant_spark.operators.similarity import (
         _collect_sym,
         _eigval_py,
         _power_iterate_py,
-        _round6_double,
     )
     from bigdata_elephant_spark.plans.llm_queries import EMBED_DIM
 
@@ -625,8 +625,8 @@ def q_pca_variance_explained(
     x = _power_iterate_py(G, EMBED_DIM, POWER_ITERS)
     eig = _eigval_py(G, x)
     tr_scaled = sum(G[i][i] for i in range(EMBED_DIM))
-    trace = _round6_double(float(Decimal(tr_scaled).scaleb(-6)))
-    var = _round6_double(eig / trace) if trace > 0 else None
+    trace = float(spark_round(float(Decimal(tr_scaled).scaleb(-6))))
+    var = float(spark_round(eig / trace)) if trace > 0 else None
     return spark.createDataFrame(
         [(eig, trace, var)],
         "eigval double, trace double, var_explained double",

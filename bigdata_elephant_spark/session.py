@@ -39,16 +39,19 @@ def persist_tracked(
 
 
 def release_caches() -> None:
-    """Unpersist every tracked intermediate and close every open text
+    """Unpersist every tracked intermediate, close every open text
     index handle (``operators.search.open_text_index``), unpersisting
-    its doc lengths — safe to call anytime: an in-flight plan
-    recomputes instead of failing, and the next query reopens its
-    handle."""
+    its doc lengths, and close every ANN index handle
+    (``operators.similarity.open_ann_index``, which persists nothing)
+    — safe to call anytime: an in-flight plan recomputes instead of
+    failing, and the next query reopens its handle."""
     from bigdata_elephant_spark.operators.search import close_text_indexes
+    from bigdata_elephant_spark.operators.similarity import close_ann_indexes
 
     while _TRACKED_CACHES:
         _TRACKED_CACHES.pop().unpersist()
     close_text_indexes()
+    close_ann_indexes()
 
 
 def get_spark(

@@ -8,11 +8,13 @@ import uuid
 
 from bigdata_elephant_spark.cli import main
 
-# Measured: a warm `ann-query --vec` runs 6 Spark jobs and `ann-batch`
-# 7 (14 before the shared IVF query core) for any batch size — the
-# probe is one collect and the candidates one pruned scan for the
-# whole batch.
-WARM_ANN_QUERY_MAX_JOBS = 6
+# Measured: a warm `ann-query --vec` runs 1 Spark job (6 before the
+# session-scoped ANN handle: two artifact opens, a probe job and a
+# literal query frame) and `ann-batch` 4 (7 before the handle, 14
+# before the shared IVF query core) for any batch size — the probe
+# runs on the driver over one query collect, and the candidates are
+# one pruned scan for the whole batch.
+WARM_ANN_QUERY_MAX_JOBS = 2
 ANN_BATCH_MAX_JOBS = 8
 
 
@@ -220,11 +222,12 @@ def test_cli_ann_vec_dim_validation(spark, sf_dir, tmp_path, capsys):
     (no Spark job per query), falls back to one centroids footer
     read on pre-manifest index dirs, and skips validation entirely
     on an unreadable index path so the query's own error surfaces
-    instead of a confusing failure inside validation. Non-finite or
-    empty --vec components, a non-integer --vec-ids entry, and an
-    out-of-range -k (below 0, for query, batch, ann-query and
-    ann-batch), --probe or --shortlist (below 1) are usage errors
-    (exit 2) raised before any Spark job."""
+    instead of a confusing failure inside validation. Non-finite
+    (also beyond float32 range) or empty --vec components, a
+    non-integer --vec-ids entry, and an out-of-range -k (below 0,
+    for query, batch, ann-query and ann-batch), --probe or
+    --shortlist (below 1) are usage errors (exit 2) raised before
+    any Spark job."""
     import io
     import json
     import os
@@ -252,6 +255,7 @@ def test_cli_ann_vec_dim_validation(spark, sf_dir, tmp_path, capsys):
         (["ann-query", "--index", idx, f"--vec=nan{tail}"], "finite"),
         (["ann-query", "--index", idx, f"--vec=inf{tail}"], "finite"),
         (["ann-query", "--index", idx, f"--vec=-inf{tail}"], "finite"),
+        (["ann-query", "--index", idx, f"--vec=1e39{tail}"], "float32"),
         (["ann-query", "--index", idx, f"--vec=1,,2{tail}"], "number"),
         (["ann-batch", "--index", idx, "--vec-ids", "1,x"], "'x'"),
         (["ann-query", "--index", idx, "--vec-id", "0", "--probe", "-1"],

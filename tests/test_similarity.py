@@ -656,13 +656,60 @@ def test_ivf_batch_indexed_matches_inline_batch(spark, sf_dir, tmp_path):
     )
 
 
+def _spark_probe(cents, q, n_probes) -> dict:
+    """Spark's own probe per ``n_probe``: each query's
+    ``orderBy(round(_l2sq, 6), cell_id).limit(n_probe)``, as
+    ``{n_probe: {cell_id: [q_id, ...]}}``. One collect: a
+    ``row_number`` over the same total order is the same cut."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from bigdata_elephant_spark.operators import similarity as sim
+
+    w = Window.partitionBy("q_id").orderBy("d", "cell_id")
+    rows = (
+        cents.crossJoin(q)
+        .select(
+            "q_id",
+            "cell_id",
+            F.round(sim._l2sq(F.col("cvec"), F.col("_qvec")), 6).alias("d"),
+        )
+        .withColumn("_rn", F.row_number().over(w))
+        .orderBy("q_id", "_rn")
+        .collect()
+    )
+    out: dict = {}
+    for n in n_probes:
+        want = out.setdefault(n, {})
+        for r in rows:
+            if r["_rn"] <= n:
+                want.setdefault(r["cell_id"], []).append(r["q_id"])
+    return out
+
+
+def _driver_probe(cents, q, n_probe) -> dict:
+    from bigdata_elephant_spark.operators import similarity as sim
+
+    return sim._probe_cells(
+        sim._driver_vectors(cents, "cell_id", "cvec"),
+        sim._driver_vectors(q, "q_id", "_qvec"),
+        n_probe,
+    )
+
+
 def test_probe_cells_matches_spark_probe(spark):
-    """The driver-ranked probe equals Spark's own per-query
+    """The driver probe equals Spark's own per-query
     ``orderBy(round(_l2sq, 6), cell_id).limit(n_probe)``: exact ties
     and ties made by the 6-decimal rounding go to the lower cell_id,
-    a null distance (a centroid of another dimension) ranks first and
-    a NaN distance last, as in Spark's ascending sort."""
-    from pyspark.sql import functions as F
+    a null distance (a centroid of another dimension, or with a null
+    element) ranks first and a NaN distance last, as in Spark's
+    ascending sort; distances are folded left to right like Spark's
+    ``aggregate``. Then a seeded sweep of random float32 centroids
+    and queries, half of them on a small 1/16 grid: their distances
+    are exact multiples of 1/256, so many tie exactly and many land on a
+    6-decimal halfway point (``m / 128`` for odd ``m``, e.g.
+    0.0078125), which Spark rounds HALF_UP (half-even would not)."""
+    import numpy as np
 
     from bigdata_elephant_spark.operators import similarity as sim
 
@@ -673,31 +720,105 @@ def test_probe_cells_matches_spark_probe(spark):
             (5, [1.0, 0.0]), (2, [0.0, 1.0]), (9, [-1.0, 0.0]),
             (3, [0.0, 0.5]), (7, [2.0, 0.0]), (8, [0.0, 0.0]),
             (4, [1e-7, 0.0]), (6, [float("nan"), 0.0]), (1, [1.0]),
+            (10, [None, 0.25]), (11, [0.0625, 0.0625]),
         ],
         "cell_id long, cvec array<float>",
     ).repartition(1)
     src = spark.createDataFrame(
-        [(10, [0.0, 0.001]), (11, [1.0, 1.0]), (12, [0.0, 0.0])],
+        [(10, [0.0, 0.001]), (11, [1.0, 1.0]), (12, [0.0, 0.0]),
+         (13, [0.125, 0.125])],
         "vec_id long, embedding array<float>",
     ).repartition(1)
-    q = sim._query_vectors(src, [10, 11, 12, 13])
-    dists = cents.crossJoin(q).select(
-        "q_id",
-        "cell_id",
-        F.round(sim._l2sq(F.col("cvec"), F.col("_qvec")), 6).alias("d"),
-    )
-    for n_probe in (2, 6, 9, 12):
-        want: dict = {}
-        for qid in (10, 11):
-            for r in (
-                dists.filter(F.col("q_id") == qid)
-                .orderBy("d", "cell_id")
-                .limit(n_probe)
-                .collect()
-            ):
-                want.setdefault(r["cell_id"], []).append(qid)
-        assert sim._probe_cells(cents, q, n_probe) == want, n_probe
-    assert sim._probe_cells(cents, q.filter("q_id = 12"), 3) == {}
+    q = sim._query_vectors(src, [10, 11, 12, 13, 14])
+    probes = (2, 6, 9, 12)
+    want = _spark_probe(cents, q, probes)
+    for n_probe in probes:
+        assert _driver_probe(cents, q, n_probe) == want[n_probe], n_probe
+    assert _driver_probe(cents, q.filter("q_id = 12"), 3) == {}
+
+    # fold order: 1e16 + fifteen 0.25s is 1e16 summed left to right
+    # (Spark's aggregate) but not pairwise (np.sum), which would rank
+    # cell 0 behind its tie with cell 1
+    cents = spark.createDataFrame(
+        [(0, [1e8] + [0.0] * 15), (1, [1e8] + [0.5] * 15)],
+        "cell_id long, cvec array<float>",
+    ).repartition(1)
+    src = spark.createDataFrame(
+        [(5, [0.0] + [0.5] * 15)], "vec_id long, embedding array<float>"
+    ).repartition(1)
+    q = sim._query_vectors(src)
+    assert _driver_probe(cents, q, 1) == _spark_probe(cents, q, [1])[1]
+    assert _driver_probe(cents, q, 1) == {0: [5]}
+    # halfway: cell 2 sits at 0.0078125, which HALF_UP rounds to the
+    # 0.007813 of cell 1 (the tie goes to cell 1); half-even would not
+    cents = spark.createDataFrame(
+        [(2, [0.5625, 0.5625, 0.5]), (1, [0.5625, 0.5625, 0.5 + 2**-11])],
+        "cell_id long, cvec array<float>",
+    ).repartition(1)
+    src = spark.createDataFrame(
+        [(5, [0.5, 0.5, 0.5])], "vec_id long, embedding array<float>"
+    ).repartition(1)
+    q = sim._query_vectors(src)
+    assert _driver_probe(cents, q, 1) == _spark_probe(cents, q, [1])[1]
+    assert _driver_probe(cents, q, 1) == {1: [5]}
+
+    rng = np.random.default_rng(20261018)
+    dim, n_cells, n_q = 4, 24, 40
+
+    def table(n, first_id):
+        vecs = rng.normal(size=(n, dim)).astype(np.float32)
+        vecs[::2] = np.round(vecs[::2] * 4) / 16  # the 1/16 grid
+        return [
+            (first_id + i, [float(x) for x in v]) for i, v in enumerate(vecs)
+        ]
+
+    cent_rows, q_rows = table(n_cells, 0), table(n_q, 100)
+    cents = spark.createDataFrame(
+        cent_rows, "cell_id long, cvec array<float>"
+    ).repartition(1)
+    src = spark.createDataFrame(
+        q_rows, "vec_id long, embedding array<float>"
+    ).repartition(1)
+    q = sim._query_vectors(src)
+    probes = (1, 3, 8, n_cells)
+    want = _spark_probe(cents, q, probes)
+    for n_probe in probes:
+        assert _driver_probe(cents, q, n_probe) == want[n_probe], n_probe
+    # the sweep really holds exact ties and 6-decimal halfway points
+    dists = [
+        [np.cumsum((np.float64(a) - b) ** 2)[-1] for _, b in cent_rows[::2]]
+        for _, a in q_rows[::2]
+    ]
+    assert any(d * 128 % 2 == 1 for row in dists for d in row)
+    assert any(len(set(row)) < len(row) for row in dists)
+
+
+def test_spark_round_matches_spark(spark):
+    """``functions.numeric.spark_round`` is Spark's ``round(x, s)``
+    on doubles: HALF_UP on the shortest repr, so 0.1234565 (stored
+    just below the halfway point) rounds up like Spark, unlike
+    ``Decimal(x)`` or Python's ``round``; NaN and ±Inf pass through
+    and a zero result is unsigned."""
+    from bigdata_elephant_spark.functions.numeric import spark_round
+
+    xs = [
+        0.1234565, 1.0000005, 2.5e-07, -2.5e-07, 0.0078125, 1e-7,
+        -1e-7, 123456.1234565, 1e20, 3.14159265358979, -0.0,
+        float("nan"), float("inf"), 0.5e-6, 1.4999995,
+    ]
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+    for scale in (6, 9):
+        got = {
+            r["i"]: r["r"]
+            for r in df.selectExpr("i", f"round(x, {scale}) AS r").collect()
+        }
+        for i, x in enumerate(xs):
+            want = got[i]
+            have = float(spark_round(x, scale))
+            if want != want:  # NaN
+                assert have != have, x
+            else:
+                assert (have, str(have)) == (want, str(want)), (x, scale)
 
 
 def test_ivf_incremental_update_equals_full_build(spark, sf_dir, tmp_path):
@@ -1964,3 +2085,36 @@ def test_sq8_build_raises_on_fully_out_of_contract_corpus(spark, tmp_path):
         sim.build_ivfsq8_index(
             emb, str(tmp_path / "sq8"), n_cells=2
         )
+
+
+def test_counts_rejected_at_entry(spark, sf_dir, tmp_path):
+    """An out-of-range ``k`` (below 0), ``n_probe`` or ``shortlist``
+    (below 1) raises ``ValueError`` at every indexed reader's entry,
+    also where the answer would be empty — an absent query id, an
+    empty input — and before any index file is read (the quantized
+    readers get a path that does not exist)."""
+    from bigdata_elephant_spark.operators import similarity as sim
+    from bigdata_elephant_spark.sources.corpus import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    idx = str(tmp_path / "ivf")
+    sim.build_ivf_index(emb, idx, n_cells=4)
+    nowhere = str(tmp_path / "nowhere")
+    for name, call in [
+        ("k", lambda: sim.ivf_topk_indexed(spark, idx, 99999, k=-1)),
+        ("k", lambda: sim.ivf_topk_indexed(spark, idx, 0, k=-1)),
+        ("n_probe", lambda: sim.ivf_topk_indexed(spark, idx, 99999, n_probe=0)),
+        ("k", lambda: sim.ivf_topk_batch_indexed(spark, idx, [], k=-1)),
+        ("k", lambda: sim.ivfpq_topk_indexed(spark, nowhere, 0, emb, k=-1)),
+        ("shortlist", lambda: sim.ivfpq_topk_indexed(
+            spark, nowhere, 0, emb, shortlist=0)),
+        ("k", lambda: sim.ivfsq8_topk_indexed(spark, nowhere, 0, emb, k=-1)),
+        ("n_probe", lambda: sim.ivfsq8_topk_indexed(
+            spark, nowhere, 0, emb, n_probe=0)),
+        ("k", lambda: sim.sq8_topk(emb.limit(0), 3, k=-1)),
+        ("n_probe", lambda: sim.sq8_topk_batch(
+            emb.limit(0), [3], n_cells=4, n_probe=0)),
+    ]:
+        with pytest.raises(ValueError, match=f"{name} must be >= "):
+            call()
+    assert sim.ivf_topk_indexed(spark, idx, 99999, k=0).collect() == []
