@@ -37,23 +37,26 @@ in the process: called repeatedly through ``main(argv, spark=...)`` it
 pays the open once, while one process per query gains only the job
 cuts.
 
-``ann-query`` and ``ann-batch`` over a plain IVF index share one query
-core (``operators.similarity._ivf_indexed_search``): a single query is
-a batch of one through the same probe, candidate and scoring stages,
-and only the top-k step differs (``orderBy.limit`` for one query, a
-per-query rank window for more). ``ann-query`` still enters through
-``ivf_topk_indexed``, and ``ann-batch`` through
-``ivf_topk_batch_indexed``. Both read the index through a
-session-scoped ANN handle (``operators.similarity.open_ann_index``).
-It caches the index kind and dimension, the centroids as a driver-side
-array and the live-rows frame (tombstones hidden, norms added), and
-persists nothing. Handles sit in an LRU keyed by index path with the
-text handles' bound (``TEXT_INDEX_LRU_MAX``), revalidated on every call
-against the index's data-file listing: a rebuild, an ``ann-add``, an
+``ann-query`` and ``ann-batch`` share one query core over the three
+index layouts, plain IVF, IVF,SQ8 and IVF-PQ
+(``operators.similarity._ivf_indexed_search``): a single query is a
+batch of one through the same probe, candidate and scoring stages.
+``ann-query`` enters through the layout's reader (plain IVF through
+``ivf_topk_indexed``), ``ann-batch`` through ``ivf_topk_batch_indexed``.
+Both read the index through a session-scoped ANN handle
+(``operators.similarity.open_ann_index``). It caches the index kind
+and dimension, the centroids as a driver-side array, the live rows
+(vectors, or codes on the quantized layouts; tombstones hidden) and
+the quantizer state (SQ8 stats, PQ codebooks), and persists nothing.
+Handles sit in an LRU keyed by index path with the text handles' bound
+(``TEXT_INDEX_LRU_MAX``), revalidated on every call against the
+index's data-file listing: a rebuild, an ``ann-add``, an
 ``ann-delete`` or an ``ann-compact`` is seen by the next query.
 ``session.release_caches()`` closes them too. The probe runs on the
 driver, and a literal ``--vec`` enters the plan as a SQL literal, so a
-warm ``ann-query --vec`` is 1 Spark job (6 before). The n_cells x dim
+warm ``ann-query --vec`` is 1 Spark job on plain IVF and 2 on IVF,SQ8.
+The quantized layouts store codes only, so their stored-id queries
+(and IVF-PQ's exact re-rank) read ``--embeddings``. The n_cells x dim
 centroids live on the driver, which suits a query or a batch; the
 corpus-sized delta of ``embedding_novelty_indexed`` keeps its probe in
 Spark.
@@ -143,15 +146,16 @@ def _literal_vec(p, spark, args) -> list[float]:
     length against the index dimension up front: zip_with pads
     mismatched arrays with nulls, so a wrong-length vector would
     silently yield null distances and arbitrary probe cells instead
-    of an error. The dimension comes from the manifest.json written
-    at ann-build time (a plain file read — no Spark job per query);
-    pre-manifest dirs fall back to one centroids footer read.
+    of an error. The dimension comes from
+    ``operators.similarity.index_dim``, the lookup the ANN handle
+    uses (the manifest.json written at ann-build time, a plain file
+    read; pre-manifest dirs fall back to one centroids footer read).
     Validation is best-effort: a missing or unreadable index path
     skips the check and surfaces as the query function's usual
-    error. ONE definition for every index kind: the IVF reader takes
-    the vector itself (``ivf_topk_indexed(vec=...)``, a SQL literal
-    in the plan), the IVF,SQ8 reader a one-row source table with the
-    sentinel id -1 (ids are non-negative on ingest).
+    error. ONE definition for both index kinds that take a literal:
+    the IVF and IVF,SQ8 readers take the vector itself (``vec=...``,
+    a SQL literal in the plan, scored as the sentinel id -1; ids are
+    non-negative on ingest).
 
     Components must be finite numbers, also once rounded to the
     stored float32, checked before any Spark work: an empty
@@ -160,9 +164,7 @@ def _literal_vec(p, spark, args) -> list[float]:
     ``ann-build`` enforces on stored vectors."""
     import numpy as np
 
-    from bigdata_elephant_spark.operators.similarity import (
-        read_index_manifest,
-    )
+    from bigdata_elephant_spark.operators.similarity import index_dim
 
     try:
         vec = [float(x) for x in args.vec.split(",")]
@@ -174,19 +176,10 @@ def _literal_vec(p, spark, args) -> list[float]:
     if not finite:
         p.error(f"--vec {args.vec!r}: components must be finite "
                 "(no nan or inf, and within float32 range)")
-    dim = (read_index_manifest(args.index) or {}).get("dim")
-    if dim is None:
-        from pyspark.sql import functions as F
-
-        try:
-            row = (
-                spark.read.parquet(f"{args.index}/centroids")
-                .select(F.size("cvec").alias("dim"))
-                .first()
-            )
-            dim = None if row is None else row["dim"]
-        except Exception:
-            dim = None
+    try:
+        dim = index_dim(spark, args.index)
+    except Exception:
+        dim = None
     if dim is not None and len(vec) != dim:
         p.error(
             f"--vec has {len(vec)} components but index "
@@ -300,7 +293,8 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
                          "re-rank); needs --embeddings for the "
                          "re-rank and --vec-id for the query")
     sp.add_argument("--embeddings", default=None,
-                    help="raw vector table for --pq re-rank")
+                    help="raw vector table: the --pq re-rank and the "
+                         "quantized layouts' --vec-id query")
     sp.add_argument("--shortlist", type=_at_least(1), default=50,
                     help="ADC shortlist size before exact re-rank "
                          "(with --pq)")
@@ -328,9 +322,10 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
 
     sp = sub.add_parser(
         "ann-batch",
-        help="batch cosine top-k over a saved IVF index: the whole "
-             "probe set answered by ONE statically partition-pruned "
-             "scan (union of every query's probe cells)",
+        help="batch top-k over a saved IVF, IVF,SQ8 or IVF-PQ index: "
+             "the whole probe set answered by ONE statically "
+             "partition-pruned scan (union of every query's probe "
+             "cells)",
     )
     sp.add_argument("--index", required=True)
     sp.add_argument("--vec-ids", required=True,
@@ -338,8 +333,9 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
     sp.add_argument("-k", type=_at_least(0), default=10)
     sp.add_argument("--probe", type=_at_least(1), default=4)
     sp.add_argument("--embeddings", default=None,
-                    help="source table for the query vectors "
-                         "(defaults to the index's own rows)")
+                    help="source table for the query vectors (plain "
+                         "IVF defaults to the index's own rows; the "
+                         "quantized layouts need it)")
 
     sp = sub.add_parser(
         "pca",
@@ -651,51 +647,41 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
                     "(ADC probes the codes; the exact re-rank reads "
                     "the raw vectors)"
                 )
-            _print_rows(
-                ivfpq_topk_indexed(
-                    spark, args.index, vec_id,
-                    source=spark.read.parquet(args.embeddings),
-                    n_probe=args.probe, shortlist=args.shortlist,
-                    k=args.k, allowed=allowed,
-                ),
-                out,
+            res = ivfpq_topk_indexed(
+                spark, args.index, vec_id,
+                source=spark.read.parquet(args.embeddings),
+                n_probe=args.probe, shortlist=args.shortlist,
+                k=args.k, allowed=allowed,
             )
         elif kind == "ivfsq8":
-            # asymmetric scan: the query must come exact from a raw
-            # source (--embeddings for a stored id, or --vec)
-            if vec is not None:
-                source = spark.createDataFrame(
-                    [(vec_id, vec)], "vec_id long, embedding array<float>"
-                )
-            elif args.embeddings is None:
+            # asymmetric scan: the query must come exact (--vec, or
+            # --embeddings for a stored id)
+            if vec is None and args.embeddings is None:
                 p.error(
                     "an --sq8 index stores quantized codes "
                     "only: query by --vec, or pass --embeddings "
                     "so --vec-id can fetch the exact query "
                     "vector"
                 )
-            else:
-                source = spark.read.parquet(args.embeddings)
-            _print_rows(
-                ivfsq8_topk_indexed(
-                    spark, args.index, vec_id, source=source,
-                    n_probe=args.probe, k=args.k, allowed=allowed,
+            res = ivfsq8_topk_indexed(
+                spark, args.index, vec_id,
+                source=(
+                    None if vec is not None
+                    else spark.read.parquet(args.embeddings)
                 ),
-                out,
+                n_probe=args.probe, k=args.k, allowed=allowed, vec=vec,
             )
         else:
-            _print_rows(
-                ivf_topk_indexed(
-                    spark, args.index, vec_id,
-                    n_probe=args.probe, k=args.k, allowed=allowed,
-                    vec=vec,
-                ),
-                out,
+            res = ivf_topk_indexed(
+                spark, args.index, vec_id,
+                n_probe=args.probe, k=args.k, allowed=allowed, vec=vec,
             )
+        _print_rows(res, out)
     elif args.cmd == "ann-batch":
         from pyspark.sql import functions as F
 
         from bigdata_elephant_spark.operators.similarity import (
+            index_kind,
             ivf_topk_batch_indexed,
         )
 
@@ -703,21 +689,25 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
             ids = [int(s) for s in args.vec_ids.split(",") if s.strip()]
         except ValueError as e:  # names the bad id
             p.error(f"--vec-ids: {e}")
-        _print_rows(
-            ivf_topk_batch_indexed(
-                spark, args.index, ids,
-                n_probe=args.probe, k=args.k,
-                source=(
-                    spark.read.parquet(args.embeddings)
-                    if args.embeddings
-                    else None
-                ),
+        kind = index_kind(args.index)
+        if kind != "ivf" and args.embeddings is None:
+            p.error(
+                f"a {kind} index stores quantized codes only: pass "
+                "--embeddings for the exact query vectors"
             )
-            # |Q| x k rows: one sorted partition, not a global sort
-            # (no range-partition sampling job)
-            .coalesce(1)
-            .sortWithinPartitions(
-                F.asc("q_id"), F.desc("cos_sim"), F.asc("vec_id")
+        res = ivf_topk_batch_indexed(
+            spark, args.index, ids, n_probe=args.probe, k=args.k,
+            source=(
+                spark.read.parquet(args.embeddings)
+                if args.embeddings
+                else None
+            ),
+        )
+        # |Q| x k rows: one sorted partition, not a global sort (no
+        # range-partition sampling job); the score is the layout's own
+        _print_rows(
+            res.coalesce(1).sortWithinPartitions(
+                F.asc("q_id"), F.desc(res.columns[-1]), F.asc("vec_id")
             ),
             out,
         )

@@ -394,7 +394,7 @@ def bpe_subword_vocab(final_wf: DataFrame, top_n: int = 30) -> DataFrame:
 # unbounded stack breaks Catalyst analysis (and a single nested
 # expression is exponentially worse — see bpe_train) long before
 # data size matters. 64 keeps each segment's analysis cheap;
-# tools/bpe_encode_chunk_ab.py holds the measured A/B at 1k rules.
+# commit a33daaf records the measured A/B at 1k rules.
 BPE_ENCODE_FOLD_CHUNK = 64
 
 
@@ -416,7 +416,7 @@ def bpe_encode(
     stream, size-gated broadcast. Folding over occurrences instead
     multiplies every rule pass by corpus size — at 1k rules x sf0.01
     occurrences that already ran minutes; the distinct-word fold
-    runs seconds (tools/bpe_encode_chunk_ab.py).
+    runs seconds (the A/B recorded in commit a33daaf).
 
     Rules are literals in the plan — no join against a rule table.
     Each rule is its own single-fold Project (nesting folds into one

@@ -302,7 +302,7 @@ def pagerank(
         # un-checkpointed round would recompute the whole previous
         # plan for the dm scan — checkpoint every round there.
         # Checkpoint laziness differs by path, each way measured in
-        # isolation (tools/pagerank_bisect.py, best-of-5 at sf0.1):
+        # isolation (the bisect of commit b21b55d, best-of-5 at sf0.1):
         # - dangling: eager=False wins (4.6s -> 3.7s) — ranks has two
         #   consumers per round, and the lazy blocks persist as a
         #   side effect of whichever touches them first;

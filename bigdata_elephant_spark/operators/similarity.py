@@ -175,9 +175,25 @@ def _topk(
     )
 
 
+def _with_query(df: DataFrame, q) -> tuple:
+    """``df`` with its query attached → ``(df, qvec, qnrm)``. ``q`` is
+    a :func:`_query_vectors` frame, joined by broadcast on ``q_id``
+    when ``df`` carries it (a probe or shortlist fan-out) and cross
+    joined otherwise; or a literal ``(qvec, qnrm)`` Column pair (one
+    literal query, whose ``q_id`` ``df`` already carries), returned
+    as is — no join, no broadcast job."""
+    if not isinstance(q, DataFrame):
+        return (df, *q)
+    if "q_id" in df.columns:
+        df = df.join(F.broadcast(q), "q_id")
+    else:
+        df = df.crossJoin(F.broadcast(q))
+    return df, F.col("_qvec"), F.col("_qnrm")
+
+
 def _exact_rerank(
     candidates: DataFrame,
-    q: DataFrame,
+    q,
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -186,13 +202,11 @@ def _exact_rerank(
 ) -> DataFrame:
     """The one exact-cosine score and top-k of every vector core:
     each candidate's norm, the rounded cosine (:func:`_cos6`) against
-    the :func:`_query_vectors` frame ``q``, then :func:`_topk` by
-    (score desc, id). Candidates that carry ``q_id`` (a probe or
-    shortlist fan-out) are scored against their own query through a
-    broadcast join on it; the others against every row of ``q``
-    through a broadcast cross join. When ``q`` carries ``q_id`` the
-    result does too, self-matches dropped; the single-query indexed
-    readers pass ``q`` without it and get ``(id, score)``. One
+    its query (:func:`_with_query`: the :func:`_query_vectors` frame
+    ``q``, or a literal pair), then :func:`_topk` by (score desc, id).
+    Candidates that carry ``q_id`` are scored against their own
+    query; the others against every row of ``q``. When either side
+    carries ``q_id`` the result does too, self-matches dropped. One
     definition, so the scoring/rounding/tie-break contract cannot
     drift between the retrieval paths.
 
@@ -204,13 +218,13 @@ def _exact_rerank(
     query yields the empty result, not an error (``q`` drops it);
     the oracles carry the same norm>0 predicate."""
     keys = ["q_id"] if "q_id" in candidates.columns else []
-    scored = candidates.select(
-        *keys, id_col, vec_col, F.sqrt(_norm2(F.col(vec_col))).alias("_nrm")
-    ).filter(F.col("_nrm") > 0)
-    if keys:
-        scored = scored.join(F.broadcast(q), "q_id")
-    else:
-        scored = scored.crossJoin(F.broadcast(q))
+    scored, qvec, qnrm = _with_query(
+        candidates.select(
+            *keys, id_col, vec_col,
+            F.sqrt(_norm2(F.col(vec_col))).alias("_nrm"),
+        ).filter(F.col("_nrm") > 0),
+        q,
+    )
     if "q_id" in scored.columns:
         keys = ["q_id"]
         scored = scored.filter(F.col(id_col) != F.col("q_id"))
@@ -218,10 +232,7 @@ def _exact_rerank(
         scored.select(
             *keys,
             id_col,
-            _cos6(
-                F.col(vec_col), F.col("_qvec"),
-                F.col("_nrm"), F.col("_qnrm"),
-            ).alias(score),
+            _cos6(F.col(vec_col), qvec, F.col("_nrm"), qnrm).alias(score),
         ),
         k, [F.desc(score), F.asc(id_col)], single,
     )
@@ -1130,7 +1141,6 @@ def delete_from_index(
 def _checked_delta(
     spark,
     path: str,
-    man: dict,
     delta: DataFrame,
     id_col: str,
     vec_col: str,
@@ -1148,8 +1158,8 @@ def _checked_delta(
        delta with the wrong dimensionality is a caller bug worth
        failing loudly (the FAISS ``add()`` d-assertion), not a
        corpus-quality row to drop;
-    2. an in-plan dimension guard against the manifest's ``dim``
-       (pre-manifest dirs: the centroid width), validated in the same
+    2. an in-plan dimension guard against :func:`index_dim` (the
+       manifest's ``dim``, else the centroid width), validated in the same
        pass that assigns cells (no extra delta scan): a wrong-length
        vector would otherwise null-pad through zip_with, get a null
        L2 to every centroid, and silently sink into one cell with
@@ -1161,10 +1171,7 @@ def _checked_delta(
        single ``isdir``."""
     delta, _ = quarantine_embeddings(delta, vec_col, expected_dim=None)
     cents = spark.read.parquet(f"{path}/centroids")
-    dim = man.get("dim")
-    if dim is None:
-        row = cents.select(F.size("cvec").alias("d")).first()
-        dim = None if row is None else int(row["d"])
+    dim = index_dim(spark, path)
     if dim is not None:
         delta = delta.withColumn(
             vec_col,
@@ -1256,6 +1263,23 @@ def index_kind(path: str) -> str:
             else "ivfpq"
         )
     return "ivf"
+
+
+def index_dim(spark, path: str) -> int | None:
+    """The dimension of the vectors an index stores: the manifest's
+    ``dim`` (a plain file read, no Spark job), else — pre-manifest
+    dirs — the centroid width (one footer read); ``None`` for an
+    index without centroids rows. The one lookup behind the ANN
+    handle, the CLI's ``--vec`` check and the append-time guard."""
+    dim = (read_index_manifest(path) or {}).get("dim")
+    if dim is None:
+        row = (
+            spark.read.parquet(f"{path}/centroids")
+            .select(F.size("cvec").alias("d"))
+            .first()
+        )
+        dim = None if row is None else row["d"]
+    return None if dim is None else int(dim)
 
 
 def _vec_dim(embeddings: DataFrame, vec_col: str) -> int | None:
@@ -1384,7 +1408,7 @@ def update_ivf_index(
             "which is a rebuild"
         )
     delta, cents = _checked_delta(
-        spark, path, man, delta, id_col, vec_col, "update_ivf_index"
+        spark, path, delta, id_col, vec_col, "update_ivf_index"
     )
     assigned = ivf_assign(delta, cents, id_col, vec_col)
     (
@@ -1581,20 +1605,12 @@ def _probe_cells(cents: list, queries: list, n_probe: int) -> dict:
     return cells
 
 
-def _probe_candidates(
-    rows: DataFrame,
-    cells: dict,
-    id_col: str,
-    allowed: DataFrame | None,
-) -> DataFrame:
-    """The candidate stage shared by every indexed layout: ``rows``
-    (a cell_id-partitioned index table) pruned to the probed cells by
-    a static ``cell_id IN (...)`` filter, each row fanned out as
+def _fan_out(rows: DataFrame, cells: dict) -> DataFrame:
+    """``rows`` (any frame with ``cell_id``) pruned to the probed cells
+    by a static ``cell_id IN (...)`` filter, each row fanned out as
     ``q_id`` to the queries probing its cell through a literal SQL
     ``map(cell_id -> array(q_id))`` and ``explode`` (no join, no
-    extra job), the self-match dropped, and the optional
-    filtered-search id set applied as a broadcast semi-join ON the
-    pruned scan. ``cells`` is a non-empty :func:`_probe_cells` map.
+    extra job). ``cells`` is a non-empty :func:`_probe_cells` map.
     The map and the IN-list are SQL text: one py4j call each, however
     many cells or queries."""
     ids = sorted(cells)
@@ -1602,14 +1618,25 @@ def _probe_candidates(
         f"{int(c)}L, array({', '.join(f'{int(i)}L' for i in cells[c])})"
         for c in ids
     )
-    cand = (
-        rows.filter(f"cell_id IN ({', '.join(str(int(c)) for c in ids)})")
-        .withColumn(
-            "q_id",
-            F.explode(F.expr(f"map({fan})[CAST(cell_id AS BIGINT)]")),
-        )
-        .filter(F.col(id_col) != F.col("q_id"))
+    return rows.filter(
+        f"cell_id IN ({', '.join(str(int(c)) for c in ids)})"
+    ).withColumn(
+        "q_id", F.explode(F.expr(f"map({fan})[CAST(cell_id AS BIGINT)]"))
     )
+
+
+def _probe_candidates(
+    rows: DataFrame,
+    cells: dict,
+    id_col: str,
+    allowed: DataFrame | None,
+) -> DataFrame:
+    """The candidate stage shared by every indexed layout: ``rows`` (a
+    cell_id-partitioned index table) fanned out to the queries
+    probing each row's cell (:func:`_fan_out`), the self-match
+    dropped, and the optional filtered-search id set applied as a
+    broadcast semi-join ON the pruned scan."""
+    cand = _fan_out(rows, cells).filter(F.col(id_col) != F.col("q_id"))
     if allowed is not None:
         cand = cand.join(
             F.broadcast(_allowed_ids(allowed, id_col)),
@@ -1623,52 +1650,59 @@ def _probe_candidates(
 #
 # The vector twin of operators.search.open_text_index (Shark's
 # keep-hot-state-resident design): reopening a saved index per query
-# costs two schema jobs and a probe job before the one scan that
-# matters. Open handles, least recently used first, keyed by path; a
-# handle persists nothing, so retiring one just drops it.
+# costs schema jobs for every artifact and a probe job before the one
+# scan that matters. Open handles, least recently used first, keyed by
+# path; a handle persists nothing, so retiring one just drops it.
 _ANN_INDEXES: OrderedDict[str, AnnIndex] = OrderedDict()
 _ANN_INDEXES_LOCK = threading.Lock()
 
 
 class AnnIndex:
-    """Session-scoped handle over a plain IVF index: its ``kind`` and
-    ``dim`` (manifest, else the centroid width), the centroids as
-    driver-side ``cents`` pairs (:func:`_driver_vectors` — n_cells ×
-    dim floats on the driver) and the ``live`` rows frame (tombstones
-    hidden by :func:`_index_rows`, ``_nrm`` added; ``None`` for the
-    empty index). Get one with :func:`open_ann_index`."""
+    """Session-scoped handle over an IVF, IVF,SQ8 or IVF-PQ index
+    (:func:`index_kind`): its ``kind`` and ``dim`` (:func:`index_dim`),
+    the centroids as the ``centroids`` frame and as driver-side
+    ``cents`` pairs (:func:`_driver_vectors` — n_cells × dim floats on
+    the driver), and the ``live`` rows with tombstones hidden
+    (:func:`_index_rows`; ``None`` for the empty index): the vectors
+    with ``_nrm`` added and zero norms dropped for plain IVF, the
+    codes for the quantized layouts. The quantizer state is opened
+    once too: IVF,SQ8's one-row ``stats`` frame, IVF-PQ's ``cbooks``
+    frame and its ``geom`` ``(n_sub, sub_dim)`` (:func:`_pq_geometry`).
+    Get one with :func:`open_ann_index`."""
 
     def __init__(self, spark, path, files, id_col, vec_col):
         self.spark, self.files, self.cols = spark, files, (id_col, vec_col)
         self.kind = index_kind(path)
-        if self.kind != "ivf":
-            raise ValueError(
-                f"index at {path!r} is kind={self.kind!r}: the ANN "
-                "handle serves the plain IVF layout only"
-            )
         # centroids first: a bogus/missing index path must surface as
         # the read error, not be mistaken for the (legitimate) empty
         # generation a delete-everything compaction leaves behind
-        self.cents = _driver_vectors(
-            spark.read.parquet(f"{path}/centroids"), "cell_id", "cvec"
-        )
-        self.dim = (read_index_manifest(path) or {}).get("dim") or next(
-            (len(v) for _, v in self.cents if v is not None), None
-        )
-        live = _index_rows(spark, path, "vectors", id_col)
-        self.live = None if live is None else live.withColumn(
-            "_nrm", F.sqrt(_norm2(F.col(vec_col)))
-        )
+        self.centroids = spark.read.parquet(f"{path}/centroids")
+        self.cents = _driver_vectors(self.centroids, "cell_id", "cvec")
+        self.dim = index_dim(spark, path)
+        if self.kind == "ivf":
+            live = _index_rows(spark, path, "vectors", id_col)
+            self.live = None if live is None else live.withColumn(
+                "_nrm", F.sqrt(_norm2(F.col(vec_col)))
+            ).filter(F.col("_nrm") > 0)
+        else:
+            self.live = _index_rows(spark, path, "codes", id_col)
+        if self.kind == "ivfsq8":
+            self.stats = spark.read.parquet(f"{path}/sq8_stats")
+        elif self.kind == "ivfpq":
+            self.cbooks = spark.read.parquet(f"{path}/codebooks")
+            self.geom = _pq_geometry(
+                read_index_manifest(path) or {}, self.cbooks
+            )
 
 
 def open_ann_index(
     spark, path: str, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> AnnIndex:
-    """The session's :class:`AnnIndex` over the IVF index at ``path``,
+    """The session's :class:`AnnIndex` over the index at ``path``,
     from an LRU with the text handles' bound
     (``search.TEXT_INDEX_LRU_MAX``). Every call re-lists the index's
     data files (``search._data_files``, no Spark job) and reopens on
-    any change: a rebuild, an :func:`update_ivf_index` append and a
+    any change: a rebuild, an ``update_*_index`` append and a
     :func:`delete_from_index` tombstone add files without touching
     the manifest, and a :func:`compact_index` flip rewrites it.
     ``session.release_caches()`` closes every handle."""
@@ -1702,31 +1736,48 @@ def _ivf_indexed_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     vec: list[float] | None = None,
+    shortlist: int = 50,
 ) -> DataFrame:
-    """The one IVF query core over a :func:`build_ivf_index` layout →
-    ``(q_id, vec_id, cos_sim)`` top-k per query, over the session's
-    :func:`open_ann_index` handle, in four stages:
+    """The one indexed query core over the three IVF layouts →
+    ``(q_id, vec_id, score)`` top-k per query, over the session's
+    :func:`open_ann_index` handle. Three shared stages:
 
     1. queries — a literal ``vec`` is query ``query_ids[0]``, rounded
-       to float32 (Spark sees ``array<float>``), its norm a driver
-       double; otherwise the :func:`_query_vectors` frame over
-       ``source`` (the live rows when None), collected once;
+       to float32, its norm a driver double, and enters the plan as
+       one ``array(CAST(… AS FLOAT), …)`` SQL literal; otherwise the
+       :func:`_query_vectors` frame over ``source`` (plain IVF: the
+       live rows when None), collected once and broadcast;
     2. probe — :func:`_probe_cells` on the driver;
-    3. candidates — :func:`_probe_candidates`: one statically
-       partition-pruned scan of the probed cells' live vectors, each
-       scored only for the queries probing its cell;
-    4. score and top-k — the one cosine (:func:`_cos6`) against the
-       ``vec`` as one ``array(CAST(… AS FLOAT), …)`` SQL literal, or
-       the broadcast query frame; then :func:`_topk`.
+    3. candidates — :func:`_probe_candidates` over the live rows;
 
-    An all-tombstoned compacted index and zero-norm or absent queries
-    give the typed empty frame. Bad ``k``/``n_probe``, and a ``vec``
-    of the wrong length or not finite in float32, raise
+    then the layout's scoring tail, batch-first over ``q_id``: plain
+    IVF scores the cosine (:func:`_cos6`, then :func:`_topk`);
+    IVF,SQ8 decodes the codes with the cached stats and exact-scores
+    the reconstructions (:func:`_exact_rerank`, ``sq8_sim``); IVF-PQ
+    builds each query's ADC lookup table against its residual in
+    every probed cell (summed in exact ``decimal(18,6)``), cuts the
+    ``shortlist`` through :func:`_topk` and exact-re-ranks it against
+    the raw vectors in ``source``. The quantized layouts store codes
+    only, so their stored-id queries, and IVF-PQ's re-rank, need
+    ``source``. An all-tombstoned compacted index and zero-norm or
+    absent queries give the typed empty frame. Bad counts, and a
+    ``vec`` of the wrong length or not finite in float32, raise
     ``ValueError``."""
     _check_count(k)
     _check_count(n_probe, "n_probe")
+    _check_count(shortlist, "shortlist")
     h = open_ann_index(spark, index_path, id_col, vec_col)
-    empty = f"q_id long, {id_col} long, cos_sim double"
+    if source is None and h.kind != "ivf" and (
+        vec is None or h.kind == "ivfpq"
+    ):
+        raise ValueError(
+            f"index at {index_path!r} is kind={h.kind!r}, which stores "
+            "quantized codes only: pass source, the raw vector table"
+        )
+    empty = (
+        f"q_id long, {id_col} long, "
+        f"{'sq8_sim' if h.kind == 'ivfsq8' else 'cos_sim'} double"
+    )
     if vec is not None:
         qv = np.asarray(vec, np.float32).astype(np.float64)
         if h.dim not in (None, len(qv)) or not np.isfinite(qv).all():
@@ -1746,26 +1797,55 @@ def _ivf_indexed_search(
     cells = _probe_cells(h.cents, queries, n_probe)
     if not cells:  # zero-norm or absent queries: no probe map
         return spark.createDataFrame([], empty)
-    cand = _probe_candidates(
-        h.live.filter(F.col("_nrm") > 0), cells, id_col, allowed
-    )
     if vec is not None:
-        qvec = F.expr("array(" + ", ".join(
+        q = F.expr("array(" + ", ".join(
             f"CAST({x!r}D AS FLOAT)" for x in qv.tolist()
-        ) + ")")
-        qnrm = F.lit(qnrm)
-    else:
-        cand = cand.join(F.broadcast(q), "q_id")
-        qvec, qnrm = F.col("_qvec"), F.col("_qnrm")
+        ) + ")"), F.lit(qnrm)
+    single = len({i for qs in cells.values() for i in qs}) == 1
+    cand = _probe_candidates(h.live, cells, id_col, allowed)
+    if h.kind == "ivfsq8":
+        st = F.arrays_zip(F.col("vmin"), F.col("vstep"))
+        recon = cand.crossJoin(F.broadcast(h.stats)).select(
+            "q_id", id_col, _sq8_recon(F.col("codes"), st).alias("_recon")
+        )
+        return _exact_rerank(
+            recon, q, k, id_col, "_recon", single, "sq8_sim"
+        )
+    if h.kind == "ivfpq":
+        n_sub, sub_dim = h.geom
+        qres, qvec, _ = _with_query(_fan_out(h.centroids, cells), q)
+        qslices = qres.select(
+            "q_id",
+            "cell_id",
+            _sub_slices(
+                _residual(qvec, F.col("cvec")), n_sub, sub_dim, "qvec"
+            ),
+        ).select("q_id", "cell_id", "s.sub", "s.qvec")
+        lut = h.cbooks.join(F.broadcast(qslices), "sub").select(
+            "q_id",
+            "cell_id",
+            "sub",
+            F.col("code_id").alias("code"),
+            F.round(_dot(F.col("cvec"), F.col("qvec")), 6)
+            .cast("decimal(18,6)")
+            .alias("pd"),
+        )
+        short = _topk(
+            cand.join(F.broadcast(lut), ["q_id", "cell_id", "sub", "code"])
+            .groupBy("q_id", id_col)
+            .agg(F.sum("pd").alias("adc")),
+            shortlist, [F.desc("adc"), F.asc(id_col)], single, "shortlist",
+        ).select("q_id", id_col)
+        return _exact_rerank(
+            source.join(short, id_col), q, k, id_col, vec_col, single
+        )
+    cand, qvec, qnrm = _with_query(cand, q)
     scored = cand.select(
         "q_id",
         id_col,
         _cos6(F.col(vec_col), qvec, F.col("_nrm"), qnrm).alias("cos_sim"),
     )
-    return _topk(
-        scored, k, [F.desc("cos_sim"), F.asc(id_col)],
-        len({i for qs in cells.values() for i in qs}) == 1,
-    )
+    return _topk(scored, k, [F.desc("cos_sim"), F.asc(id_col)], single)
 
 
 def ivf_topk_indexed(
@@ -1810,14 +1890,17 @@ def ivf_topk_batch_indexed(
     vec_col: str = "embedding",
     source: DataFrame | None = None,
 ) -> DataFrame:
-    """Batch IVF top-k over a :func:`build_ivf_index` layout →
-    ``(q_id, vec_id, cos_sim)`` — the high-QPS shape: the union of
+    """Batch top-k over any of the three indexed layouts →
+    ``(q_id, vec_id, score)`` — the high-QPS shape: the union of
     every query's probe cells is ONE static partition filter, so the
     whole batch costs a single pruned scan (see
     :func:`_ivf_indexed_search`, which also answers the single-query
-    :func:`ivf_topk_indexed`). Results match :func:`ivf_topk_batch`
-    row-for-row when the index was built with the same ``n_cells``
-    (equivalence-tested; shares its oracle)."""
+    readers). The score is ``sq8_sim`` on an IVF,SQ8 index and
+    ``cos_sim`` otherwise; the quantized layouts need ``source`` for
+    the exact query vectors, and IVF-PQ re-ranks a shortlist of 50.
+    Results match :func:`ivf_topk_batch` row-for-row when the index
+    was built with the same ``n_cells`` (equivalence-tested; shares
+    its oracle)."""
     return _ivf_indexed_search(
         spark, index_path, query_ids, source, n_probe, k, None,
         id_col, vec_col,
@@ -2614,7 +2697,7 @@ def update_ivfsq8_index(
             "update_ivf_index / update_ivfpq_index for those layouts"
         )
     delta, cents = _checked_delta(
-        spark, path, man, delta, id_col, vec_col, "update_ivfsq8_index"
+        spark, path, delta, id_col, vec_col, "update_ivfsq8_index"
     )
     stats = spark.read.parquet(f"{path}/sq8_stats")
     if "vmax" not in stats.columns:
@@ -2673,48 +2756,29 @@ def ivfsq8_topk_indexed(
     spark,
     index_path: str,
     query_vec_id: int,
-    source: DataFrame,
+    source: DataFrame | None = None,
     n_probe: int = 4,
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     allowed: DataFrame | None = None,
+    vec: list[float] | None = None,
 ) -> DataFrame:
-    """``IVF,SQ8`` top-k over a :func:`build_ivfsq8_index` layout:
-    probe the ``n_probe`` nearest cells (centroid table is index
-    metadata), statically partition-prune the codes scan to the
-    probed cells, decode, then score the reconstructions through
-    :func:`_exact_rerank` exactly as :func:`sq8_topk_batch` does. The query
-    vector comes exact from ``source``; only quantized codes are
-    read corpus-side. Scoring is identical to :func:`ivf_sq8_topk`,
-    row-for-row (equivalence-tested); ``allowed`` composes filtered
-    search on the pruned scan exactly like the IVF/IVF-PQ layouts.
-    Probe and candidates are the IVF core's stages
-    (:func:`_probe_cells`, :func:`_probe_candidates`)."""
-    _check_count(k)
-    _check_count(n_probe, "n_probe")
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    stats = spark.read.parquet(f"{index_path}/sq8_stats")
-    codes = _index_rows(spark, index_path, "codes", id_col)
-    q = _query_vectors(source, [query_vec_id], id_col, vec_col)
-    cells = _probe_cells(
-        _driver_vectors(cents, "cell_id", "cvec"),
-        _driver_vectors(q, "q_id", "_qvec"), n_probe,
-    ) if codes is not None else {}
-    if not cells:  # empty compacted index, zero-norm/absent query
-        return spark.createDataFrame(
-            [], f"{id_col} long, sq8_sim double"
-        )
-    st = F.arrays_zip(F.col("vmin"), F.col("vstep"))
-    recon = (
-        _probe_candidates(codes, cells, id_col, allowed)
-        .select(id_col, "codes")
-        .crossJoin(F.broadcast(stats))
-        .select(id_col, _sq8_recon(F.col("codes"), st).alias("_recon"))
-    )
-    return _exact_rerank(
-        recon, q.drop("q_id"), k, id_col, "_recon", True, "sq8_sim"
-    )
+    """``IVF,SQ8`` top-k over a :func:`build_ivfsq8_index` layout →
+    ``(vec_id, sq8_sim)``: the batch of one through
+    :func:`_ivf_indexed_search` — the probe, the statically
+    partition-pruned codes scan, the decode with the frozen stats and
+    :func:`_exact_rerank`, as :func:`sq8_topk_batch` scores. The query
+    vector stays exact: the literal ``vec`` (scored as id
+    ``query_vec_id``, ``source`` then unused), else read from
+    ``source``; only quantized codes are read corpus-side. Scoring is
+    identical to :func:`ivf_sq8_topk`, row-for-row
+    (equivalence-tested); ``allowed`` composes filtered search on the
+    pruned scan exactly like the IVF/IVF-PQ layouts."""
+    return _ivf_indexed_search(
+        spark, index_path, [query_vec_id], source, n_probe, k, allowed,
+        id_col, vec_col, vec,
+    ).drop("q_id")
 
 
 def cosine_topk_lsh(
@@ -2904,6 +2968,20 @@ def ivfpq_topk(
     ).drop("q_id")
 
 
+def _pq_geometry(man: dict, cbooks: DataFrame) -> tuple[int, int]:
+    """An IVF-PQ index's ``(n_sub, sub_dim)``: index METADATA that
+    :func:`build_ivfpq_index` writes into the manifest, so reading it
+    back is a file read, not a Spark job. Pre-manifest dirs infer it
+    from the ``cbooks`` table itself (``n_sub`` distinct subspaces,
+    each cvec slice ``sub_dim`` wide) with one aggregate."""
+    if man.get("n_sub") is not None and man.get("sub_dim") is not None:
+        return int(man["n_sub"]), int(man["sub_dim"])
+    row = cbooks.agg(
+        (F.max("sub") + 1).alias("ns"), F.max(F.size("cvec")).alias("sd")
+    ).first()
+    return int(row["ns"]), int(row["sd"])
+
+
 def build_ivfpq_index(
     embeddings: DataFrame,
     path: str,
@@ -2994,23 +3072,10 @@ def update_ivfpq_index(
             "update_ivf_index for a plain IVF layout"
         )
     delta, cents = _checked_delta(
-        spark, path, man, delta, id_col, vec_col, "update_ivfpq_index"
+        spark, path, delta, id_col, vec_col, "update_ivfpq_index"
     )
     cbooks = spark.read.parquet(f"{path}/codebooks")
-    # PQ geometry from the manifest; pre-manifest dirs infer it from
-    # the codebook table itself (n_sub distinct subspaces, each
-    # cvec slice sub_dim wide)
-    n_sub = man.get("n_sub")
-    sub_dim = man.get("sub_dim")
-    if n_sub is None or sub_dim is None:
-        row = (
-            cbooks.agg(
-                (F.max("sub") + 1).alias("ns"),
-                F.max(F.size("cvec")).alias("sd"),
-            ).first()
-        )
-        n_sub = int(row["ns"])
-        sub_dim = int(row["sd"])
+    n_sub, sub_dim = _pq_geometry(man, cbooks)
     from bigdata_elephant_spark.session import persist_tracked
 
     assign = ivf_assign(delta, cents, id_col, vec_col)
@@ -3044,84 +3109,19 @@ def ivfpq_topk_indexed(
     vec_col: str = "embedding",
     allowed: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-PQ top-k over a :func:`build_ivfpq_index` layout: probe
-    the ``n_probe`` nearest cells, build the per-cell ADC lookup
-    tables for the QUERY's residuals (``n_probe × n_sub × n_codes``
-    doubles — broadcast), scan only the probed partitions of the
-    codes table, exact-re-rank the decimal-ADC shortlist against
-    ``source`` (the raw vector table; point lookups at scale).
-    ``n_sub``/``sub_dim`` come off the codebooks artifact, so the
+    """IVF-PQ top-k over a :func:`build_ivfpq_index` layout →
+    ``(vec_id, cos_sim)``: the batch of one through
+    :func:`_ivf_indexed_search` — the probe, the per-cell ADC lookup
+    tables for the query's residuals, the statically partition-pruned
+    codes scan, then the exact re-rank of the decimal-ADC
+    ``shortlist`` against ``source`` (the raw vector table; point
+    lookups at scale). The PQ geometry comes from the index, so the
     query needs no training parameters. Scoring is identical to
-    :func:`ivfpq_topk`, row-for-row (equivalence-tested). Probe and
-    candidates are the IVF core's stages (:func:`_probe_cells`,
-    :func:`_probe_candidates`)."""
-    _check_count(k)
-    _check_count(n_probe, "n_probe")
-    _check_count(shortlist, "shortlist")
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    cbooks = spark.read.parquet(f"{index_path}/codebooks")
-    codes = _index_rows(spark, index_path, "codes", id_col)
-    q = _query_vectors(source, [query_vec_id], id_col, vec_col)
-    cells = _probe_cells(
-        _driver_vectors(cents, "cell_id", "cvec"),
-        _driver_vectors(q, "q_id", "_qvec"), n_probe,
-    ) if codes is not None else {}
-    if not cells:  # empty compacted index, zero-norm/absent query
-        return spark.createDataFrame(
-            [], f"{id_col} long, cos_sim double"
-        )
-    # PQ geometry is index METADATA: build_ivfpq_index writes n_sub/
-    # sub_dim into the manifest, so reading them back is a file read,
-    # not a Spark job — the old codebooks aggregate+collect cost one
-    # extra job + codebooks scan per query (r15; guide §1.2 job
-    # count). The aggregate stays as the fallback for a manifest-less
-    # (pre-manifest) layout.
-    man = read_index_manifest(index_path) or {}
-    if "n_sub" in man and "sub_dim" in man:
-        n_sub, sub_dim = int(man["n_sub"]), int(man["sub_dim"])
-    else:  # pragma: no cover — legacy layout without a manifest
-        meta = (
-            cbooks.agg(
-                (F.max("sub") + 1).alias("n_sub"),
-                F.max(F.size("cvec")).alias("sub_dim"),
-            ).collect()[0]
-        )
-        n_sub, sub_dim = int(meta["n_sub"]), int(meta["sub_dim"])
-    # the query's residual in each probed cell
-    qres = (
-        cents.filter(F.col("cell_id").isin(sorted(cells)))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "cell_id",
-            _residual(F.col("_qvec"), F.col("cvec")).alias("qres"),
-        )
-    )
-    qslices = qres.select(
-        "cell_id", _sub_slices(F.col("qres"), n_sub, sub_dim, "qvec")
-    ).select("cell_id", "s.sub", "s.qvec")
-    # three-key equi-join (see ivfpq_topk_batch): no per-row n_codes
-    # match fan-out + discard
-    lut = cbooks.join(F.broadcast(qslices), "sub").select(
-        "cell_id",
-        "sub",
-        F.col("code_id").alias("code"),
-        F.round(_dot(F.col("cvec"), F.col("qvec")), 6)
-        .cast("decimal(18,6)")
-        .alias("pd"),
-    )
-    # filtered search (see ivf_topk): the predicate's id set excludes
-    # candidates on the pruned codes scan; the ADC shortlist then
-    # forms over allowed ids only
-    short = _topk(
-        _probe_candidates(codes, cells, id_col, allowed)
-        .join(F.broadcast(lut), ["cell_id", "sub", "code"])
-        .groupBy(id_col)
-        .agg(F.sum("pd").alias("adc")),
-        shortlist, [F.desc("adc"), F.asc(id_col)], True, "shortlist",
-    ).select(id_col)
-    return _exact_rerank(
-        source.join(short, id_col), q.drop("q_id"), k, id_col, vec_col
-    )
+    :func:`ivfpq_topk`, row-for-row (equivalence-tested)."""
+    return _ivf_indexed_search(
+        spark, index_path, [query_vec_id], source, n_probe, k, allowed,
+        id_col, vec_col, shortlist=shortlist,
+    ).drop("q_id")
 
 
 def ivf_probe_recall_sweep(

@@ -6,6 +6,8 @@ from __future__ import annotations
 import io
 import uuid
 
+import pytest
+
 from bigdata_elephant_spark.cli import main
 
 # Measured: a warm `ann-query --vec` runs 1 Spark job (6 before the
@@ -16,6 +18,16 @@ from bigdata_elephant_spark.cli import main
 # one pruned scan for the whole batch.
 WARM_ANN_QUERY_MAX_JOBS = 2
 ANN_BATCH_MAX_JOBS = 8
+# Measured on the quantized layouts, which share the handle and the
+# IVF query core: a warm IVF,SQ8 `ann-query` runs 2 jobs with `--vec`
+# and 5 with `--vec-id`, an IVF-PQ `--vec-id` 9.
+WARM_QUANTIZED_QUERY_MAX_JOBS = {
+    ("sq8", "--vec"): 2,
+    ("sq8", "--vec-id"): 5,
+    ("pq", "--vec-id"): 9,
+}
+# ann-build flags per index layout
+LAYOUT_FLAGS = {"ivf": [], "sq8": ["--sq8"], "pq": ["--pq"]}
 
 
 def _run(spark, argv):
@@ -519,52 +531,77 @@ def test_cli_ann_stats(spark, sf_dir, tmp_path):
     assert int(got["max_files_per_cell"]) == 1
 
 
-def test_cli_ann_batch_matches_single_queries(spark, sf_dir, tmp_path):
-    idx = str(tmp_path / "ivf")
+@pytest.mark.parametrize("layout", sorted(LAYOUT_FLAGS))
+def test_cli_ann_batch_matches_single_queries(spark, sf_dir, tmp_path, layout):
+    """`ann-batch` answers on every index layout, each query exactly
+    as `ann-query` does, in the layout's own score column; the
+    quantized layouts store codes only, so without --embeddings the
+    batch is a usage error (exit 2)."""
+    idx = str(tmp_path / layout)
     emb_path = f"{sf_dir}/embeddings.parquet"
     _run(spark, ["ann-build", "--embeddings", emb_path,
-                 "--out", idx, "--cells", "8"])
-    rows = _parse(_run(spark, [
-        "ann-batch", "--index", idx, "--vec-ids", "0,7",
-        "-k", "3", "--probe", "3",
-    ]))
+                 "--out", idx, "--cells", "8", *LAYOUT_FLAGS[layout]])
+    src = [] if layout == "ivf" else ["--embeddings", emb_path]
+    batch = ["ann-batch", "--index", idx, "--vec-ids", "0,7",
+             "-k", "3", "--probe", "3"]
+    rows = _parse(_run(spark, batch + src))
     assert {r["q_id"] for r in rows} == {"0", "7"}
     for q in ("0", "7"):
         single = _parse(_run(spark, [
             "ann-query", "--index", idx, "--vec-id", q,
-            "-k", "3", "--probe", "3",
+            "-k", "3", "--probe", "3", *src,
         ]))
-        got = [r["vec_id"] for r in rows if r["q_id"] == q]
-        assert got == [r["vec_id"] for r in single]
+        got = [
+            {c: v for c, v in r.items() if c != "q_id"}
+            for r in rows if r["q_id"] == q
+        ]
+        assert got == single and len(got) == 3
+    if src:
+        with pytest.raises(SystemExit) as exc:
+            main(batch, spark=spark, out=io.StringIO())
+        assert exc.value.code == 2
 
 
-def test_cli_ann_job_budget(spark, sf_dir, tmp_path):
-    """A warm `ann-query --vec` runs at most WARM_ANN_QUERY_MAX_JOBS
-    Spark jobs; `ann-batch` runs the same number of jobs for 2 ids
-    as for 20, and at most ANN_BATCH_MAX_JOBS — per-query probe jobs
-    or a per-query scan would grow the count with the batch."""
-    idx = str(tmp_path / "ivf")
+@pytest.mark.parametrize("layout", sorted(LAYOUT_FLAGS))
+def test_cli_ann_job_budget(spark, sf_dir, tmp_path, layout):
+    """A warm `ann-query` runs at most WARM_ANN_QUERY_MAX_JOBS Spark
+    jobs with `--vec` on a plain IVF index, and at most the
+    WARM_QUANTIZED_QUERY_MAX_JOBS pins on the quantized layouts;
+    `ann-batch` runs the same number of jobs for 2 ids as for 20 on
+    every layout, and at most ANN_BATCH_MAX_JOBS on plain IVF —
+    per-query probe jobs or a per-query scan would grow the count
+    with the batch."""
+    idx = str(tmp_path / layout)
     emb_path = f"{sf_dir}/embeddings.parquet"
     _run(spark, ["ann-build", "--embeddings", emb_path,
-                 "--out", idx, "--cells", "8"])
+                 "--out", idx, "--cells", "8", *LAYOUT_FLAGS[layout]])
     row = spark.read.parquet(emb_path).filter("vec_id = 5").first()
     vec = ",".join(repr(float(x)) for x in row["embedding"])
-    query = ["ann-query", "--index", idx, f"--vec={vec}", "-k", "5"]
-    _run(spark, query)  # warm-up
-    assert 0 < _jobs(spark, lambda: _run(spark, query)) <= (
-        WARM_ANN_QUERY_MAX_JOBS
-    )
+    src = [] if layout == "ivf" else ["--embeddings", emb_path]
+    bounds = {
+        form: n
+        for (lay, form), n in WARM_QUANTIZED_QUERY_MAX_JOBS.items()
+        if lay == layout
+    } or {"--vec": WARM_ANN_QUERY_MAX_JOBS}
+    for form, bound in bounds.items():
+        query = ["ann-query", "--index", idx, "-k", "5", *src,
+                 f"--vec={vec}" if form == "--vec" else "--vec-id=5"]
+        _run(spark, query)  # warm-up
+        jobs = _jobs(spark, lambda: _run(spark, query))
+        assert 0 < jobs <= bound, (form, jobs)
 
     def batch(n):
         ids = ",".join(str(i) for i in range(n))
         return _jobs(spark, lambda: _run(spark, [
             "ann-batch", "--index", idx, "--vec-ids", ids, "-k", "5",
+            *src,
         ]))
 
     batch(2)  # warm-up
     two, twenty = batch(2), batch(20)
     assert two == twenty, (two, twenty)
-    assert 0 < twenty <= ANN_BATCH_MAX_JOBS, twenty
+    if layout == "ivf":
+        assert 0 < twenty <= ANN_BATCH_MAX_JOBS, twenty
 
 
 def test_cli_bpe_train_and_encode(spark, sf_dir, tmp_path):

@@ -16,8 +16,9 @@ from tests.parity import assert_parity
 # Marked slow: ~270 Spark+DuckDB replays are the long pole of the
 # suite, and the DRIVER ITSELF runs this exact comparison on its gate
 # window every round — the default (driver-budgeted) pytest run skips
-# the duplicate so it can finish (VERIFY_r14 tests_ok:false was the
-# budget expiring, not a failure). Full local bar: pytest -m "".
+# the duplicate so it can finish (tests_ok:false in round 14's verify
+# record, commit 7ea2eb5, was the budget expiring, not a failure).
+# Full local bar: pytest -m "".
 pytestmark = pytest.mark.slow
 
 SPECS = all_specs()

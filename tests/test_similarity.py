@@ -446,8 +446,11 @@ def test_ivfpq_indexed_matches_inline(spark, sf_dir):
 
 
 # family -> (single-query call, batch call, score column); the IVF
-# calls probe 3 of 8 cells, the PQ calls shortlist 20
+# calls probe 3 of 8 cells, the inline PQ calls shortlist 20 and the
+# indexed IVF-PQ calls the batch reader's 50; the indexed families
+# read the module's ann_indexes, with the queries from the source
 _ZERO_ID, _ABSENT_ID = 10_000, 20_000
+_INDEXES: dict[str, str] = {}
 
 
 def _allowed(emb):
@@ -506,7 +509,55 @@ _FAMILIES = {
         ),
         "cos_sim",
     ),
+    "ivf_indexed": (
+        lambda e, i: similarity.ivf_topk_indexed(
+            e.sparkSession, _INDEXES["ivf"], i, n_probe=3, k=5, source=e
+        ),
+        lambda e, ids: similarity.ivf_topk_batch_indexed(
+            e.sparkSession, _INDEXES["ivf"], ids, n_probe=3, k=5, source=e
+        ),
+        "cos_sim",
+    ),
+    "ivf_sq8_indexed": (
+        lambda e, i: similarity.ivfsq8_topk_indexed(
+            e.sparkSession, _INDEXES["ivfsq8"], i, e, n_probe=3, k=5
+        ),
+        lambda e, ids: similarity.ivf_topk_batch_indexed(
+            e.sparkSession, _INDEXES["ivfsq8"], ids, n_probe=3, k=5,
+            source=e,
+        ),
+        "sq8_sim",
+    ),
+    "ivfpq_indexed": (
+        lambda e, i: similarity.ivfpq_topk_indexed(
+            e.sparkSession, _INDEXES["ivfpq"], i, e, n_probe=3, k=5
+        ),
+        lambda e, ids: similarity.ivf_topk_batch_indexed(
+            e.sparkSession, _INDEXES["ivfpq"], ids, n_probe=3, k=5,
+            source=e,
+        ),
+        "cos_sim",
+    ),
 }
+
+
+@pytest.fixture(scope="module")
+def ann_indexes(spark, sf_dir, tmp_path_factory):
+    """One index of each layout over the testdata embeddings (8
+    cells) in a module-wide temp dir, for the indexed _FAMILIES."""
+    from bigdata_elephant_spark.sources.corpus import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    root = tmp_path_factory.mktemp("ann_indexes")
+    for kind, build in (
+        ("ivf", similarity.build_ivf_index),
+        ("ivfsq8", similarity.build_ivfsq8_index),
+        ("ivfpq", similarity.build_ivfpq_index),
+    ):
+        _INDEXES[kind] = str(root / kind)
+        build(emb, _INDEXES[kind], n_cells=8)
+    yield
+    _INDEXES.clear()
 
 
 @pytest.fixture(scope="module")
@@ -521,7 +572,7 @@ def emb_with_zero(spark, sf_dir):
 
 
 @pytest.mark.parametrize("family", sorted(_FAMILIES))
-def test_batch_of_one_matches_single(emb_with_zero, family):
+def test_batch_of_one_matches_single(emb_with_zero, ann_indexes, family):
     """Each single-query function is its family core run as a batch
     of one, so per query it must return exactly that query's rows of
     a batch: for a normal id, a zero-norm vector and an absent id
@@ -542,7 +593,7 @@ def test_batch_of_one_matches_single(emb_with_zero, family):
 
 
 @pytest.mark.parametrize("family", sorted(_FAMILIES))
-def test_core_cuts_follow_batch_size(spark, sf_dir, family):
+def test_core_cuts_follow_batch_size(spark, sf_dir, ann_indexes, family):
     """Plan-shape guard on the input-size rule of the one top-k
     helper: a one-query call plans every cut (probe, shortlist,
     top-k) as TakeOrderedAndProject, with no Window anywhere; a

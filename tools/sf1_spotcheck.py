@@ -119,7 +119,7 @@ HEAVY = ("llm_pipeline_e2e", "embedding_gram_matrix",
          # semantic_dedup_pairs slope; the synthetic 10x has no
          # bit-identical cluster — that regime is count-pinned in
          # tests/test_skewed_corpus.py and measured in
-         # tools/lsh_skew_ab.py); the ingest-edge pair is
+         # the A/B of commit 1f96ea3); the ingest-edge pair is
          # delta-vs-corpus (expect ~the incremental_dedup slope, the
          # corpus-signature scan); the bucket histogram is the band
          # explode + one groupBy — cheaper than any miner it guards
@@ -259,7 +259,7 @@ def main() -> None:
         "this deliberately cluster-free corpus (the salted copies "
         "keep signatures distinct): the guard is not a tax; its "
         "payoff regime is count-pinned in tests/test_skewed_corpus"
-        ".py and measured in tools/lsh_skew_ab.py.\n\n"
+        ".py and measured by the A/B of commit 1f96ea3.\n\n"
         "The r11 rows close the r10 coverage gap (verdict item 4): "
         "semantic_dedup_edges / near_dup_edges_lsh are the "
         "embedding-side star miners, and their near-FLAT slopes (vs "
@@ -271,7 +271,7 @@ def main() -> None:
         "identical-vector collapse absorbs the entire 10x growth "
         "into star edges before any cell/bucket pairing — the "
         "regime count-pinned in tests/test_skewed_corpus.py and "
-        "measured at 838x fewer rows in tools/lsh_skew_ab.py's "
+        "measured at 838x fewer rows by commit 1f96ea3's A/B, its "
         "emb_ab section; incremental_dedup_edges pays the "
         "corpus-signature scan (the ingest-admission slope); "
         "lsh_bucket_histogram is the band explode + one groupBy (a "
