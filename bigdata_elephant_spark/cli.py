@@ -22,8 +22,11 @@ reference's flow. Corpus inputs may be WikiExtractor JSON-lines
 (``.json``/``.jsonl``, with optional ``--glob`` shard pruning) or a
 parquet table with ``(doc_id, text, ...)`` columns.
 
-``query`` (every scoring mode) and ``batch`` go through a
-session-scoped text-index handle (``operators.search.open_text_index``).
+Every text query shares one query core, ``operators.search.TextIndex``:
+the query terms resolve with one vocab collect and ride in the plan as
+literals, and a single query is a batch of one. ``search`` builds one
+over its inline frames. ``query`` (every scoring mode) and ``batch``
+go through a session-scoped handle (``operators.search.open_text_index``).
 It caches the opened vocab/postings/meta frames, the postings' doc
 lengths (persisted once per index version) and ``N``/Σdl as driver
 scalars, so a warm query is one vocab-term collect, one scoring pass
@@ -235,7 +238,7 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
 
     sp = sub.add_parser("search", help="one-shot inline search")
     corpus_args(sp)
-    sp.add_argument("-k", type=int, default=10)
+    sp.add_argument("-k", type=_at_least(0), default=10)
     sp.add_argument(
         "--scoring", default="reference",
         choices=("reference", "smooth", "bm25"),

@@ -1,11 +1,15 @@
 """Scored search — reference Jobs 4+5 (``Query.java``).
 
 The reference runs two chained MapReduce jobs per query (score, then
-global sort + top-K). Here the whole search is one lazy DataFrame
-plan: broadcast-join the query terms against the postings, sum
-partial scores per doc, then ``orderBy(desc).limit(k)`` — which Spark
-plans as ``TakeOrderedAndProject`` (per-partition top-K heaps merged
-on the driver; no global shuffle-sort at all).
+global sort + top-K). Here every text query — one string or a probe
+set, inline over the caller's frames or through a session-scoped
+handle over saved artifacts — goes through ONE core,
+:class:`TextIndex`: resolve the query terms against the vocabulary,
+sum partial scores per ``(query_id, doc_id)`` over just those terms'
+postings, then cut each query's top-k. A single query is cut by
+``orderBy(desc).limit(k)``, which Spark plans as
+``TakeOrderedAndProject`` (per-partition top-K heaps merged on the
+driver; no global shuffle-sort at all).
 
 Scoring modes:
 
@@ -16,11 +20,13 @@ Scoring modes:
 - ``"smooth"`` — standard smoothed TF-IDF:
   ``idf = ln((N + 1) / (df + 1)) + 1``,
   ``score = sum_w (tf_doc * idf) * (tf_query * idf)``.
+- ``"bm25"`` — Okapi BM25 (:func:`term_partial`).
 
 The query string is compiled driver-side with the same filterText +
-tokenize logic the reference applies (``Query.java:48-58``), producing
-a tiny ``(word, q_tf)`` DataFrame that is broadcast — the Spark
-version of the reference shipping term weights through the Hadoop
+tokenize logic the reference applies (``Query.java:48-58``); its terms
+resolve with one vocabulary collect and then ride in the plan as a
+literal ``word_id -> (query_id, q_tf, df)`` map — the Spark version of
+the reference shipping term weights through the Hadoop
 ``Configuration`` (``Query.java:254-260``).
 
 Top-K is exact ``limit(k)`` — the reference's per-reducer counter
@@ -35,7 +41,7 @@ from __future__ import annotations
 import threading
 from collections import Counter, OrderedDict
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_elephant_spark.functions.text import tokenize_str
@@ -43,13 +49,15 @@ from bigdata_elephant_spark.functions.text import tokenize_str
 SCORE_DECIMALS = 6
 
 
-def compile_query(
-    spark: SparkSession, query: str
-) -> DataFrame:
-    """Query string -> tiny ``(word, q_tf)`` DataFrame (driver-side)."""
-    counts = Counter(tokenize_str(query))
-    rows = [(w, float(c)) for w, c in sorted(counts.items())]
-    return spark.createDataFrame(rows, "word string, q_tf double")
+def _check_count(n: int, name: str = "k") -> None:
+    """``ValueError`` for a ``k`` below 0, or an ``n_probe`` or
+    ``shortlist`` below 1 (``limit(-1)`` would raise an
+    ``AnalysisException`` and the rank window return nothing). Entry
+    points call it first, so an empty index or an absent query
+    rejects the value too."""
+    lo = 0 if name == "k" else 1
+    if n < lo:
+        raise ValueError(f"{name} must be >= {lo}, got {n}")
 
 
 def search(
@@ -69,32 +77,17 @@ def search(
     projection ``(title, url)`` plus ``doc_id, score``
     (``Query.java:236-240``) via :func:`project_meta` — a k-row
     semi-join slice, not a corpus-sized broadcast.
-    ``n_docs`` (corpus size) is required for ``scoring="smooth"``.
+    ``n_docs`` (corpus size) is ``"smooth"``'s N; ``None`` means the
+    index's own N (docs with at least one vocab token).
     """
-    q_terms = compile_query(spark, query)
-    # word -> (word_id, df). Build side = the QUERY terms (a handful
-    # of rows by construction), never the vocab: the vocabulary grows
-    # with the corpus (Heaps' law), and a forced broadcast hint on a
-    # growing table fails outright past Spark's 8 GB limit instead of
-    # degrading. Broadcasting q into vocab is the same inner join
-    # with a build side that is bounded at every scale.
-    q = vocab.join(F.broadcast(q_terms), "word", "inner").select(
-        "word_id", "q_tf", "df"
-    )
-    if scoring not in ("reference", "smooth"):
-        raise ValueError(f"unknown scoring mode: {scoring}")
-    scores = summed_scores(
-        postings.join(F.broadcast(q), "word_id"),
-        term_partial(scoring, n_docs),
-    )
     # Faithful-diff mode: the reference's per-reducer counter uses
     # `count > pages` (Query.java:229-234, flaw F2) and emits K+1
     # rows; enable only to byte-compare against actual reference
     # output. The public API is exact limit(k).
-    ranked = scores.orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    ).limit(k + 1 if replicate_off_by_one else k)
-
+    n = k + 1 if replicate_off_by_one and k >= 0 else k
+    ranked = TextIndex(spark, vocab, postings)._ranked(
+        {0: query}, n, scoring, n_docs
+    ).select("doc_id", "score")
     if doc_meta is not None:
         ranked = project_meta(ranked, doc_meta)
     return ranked
@@ -103,18 +96,16 @@ def search(
 def term_partial(
     scoring: str,
     n_docs: float | None = None,
-    avgdl: Column | None = None,
+    avgdl: float | None = None,
     k1: float = 1.2,
     b: float = 0.75,
 ) -> Column:
     """One matched posting row's contribution to its document's score
-    — the ONE definition of every scoring mode, shared by the inline
-    scorers (:func:`search`, :func:`bm25_search`,
-    :func:`bm25_search_batch`) and :class:`TextIndex`.
+    — the ONE definition of every scoring mode, applied by the
+    :class:`TextIndex` core that every text entry point goes through.
 
     The row carries ``tf``, ``df`` and ``q_tf`` (and ``dl`` for
-    ``"bm25"``); ``avgdl`` defaults to the same-named column, and a
-    :class:`TextIndex` passes its driver scalar as a literal.
+    ``"bm25"``); N (``n_docs``) and ``avgdl`` are driver scalars.
     ``"bm25"`` is Okapi BM25: the classic
     ``ln((N - df + 0.5) / (df + 0.5) + 1)`` idf times the saturating
     (k1), length-normalized (b) term frequency, weighted by the
@@ -129,10 +120,9 @@ def term_partial(
     if scoring == "smooth":
         idf = F.log((F.lit(float(n_docs) + 1.0)) / (df + 1.0)) + 1.0
         return (tf * idf) * (q_tf * idf)
-    avgdl = F.col("avgdl") if avgdl is None else avgdl
     idf = F.log((F.lit(float(n_docs)) - df + 0.5) / (df + 0.5) + 1.0)
     frac = (tf * (k1 + 1.0)) / (
-        tf + k1 * (1.0 - b + b * (F.col("dl") / avgdl))
+        tf + k1 * (1.0 - b + b * (F.col("dl") / F.lit(float(avgdl))))
     )
     return idf * frac * q_tf
 
@@ -218,57 +208,24 @@ def bm25_search(
     -length normalization (b), with the classic
     ``ln((N - df + 0.5) / (df + 0.5) + 1)`` idf.
 
-    Plan shape is identical to :func:`search` (broadcast query terms,
-    one doc-keyed sum, TakeOrderedAndProject) plus two index-derived
-    broadcasts: per-doc lengths (postings aggregate) and the 1-row
-    avgdl scalar. avgdl is an exact long sum / count, so both engines
-    normalize by the identical double.
-    """
-    q_terms = compile_query(spark, query)
-    # Build side = query terms, never the Heaps-growing vocab (same
-    # rationale as search()).
-    q = vocab.join(F.broadcast(q_terms), "word", "inner").select(
-        "word_id", "q_tf", "df"
-    )
-    dl, n_docs, avgdl = _bm25_corpus_stats(postings, dl)
-    return (
-        summed_scores(
-            postings.join(F.broadcast(q), "word_id")
-            .join(dl, "doc_id")
-            .crossJoin(F.broadcast(avgdl)),
-            term_partial("bm25", n_docs, k1=k1, b=b),
-        )
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-
-
-def _bm25_corpus_stats(postings: DataFrame, dl: DataFrame | None = None):
-    """``(dl, n_docs, avgdl)`` for BM25 from ONE postings pass.
-
-    ``n_docs`` (docs with >= 1 vocab token) equals the group count of
-    the doc-length aggregate, so it is read off the persisted
-    doc-sized ``dl`` table instead of a second corpus-scale
-    distinct over the postings — the ``dl.count()`` action also
-    materializes the cache that the scoring join and the avgdl
-    scalar then reuse. An explicitly passed ``dl`` (e.g.
+    Plan shape is :func:`search`'s (literal query terms, one
+    doc-keyed sum, TakeOrderedAndProject) plus the doc lengths,
+    joined on ``doc_id``. N and avgdl are driver scalars from one pass
+    over the doc lengths (an exact long sum / count, so both engines
+    normalize by the identical double); ``dl`` (e.g.
     :func:`doc_lengths_from_corpus` when the vocab covers the whole
-    corpus) skips the postings pass entirely."""
-    from bigdata_elephant_spark.session import persist_tracked
-
-    dl = persist_tracked(dl if dl is not None else doc_lengths(postings))
-    n_docs = dl.count()
-    avgdl = dl.agg(
-        (F.sum("dl").cast("double") / F.count("dl")).alias("avgdl")
-    )
-    return dl, n_docs, avgdl
+    corpus) replaces the postings aggregate.
+    """
+    return TextIndex(spark, vocab, postings, dl=dl)._ranked(
+        {0: query}, k, "bm25", k1=k1, b=b
+    ).select("doc_id", "score")
 
 
 def query_term_rows(
     queries: dict[int, str],
 ) -> list[tuple[int, str, float]]:
     """The canonical ``(query_id, word, q_tf)`` expansion of a probe
-    set — ONE definition consumed by both the Spark batch scorer and
+    set — ONE definition consumed by both the Spark scoring core and
     the DuckDB VALUES oracle, so the two sides cannot drift."""
     rows = []
     for qid, qs in sorted(queries.items()):
@@ -293,35 +250,18 @@ def bm25_search_batch(
     The reference answers multiple queries by re-running its whole
     two-job chain once per query string (``Query.java:247-294``
     drives one job pair per invocation); here the batch is a single
-    pass over the index: all queries' terms compile to one tiny
-    ``(query_id, word, q_tf)`` broadcast, the postings join fans
-    each matched posting out to every query containing the term, one
-    ``(query_id, doc_id)`` aggregate sums partials, and the per-query
-    top-k is a ``row_number() <= k`` rank window that Spark plans as
-    ``WindowGroupLimit`` — map-side per-group heaps before the
-    exchange, so no query's candidate list is ever globally sorted.
-    At 100 TB the index is scanned once for the whole batch instead
-    of once per query (the text-side analogue of ``knn_batch``).
+    pass over the index: every query's terms ride in one literal
+    ``word_id`` map, each matched posting fans out to every query
+    containing the term, one ``(query_id, doc_id)`` aggregate sums
+    partials, and the per-query top-k is a ``row_number() <= k`` rank
+    window that Spark plans as ``WindowGroupLimit`` — map-side
+    per-group heaps before the exchange, so no query's candidate list
+    is ever globally sorted. At 100 TB the index is scanned once for
+    the whole batch instead of once per query (the text-side analogue
+    of ``knn_batch``).
     """
-    q_terms = spark.createDataFrame(
-        query_term_rows(queries),
-        "query_id long, word string, q_tf double",
-    )
-    # Build side = the batch's query terms (queries x terms rows),
-    # never the Heaps-growing vocab (same rationale as search()).
-    q = vocab.join(F.broadcast(q_terms), "word", "inner").select(
-        "query_id", "word_id", "q_tf", "df"
-    )
-    dl, n_docs, avgdl = _bm25_corpus_stats(postings, dl)
-    return per_query_topk(
-        summed_scores(
-            postings.join(F.broadcast(q), "word_id")
-            .join(dl, "doc_id")
-            .crossJoin(F.broadcast(avgdl)),
-            term_partial("bm25", n_docs, k1=k1, b=b),
-            keys=("query_id", "doc_id"),
-        ),
-        k,
+    return TextIndex(spark, vocab, postings, dl=dl)._ranked(
+        queries, k, "bm25", k1=k1, b=b
     )
 
 
@@ -329,8 +269,6 @@ def per_query_topk(scored: DataFrame, k: int) -> DataFrame:
     """``(query_id, doc_id, score, rank)``: each query's top-k by score
     (ties by ``doc_id``), as a ``row_number() <= k`` window that Spark
     plans as ``WindowGroupLimit``."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
@@ -501,15 +439,17 @@ def more_like_this(
     )
 
 
-# ------------------------------------------- session-scoped text index
+# ------------------------------------------------------ the text core
 #
 # The staged CLI answers every query over the same saved artifacts,
 # yet an inline query re-derives everything per call: three artifact
 # opens (one schema-inference job each), a persisted doc-length
 # aggregate over the WHOLE postings table, and a metadata semi-join.
-# A TextIndex pays those once per index version and keeps them in the
-# session (the Shark keep-hot-state-resident design); each query then
-# touches only its own terms' postings and its own k metadata rows.
+# A handle from open_text_index pays those once per index version and
+# keeps them in the session (the Shark keep-hot-state-resident
+# design); each query then touches only its own terms' postings and
+# its own k metadata rows. The inline scorers build a throwaway
+# TextIndex over their frames and run the same core.
 
 # Open handles, least recently used first, keyed by the artifact
 # paths. Each holds one persisted doc-length table (doc-sized), so the
@@ -554,56 +494,97 @@ def _sql_in(col: str, values) -> str:
 
 
 class TextIndex:
-    """Session-scoped handle over saved vocab/postings[/meta] artifacts.
+    """The text query core over ``vocab``/``postings`` frames, with
+    optional ``meta`` (for :meth:`query`) and ``dl`` (doc lengths,
+    else :func:`doc_lengths` of the postings).
 
-    Opening reads the three artifacts once and persists
-    :func:`doc_lengths` of the postings under the handle's own
-    lifecycle (not ``session._TRACKED_CACHES``); ``n_docs`` (docs with
-    at least one vocab token) and ``total_dl`` (Σdl) are driver
-    scalars from the same pass. A query then resolves its terms with
-    one pushed-down ``word IN (...)`` vocab collect, scores only the
-    ``word_id IN (...)`` postings with ``df``/``q_tf`` as literals
-    (joined to the cached doc lengths for BM25), collects the top-k
-    and fetches exactly those k metadata rows by id. Answers equal the
-    inline :func:`search` / :func:`bm25_search` /
-    :func:`bm25_search_batch` over the same frames: they share
-    :func:`term_partial` and :func:`summed_scores`.
-
-    Get one with :func:`open_text_index`, which revalidates it against
-    the artifacts' file listing on every call."""
+    :func:`search`, :func:`bm25_search` and :func:`bm25_search_batch`
+    build one over their frames; :func:`open_text_index` keeps one per
+    saved artifact set in the session. Every query runs
+    :meth:`_ranked`."""
 
     def __init__(
         self,
         spark: SparkSession,
-        vocab: str,
-        index: str,
-        meta: str | None,
-        files: tuple,
+        vocab: DataFrame,
+        postings: DataFrame,
+        meta: DataFrame | None = None,
+        dl: DataFrame | None = None,
     ):
-        from pyspark.storagelevel import StorageLevel
-
-        self.spark, self.index, self.files = spark, index, files
-        self.vocab = spark.read.parquet(vocab)
-        self.postings = spark.read.parquet(index)
-        self.meta = spark.read.parquet(meta) if meta else None
-        self.dl = doc_lengths(self.postings).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        row = self.dl.agg(
-            F.count("dl").alias("n"), F.sum("dl").alias("s")
-        ).first()
-        self.n_docs, self.total_dl = int(row["n"]), int(row["s"] or 0)
+        self.spark, self.vocab, self.postings = spark, vocab, postings
+        self.meta, self.dl = meta, dl
+        # artifact path and listings of a handle from open_text_index
+        self.index: str | None = None
+        self.files: tuple = ()
+        self._stats: tuple[int, int] | None = None
         self._partials: dict[tuple, Column] = {}
 
-    def _matched(self, queries: dict[int, str], scoring: str, n_docs):
-        """``(matched, partial)`` for a probe set: one
-        ``(doc_id, word_id, tf, [dl,] query_id, q_tf, df)`` row per
-        (query, posting of one of its terms) and its score partial.
-        The terms resolve with ONE vocab collect; each term's
-        ``(query_id, q_tf, df)`` structs then ride in the plan as a
-        literal map keyed by ``word_id`` (no joined table, no broadcast
-        job). The IN-lists and the map are SQL text: built column by
-        column they cost hundreds of py4j round trips per query."""
+    def _doc_stats(self) -> tuple[int, int]:
+        """``(N, Σdl)`` as driver scalars from ONE pass over the doc
+        lengths, run on first need only (never by a ``reference``
+        query). N, the docs with at least one vocab token, is the
+        doc-length group count. Doc lengths not cached yet are
+        persisted first (``persist_tracked``) so the scoring join reuses
+        them; a handle's are its own cache."""
+        if self._stats is None:
+            if self.dl is None or not self.dl.is_cached:
+                from bigdata_elephant_spark.session import persist_tracked
+
+                self.dl = persist_tracked(
+                    doc_lengths(self.postings) if self.dl is None else self.dl
+                )
+            row = self.dl.agg(
+                F.count("dl").alias("n"), F.sum("dl").alias("s")
+            ).first()
+            self._stats = int(row["n"]), int(row["s"] or 0)
+        return self._stats
+
+    @property
+    def n_docs(self) -> int:
+        return self._doc_stats()[0]
+
+    def _partial(self, scoring: str, n_docs, k1: float, b: float) -> Column:
+        """:func:`term_partial` with N (``n_docs``, else the index's)
+        and avgdl as literals, built once per parameters (hundreds of
+        py4j calls) and reused per query."""
+        key = (scoring, n_docs, k1, b)
+        if key not in self._partials:
+            avgdl = None
+            if scoring == "bm25" or (scoring == "smooth" and n_docs is None):
+                n, total = self._doc_stats()
+                n_docs = n if n_docs is None else n_docs
+                # the same double as Spark's sum(dl) / count(dl); an
+                # empty index has no postings to score (max: no 0 / 0)
+                avgdl = float(total) / float(max(n, 1))
+            self._partials[key] = term_partial(
+                scoring, n_docs, avgdl=avgdl, k1=k1, b=b
+            )
+        return self._partials[key]
+
+    def _ranked(
+        self,
+        queries: dict[int, str],
+        k: int,
+        scoring: str = "bm25",
+        n_docs: int | None = None,
+        k1: float = 1.2,
+        b: float = 0.75,
+    ) -> DataFrame:
+        """``(query_id, doc_id, score, rank)``: each query's top-k by
+        score, ties by ``doc_id``.
+
+        The terms resolve with ONE pushed-down ``word IN (...)`` vocab
+        collect; each term's ``(query_id, q_tf, df)`` structs then ride
+        in the plan as a literal map keyed by ``word_id`` (no joined
+        table, no broadcast job) over only the ``word_id IN (...)``
+        postings, and the partials sum per ``(query_id, doc_id)``. The
+        IN-lists and the map are SQL text: built column by column they
+        cost hundreds of py4j round trips per query. A batch of one is
+        cut by ``orderBy.limit`` (its rank window is pruned away when
+        the caller drops ``rank``), any other by
+        :func:`per_query_topk`."""
+        _check_count(k)
+        partial = self._partial(scoring, n_docs, k1, b)
         rows = query_term_rows(queries)
         words = sorted({w for _, w, _ in rows})
         hits = {
@@ -627,29 +608,25 @@ class TextIndex:
         )
         matched = self.postings.where(_sql_in("word_id", fan))
         if scoring == "bm25":
-            # The cached doc lengths are a groupBy(doc_id) output, so
-            # already hash-partitioned by doc_id: a shuffled hash join
-            # built on the query's matched postings streams them in
-            # place and the score aggregate reuses that partitioning.
-            # A broadcast would re-ship the doc-sized table per query
-            # (one more job, and unbounded at corpus scale).
+            # Doc lengths from groupBy(doc_id) are already
+            # hash-partitioned by doc_id: a shuffled hash join built on
+            # the query's matched postings streams them in place and
+            # the score aggregate reuses that partitioning. A broadcast
+            # would re-ship the doc-sized table per query (one more
+            # job, and unbounded at corpus scale).
             matched = matched.hint("shuffle_hash").join(self.dl, "doc_id")
         matched = matched.select("*", F.inline(F.expr(
             f"map({terms})[word_id]" if fan else
             "CAST(NULL AS array<struct<query_id:bigint,q_tf:double,df:bigint>>)"
         )))
-        # the partial only reads columns and handle scalars: build it
-        # once per handle (hundreds of py4j calls), reuse per query
-        key = (scoring, n_docs)
-        if key not in self._partials:
-            self._partials[key] = term_partial(
-                scoring,
-                self.n_docs if n_docs is None else n_docs,
-                # the same double as the inline sum(dl) / count(dl); an
-                # empty index has no postings to score (max: no 0 / 0)
-                avgdl=F.lit(float(self.total_dl) / float(max(self.n_docs, 1))),
-            )
-        return matched, self._partials[key]
+        scored = summed_scores(matched, partial, keys=("query_id", "doc_id"))
+        if len(queries) != 1:
+            return per_query_topk(scored, k)
+        order = (F.col("score").desc(), F.col("doc_id").asc())
+        w = Window.partitionBy("query_id").orderBy(*order)
+        return scored.orderBy(*order).limit(k).withColumn(
+            "rank", F.row_number().over(w)
+        )
 
     def query(
         self,
@@ -659,15 +636,14 @@ class TextIndex:
         n_docs: int | None = None,
     ) -> DataFrame:
         """Top-k for one query as a k-row local frame:
-        ``doc_id, score`` plus every metadata column when the handle
+        ``doc_id, score`` plus every metadata column when the index
         has metadata, in rank order (score desc, doc_id asc).
-        ``n_docs`` overrides the handle's N for ``"smooth"``."""
+        ``n_docs`` overrides the index's N for ``"smooth"``."""
         import pyarrow as pa
 
         top = (
-            summed_scores(*self._matched({0: query}, scoring, n_docs))
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
+            self._ranked({0: query}, k, scoring, n_docs)
+            .select("doc_id", "score")
             .toArrow()
         )
         if self.meta is not None:
@@ -675,29 +651,21 @@ class TextIndex:
             meta = self.meta.where(_sql_in("doc_id", ids)).toArrow()
             # left join in rank order, as project_meta: a doc with
             # several metadata rows fans out, one with none gets nulls
-            where: dict = {}
-            for j, d in enumerate(meta.column("doc_id").to_pylist()):
-                where.setdefault(d, []).append(j)
-            left, right = [], []
-            for i, d in enumerate(ids):
-                for j in where.get(d, [None]):
-                    left.append(i)
-                    right.append(j)
-            extra = meta.drop_columns(["doc_id"]).take(
-                pa.array(right, pa.int64())
+            top, meta = (
+                t.append_column(c, pa.array(range(t.num_rows), pa.int64()))
+                for t, c in ((top, "_i"), (meta, "_j"))
             )
-            top = top.take(pa.array(left, pa.int64()))
-            for name, col in zip(extra.column_names, extra.columns):
-                top = top.append_column(name, col)
+            top = (
+                top.join(meta, "doc_id", join_type="left outer")
+                .sort_by([("_i", "ascending"), ("_j", "ascending")])
+                .drop_columns(["_i", "_j"])
+            )
         return self.spark.createDataFrame(top)
 
     def query_batch(self, queries: dict[int, str], k: int = 10) -> DataFrame:
         """BM25 for a probe set: ``(query_id, doc_id, score, rank)``
         with per-query top-k, as :func:`bm25_search_batch`."""
-        matched, partial = self._matched(queries, "bm25", None)
-        return per_query_topk(
-            summed_scores(matched, partial, keys=("query_id", "doc_id")), k
-        )
+        return self._ranked(queries, k)
 
 
 def _retire(keys) -> None:
@@ -718,14 +686,18 @@ def open_text_index(
 ) -> TextIndex:
     """The session's :class:`TextIndex` over these artifact paths.
 
-    Handles live in a module-level LRU (``TEXT_INDEX_LRU_MAX``) keyed
-    by ``(vocab, index, meta)``. Every call re-lists the artifacts'
-    data files (:func:`_data_files`, no Spark job) and compares them
-    with the handle's, so an artifact rebuilt at the same path is never
+    The handle persists :func:`doc_lengths` of the postings under its
+    own lifecycle (not ``session._TRACKED_CACHES``). Handles live in a
+    module-level LRU (``TEXT_INDEX_LRU_MAX``) keyed by
+    ``(vocab, index, meta)``. Every call re-lists the artifacts' data
+    files (:func:`_data_files`, no Spark job) and compares them with
+    the handle's, so an artifact rebuilt at the same path is never
     served stale. A changed index listing retires EVERY handle over
     that index path first (they share one cache entry, see
     :func:`_retire`), so no key can reopen onto the stale entry.
     ``session.release_caches()`` closes every handle."""
+    from pyspark.storagelevel import StorageLevel
+
     key = (vocab, index, meta)
     # (vocab, index[, meta]) listings
     files = tuple(
@@ -742,7 +714,12 @@ def open_text_index(
             _retire([key])
             h = None
         if h is None:
-            h = TextIndex(spark, vocab, index, meta, files)
+            v, p = spark.read.parquet(vocab), spark.read.parquet(index)
+            h = TextIndex(
+                spark, v, p, spark.read.parquet(meta) if meta else None,
+                doc_lengths(p).persist(StorageLevel.MEMORY_AND_DISK),
+            )
+            h.index, h.files = index, files
         _TEXT_INDEXES[key] = h
         _TEXT_INDEXES.move_to_end(key)
         _retire(list(_TEXT_INDEXES)[:-TEXT_INDEX_LRU_MAX])
@@ -753,5 +730,4 @@ def close_text_indexes() -> None:
     """Close every open :class:`TextIndex`, unpersisting its doc
     lengths; the next :func:`open_text_index` reopens."""
     with _TEXT_INDEXES_LOCK:
-        while _TEXT_INDEXES:
-            _TEXT_INDEXES.popitem()[1].dl.unpersist()
+        _retire(list(_TEXT_INDEXES))

@@ -137,17 +137,6 @@ def quarantine_embeddings(
     return clean, quarantined
 
 
-def _check_count(n: int, name: str = "k") -> None:
-    """``ValueError`` for a ``k`` below 0, or an ``n_probe`` or
-    ``shortlist`` below 1 (``limit(-1)`` would raise an
-    ``AnalysisException`` and the rank window return nothing). Entry
-    points call it first, so an empty index or an absent query
-    rejects the value too."""
-    lo = 0 if name == "k" else 1
-    if n < lo:
-        raise ValueError(f"{name} must be >= {lo}, got {n}")
-
-
 def _topk(
     df: DataFrame,
     n: int,
@@ -163,8 +152,8 @@ def _topk(
     ``row_number() <= n`` window Spark plans as ``WindowGroupLimit``
     (map-side per-query heaps before the exchange). The input size
     picks the branch — no flag — and both keep the same rows. An
-    out-of-range ``n`` raises (:func:`_check_count`)."""
-    _check_count(n, name)
+    out-of-range ``n`` raises (:func:`operators.search._check_count`)."""
+    _search._check_count(n, name)
     if single:
         return df.orderBy(*order).limit(n)
     w = Window.partitionBy("q_id").orderBy(*order)
@@ -1582,7 +1571,7 @@ def _probe_cells(cents: list, queries: list, n_probe: int) -> dict:
     NaN last. ONE definition pins the probe contract across the IVF,
     IVF-PQ and IVF,SQ8 layouts and their oracles; the cells become a
     STATIC partition filter on the cell_id layout."""
-    _check_count(n_probe, "n_probe")
+    _search._check_count(n_probe, "n_probe")
     ranked = []
     for qid, qv in queries:
         for cid, cv in cents:
@@ -1763,9 +1752,9 @@ def _ivf_indexed_search(
     absent queries give the typed empty frame. Bad counts, and a
     ``vec`` of the wrong length or not finite in float32, raise
     ``ValueError``."""
-    _check_count(k)
-    _check_count(n_probe, "n_probe")
-    _check_count(shortlist, "shortlist")
+    _search._check_count(k)
+    _search._check_count(n_probe, "n_probe")
+    _search._check_count(shortlist, "shortlist")
     h = open_ann_index(spark, index_path, id_col, vec_col)
     if source is None and h.kind != "ivf" and (
         vec is None or h.kind == "ivfpq"
@@ -2486,9 +2475,9 @@ def sq8_topk_batch(
     predicate). Such a vector has no defined cosine against anything
     — excluding it is the ranking the exact scorer would give the
     true zero vector. Empty input returns the typed empty frame."""
-    _check_count(k)
+    _search._check_count(k)
     if n_cells is not None:
-        _check_count(n_probe, "n_probe")
+        _search._check_count(n_probe, "n_probe")
     dim = _vec_dim(embeddings, vec_col)
     if dim is None:
         return embeddings.sparkSession.createDataFrame(

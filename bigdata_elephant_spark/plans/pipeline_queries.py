@@ -640,7 +640,7 @@ def _hybrid_fuse(
     """Shared hybrid-RRF tail: BM25 top-N over the given
     vocab/postings fused with cosine top-N over the embedding table
     (vec_id == doc_id) by reciprocal-rank fusion. Both retrievers are
-    plan-audited (broadcast query terms / broadcast query vector,
+    plan-audited (literal query terms / broadcast query vector,
     TakeOrderedAndProject); the fusion join runs over two N-row
     lists."""
     from bigdata_elephant_spark.operators.search import (

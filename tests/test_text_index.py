@@ -269,3 +269,76 @@ def test_warm_bm25_query_job_budget(spark, artifacts):
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert rows
     assert 0 < len(jobs) <= WARM_QUERY_MAX_JOBS, len(jobs)
+
+
+def _ranked_rows(df) -> list[tuple]:
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+@pytest.mark.parametrize("scoring", ["reference", "smooth", "bm25"])
+@pytest.mark.parametrize(
+    "query,k",
+    [
+        ("the good person", 10),    # a normal query
+        ("1234 aaaa !!!", 10),      # every token filtered
+        ("join join spark", 10),    # a repeated term
+        ("hash join", 0),           # k = 0
+        ("hash join", 10**6),       # k above the match count
+    ],
+)
+def test_single_query_is_a_batch_of_one(spark, artifacts, scoring, query, k):
+    """The single-query entry equals that query's rows from the core's
+    batch form and from the handle, in every scoring mode; ``smooth``
+    runs with ``n_docs=None`` (the index's own N) throughout."""
+    v, i, _ = artifacts
+    vocab, postings = spark.read.parquet(v), spark.read.parquet(i)
+    if scoring == "bm25":
+        single = S.bm25_search(spark, query, vocab, postings, k=k)
+    else:
+        single = S.search(spark, query, vocab, postings, k=k, scoring=scoring)
+    want = _ranked_rows(single)
+    batch = S.TextIndex(spark, vocab, postings)._ranked(
+        {1: query, 2: "the good person"}, k, scoring
+    )
+    assert _ranked_rows(batch.where("query_id = 1").orderBy("rank")) == want
+    handle = S.open_text_index(spark, v, i).query(query, k=k, scoring=scoring)
+    assert _ranked_rows(handle) == want
+
+
+def test_one_query_batch_keeps_rank(spark, artifacts):
+    v, i, _ = artifacts
+    vocab, postings = spark.read.parquet(v), spark.read.parquet(i)
+    out = S.bm25_search_batch(spark, {5: "the good person"}, vocab, postings, k=3)
+    assert out.columns == ["query_id", "doc_id", "score", "rank"]
+    rows = out.collect()
+    assert [(r["query_id"], r["rank"]) for r in rows] == [(5, 1), (5, 2), (5, 3)]
+    assert [(r["doc_id"], r["score"]) for r in rows] == _ranked_rows(
+        S.bm25_search(spark, "the good person", vocab, postings, k=3)
+    )
+
+
+def test_negative_k_raises_on_every_text_entry(spark, artifacts):
+    """One count check for every text entry point, before any Spark
+    work: an empty query or an empty batch rejects the value too."""
+    v, i, m = artifacts
+    vocab, postings = spark.read.parquet(v), spark.read.parquet(i)
+    h = S.open_text_index(spark, v, i, m)
+    for q in ("the good person", ""):
+        for call in (
+            lambda: S.search(spark, q, vocab, postings, k=-1),
+            lambda: S.search(
+                spark, q, vocab, postings, k=-1, replicate_off_by_one=True
+            ),
+            lambda: S.bm25_search(spark, q, vocab, postings, k=-1),
+            lambda: S.bm25_search_batch(spark, {1: q}, vocab, postings, k=-1),
+            lambda: h.query(q, k=-1),
+            lambda: h.query_batch({1: q}, k=-1),
+        ):
+            with pytest.raises(ValueError, match="k must be >= 0"):
+                call()
+    for call in (
+        lambda: S.bm25_search_batch(spark, {}, vocab, postings, k=-1),
+        lambda: h.query_batch({}, k=-1),
+    ):
+        with pytest.raises(ValueError, match="k must be >= 0"):
+            call()
