@@ -34,7 +34,9 @@ over just its terms' postings and one k-row metadata fetch — 4 Spark
 jobs (18 before). Handles sit in an LRU of ``TEXT_INDEX_LRU_MAX`` keyed by
 the ``(vocab, index, meta)`` paths, revalidated on every call against
 the artifacts' data-file listing (name, size, mtime) so a rebuilt index
-is never served stale. ``session.release_caches()`` closes them all and
+is never served stale. A ``batch`` (no meta) after ``query --meta`` calls
+is served by a meta-less view of the open handle, not a second open.
+``session.release_caches()`` closes them all and
 unpersists their doc lengths; the next query reopens. The cache lives
 in the process: called repeatedly through ``main(argv, spark=...)`` it
 pays the open once, while one process per query gains only the job
@@ -63,6 +65,19 @@ The quantized layouts store codes only, so their stored-id queries
 centroids live on the driver, which suits a query or a batch; the
 corpus-sized delta of ``embedding_novelty_indexed`` keeps its probe in
 Spark.
+
+``ann-build`` and ``ann-add`` are one call each of the index write core
+(``operators.similarity._build_index`` and ``_append_to_index``), which
+the six ``build_*_index``/``update_*_index`` functions call too. A
+build gates the input, picks the centroids, assigns every row once and
+lets the layout's encoder train and encode, then writes the
+cell_id-partitioned corpus table, the centroids and the side tables and
+commits the manifest. An append takes the kind from ``index_kind``,
+gates the delta, assigns it to the frozen centroids and appends what
+the encoder makes of it with the stored quantizer. The encoders (raw
+rows; SQ8 codes; PQ codes of the residuals) and one layout table,
+``similarity._LAYOUTS`` (corpus table, side tables, encoder per kind),
+are all that differ by layout.
 """
 
 from __future__ import annotations
@@ -314,8 +329,8 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
         "ann-add",
         help="append a delta batch of vectors to a saved ANN index "
              "(FAISS add() contract: quantizers stay frozen, base "
-             "segment untouched; IVF vs IVF-PQ is dispatched from "
-             "the index manifest)",
+             "segment untouched; one append for every layout, the "
+             "encoder picked by the index's kind)",
     )
     sp.add_argument("--index", required=True)
     sp.add_argument("--embeddings", required=True,
@@ -565,42 +580,30 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
             out,
         )
     elif args.cmd == "ann-build":
-        from bigdata_elephant_spark.operators.similarity import (
-            build_ivf_index,
-            build_ivfpq_index,
-            build_ivfsq8_index,
-        )
+        from bigdata_elephant_spark.operators.similarity import _build_index
 
         if args.pq and args.sq8:
             p.error("--pq and --sq8 are mutually exclusive layouts")
-        emb = spark.read.parquet(args.embeddings)
-        if args.pq:
-            build_ivfpq_index(
-                emb, args.out, n_cells=args.cells, n_sub=args.sub,
-                sub_dim=args.sub_dim, n_codes=args.codes,
-            )
-        elif args.sq8:
-            build_ivfsq8_index(emb, args.out, n_cells=args.cells)
-        else:
-            build_ivf_index(emb, args.out, n_cells=args.cells)
+        geom = (
+            dict(n_sub=args.sub, sub_dim=args.sub_dim, n_codes=args.codes)
+            if args.pq
+            else {}
+        )
+        _build_index(
+            spark.read.parquet(args.embeddings), args.out,
+            "ivfpq" if args.pq else "ivfsq8" if args.sq8 else "ivf",
+            args.cells, **geom,
+        )
     elif args.cmd == "ann-add":
         from bigdata_elephant_spark.operators.similarity import (
-            index_kind,
-            update_ivf_index,
-            update_ivfpq_index,
-            update_ivfsq8_index,
+            _append_to_index,
         )
 
-        kind = index_kind(args.index)
-        # SQ8 appends re-encode with the FROZEN range stats and are
-        # accepted only while the delta stays inside the trained
-        # [vmin, vmax] (update_ivfsq8_index refuses on overflow —
-        # a clamped code would mis-encode silently; rebuild then).
-        fn = {
-            "ivfpq": update_ivfpq_index,
-            "ivfsq8": update_ivfsq8_index,
-        }.get(kind, update_ivf_index)
-        fn(spark, args.index, spark.read.parquet(args.embeddings))
+        # the index's own kind picks the encoder; an IVF,SQ8 delta
+        # outside the trained range is refused (rebuild then)
+        _append_to_index(
+            spark, args.index, spark.read.parquet(args.embeddings)
+        )
     elif args.cmd == "ann-delete":
         from bigdata_elephant_spark.operators.similarity import (
             delete_from_index,
@@ -763,17 +766,17 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
         import os
 
         from bigdata_elephant_spark.operators.similarity import (
+            _LAYOUTS,
             _index_rows,
-            _parquet_files_exist,
             _table_path,
             index_kind,
             read_index_manifest,
         )
 
         kind = index_kind(args.index)
-        sub_t = "codes" if kind in ("ivfpq", "ivfsq8") else "vectors"
         man = read_index_manifest(args.index) or {}
-        cur = _table_path(args.index, sub_t)
+        table = _LAYOUTS[kind][0]
+        cur = _table_path(args.index, table)
         files_per_cell: dict[str, int] = {}
         if os.path.isdir(cur):
             for d in sorted(os.listdir(cur)):
@@ -783,18 +786,14 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
                         [f for f in os.listdir(full)
                          if f.endswith(".parquet")]
                     )
-        n_rows = (
-            spark.read.parquet(cur).count()
-            if _parquet_files_exist(cur)
-            else 0
-        )
+        rows = _index_rows(spark, args.index, table)
         tomb = _index_rows(spark, args.index, "tombstones")
         stats = [
             ("kind", kind),
             ("dim", str(man.get("dim", "?"))),
             ("n_cells", str(man.get("n_cells", "?"))),
             ("generation", os.path.basename(cur)),
-            ("rows", str(n_rows)),
+            ("rows", "0" if rows is None else str(rows.count())),
             ("populated_cells", str(len(files_per_cell))),
             ("files", str(sum(files_per_cell.values()))),
             ("max_files_per_cell",

@@ -38,6 +38,7 @@ make float comparison stable across engines.
 
 from __future__ import annotations
 
+import copy
 import threading
 from collections import Counter, OrderedDict
 
@@ -695,6 +696,11 @@ def open_text_index(
     served stale. A changed index listing retires EVERY handle over
     that index path first (they share one cache entry, see
     :func:`_retire`), so no key can reopen onto the stale entry.
+    A request without ``meta`` and without a handle of its own is
+    served by a meta-less view of a valid handle over the same vocab
+    and index (a ``query_batch`` never reads meta), sharing its
+    frames, doc lengths and, once computed, ``N``/Σdl: the LRU keeps
+    the one handle.
     ``session.release_caches()`` closes every handle."""
     from pyspark.storagelevel import StorageLevel
 
@@ -710,6 +716,17 @@ def open_text_index(
             and (o.spark is not spark or o.files[1] != files[1])
         ])
         h = _TEXT_INDEXES.get(key)
+        if h is None and meta is None:
+            shared = next(
+                (k for k, o in _TEXT_INDEXES.items()
+                 if k[:2] == key[:2] and o.files[:2] == files),
+                None,
+            )
+            if shared is not None:
+                _TEXT_INDEXES.move_to_end(shared)
+                view = copy.copy(_TEXT_INDEXES[shared])
+                view.meta = None
+                return view
         if h is not None and h.files != files:  # vocab or meta rebuilt
             _retire([key])
             h = None

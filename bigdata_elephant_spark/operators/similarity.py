@@ -987,10 +987,21 @@ def _table_path(path: str, sub: str) -> str:
     ``{path}/{sub}`` layout unchanged."""
     import os as _os
 
-    man = read_index_manifest(path) or {}
+    cur, _ = _generations(read_index_manifest(path) or {}, sub)
+    return _os.path.join(path, cur)
+
+
+def _generations(man: dict, sub: str) -> tuple[str, str]:
+    """``(current, next)`` physical dir of the logical table ``sub``
+    under the manifest ``man``: its ``tables`` pointer (the plain
+    ``sub`` when unset) and the versioned dir a compaction publishes
+    after it (``vectors`` → ``vectors_v1`` → ``vectors_v2``) — the one
+    reader of the pointer map."""
     tables = man.get("tables")
     cur = tables.get(sub) if isinstance(tables, dict) else None
-    return _os.path.join(path, cur if isinstance(cur, str) else sub)
+    cur = cur if isinstance(cur, str) else sub
+    ver = int(cur.rsplit("_v", 1)[1]) if "_v" in cur else 0
+    return cur, f"{sub}_v{ver + 1}"
 
 
 def _expire_versions(path: str, sub: str, keep=()) -> None:
@@ -1060,15 +1071,19 @@ def _index_rows(
     if not _parquet_files_exist(d):
         return None
     df = spark.read.parquet(d)
-    tomb = _index_rows(spark, path, "tombstones") if id_col else None
+    tomb = _tombstoned(spark, path, id_col) if id_col else None
     if tomb is None:
         return df
-    tcol = tomb.columns[0]
-    return df.join(
-        F.broadcast(tomb.select(F.col(tcol).alias(id_col)).distinct()),
-        id_col,
-        "left_anti",
-    )
+    return df.join(F.broadcast(tomb.distinct()), id_col, "left_anti")
+
+
+def _tombstoned(spark, path: str, id_col: str) -> DataFrame | None:
+    """The ids pending deletes have tombstoned, as one ``id_col``
+    column, or ``None`` when no delete is pending."""
+    tomb = _index_rows(spark, path, "tombstones")
+    if tomb is None:
+        return None
+    return tomb.select(F.col(tomb.columns[0]).alias(id_col))
 
 
 def delete_from_index(
@@ -1079,10 +1094,10 @@ def delete_from_index(
     tombstone table next to the index instead of rewriting any
     corpus-sized file. Visibility is immediate — every indexed read
     (:func:`ivf_topk_indexed`, :func:`ivf_topk_batch_indexed`,
-    :func:`ivfpq_topk_indexed`) anti-joins the broadcast tombstone
-    set — and the next :func:`compact_index` applies the deletes
-    physically and retires the tombstones in the same atomic
-    manifest commit. Delta-cost, not corpus-cost: the write is
+    :func:`ivfsq8_topk_indexed`, :func:`ivfpq_topk_indexed`)
+    anti-joins the broadcast tombstone set — and the next
+    :func:`compact_index` applies the deletes physically and retires
+    the tombstones in the same atomic manifest commit. Delta-cost, not corpus-cost: the write is
     tombstone-sized; the read-side tax is a broadcast map-side
     filter.
 
@@ -1092,9 +1107,10 @@ def delete_from_index(
     tombstone-sized); ids absent from the index are harmless no-ops,
     exactly like FAISS ``remove_ids``.
 
-    Re-adding a tombstoned id is refused by
-    :func:`update_ivf_index` / :func:`update_ivfpq_index` until a
-    compaction has applied the delete — with one append-only
+    Re-adding a tombstoned id is refused by every append
+    (:func:`update_ivf_index`, :func:`update_ivfsq8_index`,
+    :func:`update_ivfpq_index`) until a compaction has applied the
+    delete — with one append-only
     tombstone table there is no ordering between a delete and a
     later re-add, so the anti-join would silently hide the new row
     (the reason Lucene orders them with per-segment docvalue
@@ -1108,16 +1124,9 @@ def delete_from_index(
         tomb = spark.createDataFrame(
             [(int(i),) for i in ids], f"{id_col} long"
         ).distinct()
-    existing = _index_rows(spark, path, "tombstones")
+    existing = _tombstoned(spark, path, id_col)
     if existing is not None:
-        tcol = existing.columns[0]
-        tomb = tomb.join(
-            F.broadcast(
-                existing.select(F.col(tcol).alias(id_col))
-            ),
-            id_col,
-            "left_anti",
-        )
+        tomb = tomb.join(F.broadcast(existing), id_col, "left_anti")
     if tomb.first() is None:
         return  # empty delta (all already tombstoned / empty frame):
         # a 0-row append would still write a schema-bearing file and
@@ -1135,8 +1144,7 @@ def _checked_delta(
     vec_col: str,
     op: str,
 ) -> tuple[DataFrame, DataFrame]:
-    """The shared front of every append (``update_ivf_index`` /
-    ``update_ivfsq8_index`` / ``update_ivfpq_index``) →
+    """The front of the one append (:func:`_append_to_index`) →
     ``(delta, centroids)``:
 
     1. drop NULL / nonfinite / zero delta vectors — the day-2 twin of
@@ -1181,15 +1189,10 @@ def _checked_delta(
                 )
             ),
         )
-    tomb = _index_rows(spark, path, "tombstones")
+    tomb = _tombstoned(spark, path, id_col)
     if tomb is not None:
-        tcol = tomb.columns[0]
         hit = (
-            delta.join(
-                F.broadcast(tomb.select(F.col(tcol).alias(id_col))),
-                id_col,
-                "left_semi",
-            )
+            delta.join(F.broadcast(tomb), id_col, "left_semi")
             .select(id_col)
             .first()
         )
@@ -1218,9 +1221,8 @@ def _verify_pointer_reset(path: str, sub: str, op: str) -> None:
     its flip the same way."""
     import os as _os
 
-    man = read_index_manifest(path)
-    cur = ((man or {}).get("tables") or {}).get(sub)
-    if isinstance(cur, str) and cur != sub:
+    cur, _ = _generations(read_index_manifest(path) or {}, sub)
+    if cur != sub:
         raise OSError(
             f"{op}: could not reset the manifest pointer at "
             f"{path!r} (it still names {cur!r}); the rebuilt "
@@ -1232,26 +1234,23 @@ def _verify_pointer_reset(path: str, sub: str, op: str) -> None:
 
 def index_kind(path: str) -> str:
     """'ivf', 'ivfpq' or 'ivfsq8', from the manifest when present,
-    else from the layout (plain IVF has ``vectors/``; both quantized
-    layouts have ``codes/``, disambiguated by IVF,SQ8's
-    ``sq8_stats/`` table) — the ONE dispatch rule shared by
-    maintenance and query entry points (``ann-add``, ``ann-query``,
+    else from the layout: the :data:`_LAYOUTS` kind whose quantizer
+    side tables are on disk (IVF,SQ8's ``sq8_stats/``, IVF-PQ's
+    ``codebooks/``; plain IVF has none) — the ONE dispatch rule shared
+    by maintenance and query entry points (appends, ``ann-query``,
     ``compact_index``). The layout fallback matters: the manifest
     write is best-effort, and a mis-guess here would route an SQ8
     index into the IVF reader, which finds no ``vectors/`` and
-    silently serves empty results from a populated index."""
+    silently serves empty results from a populated index, or append
+    raw vectors next to codes no reader reads."""
     import os as _os
 
-    kind = (read_index_manifest(path) or {}).get("kind")
-    if kind is not None:
-        return kind
-    if _os.path.isdir(_os.path.join(path, "codes")):
-        return (
-            "ivfsq8"
-            if _os.path.isdir(_os.path.join(path, "sq8_stats"))
-            else "ivfpq"
-        )
-    return "ivf"
+    return (read_index_manifest(path) or {}).get("kind") or next(
+        (k for k, (_, side, _) in _LAYOUTS.items() if side and all(
+            _os.path.isdir(_os.path.join(path, t)) for t in side
+        )),
+        "ivf",
+    )
 
 
 def index_dim(spark, path: str) -> int | None:
@@ -1324,6 +1323,200 @@ def _gate_build_input(
     return clean, dim
 
 
+# ------------------------------------------------ the index write core
+#
+# Every layout is a coarse quantizer (``centroids``), one
+# cell_id-partitioned corpus table and the layout's quantizer side
+# tables. A build and an append share everything but the ENCODER,
+# which turns rows plus their cell assignment into corpus-table rows:
+# ``encode(rows, assign, cents, path, man, stored, id_col, vec_col)``
+# → ``(rows with cell_id, side tables)``. At build ``stored`` is None
+# and the encoder trains its quantizer from the manifest fields
+# ``man``; at append ``stored`` holds the side tables as written and
+# ``man`` is the stored manifest, so the quantizer stays frozen.
+
+
+def _encode_ivf(rows, assign, cents, path, man, stored, id_col, vec_col):
+    """Plain IVF stores the raw rows."""
+    return rows.join(assign, id_col), {}
+
+
+def _encode_sq8(rows, assign, cents, path, man, stored, id_col, vec_col):
+    """IVF,SQ8: :func:`sq8_encode` with the per-dimension range trained
+    by :func:`sq8_stats` at build, or the stored range at append —
+    where any delta component outside the trained ``[vmin, vmax]``
+    refuses the append (a clamped code would mis-encode silently)."""
+    if stored is None:
+        if man["dim"] is None:
+            raise ValueError(
+                "build_ivfsq8_index: embeddings input is empty — an SQ8 "
+                "range cannot be trained on zero rows"
+            )
+        stats = sq8_stats(rows, man["dim"], vec_col)
+    else:
+        stats = stored["sq8_stats"]
+        if "vmax" not in stats.columns:
+            # pre-vmax stats artifact: reconstruct the trained maxima.
+            # The two IEEE roundings (multiply, add) can drift ~1 ulp
+            # in EITHER direction, so a component up to ~1 ulp past
+            # the trained max may be spuriously accepted — harmless,
+            # because _sq8_code clamps to 255, giving the same code the
+            # true max would; a ~1-ulp spurious refusal is likewise safe.
+            stats = stats.withColumn(
+                "vmax",
+                F.zip_with(
+                    F.col("vmin"),
+                    F.col("vstep"),
+                    lambda mn, st: mn + st * F.lit(255.0),
+                ),
+            )
+        bounds = F.arrays_zip(F.col("vmin"), F.col("vmax"))
+        viol = (
+            rows.crossJoin(F.broadcast(stats))
+            .filter(
+                F.exists(
+                    F.zip_with(
+                        F.col(vec_col),
+                        bounds,
+                        lambda x, b: (
+                            x.cast("double") < b.getField("vmin")
+                        ) | (x.cast("double") > b.getField("vmax")),
+                    ),
+                    lambda bad: bad,
+                )
+            )
+            .select(id_col)
+            .first()
+        )
+        if viol is not None:
+            raise ValueError(
+                f"update_ivfsq8_index: delta id={viol[id_col]} has a "
+                f"component outside the SQ8 range trained at build time "
+                f"for {path!r} — encoding it with the frozen stats would "
+                "clamp (silent mis-encode). Rebuild with "
+                "build_ivfsq8_index over base+delta (FAISS retrains the "
+                "scalar quantizer on rebuild for the same reason)."
+            )
+    codes = sq8_encode(rows, stats, id_col, vec_col)
+    return codes.join(assign, id_col), {"sq8_stats": stats}
+
+
+def _encode_pq(rows, assign, cents, path, man, stored, id_col, vec_col):
+    """IVF-PQ: :func:`pq_encode` of the rows' residuals
+    (:func:`_residuals`) against codebooks trained by
+    :func:`pq_codebooks` at build, or the stored ones at append (the
+    geometry from :func:`_pq_geometry`)."""
+    resid = _residuals(rows, assign, cents, id_col, vec_col)
+    cbooks = stored["codebooks"] if stored is not None else pq_codebooks(
+        resid, man["n_sub"], man["sub_dim"], man["n_codes"], id_col,
+        "resid",
+    )
+    n_sub, sub_dim = _pq_geometry(man, cbooks)
+    codes = pq_encode(resid, cbooks, n_sub, sub_dim, id_col, "resid")
+    cells = resid.select(id_col, "cell_id")
+    return codes.join(cells, id_col), {"codebooks": cbooks}
+
+
+# The one layout table: kind → (cell_id-partitioned corpus table,
+# quantizer side tables, encoder). Every layout also stores its
+# ``centroids``. Builds, appends, compaction, the ANN handle,
+# :func:`index_kind`'s layout fallback and the CLI's ``ann-stats`` all
+# read it.
+_LAYOUTS = {
+    "ivf": ("vectors", (), _encode_ivf),
+    "ivfsq8": ("codes", ("sq8_stats",), _encode_sq8),
+    "ivfpq": ("codes", ("codebooks",), _encode_pq),
+}
+
+
+def _build_index(
+    embeddings: DataFrame,
+    path: str,
+    kind: str,
+    n_cells: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    **geom,
+) -> None:
+    """The one build of every :data:`_LAYOUTS` kind (the
+    ``build_*_index`` functions and the CLI ``ann-build``): gate the
+    input (:func:`_gate_build_input`), train the coarse quantizer
+    (:func:`ivf_centroids`), assign every row once (:func:`ivf_assign`)
+    and let the layout's encoder train its quantizer and encode. Then
+    write the corpus table partitioned by ``cell_id``, the centroids
+    and the side tables, and commit ``manifest.json`` (``kind``,
+    ``dim``, ``n_cells`` and the layout's ``geom``, IVF-PQ's
+    ``n_sub``/``sub_dim``/``n_codes``). A build starts a new index
+    lifetime: the manifest has no ``tables`` pointer
+    (:func:`_verify_pointer_reset`), and older generations and pending
+    tombstones are expired."""
+    table, _, encode = _LAYOUTS[kind]
+    embeddings, dim = _gate_build_input(embeddings, vec_col)
+    man = dict(kind=kind, dim=dim, n_cells=n_cells, **geom)
+    cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
+    assign = ivf_assign(embeddings, cents, id_col, vec_col)
+    rows, side = encode(
+        embeddings, assign, cents, path, man, None, id_col, vec_col
+    )
+    (
+        rows.write.mode("overwrite")
+        .partitionBy("cell_id")
+        .parquet(f"{path}/{table}")
+    )
+    for name, df in {"centroids": cents, **side}.items():
+        df.write.mode("overwrite").parquet(f"{path}/{name}")
+    write_index_manifest(path, **man)
+    _verify_pointer_reset(path, table, f"build_{kind}_index")
+    _expire_versions(path, table, keep=(table,))
+    # A rebuild resets the index's whole lifetime, including pending
+    # deletes — stale tombstones surviving into the new life would
+    # silently hide freshly indexed rows that happen to reuse an id.
+    _expire_versions(path, "tombstones")
+
+
+def _append_to_index(
+    spark,
+    path: str,
+    delta: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    kind: str | None = None,
+    refusal: str = "",
+) -> None:
+    """The one append of every :data:`_LAYOUTS` kind (the
+    ``update_*_index`` functions and the CLI ``ann-add``), the FAISS
+    ``add()`` contract: the index's kind comes from
+    :func:`index_kind` — a ``kind`` it does not match raises
+    ``ValueError`` ending in ``refusal`` — then :func:`_checked_delta`
+    gates the delta, it is assigned to the FROZEN centroids, the
+    layout's encoder encodes it with the stored quantizer, and the rows
+    are appended to the current generation of the corpus table
+    (:func:`_table_path`). Delta-cost, not corpus-cost: base files are
+    untouched bytes, and the quantizer tables are read, never
+    retrained."""
+    found = index_kind(path)
+    if kind is not None and found != kind:
+        raise ValueError(
+            f"index at {path!r} is kind={found!r}: "
+            f"update_{kind}_index {refusal}"
+        )
+    table, side, encode = _LAYOUTS[found]
+    delta, cents = _checked_delta(
+        spark, path, delta, id_col, vec_col, f"update_{found}_index"
+    )
+    stored = {t: spark.read.parquet(f"{path}/{t}") for t in side}
+    assign = ivf_assign(delta, cents, id_col, vec_col)
+    rows, _ = encode(
+        delta, assign, cents, path, read_index_manifest(path) or {},
+        stored, id_col, vec_col,
+    )
+    (
+        rows.write.mode("append")
+        .partitionBy("cell_id")
+        .parquet(_table_path(path, table))
+    )
+
+
 def build_ivf_index(
     embeddings: DataFrame,
     path: str,
@@ -1347,23 +1540,7 @@ def build_ivf_index(
     manifest-dim vectors reach the quantizer or the persisted
     layout.
     """
-    embeddings, dim = _gate_build_input(embeddings, vec_col)
-    cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    assigned = ivf_assign(embeddings, cents, id_col, vec_col)
-    (
-        embeddings.join(assigned, id_col)
-        .write.mode("overwrite")
-        .partitionBy("cell_id")
-        .parquet(f"{path}/vectors")
-    )
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    write_index_manifest(path, kind="ivf", dim=dim, n_cells=n_cells)
-    _verify_pointer_reset(path, "vectors", "build_ivf_index")
-    _expire_versions(path, "vectors", keep=("vectors",))
-    # A rebuild resets the index's whole lifetime, including pending
-    # deletes — stale tombstones surviving into the new life would
-    # silently hide freshly indexed rows that happen to reuse an id.
-    _expire_versions(path, "tombstones")
+    _build_index(embeddings, path, "ivf", n_cells, id_col, vec_col)
 
 
 def update_ivf_index(
@@ -1387,33 +1564,19 @@ def update_ivf_index(
     (equivalence-tested); with interleaved ids the geometry differs
     from a rebuild's but stays a valid frozen quantization, exactly
     like FAISS after add()."""
-    man = read_index_manifest(path) or {}
-    kind = man.get("kind")
-    if kind is not None and kind != "ivf":
-        raise ValueError(
-            f"index at {path!r} is kind={kind!r}: update_ivf_index "
-            "appends to the plain IVF vectors layout only — an "
-            "IVFPQ add needs the delta PQ-encoded into codes/, "
-            "which is a rebuild"
-        )
-    delta, cents = _checked_delta(
-        spark, path, delta, id_col, vec_col, "update_ivf_index"
-    )
-    assigned = ivf_assign(delta, cents, id_col, vec_col)
-    (
-        delta.join(assigned, id_col)
-        .write.mode("append")
-        .partitionBy("cell_id")
-        .parquet(_table_path(path, "vectors"))
+    _append_to_index(
+        spark, path, delta, id_col, vec_col, "ivf",
+        "appends to the plain IVF vectors layout only — an IVFPQ add "
+        "needs the delta PQ-encoded into codes/, which is a rebuild",
     )
 
 
 def compact_index(spark, path: str) -> None:
     """Rewrite an index's corpus-sized table (``vectors/`` for IVF,
-    ``codes/`` for IVF-PQ and IVF,SQ8 — dispatched from the
-    manifest) so each
-    cell holds ONE file again. Every :func:`update_ivf_index` /
-    :func:`update_ivfpq_index` append adds a file per touched cell;
+    ``codes/`` for IVF-PQ and IVF,SQ8 — the :data:`_LAYOUTS` entry of
+    its :func:`index_kind`) so each cell holds ONE file again. Every
+    append (:func:`update_ivf_index`, :func:`update_ivfsq8_index`,
+    :func:`update_ivfpq_index`) adds a file per touched cell;
     after many small deltas a probe pays per-file open/footer costs
     that dwarf the data — the classic small-files tax, and the same
     compaction cycle every LSM-ish layout (Iceberg/Delta OPTIMIZE,
@@ -1447,8 +1610,9 @@ def compact_index(spark, path: str) -> None:
     Single-maintenance-writer assumption: an append racing the
     compaction can land in the retiring generation after its rows
     were already copied forward, and the flip would drop it.
-    Serialize :func:`update_ivf_index`/:func:`update_ivfpq_index`
-    with compaction (a full Iceberg/Delta deployment rejects the
+    Serialize the appends (:func:`update_ivf_index`,
+    :func:`update_ivfsq8_index`, :func:`update_ivfpq_index`) with
+    compaction (a full Iceberg/Delta deployment rejects the
     losing commit via optimistic concurrency on the catalog; a
     json-file manifest has no compare-and-swap to build that on)."""
     import os
@@ -1456,43 +1620,9 @@ def compact_index(spark, path: str) -> None:
 
     man = read_index_manifest(path) or {}
     kind = index_kind(path)
-    sub = "codes" if kind in ("ivfpq", "ivfsq8") else "vectors"
-    tables = man.get("tables")
-    cur = tables.get(sub, sub) if isinstance(tables, dict) else sub
-    ver = int(cur.rsplit("_v", 1)[1]) if "_v" in cur else 0
-    nxt = f"{sub}_v{ver + 1}"
-    if not _parquet_files_exist(os.path.join(path, cur)):
-        # Already-empty generation (a previous compaction applied a
-        # delete-everything tombstone set): nothing to rewrite. But
-        # pending tombstones must STILL retire — they hide nothing,
-        # yet while pending they tax every read with the anti-join
-        # and permanently refuse re-adding those ids (the ValueError
-        # in update_* prescribes "run compact_index first", which
-        # must therefore work here).
-        if _index_rows(spark, path, "tombstones") is not None:
-            tcur = (
-                tables.get("tombstones", "tombstones")
-                if isinstance(tables, dict)
-                else "tombstones"
-            )
-            tver = (
-                int(tcur.rsplit("_v", 1)[1]) if "_v" in tcur else 0
-            )
-            tnxt = f"tombstones_v{tver + 1}"
-            man.setdefault("tables", {})["tombstones"] = tnxt
-            man["kind"] = kind
-            write_index_manifest(path, **man)
-            flipped = (
-                (read_index_manifest(path) or {}).get("tables") or {}
-            )
-            if flipped.get("tombstones") != tnxt:
-                raise OSError(
-                    "compact_index: could not persist the tombstone "
-                    f"pointer flip at {path!r}"
-                )
-            _expire_versions(path, "tombstones", keep=(tcur,))
-        return
-    df = spark.read.parquet(os.path.join(path, cur))
+    sub = _LAYOUTS[kind][0]
+    cur, nxt = _generations(man, sub)
+    tcur, tnxt = _generations(man, "tombstones")
     # Apply pending deletes physically while the rows are being
     # rewritten anyway (Lucene applies docvalue deletes on merge for
     # the same reason): the compacted generation holds live rows
@@ -1504,37 +1634,42 @@ def compact_index(spark, path: str) -> None:
     # matched (rows, tombstones) pair; both retiring dirs are
     # retained one generation.
     tomb = _index_rows(spark, path, "tombstones")
-    tcur = (
-        tables.get("tombstones", "tombstones")
-        if isinstance(tables, dict)
-        else "tombstones"
-    )
-    if tomb is not None:
-        tcol = tomb.columns[0]
-        df = df.join(F.broadcast(tomb.distinct()), tcol, "left_anti")
-        tver = int(tcur.rsplit("_v", 1)[1]) if "_v" in tcur else 0
-        man.setdefault("tables", {})["tombstones"] = (
-            f"tombstones_v{tver + 1}"
+    flip = {} if tomb is None else {"tombstones": tnxt}
+    # An already-empty generation (a previous compaction applied a
+    # delete-everything tombstone set) has nothing to rewrite. But
+    # pending tombstones must STILL retire — they hide nothing, yet
+    # while pending they tax every read with the anti-join and
+    # permanently refuse re-adding those ids (the ValueError in
+    # update_* prescribes "run compact_index first", which must
+    # therefore work here).
+    if _parquet_files_exist(os.path.join(path, cur)):
+        df = spark.read.parquet(os.path.join(path, cur))
+        if tomb is not None:
+            tcol = tomb.columns[0]
+            df = df.join(F.broadcast(tomb.distinct()), tcol, "left_anti")
+        (
+            df.repartition("cell_id")
+            .write.mode("overwrite")
+            .partitionBy("cell_id")
+            .parquet(os.path.join(path, nxt))
         )
-    (
-        df.repartition("cell_id")
-        .write.mode("overwrite")
-        .partitionBy("cell_id")
-        .parquet(os.path.join(path, nxt))
-    )
-    man.setdefault("tables", {})[sub] = nxt
+        flip[sub] = nxt
+    if not flip:
+        return
+    man.setdefault("tables", {}).update(flip)
     man["kind"] = kind
     write_index_manifest(path, **man)
     flipped = (read_index_manifest(path) or {}).get("tables") or {}
-    if flipped.get(sub) != nxt:
+    if any(flipped.get(t) != d for t, d in flip.items()):
         shutil.rmtree(os.path.join(path, nxt), ignore_errors=True)
         raise OSError(
             f"compact_index: could not persist the manifest pointer "
             f"flip at {path!r}; old layout left untouched"
         )
-    # Expire everything older than the generation just replaced —
-    # `cur` itself stays for readers that planned before the flip.
-    _expire_versions(path, sub, keep=(cur, nxt))
+    if sub in flip:
+        # Expire everything older than the generation just replaced —
+        # `cur` itself stays for readers that planned before the flip.
+        _expire_versions(path, sub, keep=(cur, nxt))
     if tomb is not None:
         # The applied tombstones retire on the same schedule: keep
         # the generation in-flight readers of `cur` planned with;
@@ -1655,8 +1790,9 @@ class AnnIndex:
     (:func:`_index_rows`; ``None`` for the empty index): the vectors
     with ``_nrm`` added and zero norms dropped for plain IVF, the
     codes for the quantized layouts. The quantizer state is opened
-    once too: IVF,SQ8's one-row ``stats`` frame, IVF-PQ's ``cbooks``
-    frame and its ``geom`` ``(n_sub, sub_dim)`` (:func:`_pq_geometry`).
+    once too: the layout's ``side`` tables (:data:`_LAYOUTS` —
+    IVF,SQ8's one-row ``sq8_stats``, IVF-PQ's ``codebooks``) and
+    IVF-PQ's ``geom`` ``(n_sub, sub_dim)`` (:func:`_pq_geometry`).
     Get one with :func:`open_ann_index`."""
 
     def __init__(self, spark, path, files, id_col, vec_col):
@@ -1668,19 +1804,16 @@ class AnnIndex:
         self.centroids = spark.read.parquet(f"{path}/centroids")
         self.cents = _driver_vectors(self.centroids, "cell_id", "cvec")
         self.dim = index_dim(spark, path)
-        if self.kind == "ivf":
-            live = _index_rows(spark, path, "vectors", id_col)
-            self.live = None if live is None else live.withColumn(
+        table, side, _ = _LAYOUTS[self.kind]
+        self.live = _index_rows(spark, path, table, id_col)
+        if self.kind == "ivf" and self.live is not None:
+            self.live = self.live.withColumn(
                 "_nrm", F.sqrt(_norm2(F.col(vec_col)))
             ).filter(F.col("_nrm") > 0)
-        else:
-            self.live = _index_rows(spark, path, "codes", id_col)
-        if self.kind == "ivfsq8":
-            self.stats = spark.read.parquet(f"{path}/sq8_stats")
-        elif self.kind == "ivfpq":
-            self.cbooks = spark.read.parquet(f"{path}/codebooks")
+        self.side = {t: spark.read.parquet(f"{path}/{t}") for t in side}
+        if self.kind == "ivfpq":
             self.geom = _pq_geometry(
-                read_index_manifest(path) or {}, self.cbooks
+                read_index_manifest(path) or {}, self.side["codebooks"]
             )
 
 
@@ -1794,7 +1927,7 @@ def _ivf_indexed_search(
     cand = _probe_candidates(h.live, cells, id_col, allowed)
     if h.kind == "ivfsq8":
         st = F.arrays_zip(F.col("vmin"), F.col("vstep"))
-        recon = cand.crossJoin(F.broadcast(h.stats)).select(
+        recon = cand.crossJoin(F.broadcast(h.side["sq8_stats"])).select(
             "q_id", id_col, _sq8_recon(F.col("codes"), st).alias("_recon")
         )
         return _exact_rerank(
@@ -1810,7 +1943,7 @@ def _ivf_indexed_search(
                 _residual(qvec, F.col("cvec")), n_sub, sub_dim, "qvec"
             ),
         ).select("q_id", "cell_id", "s.sub", "s.qvec")
-        lut = h.cbooks.join(F.broadcast(qslices), "sub").select(
+        lut = h.side["codebooks"].join(F.broadcast(qslices), "sub").select(
             "q_id",
             "cell_id",
             "sub",
@@ -2208,6 +2341,24 @@ def _residual(v: Column, c: Column) -> Column:
     residual against a cell centroid — what IVF-PQ quantizes and
     scores its lookup tables against."""
     return F.zip_with(v, c, lambda a, b: a.cast("double") - b.cast("double"))
+
+
+def _residuals(rows, assign, cents, id_col, vec_col) -> DataFrame:
+    """``(id, cell_id, resid)``: every row's :func:`_residual` against
+    its assigned centroid — what IVF-PQ trains its codebooks on and
+    encodes. Persisted (``persist_tracked``): codebook training, the
+    encode and the cell lookup all read it."""
+    from bigdata_elephant_spark.session import persist_tracked
+
+    return persist_tracked(
+        rows.join(assign, id_col)
+        .join(F.broadcast(cents), "cell_id")
+        .select(
+            id_col,
+            "cell_id",
+            _residual(F.col(vec_col), F.col("cvec")).alias("resid"),
+        )
+    )
 
 
 def pq_codebooks(
@@ -2624,30 +2775,7 @@ def build_ivfsq8_index(
     (:func:`_gate_build_input`) — one ±Inf component would
     otherwise blow the trained per-dim (vmin, vstep) range so wide
     every finite value quantizes to the same code."""
-    embeddings, dim = _gate_build_input(embeddings, vec_col)
-    if dim is None:
-        raise ValueError(
-            "build_ivfsq8_index: embeddings input is empty — an SQ8 "
-            "range cannot be trained on zero rows"
-        )
-    cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    assign = ivf_assign(embeddings, cents, id_col, vec_col)
-    stats = sq8_stats(embeddings, dim, vec_col)
-    codes = sq8_encode(embeddings, stats, id_col, vec_col)
-    (
-        codes.join(assign, id_col)
-        .write.mode("overwrite")
-        .partitionBy("cell_id")
-        .parquet(f"{path}/codes")
-    )
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    stats.write.mode("overwrite").parquet(f"{path}/sq8_stats")
-    write_index_manifest(
-        path, kind="ivfsq8", dim=dim, n_cells=n_cells
-    )
-    _verify_pointer_reset(path, "codes", "build_ivfsq8_index")
-    _expire_versions(path, "codes", keep=("codes",))
-    _expire_versions(path, "tombstones")
+    _build_index(embeddings, path, "ivfsq8", n_cells, id_col, vec_col)
 
 
 def update_ivfsq8_index(
@@ -2677,67 +2805,10 @@ def update_ivfsq8_index(
     first violation) and one delta-sized encode+assign+append —
     base code files are untouched bytes, nothing corpus-sized runs.
     """
-    man = read_index_manifest(path) or {}
-    kind = man.get("kind")
-    if kind is not None and kind != "ivfsq8":
-        raise ValueError(
-            f"index at {path!r} is kind={kind!r}: "
-            "update_ivfsq8_index appends SQ8 codes — use "
-            "update_ivf_index / update_ivfpq_index for those layouts"
-        )
-    delta, cents = _checked_delta(
-        spark, path, delta, id_col, vec_col, "update_ivfsq8_index"
-    )
-    stats = spark.read.parquet(f"{path}/sq8_stats")
-    if "vmax" not in stats.columns:
-        # pre-vmax stats artifact: reconstruct the trained maxima.
-        # The two IEEE roundings (multiply, add) can drift ~1 ulp in
-        # EITHER direction, so a component up to ~1 ulp past the
-        # trained max may be spuriously accepted — harmless, because
-        # _sq8_code clamps to 255, giving the same code the true max
-        # would; a ~1-ulp spurious refusal is likewise safe.
-        stats = stats.withColumn(
-            "vmax",
-            F.zip_with(
-                F.col("vmin"),
-                F.col("vstep"),
-                lambda mn, st: mn + st * F.lit(255.0),
-            ),
-        )
-    bounds = F.arrays_zip(F.col("vmin"), F.col("vmax"))
-    viol = (
-        delta.crossJoin(F.broadcast(stats))
-        .filter(
-            F.exists(
-                F.zip_with(
-                    F.col(vec_col),
-                    bounds,
-                    lambda x, b: (
-                        x.cast("double") < b.getField("vmin")
-                    ) | (x.cast("double") > b.getField("vmax")),
-                ),
-                lambda bad: bad,
-            )
-        )
-        .select(id_col)
-        .first()
-    )
-    if viol is not None:
-        raise ValueError(
-            f"update_ivfsq8_index: delta id={viol[id_col]} has a "
-            f"component outside the SQ8 range trained at build time "
-            f"for {path!r} — encoding it with the frozen stats would "
-            "clamp (silent mis-encode). Rebuild with "
-            "build_ivfsq8_index over base+delta (FAISS retrains the "
-            "scalar quantizer on rebuild for the same reason)."
-        )
-    assign = ivf_assign(delta, cents, id_col, vec_col)
-    codes = sq8_encode(delta, stats, id_col, vec_col)
-    (
-        codes.join(assign, id_col)
-        .write.mode("append")
-        .partitionBy("cell_id")
-        .parquet(_table_path(path, "codes"))
+    _append_to_index(
+        spark, path, delta, id_col, vec_col, "ivfsq8",
+        "appends SQ8 codes — use update_ivf_index / update_ivfpq_index "
+        "for those layouts",
     )
 
 
@@ -2872,24 +2943,15 @@ def ivfpq_topk_batch(
     :func:`ivfpq_topk_indexed`); raw vectors are read only for the
     ``shortlist`` point lookups.
     """
-    from bigdata_elephant_spark.session import persist_tracked
-
     cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
     assign = ivf_assign(embeddings, cents, id_col, vec_col)
-    resid = persist_tracked(
-        embeddings.join(assign, id_col)
-        .join(F.broadcast(cents), "cell_id")
-        .select(
-            id_col,
-            "cell_id",
-            _residual(F.col(vec_col), F.col("cvec")).alias("resid"),
-        )
-    )
-    cbooks = pq_codebooks(
-        resid, n_sub, sub_dim, n_codes, id_col, "resid"
-    )
-    codes = pq_encode(
-        resid, cbooks, n_sub, sub_dim, id_col, "resid"
+    # the build's encoder: codes with the cell_id of the PERSISTED
+    # residuals (their inner joins preserve the assignment row for
+    # row), so no second assign lineage recomputes the argmin pass
+    codes, side = _encode_pq(
+        embeddings, assign, cents, None,
+        dict(n_sub=n_sub, sub_dim=sub_dim, n_codes=n_codes), None,
+        id_col, vec_col,
     )
     q = _query_vectors(embeddings, query_ids, id_col, vec_col)
     single = len(set(query_ids)) == 1
@@ -2911,7 +2973,7 @@ def ivfpq_topk_batch(
             "qvec",
         ),
     ).select("q_id", "cell_id", "s.sub", "s.qvec")
-    lut = cbooks.join(F.broadcast(qslices), "sub").select(
+    lut = side["codebooks"].join(F.broadcast(qslices), "sub").select(
         "q_id",
         "cell_id",
         "sub",
@@ -2921,11 +2983,7 @@ def ivfpq_topk_batch(
         .alias("pd"),
     )
     short = _topk(
-        # cell_id read off the PERSISTED resid cache (resid's inner
-        # joins preserve the assignment row-for-row) instead of
-        # recomputing the argmin pass through a second assign lineage
-        codes.join(resid.select(id_col, "cell_id"), id_col)
-        .join(F.broadcast(lut), ["cell_id", "sub", "code"])
+        codes.join(F.broadcast(lut), ["cell_id", "sub", "code"])
         .filter(F.col(id_col) != F.col("q_id"))
         .groupBy("q_id", id_col)
         .agg(F.sum("pd").alias("adc")),
@@ -2997,40 +3055,10 @@ def build_ivfpq_index(
     form, so a query over this layout returns identical rows.
     Input is gated through the finite-floats ingest contract
     (:func:`_gate_build_input`) before any quantizer trains."""
-    from bigdata_elephant_spark.session import persist_tracked
-
-    embeddings, dim = _gate_build_input(embeddings, vec_col)
-    cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    assign = ivf_assign(embeddings, cents, id_col, vec_col)
-    resid = persist_tracked(
-        embeddings.join(assign, id_col)
-        .join(F.broadcast(cents), "cell_id")
-        .select(
-            id_col,
-            "cell_id",
-            _residual(F.col(vec_col), F.col("cvec")).alias("resid"),
-        )
+    _build_index(
+        embeddings, path, "ivfpq", n_cells, id_col, vec_col,
+        n_sub=n_sub, sub_dim=sub_dim, n_codes=n_codes,
     )
-    cbooks = pq_codebooks(
-        resid, n_sub, sub_dim, n_codes, id_col, "resid"
-    )
-    codes = pq_encode(resid, cbooks, n_sub, sub_dim, id_col, "resid")
-    (
-        codes.join(resid.select(id_col, "cell_id"), id_col)
-        .write.mode("overwrite")
-        .partitionBy("cell_id")
-        .parquet(f"{path}/codes")
-    )
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    cbooks.write.mode("overwrite").parquet(f"{path}/codebooks")
-    write_index_manifest(
-        path, kind="ivfpq", dim=dim, n_cells=n_cells, n_sub=n_sub,
-        sub_dim=sub_dim, n_codes=n_codes,
-    )
-    _verify_pointer_reset(path, "codes", "build_ivfpq_index")
-    _expire_versions(path, "codes", keep=("codes",))
-    # rebuild resets pending deletes (see build_ivf_index)
-    _expire_versions(path, "tombstones")
 
 
 def update_ivfpq_index(
@@ -3052,37 +3080,9 @@ def update_ivfpq_index(
     layout answers :func:`ivfpq_topk_indexed` queries exactly like a
     fresh :func:`build_ivfpq_index` over base+delta
     (equivalence-tested)."""
-    man = read_index_manifest(path) or {}
-    kind = man.get("kind")
-    if kind is not None and kind != "ivfpq":
-        raise ValueError(
-            f"index at {path!r} is kind={kind!r}: "
-            "update_ivfpq_index appends PQ codes — use "
-            "update_ivf_index for a plain IVF layout"
-        )
-    delta, cents = _checked_delta(
-        spark, path, delta, id_col, vec_col, "update_ivfpq_index"
-    )
-    cbooks = spark.read.parquet(f"{path}/codebooks")
-    n_sub, sub_dim = _pq_geometry(man, cbooks)
-    from bigdata_elephant_spark.session import persist_tracked
-
-    assign = ivf_assign(delta, cents, id_col, vec_col)
-    resid = persist_tracked(
-        delta.join(assign, id_col)
-        .join(F.broadcast(cents), "cell_id")
-        .select(
-            id_col,
-            "cell_id",
-            _residual(F.col(vec_col), F.col("cvec")).alias("resid"),
-        )
-    )
-    codes = pq_encode(resid, cbooks, n_sub, sub_dim, id_col, "resid")
-    (
-        codes.join(resid.select(id_col, "cell_id"), id_col)
-        .write.mode("append")
-        .partitionBy("cell_id")
-        .parquet(_table_path(path, "codes"))
+    _append_to_index(
+        spark, path, delta, id_col, vec_col, "ivfpq",
+        "appends PQ codes — use update_ivf_index for a plain IVF layout",
     )
 
 

@@ -28,6 +28,11 @@ WARM_QUANTIZED_QUERY_MAX_JOBS = {
 }
 # ann-build flags per index layout
 LAYOUT_FLAGS = {"ivf": [], "sq8": ["--sq8"], "pq": ["--pq"]}
+# Measured on the tier-1 fixture (8 cells), per layout: the Spark jobs
+# of a warm `ann-build` (8 on plain IVF and IVF-PQ, 12 on IVF,SQ8, which
+# trains its range stats) and of an `ann-add` of 50 vectors (6, 10 with
+# the SQ8 range check, 12 with the PQ residuals and codebook read).
+ANN_WRITE_JOBS = {"ivf": (8, 6), "sq8": (12, 10), "pq": (8, 12)}
 
 
 def _run(spark, argv):
@@ -602,6 +607,31 @@ def test_cli_ann_job_budget(spark, sf_dir, tmp_path, layout):
     assert two == twenty, (two, twenty)
     if layout == "ivf":
         assert 0 < twenty <= ANN_BATCH_MAX_JOBS, twenty
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUT_FLAGS))
+def test_cli_ann_write_job_budget(spark, sf_dir, tmp_path, layout):
+    """`ann-build` and one `ann-add` run at most their ANN_WRITE_JOBS
+    pins: a build or append path that re-read its input or added a
+    pass per layout would push the count over."""
+    from pyspark.sql import functions as F
+
+    emb_path = f"{sf_dir}/embeddings.parquet"
+    delta = str(tmp_path / "delta.parquet")
+    spark.read.parquet(emb_path).filter("vec_id % 10 = 0").withColumn(
+        "vec_id", F.col("vec_id") + 1000000
+    ).write.parquet(delta)
+    idx = str(tmp_path / layout)
+    argv = ["ann-build", "--embeddings", emb_path, "--out", idx,
+            "--cells", "8", *LAYOUT_FLAGS[layout]]
+    _run(spark, argv)  # warm-up
+    build = _jobs(spark, lambda: _run(spark, argv))
+    add = _jobs(spark, lambda: _run(spark, [
+        "ann-add", "--index", idx, "--embeddings", delta,
+    ]))
+    pin_build, pin_add = ANN_WRITE_JOBS[layout]
+    assert 0 < build <= pin_build, build
+    assert 0 < add <= pin_add, add
 
 
 def test_cli_bpe_train_and_encode(spark, sf_dir, tmp_path):

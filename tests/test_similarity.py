@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -10,6 +12,37 @@ from bigdata_elephant_spark.operators import similarity
 
 DIM = 8
 N = 60
+# build, append and build keywords per index layout, keyed like the
+# CLI tests' LAYOUT_FLAGS; the PQ geometry fits 4-d vectors too
+INDEX_LAYOUTS = {
+    "ivf": ("build_ivf_index", "update_ivf_index", {}),
+    "sq8": ("build_ivfsq8_index", "update_ivfsq8_index", {}),
+    "pq": (
+        "build_ivfpq_index",
+        "update_ivfpq_index",
+        {"n_sub": 2, "sub_dim": 2, "n_codes": 4},
+    ),
+}
+
+
+def _layout(layout):
+    """``(build, update)`` of ``layout``, the build with its keywords."""
+    build, update, kw = INDEX_LAYOUTS[layout]
+    return (
+        partial(getattr(similarity, build), **kw),
+        getattr(similarity, update),
+    )
+
+
+def _stored_ids(spark, path) -> set:
+    """The ids in the current generation of an index's corpus table."""
+    table = similarity._LAYOUTS[similarity.index_kind(path)][0]
+    return {
+        r["vec_id"]
+        for r in spark.read.parquet(similarity._table_path(path, table))
+        .select("vec_id")
+        .collect()
+    }
 
 
 @pytest.fixture(scope="module")
@@ -1153,49 +1186,83 @@ def test_compact_applies_and_retires_tombstones(
     assert spark.read.parquet(cur).count() == n - 2
 
 
+@pytest.mark.parametrize("layout", sorted(INDEX_LAYOUTS))
 def test_update_rejects_readding_tombstoned_id(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, layout
 ):
+    """An append carrying an id a pending delete tombstoned is refused
+    on every layout; a delta without it appends with the tombstones
+    still pending. The delta re-ids base vectors, so it stays inside
+    the IVF,SQ8 trained range."""
     import pytest as _pytest
 
     from bigdata_elephant_spark.operators import similarity as sim
     from bigdata_elephant_spark.sources.corpus import read_table
 
+    build, update = _layout(layout)
     emb = read_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf")
-    sim.build_ivf_index(emb.filter("vec_id < 400"), path, n_cells=8)
+    path = str(tmp_path / layout)
+    build(emb.filter("vec_id < 400"), path, n_cells=8)
     sim.delete_from_index(spark, path, [401])
-    with _pytest.raises(ValueError, match="tombstoned"):
-        sim.update_ivf_index(
-            spark, path, emb.filter("vec_id >= 400")
-        )
-    # non-intersecting deltas append fine with tombstones pending
-    sim.update_ivf_index(
-        spark, path, emb.filter("vec_id >= 400 and vec_id <> 401")
+    delta = emb.filter("vec_id < 100").withColumn(
+        "vec_id", F.col("vec_id") + 400
     )
+    with _pytest.raises(ValueError, match="tombstoned"):
+        update(spark, path, delta)
+    # non-intersecting deltas append fine with tombstones pending
+    update(spark, path, delta.filter("vec_id <> 401"))
+    assert _stored_ids(spark, path) == set(range(500)) - {401}
 
 
-def test_rebuild_resets_tombstones(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("layout", sorted(INDEX_LAYOUTS))
+def test_rebuild_resets_tombstones(spark, sf_dir, tmp_path, layout):
     """A fresh build over the same path starts a new index lifetime:
     tombstones from the previous life must not hide new rows that
     reuse an id."""
     from bigdata_elephant_spark.operators import similarity as sim
     from bigdata_elephant_spark.sources.corpus import read_table
 
+    build, _ = _layout(layout)
     emb = read_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf")
-    sim.build_ivf_index(emb, path, n_cells=8)
-    top = sim.ivf_topk_indexed(
-        spark, path, 0, n_probe=3, k=5, source=emb
+    path = str(tmp_path / layout)
+    build(emb, path, n_cells=8)
+    top = sim.ivf_topk_batch_indexed(
+        spark, path, [0], n_probe=3, k=5, source=emb
     ).collect()
     victim = top[0]["vec_id"]
     sim.delete_from_index(spark, path, [victim])
-    sim.build_ivf_index(emb, path, n_cells=8)
+    build(emb, path, n_cells=8)
     assert sim._index_rows(spark, path, "tombstones") is None
-    again = sim.ivf_topk_indexed(
-        spark, path, 0, n_probe=3, k=5, source=emb
+    again = sim.ivf_topk_batch_indexed(
+        spark, path, [0], n_probe=3, k=5, source=emb
     ).collect()
     assert [tuple(r) for r in top] == [tuple(r) for r in again]
+
+
+@pytest.mark.parametrize("layout", ["pq", "sq8"])
+def test_update_ivf_refuses_manifestless_quantized_index(
+    spark, sf_dir, tmp_path, layout
+):
+    """The manifest write is best-effort, so an append must take the
+    kind from the layout when the manifest is gone: a plain-IVF append
+    to a quantized index is refused, not written as a ``vectors/`` dir
+    next to ``codes/`` that no reader reads."""
+    import os
+
+    from bigdata_elephant_spark.sources.corpus import read_table
+
+    build, _ = _layout(layout)
+    emb = read_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / layout)
+    build(emb.filter("vec_id < 400"), path, n_cells=8)
+    os.remove(f"{path}/manifest.json")
+    kind = "ivfpq" if layout == "pq" else "ivfsq8"
+    with pytest.raises(ValueError, match=f"kind='{kind}'"):
+        similarity.update_ivf_index(
+            spark, path, emb.filter("vec_id >= 400")
+        )
+    assert not os.path.exists(f"{path}/vectors")
+    assert _stored_ids(spark, path) == set(range(400))
 
 
 def test_mmr_lambda_one_degenerates_to_relevance_topk(emb_df):
@@ -2052,43 +2119,42 @@ def test_builders_gate_out_of_contract_vectors(spark, tmp_path):
     assert pq == set(good)
 
 
-def test_updates_gate_delta_but_keep_dim_raise(spark, tmp_path):
+@pytest.mark.parametrize("layout", sorted(INDEX_LAYOUTS))
+def test_updates_gate_delta_but_keep_dim_raise(spark, tmp_path, layout):
     """Day-2 twin (r14): the append paths drop NULL/NaN/zero delta
     vectors (silent poison classes) while the wrong-dim raise guard
     still fails loudly — dead-letter for corpus quality, assertion
-    for caller bugs."""
+    for caller bugs. The in-contract delta vector repeats a base one,
+    so it stays inside the IVF,SQ8 trained range."""
     from pyspark.errors import SparkRuntimeException
     from bigdata_elephant_spark.operators import similarity as sim
 
+    build, update = _layout(layout)
     rng = np.random.default_rng(11)
-    base = spark.createDataFrame(
-        [(i, [float(x) for x in rng.normal(size=4).astype(np.float32)])
-         for i in range(20)],
-        "vec_id long, embedding array<float>",
-    )
-    path = str(tmp_path / "ivf")
-    sim.build_ivf_index(base, path, n_cells=2)
+    rows = [
+        (i, [float(x) for x in rng.normal(size=4).astype(np.float32)])
+        for i in range(20)
+    ]
+    base = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    path = str(tmp_path / layout)
+    build(base, path, n_cells=2)
     delta = spark.createDataFrame(
         [
-            (50, [1.0, 2.0, 3.0, 4.0]),            # in contract
+            (50, rows[3][1]),                      # in contract
             (51, [float("nan"), 1.0, 1.0, 1.0]),   # dropped
             (52, [0.0, 0.0, 0.0, 0.0]),            # dropped
             (53, None),                            # dropped
         ],
         "vec_id long, embedding array<float>",
     )
-    sim.update_ivf_index(spark, path, delta)
-    stored = {
-        r["vec_id"]
-        for r in spark.read.parquet(f"{path}/vectors").collect()
-    }
-    assert stored == set(range(20)) | {50}
+    update(spark, path, delta)
+    assert _stored_ids(spark, path) == set(range(20)) | {50}
     # wrong-dim (finite) still raises via the in-plan guard
     bad = spark.createDataFrame(
         [(60, [1.0, 2.0])], "vec_id long, embedding array<float>"
     )
     with pytest.raises(SparkRuntimeException, match="components"):
-        sim.update_ivf_index(spark, path, bad)
+        update(spark, path, bad)
 
 
 def test_builder_gate_survives_corrupt_first_row(spark, tmp_path):

@@ -55,6 +55,20 @@ def _no_open_handles():
     S.close_text_indexes()
 
 
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by the status tracker under
+    a job group of its own."""
+    sc = spark.sparkContext
+    group = f"text-index-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _cached(df) -> bool:
     level = df.storageLevel
     return level.useMemory or level.useDisk
@@ -221,6 +235,29 @@ def test_handles_over_one_index_share_doc_lengths(
     assert _cached(b.dl)
 
 
+def test_batch_reuses_open_meta_handle(spark, artifacts):
+    """A CLI `batch` over the vocab and index of an open `query --meta`
+    handle reuses it (`query_batch` reads no metadata): its first run
+    costs what a warm one does — no second open re-reading both
+    artifacts and rerunning the N/Σdl pass — the LRU still holds one
+    handle over the index, and the rows equal a meta-less handle's."""
+    v, i, m = artifacts
+    for q in ("the good person", "spark table join"):
+        _run(spark, ["query", "--vocab", v, "--index", i, "--meta", m,
+                     "--scoring", "bm25", "-k", "3", q])
+    batch = ["batch", "--vocab", v, "--index", i, "-k", "3",
+             "the good person", "hash join", "spark table", "join",
+             "person"]
+    out = []
+    first = _jobs(spark, lambda: out.append(_run(spark, batch)))
+    warm = _jobs(spark, lambda: out.append(_run(spark, batch)))
+    assert first == warm, (first, warm)
+    assert [k for k in S._TEXT_INDEXES if k[1] == i] == [(v, i, m)]
+    S.close_text_indexes()
+    assert out[0] == out[1] == _run(spark, batch)  # own meta-less handle
+    assert list(S._TEXT_INDEXES) == [(v, i, None)]
+
+
 def test_smooth_n_is_distinct_posting_docs(spark, artifacts):
     v, i, _ = artifacts
     h = S.open_text_index(spark, v, i)
@@ -258,17 +295,12 @@ def test_warm_bm25_query_job_budget(spark, artifacts):
     argv = ["query", "--vocab", v, "--index", i, "--meta", m,
             "--scoring", "bm25", "-k", "10"]
     _run(spark, [*argv, "the good person"])  # opens the handle
-    sc = spark.sparkContext
-    group = f"text-index-budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "warm bm25 query")
-    try:
-        rows = _parse(_run(spark, [*argv, "spark table join"]))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    rows = []
+    jobs = _jobs(spark, lambda: rows.extend(
+        _parse(_run(spark, [*argv, "spark table join"]))
+    ))
     assert rows
-    assert 0 < len(jobs) <= WARM_QUERY_MAX_JOBS, len(jobs)
+    assert 0 < jobs <= WARM_QUERY_MAX_JOBS, jobs
 
 
 def _ranked_rows(df) -> list[tuple]:
