@@ -8,6 +8,12 @@ MD5 digest as an unsigned value in a signed 64-bit column.
 Spark:  ``conv(substr(md5(s), 1, 8), 16, 10)  :: long``
 DuckDB: ``('0x' || substr(md5(s), 1, 8)) :: bigint``
 
+Each Column builder has SQL-text twins: ``*_sql`` for Spark SQL
+(``selectExpr`` / ``F.expr``, one parse instead of a py4j call per
+node when an operator builds many of them) and ``*_sql_duckdb`` for
+the DuckDB oracles. A Column builder and its ``*_sql`` twin analyze to
+the same expression.
+
 MinHash permutations are universal hashes
 ``h_i(x) = (a_i * x + b_i) mod P`` with ``P = 1_000_000_007`` and
 ``a_i, b_i`` drawn from a fixed seeded PRNG. Inputs are reduced mod P
@@ -42,6 +48,16 @@ def h32_fast(col: Column | str) -> Column:
     return F.pmod(F.xxhash64(c), F.lit(2**32)).cast("long")
 
 
+def h32_sql(expr: str) -> str:
+    """Spark SQL text computing :func:`h32`."""
+    return f"CAST(conv(substring(md5({expr}), 1, 8), 16, 10) AS BIGINT)"
+
+
+def h32_fast_sql(expr: str) -> str:
+    """Spark SQL text computing :func:`h32_fast`."""
+    return f"CAST(pmod(xxhash64({expr}), {2**32}) AS BIGINT)"
+
+
 def h32_sql_duckdb(expr: str) -> str:
     """DuckDB SQL text computing the same value as :func:`h32`."""
     return f"(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"
@@ -59,6 +75,11 @@ def minhash_coeffs(n: int, seed: int = 42) -> list[tuple[int, int]]:
 def perm_hash(col: Column, a: int, b: int) -> Column:
     """``(a * (x mod P) + b) mod P`` — overflow-free in int64."""
     return (F.lit(a) * (col % MERSENNE_P) + F.lit(b)) % MERSENNE_P
+
+
+def perm_hash_sql(expr: str, a: int, b: int) -> str:
+    """Spark SQL text computing :func:`perm_hash`."""
+    return f"(({a} * (({expr}) % {MERSENNE_P}) + {b}) % {MERSENNE_P})"
 
 
 def perm_hash_sql_duckdb(expr: str, a: int, b: int) -> str:

@@ -51,8 +51,25 @@ def tokenize_str(text: str) -> list[str]:
     return [t for t in filter_text_py(text).split() if t]
 
 
-def tokens_array(col: Column | str) -> Column:
-    """Token array with the reference's filterText semantics.
+def sql_col(name: str) -> str:
+    """A column name as Spark SQL text: each dot-separated part
+    backquoted, so a name resolves in ``selectExpr`` / ``F.expr``
+    exactly as ``F.col(name)`` resolves it."""
+    return ".".join(f"`{p}`" for p in name.split("."))
+
+
+# tokens_array's token filter. A Spark SQL string literal unescapes
+# backslashes, so REPEAT4's backreference is written doubled.
+_REPEAT4_SQL = REPEAT4.replace("\\", "\\\\")
+_KEEP_TOKEN_SQL = (
+    f"w -> length(w) > 0 AND NOT w RLIKE '{ALL_DIGITS}' "
+    f"AND NOT w RLIKE '{_REPEAT4_SQL}'"
+)
+
+
+def tokens_array(col: str) -> Column:
+    """Token array of the text column named ``col``, with the
+    reference's filterText semantics.
 
     Decomposed form: punctuation->space, whitespace split, then drop
     empty / all-digit / has-4x-repeated-char tokens. Provably equal to
@@ -60,15 +77,12 @@ def tokens_array(col: Column | str) -> Column:
     checks both on the real corpus) and ~35% faster at sf0.1 — the
     faithful pattern re-runs a lookahead+backreference at every
     character position, the decomposed one scans short tokens with
-    two tiny regexes.
+    two tiny regexes. Built as one SQL expression: one parse instead
+    of a py4j call per expression node.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(
-        F.split(F.regexp_replace(F.lower(c), "[^a-z0-9]+", " "), " "),
-        lambda w: (F.length(w) > 0)
-        & ~w.rlike(ALL_DIGITS)
-        & ~w.rlike(REPEAT4),
-    )
+    low = f"lower({sql_col(col)})"
+    words = f"split(regexp_replace({low}, '[^a-z0-9]+', ' '), ' ')"
+    return F.expr(f"filter({words}, {_KEEP_TOKEN_SQL})")
 
 
 def tokenize(

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bigdata_elephant_spark.functions.text import tokenize
+from bigdata_elephant_spark.session import local_relation
 
 MERGE_SCHEMA = T.StructType(
     [
@@ -332,8 +333,8 @@ def bpe_train(
             ]
         )
         return (
-            spark.createDataFrame(rules_d, MERGE_SCHEMA),
-            spark.createDataFrame(final_rows, wf_schema),
+            local_relation(spark, rules_d, MERGE_SCHEMA),
+            local_relation(spark, final_rows, wf_schema),
         )
     rules: list[tuple[int, str, str, str, int]] = []
     known: set[str] = set(_BPE_ALPHABET)
@@ -373,7 +374,7 @@ def bpe_train(
         # sf0.01 — the per-loop-shape A/B the pagerank bisect
         # prescribes).
         wf = wf.localCheckpoint(eager=False)
-    return spark.createDataFrame(rules, MERGE_SCHEMA), wf
+    return local_relation(spark, rules, MERGE_SCHEMA), wf
 
 
 def bpe_subword_vocab(final_wf: DataFrame, top_n: int = 30) -> DataFrame:

@@ -175,7 +175,7 @@ def source_overlap_matrix(
         toks.select(
             "source",
             F.explode(
-                shingles_array(F.col("__toks"), shingle_n)
+                shingles_array("__toks", shingle_n)
             ).alias("shingle"),
         ).distinct()
     )
@@ -708,7 +708,7 @@ def dsir_doc_buckets(docs: DataFrame, m: int = DSIR_BUCKETS) -> DataFrame:
         "doc_id",
         F.explode(
             F.concat(
-                F.col("__toks"), shingles_array(F.col("__toks"), n=2)
+                F.col("__toks"), shingles_array("__toks", n=2)
             )
         ).alias("g"),
     )

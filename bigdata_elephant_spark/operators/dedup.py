@@ -30,6 +30,12 @@ can recompute identical values):
 
 Shingling uses higher-order array functions (``transform`` over
 ``sequence`` + ``get``) — whole-stage codegen, no UDF.
+
+The wide expressions (the shingle lambda, the ``n_hashes`` MinHash
+aggregates, the band structs, the signature projections and the
+``est_sim`` match sum) are built as Spark SQL text: one parse per
+expression instead of a py4j call per expression node, which is what
+planning a MinHash/LSH pass used to spend most of its time on.
 """
 
 from __future__ import annotations
@@ -39,11 +45,12 @@ from pyspark.sql import functions as F
 
 from bigdata_elephant_spark.functions.hashing import (
     h32,
-    h32_fast,
+    h32_fast_sql,
+    h32_sql,
     minhash_coeffs,
-    perm_hash,
+    perm_hash_sql,
 )
-from bigdata_elephant_spark.functions.text import tokens_array
+from bigdata_elephant_spark.functions.text import sql_col, tokens_array
 
 N_MINHASH = 16
 N_BANDS = 4  # 4 bands x 4 rows: candidate threshold ~ (1/4)^(1/4) ~ 0.71
@@ -56,17 +63,15 @@ SIMHASH_BITS = 32
 DEFAULT_SHINGLE_N = 3
 
 
-def shingles_array(arr: Column, n: int = DEFAULT_SHINGLE_N) -> Column:
-    """Word n-gram shingles of a token array (empty if < n tokens)."""
-    idx = F.sequence(F.lit(0), F.size(arr) - F.lit(n))
-    mk = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.get(arr, i + j) for j in range(n)]
-        ),
-    )
-    return F.when(F.size(arr) >= n, mk).otherwise(
-        F.expr("array()").cast("array<string>")
+def shingles_array(arr: str, n: int = DEFAULT_SHINGLE_N) -> Column:
+    """Word n-gram shingles of the token-array column named ``arr``
+    (empty if < n tokens)."""
+    a = sql_col(arr)
+    words = ", ".join(f"get({a}, i + {j})" for j in range(n))
+    return F.expr(
+        f"CASE WHEN size({a}) >= {n} THEN transform("
+        f"sequence(0, size({a}) - {n}), i -> concat_ws(' ', {words})) "
+        "ELSE CAST(array() AS ARRAY<STRING>) END"
     )
 
 
@@ -88,7 +93,7 @@ def doc_shingles(
     toks = df.select(id_col, tokens_array(text_col).alias("__toks"))
     sh = toks.select(
         id_col,
-        F.explode(shingles_array(F.col("__toks"), n)).alias("shingle"),
+        F.explode(shingles_array("__toks", n)).alias("shingle"),
     )
     return sh.distinct() if distinct else sh
 
@@ -170,10 +175,10 @@ def minhash_signatures(
     production pipelines, keep the default when verifying).
     """
     sh = doc_shingles(df, text_col, id_col, n=shingle_n)
-    hfn = h32_fast if fast_hash else h32
-    hashed = sh.select(id_col, hfn("shingle").alias("h"))
+    hfn = h32_fast_sql if fast_hash else h32_sql
+    hashed = sh.selectExpr(sql_col(id_col), f"{hfn('shingle')} AS h")
     aggs = [
-        F.min(perm_hash(F.col("h"), a, b)).alias(f"m{i}")
+        F.expr(f"min({perm_hash_sql('h', a, b)}) AS m{i}")
         for i, (a, b) in enumerate(minhash_coeffs(n_hashes, seed))
     ]
     return hashed.groupBy(id_col).agg(*aggs)
@@ -185,28 +190,67 @@ def _band_explode(
     """``(id_col, band, bkey)`` — one row per (doc, band); the bucket
     key concatenates that band's signature rows."""
     rows = n_hashes // n_bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"m{b * rows + r}").cast("string")
-                        for r in range(rows)
-                    ],
-                ).alias("bkey"),
-            )
-            for b in range(n_bands)
-        ]
+    structs = ", ".join(
+        f"named_struct('band', {b}, 'bkey', concat_ws(',', "
+        + ", ".join(
+            f"CAST(m{b * rows + r} AS STRING)" for r in range(rows)
+        )
+        + "))"
+        for b in range(n_bands)
     )
-    return sigs.select(
-        F.col(id_col), F.explode(band_structs).alias("bb")
-    ).select(
-        id_col,
-        F.col("bb.band").alias("band"),
-        F.col("bb.bkey").alias("bkey"),
+    i = sql_col(id_col)
+    return sigs.selectExpr(i, f"explode(array({structs})) AS bb").selectExpr(
+        i, "bb.band AS band", "bb.bkey AS bkey"
     )
+
+
+def _bucket_pairs(
+    bands_a: DataFrame,
+    bands_b: DataFrame,
+    id_col: str,
+    a: str,
+    b: str,
+    ordered: bool,
+) -> DataFrame:
+    """Distinct ``(a, b)`` id pairs sharing a band bucket of the two
+    :func:`_band_explode` frames; ``ordered`` keeps ``a < b`` only
+    (a self-join)."""
+    i = sql_col(id_col)
+    pairs = bands_a.selectExpr(f"{i} AS {a}", "band", "bkey").join(
+        bands_b.selectExpr(f"{i} AS {b}", "band", "bkey"), ["band", "bkey"]
+    )
+    if ordered:
+        pairs = pairs.filter(F.col(a) < F.col(b))
+    return pairs.select(a, b).distinct()
+
+
+def _scored_pairs(
+    pairs: DataFrame,
+    sigs_a: DataFrame,
+    sigs_b: DataFrame,
+    id_col: str,
+    a: str,
+    b: str,
+    n_hashes: int,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """``(a, b, *carry, est_sim)``: each id pair joined to both sides'
+    signatures, ``est_sim`` = the fraction of the ``n_hashes``
+    minhashes that agree, rounded to 6 places. ``carry`` names
+    ``sigs_b`` columns passed through. The divisor is a double cast:
+    a bare ``16.0`` in Spark SQL is a decimal."""
+    i = sql_col(id_col)
+    sa = sigs_a.selectExpr(
+        f"{i} AS {a}", *[f"m{k} AS a{k}" for k in range(n_hashes)]
+    )
+    sb = sigs_b.selectExpr(
+        f"{i} AS {b}", *carry, *[f"m{k} AS b{k}" for k in range(n_hashes)]
+    )
+    matches = " + ".join(
+        f"CASE WHEN a{k} = b{k} THEN 1 ELSE 0 END" for k in range(n_hashes)
+    )
+    est = f"round(({matches}) / CAST({n_hashes} AS DOUBLE), 6) AS est_sim"
+    return pairs.join(sa, a).join(sb, b).selectExpr(a, b, *carry, est)
 
 
 def lsh_candidate_pairs(
@@ -235,41 +279,8 @@ def lsh_candidate_pairs(
 
         sigs = persist_tracked(sigs)
     bands = _band_explode(sigs, id_col, n_hashes, n_bands)
-
-    a = bands.select(
-        F.col(id_col).alias("doc_a"), "band", "bkey"
-    )
-    b_ = bands.select(
-        F.col(id_col).alias("doc_b"), "band", "bkey"
-    )
-    pairs = (
-        a.join(b_, ["band", "bkey"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-
-    sa = sigs.select(
-        F.col(id_col).alias("doc_a"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(n_hashes)],
-    )
-    sb = sigs.select(
-        F.col(id_col).alias("doc_b"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(n_hashes)],
-    )
-    matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(n_hashes)
-    )
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(matches / F.lit(float(n_hashes)), 6).alias("est_sim"),
-        )
-    )
+    pairs = _bucket_pairs(bands, bands, id_col, "doc_a", "doc_b", True)
+    return _scored_pairs(pairs, sigs, sigs, id_col, "doc_a", "doc_b", n_hashes)
 
 
 def lsh_candidate_edges(
@@ -370,37 +381,14 @@ def incremental_dedup_pairs(
     bucket-colliding cross pair with the signature-agreement Jaccard
     estimate. Callers filter on ``est_sim`` and anti-join admits.
     """
-    nb = _band_explode(new_sigs, id_col, n_hashes, n_bands).select(
-        F.col(id_col).alias("new_id"), "band", "bkey"
+    pairs = _bucket_pairs(
+        _band_explode(new_sigs, id_col, n_hashes, n_bands),
+        _band_explode(corpus_sigs, id_col, n_hashes, n_bands),
+        id_col, "new_id", "corpus_id", False,
     )
-    cb = _band_explode(corpus_sigs, id_col, n_hashes, n_bands).select(
-        F.col(id_col).alias("corpus_id"), "band", "bkey"
-    )
-    pairs = nb.join(cb, ["band", "bkey"]).select(
-        "new_id", "corpus_id"
-    ).distinct()
-    sa = new_sigs.select(
-        F.col(id_col).alias("new_id"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(n_hashes)],
-    )
-    sb = corpus_sigs.select(
-        F.col(id_col).alias("corpus_id"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(n_hashes)],
-    )
-    matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(n_hashes)
-    )
-    return (
-        pairs.join(sa, "new_id")
-        .join(sb, "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            F.round(matches / F.lit(float(n_hashes)), 6).alias(
-                "est_sim"
-            ),
-        )
+    return _scored_pairs(
+        pairs, new_sigs, corpus_sigs, id_col, "new_id", "corpus_id",
+        n_hashes,
     )
 
 
@@ -477,39 +465,14 @@ def incremental_dedup_edges(
             from bigdata_elephant_spark.session import persist_tracked
 
             reps = persist_tracked(reps)
-    nb = _band_explode(new_sigs, id_col, n_hashes, n_bands).select(
-        F.col(id_col).alias("new_id"), "band", "bkey"
+    pairs = _bucket_pairs(
+        _band_explode(new_sigs, id_col, n_hashes, n_bands),
+        _band_explode(reps, id_col, n_hashes, n_bands),
+        id_col, "new_id", "corpus_rep_id", False,
     )
-    cb = _band_explode(reps, id_col, n_hashes, n_bands).select(
-        F.col(id_col).alias("corpus_rep_id"), "band", "bkey"
-    )
-    pairs = nb.join(cb, ["band", "bkey"]).select(
-        "new_id", "corpus_rep_id"
-    ).distinct()
-    sa = new_sigs.select(
-        F.col(id_col).alias("new_id"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(n_hashes)],
-    )
-    sb = reps.select(
-        F.col(id_col).alias("corpus_rep_id"),
-        F.col("n_members"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(n_hashes)],
-    )
-    matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(n_hashes)
-    )
-    return (
-        pairs.join(sa, "new_id")
-        .join(sb, "corpus_rep_id")
-        .select(
-            "new_id",
-            "corpus_rep_id",
-            "n_members",
-            F.round(matches / F.lit(float(n_hashes)), 6).alias(
-                "est_sim"
-            ),
-        )
+    return _scored_pairs(
+        pairs, new_sigs, reps, id_col, "new_id", "corpus_rep_id",
+        n_hashes, carry=("n_members",),
     )
 
 
@@ -585,32 +548,24 @@ def boilerplate_flags(
     )
 
 
-def _cc_edges(
-    pairs: DataFrame, a_col: str, b_col: str
-) -> DataFrame:
-    """Checkpointed symmetrized edge list (reused every round)."""
-    edges = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
+def _cc_edges(und: DataFrame) -> DataFrame:
+    """The symmetrized edge list of a ``(src, dst)`` frame: every
+    pair and its mirror (callers checkpoint it — it is reused every
+    round)."""
+    return und.union(
+        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    return edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
 
 
-def _cc_init(
-    pairs: DataFrame, a_col: str, b_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """Connected-components state init: the symmetrized edge list and
-    the self-labelled node table, both checkpointed (edges are reused
-    every round; labels seed the propagation)."""
-    edges = _cc_edges(pairs, a_col, b_col)
-    labels = (
+def _cc_labels(edges: DataFrame) -> DataFrame:
+    """The checkpointed self-labelled node table that seeds the
+    min-label propagation over ``edges``."""
+    return (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
         .localCheckpoint()
     )
-    return edges, labels
 
 
 def _cc_step(edges: DataFrame, lbl: DataFrame) -> DataFrame:
@@ -637,8 +592,10 @@ def duplicate_groups_round_frame(
     final result's plan is a bare scan and PLANS.md would otherwise
     show ``shuffles=0 scans=0`` for the most shuffle-heavy query in
     the repo (r12 verdict item 3)."""
-    edges, labels = _cc_init(pairs, a_col, b_col)
-    return _cc_step(edges, _cc_step(edges, labels))
+    edges = _cc_edges(
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    ).localCheckpoint()
+    return _cc_step(edges, _cc_step(edges, _cc_labels(edges)))
 
 
 # Directed-edge count at or below which the transitive closure runs
@@ -658,30 +615,27 @@ CC_DRIVER_MAX_EDGES = 1 << 18
 
 
 def _cc_driver(
-    edges: DataFrame, max_iter: int
+    srcs: list, dsts: list, node_t, spark, max_iter: int
 ) -> DataFrame | None:
-    """Driver-side twin of the distributed min-label loop: the SAME
+    """Driver-side twin of the distributed min-label loop over the
+    undirected pairs ``zip(srcs, dsts)``, mirrored here as the
+    distributed path mirrors them in :func:`_cc_edges`: the SAME
     synchronous hop update (new[v] = min(old[v], min over in-edges
     of old[src])), run hop-by-hop up to ``max_iter`` with early stop
     at the fixpoint — so results are identical to the distributed
     path bit-for-bit, including truncation when a component chain
-    exceeds the hop budget. Returns None (caller falls back to the
-    distributed loop) if any endpoint is NULL — the join-based
-    propagation has engine-specific null semantics the simulation
-    does not reproduce."""
-    try:
-        tbl = edges.toArrow()
-        srcs = tbl.column("src").to_pylist()
-        dsts = tbl.column("dst").to_pylist()
-    except Exception:  # pragma: no cover — Arrow path exists on 4.x
-        rows = edges.collect()
-        srcs = [r[0] for r in rows]
-        dsts = [r[1] for r in rows]
+    exceeds the hop budget. The groups come back as a job-free
+    ``LocalRelation`` (:func:`~bigdata_elephant_spark.session.
+    local_relation`) with non-null ``node_t`` columns. Returns None
+    (caller falls back to the distributed loop) if any endpoint is
+    NULL — the join-based propagation has engine-specific null
+    semantics the simulation does not reproduce."""
     if any(s is None for s in srcs) or any(d is None for d in dsts):
         return None
     adj: dict = {}
     for s, d in zip(srcs, dsts):
         adj.setdefault(s, []).append(d)
+        adj.setdefault(d, []).append(s)
     labels = {v: v for v in adj}
     hops, converged = 0, False
     while hops < max_iter:
@@ -710,16 +664,15 @@ def _cc_driver(
         )
     from pyspark.sql.types import StructField, StructType
 
-    node_t = edges.schema["src"].dataType
+    from bigdata_elephant_spark.session import local_relation
+
     schema = StructType(
         [
             StructField("doc_id", node_t, False),
             StructField("group_id", node_t, False),
         ]
     )
-    return edges.sparkSession.createDataFrame(
-        sorted(labels.items()), schema
-    )
+    return local_relation(spark, sorted(labels.items()), schema)
 
 
 def duplicate_groups(
@@ -733,11 +686,30 @@ def duplicate_groups(
     graph -> ``(doc_id, group_id)`` with ``group_id`` = min doc id in
     the component (the canonical survivor).
 
-    Min-label propagation: each round applies the join-across-edges
-    / per-node-min step TWICE before the checkpoint + convergence
-    check — label distance to the component minimum shrinks by >= 2
-    hops per round, so rounds <= ceil(diameter / 2) and, since the
-    fixed cost per round is two Spark jobs (checkpoint
+    The pairs execute ONCE: their two id columns are checkpointed
+    (``localCheckpoint``) first, and both paths below read that
+    checkpoint — an LSH candidate join upstream runs one time, not
+    once per consumer.
+
+    Small graphs (at most ``driver_max_edges`` directed edges, i.e.
+    at most ``driver_max_edges // 2`` pairs, counting each pair and
+    its mirror like the distributed path does) take :func:`_cc_driver`.
+    The gate is a bounded Arrow collect over the checkpoint —
+    ``limit(driver_max_edges // 2 + 1)`` rows — so the same collect
+    that decides the path delivers the driver path's input, and a
+    large graph stops after one row past the gate. The driver path
+    runs the identical hop update in Python and returns a
+    ``LocalRelation``: identical output (pinned by tests), collected
+    with no Spark job, and real size stats for downstream joins, so
+    the consumer (``dedup_survivors``) plans a broadcast instead of a
+    stats-blind sort-merge join.
+
+    Larger graphs symmetrize the same checkpoint into the distributed
+    min-label propagation: each round applies the
+    join-across-edges / per-node-min step TWICE before the checkpoint
+    + convergence check — label distance to the component minimum
+    shrinks by >= 2 hops per round, so rounds <= ceil(diameter / 2)
+    and, since the fixed cost per round is two Spark jobs (checkpoint
     materialization + the convergence aggregate), the doubled step
     halves both the round count and the job count for the same hop
     budget. Correctness is unaffected: min-propagation is monotone
@@ -752,27 +724,25 @@ def duplicate_groups(
     sums costs one map-side-partial aggregate over the node table —
     the old-vs-new label equi-join it replaces was a second
     node-sized shuffle per round.
-
-    Small graphs (at most ``driver_max_edges`` directed edges after
-    symmetrization — a count read off the already-checkpointed edge
-    RDD, so the gate costs one metadata-cheap job) take
-    :func:`_cc_driver`: one bounded collect + the identical hop
-    update in Python + a LocalRelation result. Identical output
-    (pinned by tests), and the LocalRelation gives downstream joins
-    real size stats, so the consumer (``dedup_survivors``) plans a
-    broadcast instead of a stats-blind sort-merge join.
     """
-    edges = _cc_edges(pairs, a_col, b_col)
-    if edges.count() <= driver_max_edges:
-        res = _cc_driver(edges, max_iter)
-        if res is not None:
-            return res
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
-    )
+    und = pairs.select(
+        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
+    ).localCheckpoint()
+    edges = _cc_edges(und)
+    if driver_max_edges >= 0:
+        tbl = und.limit(driver_max_edges // 2 + 1).toArrow()
+        if 2 * tbl.num_rows <= driver_max_edges:
+            res = _cc_driver(
+                tbl.column("src").to_pylist(),
+                tbl.column("dst").to_pylist(),
+                edges.schema["src"].dataType,
+                und.sparkSession,
+                max_iter,
+            )
+            if res is not None:
+                return res
+    edges = edges.localCheckpoint()
+    labels = _cc_labels(edges)
 
     def _label_sum(df: DataFrame):
         return df.agg(
@@ -1269,7 +1239,7 @@ def positioned_shingles(
     toks = df.select(id_col, tokens_array(text_col).alias("__toks"))
     return toks.select(
         id_col,
-        F.posexplode(shingles_array(F.col("__toks"), n)).alias(
+        F.posexplode(shingles_array("__toks", n)).alias(
             "pos", "shingle"
         ),
     )

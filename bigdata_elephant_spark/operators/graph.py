@@ -158,7 +158,9 @@ def _pr_driver(
     handle_dangling: bool,
 ) -> DataFrame | None:
     """Driver-side twin of the distributed loop (see
-    :data:`PR_DRIVER_MAX_EDGES`). Returns None on NULL endpoints
+    :data:`PR_DRIVER_MAX_EDGES`), returning its ranks as a job-free
+    ``LocalRelation`` (:func:`~bigdata_elephant_spark.session.
+    local_relation`). Returns None on NULL endpoints
     (join-semantics edge case left to the distributed path).
 
     Only wired up for ``handle_dangling=False``: the dangling
@@ -172,6 +174,7 @@ def _pr_driver(
     from decimal import Decimal
 
     from bigdata_elephant_spark.functions.numeric import spark_round
+    from bigdata_elephant_spark.session import local_relation
 
     def rnd(x: float, scale: int) -> float:
         # Spark's Round(double, s): HALF_UP on the shortest decimal
@@ -207,7 +210,7 @@ def _pr_driver(
         # empty result typed off the source node column — the old
         # hardcoded 'node long' diverged from the distributed empty
         # path on a non-long edge list (r14 ADVICE)
-        return e.sparkSession.createDataFrame([], schema)
+        return local_relation(e.sparkSession, [], schema)
     outdeg: dict = {}
     for s in srcs:
         outdeg[s] = outdeg.get(s, 0) + 1
@@ -239,8 +242,8 @@ def _pr_driver(
             ranks = {
                 v: rnd(base + damping * inflow[v], 9) for v in nodes
             }
-    return e.sparkSession.createDataFrame(
-        [(v, rnd(ranks[v], 6)) for v in nodes], schema
+    return local_relation(
+        e.sparkSession, [(v, rnd(ranks[v], 6)) for v in nodes], schema
     )
 
 

@@ -102,7 +102,7 @@ def build_positional_index(
     by word_id exactly like the tf postings."""
     toks = corpus.select(
         id_col,
-        F.posexplode(tokens_array(F.col(text_col))).alias("pos", "word"),
+        F.posexplode(tokens_array(text_col)).alias("pos", "word"),
     )
     return toks.join(
         _vocab_probe(corpus, vocab), "word", "inner"

@@ -1449,23 +1449,28 @@ def _build_index(
     ``n_sub``/``sub_dim``/``n_codes``). A build starts a new index
     lifetime: the manifest has no ``tables`` pointer
     (:func:`_verify_pointer_reset`), and older generations and pending
-    tombstones are expired."""
+    tombstones are expired. What the build persisted (IVF-PQ's
+    :func:`_residuals`) is released once the manifest has committed
+    (:func:`~bigdata_elephant_spark.session.scoped_caches`)."""
+    from bigdata_elephant_spark.session import scoped_caches
+
     table, _, encode = _LAYOUTS[kind]
     embeddings, dim = _gate_build_input(embeddings, vec_col)
     man = dict(kind=kind, dim=dim, n_cells=n_cells, **geom)
-    cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    assign = ivf_assign(embeddings, cents, id_col, vec_col)
-    rows, side = encode(
-        embeddings, assign, cents, path, man, None, id_col, vec_col
-    )
-    (
-        rows.write.mode("overwrite")
-        .partitionBy("cell_id")
-        .parquet(f"{path}/{table}")
-    )
-    for name, df in {"centroids": cents, **side}.items():
-        df.write.mode("overwrite").parquet(f"{path}/{name}")
-    write_index_manifest(path, **man)
+    with scoped_caches():
+        cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
+        assign = ivf_assign(embeddings, cents, id_col, vec_col)
+        rows, side = encode(
+            embeddings, assign, cents, path, man, None, id_col, vec_col
+        )
+        (
+            rows.write.mode("overwrite")
+            .partitionBy("cell_id")
+            .parquet(f"{path}/{table}")
+        )
+        for name, df in {"centroids": cents, **side}.items():
+            df.write.mode("overwrite").parquet(f"{path}/{name}")
+        write_index_manifest(path, **man)
     _verify_pointer_reset(path, table, f"build_{kind}_index")
     _expire_versions(path, table, keep=(table,))
     # A rebuild resets the index's whole lifetime, including pending
@@ -1493,7 +1498,10 @@ def _append_to_index(
     are appended to the current generation of the corpus table
     (:func:`_table_path`). Delta-cost, not corpus-cost: base files are
     untouched bytes, and the quantizer tables are read, never
-    retrained."""
+    retrained. What the encode persisted is released once the append
+    has committed."""
+    from bigdata_elephant_spark.session import scoped_caches
+
     found = index_kind(path)
     if kind is not None and found != kind:
         raise ValueError(
@@ -1506,15 +1514,16 @@ def _append_to_index(
     )
     stored = {t: spark.read.parquet(f"{path}/{t}") for t in side}
     assign = ivf_assign(delta, cents, id_col, vec_col)
-    rows, _ = encode(
-        delta, assign, cents, path, read_index_manifest(path) or {},
-        stored, id_col, vec_col,
-    )
-    (
-        rows.write.mode("append")
-        .partitionBy("cell_id")
-        .parquet(_table_path(path, table))
-    )
+    with scoped_caches():
+        rows, _ = encode(
+            delta, assign, cents, path, read_index_manifest(path) or {},
+            stored, id_col, vec_col,
+        )
+        (
+            rows.write.mode("append")
+            .partitionBy("cell_id")
+            .parquet(_table_path(path, table))
+        )
 
 
 def build_ivf_index(
@@ -2347,7 +2356,8 @@ def _residuals(rows, assign, cents, id_col, vec_col) -> DataFrame:
     """``(id, cell_id, resid)``: every row's :func:`_residual` against
     its assigned centroid — what IVF-PQ trains its codebooks on and
     encodes. Persisted (``persist_tracked``): codebook training, the
-    encode and the cell lookup all read it."""
+    encode and the cell lookup all read it; the build or append that
+    made it releases it when its write commits."""
     from bigdata_elephant_spark.session import persist_tracked
 
     return persist_tracked(

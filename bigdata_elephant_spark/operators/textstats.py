@@ -221,7 +221,7 @@ def doc_fingerprints(
     # Token array must be a materialized column before shingling —
     # the shingle lambda indexes it per element (see doc_shingles).
     df = df.select(id_col, tokens_array(text_col).alias("__toks"))
-    sh = shingles_array(F.col("__toks"), shingle_n)
+    sh = shingles_array("__toks", shingle_n)
     hashes = F.transform(sh, lambda s: h32(s))
     return df.select(
         id_col,
@@ -371,7 +371,7 @@ def bpe_pair_counts(
 
     words = (
         df.select(
-            F.explode(tokens_array(F.col(text_col))).alias("word")
+            F.explode(tokens_array(text_col)).alias("word")
         )
         .groupBy("word")
         .agg(F.count("*").alias("n"))

@@ -16,8 +16,10 @@ same configs apply per-executor. Key choices:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 # Operators that persist an intermediate (LSH signatures, vocabulary)
@@ -38,6 +40,20 @@ def persist_tracked(
     return df
 
 
+@contextmanager
+def scoped_caches():
+    """Unpersist and untrack, when the block exits, every frame that
+    :func:`persist_tracked` registered inside it — for a write whose
+    persisted intermediates serve only that write (an IVF-PQ build's
+    residuals), so they do not outlive it in a long-lived session."""
+    mark = len(_TRACKED_CACHES)
+    try:
+        yield
+    finally:
+        while len(_TRACKED_CACHES) > mark:
+            _TRACKED_CACHES.pop().unpersist()
+
+
 def release_caches() -> None:
     """Unpersist every tracked intermediate, close every open text
     index handle (``operators.search.open_text_index``), unpersisting
@@ -52,6 +68,30 @@ def release_caches() -> None:
         _TRACKED_CACHES.pop().unpersist()
     close_text_indexes()
     close_ann_indexes()
+
+
+def local_relation(
+    spark: SparkSession, rows: list[tuple], schema: StructType
+) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` as a ``LocalRelation``,
+    for results computed on the driver.
+
+    In PySpark classic a list of tuples becomes a ``LogicalRDD``: every
+    action on it runs a Python-worker job (about 0.4 s for 1,000 rows
+    on 4 cores) and the planner sees no size statistics. The same rows
+    handed over as an Arrow table become a ``LocalRelation``: the plan
+    holds them, collecting them runs no Spark job, and a consumer join
+    plans on real statistics. Columns keep ``schema``'s nullability."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(

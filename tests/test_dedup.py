@@ -454,3 +454,90 @@ def test_duplicate_groups_driver_path_max_iter_truncation(spark):
                 ).collect()
             }
         assert fast == slow, cap
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by the status tracker under
+    a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"dedup-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _plan_node(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+
+
+def test_duplicate_groups_driver_result_is_job_free(spark):
+    """The driver path's groups are a LocalRelation: collecting them
+    runs no Spark job."""
+    from bigdata_elephant_spark.operators.dedup import duplicate_groups
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
+    )
+    groups = duplicate_groups(pairs)
+    assert _plan_node(groups) == "LocalRelation"
+    assert [f.nullable for f in groups.schema] == [False, False]
+    rows = []
+    assert _jobs(spark, lambda: rows.extend(groups.collect())) == 0
+    assert sorted(map(tuple, rows)) == [
+        (1, 1), (2, 1), (3, 1), (10, 10), (11, 10)
+    ]
+
+
+def test_duplicate_groups_gate_boundary(spark):
+    """The gate counts each pair and its mirror: ``driver_max_edges =
+    2·|pairs|`` takes the driver path, one less the distributed one,
+    with the same groups."""
+    from bigdata_elephant_spark.operators.dedup import duplicate_groups
+
+    rows = [(1, 2), (2, 3), (3, 3), (7, 8), (8, 9), (20, 21), (1, 2)]
+    pairs = spark.createDataFrame(rows, "doc_a long, doc_b long")
+    at = duplicate_groups(pairs, driver_max_edges=2 * len(rows))
+    over = duplicate_groups(pairs, driver_max_edges=2 * len(rows) - 1)
+    assert _plan_node(at) == "LocalRelation"
+    assert _plan_node(over) != "LocalRelation"
+    assert sorted(map(tuple, at.collect())) == sorted(
+        map(tuple, over.collect())
+    )
+
+
+# Spark jobs of one dedup pass on the tier-1 fixture (read → minhash →
+# LSH → est_sim >= 0.5 → collect → duplicate_groups → collect),
+# measured warm: 1 for the parquet read's schema, 9 for the pair
+# collect (signature persist, band and est_sim joins) and 5 for the
+# groups (the one checkpoint of the pairs and the bounded collect that
+# gates the driver path). The groups step took 11 when it checkpointed
+# the symmetrized pairs, counted them and collected them again.
+DEDUP_PASS_JOBS = 15
+
+
+def test_dedup_pass_job_budget(spark, sf_dir):
+    """One dedup pass runs at most DEDUP_PASS_JOBS jobs: a groups step
+    that re-ran the candidate join or added a count would push the
+    count over."""
+    from bigdata_elephant_spark.session import release_caches
+    from bigdata_elephant_spark.sources.corpus import read_table
+
+    def dedup_pass():
+        docs = read_table(spark, sf_dir, "documents")
+        sigs = dedup.minhash_signatures(docs)
+        kept = dedup.lsh_candidate_pairs(sigs).filter(
+            F.col("est_sim") >= 0.5
+        )
+        kept.collect()
+        dedup.duplicate_groups(kept).collect()
+        release_caches()
+
+    dedup_pass()  # warm-up
+    jobs = _jobs(spark, dedup_pass)
+    assert 0 < jobs <= DEDUP_PASS_JOBS, jobs

@@ -1,10 +1,23 @@
 #!/usr/bin/env python
 """Regenerate PLANS.md: the formatted physical plan of every
 bench-tagged query at sf0.1, with a one-line shuffle/broadcast/scan
-summary — the artifact to eyeball after any operator change."""
+summary — the artifact to eyeball after any operator change.
+
+``--optimized OUT.json [--sf DIR]`` instead writes the normalized
+optimized logical plan of EVERY registry query (:func:`normalize`) as
+``{name: plan}``. Written from two checkouts, the two files diff to
+the queries whose plans a change really moved:
+
+    python tools/dump_plans.py --optimized /tmp/new.json --sf SF_DIR
+    (cd OTHER_CHECKOUT && python tools/dump_plans.py --optimized \
+        /tmp/old.json --sf SF_DIR)
+    python tools/dump_plans.py --diff /tmp/old.json /tmp/new.json
+"""
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
 import re
 import sys
@@ -25,6 +38,54 @@ EXTRA_PLANS: frozenset[str] = frozenset({
     # (empty: dup_group_size_histogram rode here for the r11
     # star-edge switch until it was bench-tagged the same round)
 })
+
+
+# Plan-text details that differ between equal plans: expression ids,
+# plan ids, temporary paths, lambda variable names (``x_3`` from a
+# Python lambda, ``w`` from SQL text) and the printed name of a struct
+# constructor (``struct`` from F.struct, ``named_struct`` from SQL).
+_NORMALIZE = (
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"/tmp/[^\s,\]\)]+"), "/tmp/…"),
+    (re.compile(r"\blambda \w+"), "lambda v"),
+    (re.compile(r"\bnamed_struct\("), "struct("),
+)
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with every :data:`_NORMALIZE` detail replaced."""
+    for pat, rep in _NORMALIZE:
+        plan = pat.sub(rep, plan)
+    return plan
+
+
+def optimized_plans(sf_dir: str) -> dict[str, str]:
+    """``{name: normalized optimized logical plan}`` of every registry
+    query; a query that fails to build maps to its error."""
+    spark = get_spark("plans", cpus=8, shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    out = {}
+    for spec in all_specs():
+        release_caches()
+        try:
+            df = spec.fn(spark, sf_dir)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+        except Exception as ex:  # streaming queries run eagerly
+            plan = f"error: {type(ex).__name__}"
+        out[spec.name] = normalize(plan)
+    release_caches()
+    return out
+
+
+def diff(old_path: str, new_path: str) -> list[str]:
+    """Names whose normalized plans differ (or exist on one side)."""
+    with open(old_path) as f:
+        old = json.load(f)
+    with open(new_path) as f:
+        new = json.load(f)
+    return sorted(n for n in old.keys() | new.keys()
+                  if old.get(n) != new.get(n))
 
 
 def _render(plan: str) -> str:
@@ -117,4 +178,19 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--optimized", metavar="OUT.json")
+    ap.add_argument("--sf", default=SF_DIR)
+    ap.add_argument("--diff", nargs=2, metavar=("OLD.json", "NEW.json"))
+    args = ap.parse_args()
+    if args.diff:
+        changed = diff(*args.diff)
+        print("\n".join(changed))
+        print(f"# {len(changed)} queries with changed plans")
+    elif args.optimized:
+        plans = optimized_plans(args.sf)
+        with open(args.optimized, "w") as f:
+            json.dump(plans, f, indent=0, sort_keys=True)
+        print(f"wrote {len(plans)} plans to {args.optimized}")
+    else:
+        main()
