@@ -8,11 +8,12 @@ MD5 digest as an unsigned value in a signed 64-bit column.
 Spark:  ``conv(substr(md5(s), 1, 8), 16, 10)  :: long``
 DuckDB: ``('0x' || substr(md5(s), 1, 8)) :: bigint``
 
-Each Column builder has SQL-text twins: ``*_sql`` for Spark SQL
-(``selectExpr`` / ``F.expr``, one parse instead of a py4j call per
-node when an operator builds many of them) and ``*_sql_duckdb`` for
-the DuckDB oracles. A Column builder and its ``*_sql`` twin analyze to
-the same expression.
+:func:`h32` is a Column builder with SQL-text twins: :func:`h32_sql`
+for Spark SQL (``selectExpr`` / ``F.expr``, one parse instead of a
+py4j call per node when an operator builds many of them) and
+:func:`h32_sql_duckdb` for the DuckDB oracles. The MinHash-only
+hashes exist as text alone: :func:`h32_fast_sql` (Spark) and
+:func:`perm_hash_sql`, whose syntax both engines share.
 
 MinHash permutations are universal hashes
 ``h_i(x) = (a_i * x + b_i) mod P`` with ``P = 1_000_000_007`` and
@@ -37,24 +38,19 @@ def h32(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
 
 
-def h32_fast(col: Column | str) -> Column:
-    """Production hash: xxhash64 folded to 32 bits — one codegen'd
-    intrinsic vs md5's digest+hex+parse chain (~5x cheaper per row).
-    Same distribution properties for MinHash/SimHash purposes but NOT
-    cross-engine replayable (xxhash64 seed/impl is Spark's own), so
-    the oracle-checked registry paths keep :func:`h32`; use this when
-    wiring the operators into a real pipeline."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.pmod(F.xxhash64(c), F.lit(2**32)).cast("long")
-
-
 def h32_sql(expr: str) -> str:
     """Spark SQL text computing :func:`h32`."""
     return f"CAST(conv(substring(md5({expr}), 1, 8), 16, 10) AS BIGINT)"
 
 
 def h32_fast_sql(expr: str) -> str:
-    """Spark SQL text computing :func:`h32_fast`."""
+    """Production hash as Spark SQL text: xxhash64 folded to 32 bits —
+    one codegen'd intrinsic vs md5's digest+hex+parse chain (~5x
+    cheaper per row). Same distribution properties for MinHash/SimHash
+    purposes but NOT cross-engine replayable (xxhash64 seed/impl is
+    Spark's own), so the oracle-checked registry paths keep
+    :func:`h32`; use this when wiring the operators into a real
+    pipeline."""
     return f"CAST(pmod(xxhash64({expr}), {2**32}) AS BIGINT)"
 
 
@@ -72,16 +68,7 @@ def minhash_coeffs(n: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def perm_hash(col: Column, a: int, b: int) -> Column:
-    """``(a * (x mod P) + b) mod P`` — overflow-free in int64."""
-    return (F.lit(a) * (col % MERSENNE_P) + F.lit(b)) % MERSENNE_P
-
-
 def perm_hash_sql(expr: str, a: int, b: int) -> str:
-    """Spark SQL text computing :func:`perm_hash`."""
-    return f"(({a} * (({expr}) % {MERSENNE_P}) + {b}) % {MERSENNE_P})"
-
-
-def perm_hash_sql_duckdb(expr: str, a: int, b: int) -> str:
-    """DuckDB SQL text computing the same value as :func:`perm_hash`."""
+    """``(a * (x mod P) + b) mod P`` as SQL text, overflow-free in
+    int64. Spark SQL and DuckDB read it alike."""
     return f"(({a} * (({expr}) % {MERSENNE_P}) + {b}) % {MERSENNE_P})"

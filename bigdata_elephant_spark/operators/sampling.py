@@ -6,7 +6,7 @@ you need to reproduce across cluster sizes, reruns, and engines.
 Hash-based sampling decides per ROW from a content key:
 ``bucket = h32(key) % 10_000; keep iff bucket < rate``. Deterministic
 everywhere, stable under repartitioning, cheap (one md5 per row —
-or swap in h32_fast at production), and composable: disjoint bucket
+or swap in h32_fast_sql at production), and composable: disjoint bucket
 ranges give non-overlapping train/val/test splits from one pass.
 """
 

@@ -18,7 +18,7 @@ from bigdata_elephant_spark.functions.hashing import (
     MERSENNE_P,
     h32_sql_duckdb,
     minhash_coeffs,
-    perm_hash_sql_duckdb,
+    perm_hash_sql,
 )
 from bigdata_elephant_spark.operators import dedup, similarity, textstats
 from bigdata_elephant_spark.registry import QuerySpec
@@ -106,7 +106,7 @@ doc_shingles AS (
 _H = h32_sql_duckdb("shingle")
 
 _MIN_COLS = ",\n           ".join(
-    f"min({perm_hash_sql_duckdb(_H, a, b)}) AS m{i}"
+    f"min({perm_hash_sql(_H, a, b)}) AS m{i}"
     for i, (a, b) in enumerate(COEFFS)
 )
 

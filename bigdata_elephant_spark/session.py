@@ -16,6 +16,7 @@ same configs apply per-executor. Key choices:
 from __future__ import annotations
 
 import os
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +29,10 @@ from pyspark.storagelevel import StorageLevel
 # don't accumulate. MEMORY_AND_DISK: an oversized intermediate spills
 # instead of evicting hot blocks or OOMing an executor.
 _TRACKED_CACHES: list[DataFrame] = []
+_TRACKED_LOCK = threading.Lock()
+# Per thread, the frames registered inside each open scoped_caches()
+# block, innermost last.
+_SCOPES = threading.local()
 
 
 def persist_tracked(
@@ -36,22 +41,36 @@ def persist_tracked(
 ) -> DataFrame:
     """persist() with session-scoped lifecycle tracking."""
     df = df.persist(level)
-    _TRACKED_CACHES.append(df)
+    with _TRACKED_LOCK:
+        _TRACKED_CACHES.append(df)
+    scopes = getattr(_SCOPES, "stack", None)
+    if scopes:
+        scopes[-1].append(df)
     return df
 
 
 @contextmanager
 def scoped_caches():
     """Unpersist and untrack, when the block exits, every frame that
-    :func:`persist_tracked` registered inside it — for a write whose
-    persisted intermediates serve only that write (an IVF-PQ build's
-    residuals), so they do not outlive it in a long-lived session."""
-    mark = len(_TRACKED_CACHES)
+    :func:`persist_tracked` registered inside it on this thread — for
+    a write whose persisted intermediates serve only that write (an
+    IVF-PQ build's residuals), so they do not outlive it in a
+    long-lived session. Frames other threads register meanwhile stay
+    tracked and cached."""
+    if not hasattr(_SCOPES, "stack"):
+        _SCOPES.stack = []
+    mine: list[DataFrame] = []
+    _SCOPES.stack.append(mine)
     try:
         yield
     finally:
-        while len(_TRACKED_CACHES) > mark:
-            _TRACKED_CACHES.pop().unpersist()
+        _SCOPES.stack.pop()
+        with _TRACKED_LOCK:
+            _TRACKED_CACHES[:] = [
+                d for d in _TRACKED_CACHES if not any(d is m for m in mine)
+            ]
+        for df in mine:
+            df.unpersist()
 
 
 def release_caches() -> None:
@@ -64,8 +83,11 @@ def release_caches() -> None:
     from bigdata_elephant_spark.operators.search import close_text_indexes
     from bigdata_elephant_spark.operators.similarity import close_ann_indexes
 
-    while _TRACKED_CACHES:
-        _TRACKED_CACHES.pop().unpersist()
+    with _TRACKED_LOCK:
+        cached = _TRACKED_CACHES[:]
+        _TRACKED_CACHES.clear()
+    for df in cached:
+        df.unpersist()
     close_text_indexes()
     close_ann_indexes()
 

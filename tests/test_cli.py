@@ -663,6 +663,31 @@ def test_cli_ann_pq_writes_release_their_caches(spark, sf_dir, tmp_path):
     assert state() == before
 
 
+def test_scoped_caches_releases_only_its_own_frames(spark):
+    """A frame another thread persists while a `scoped_caches` block
+    is open stays tracked and cached when the block exits; the block's
+    own frame is released."""
+    import threading
+
+    from bigdata_elephant_spark import session
+
+    with session.scoped_caches():
+        mine = session.persist_tracked(spark.range(3))
+        other = []
+        t = threading.Thread(
+            target=lambda: other.append(session.persist_tracked(spark.range(4)))
+        )
+        t.start()
+        t.join()
+    try:
+        assert not any(d is mine for d in session._TRACKED_CACHES)
+        assert not mine.is_cached
+        assert any(d is other[0] for d in session._TRACKED_CACHES)
+        assert other[0].is_cached
+    finally:
+        session.release_caches()
+
+
 def test_cli_bpe_train_and_encode(spark, sf_dir, tmp_path):
     """bpe-train prints the rule table (and persists the artifact);
     bpe-encode re-applies the saved rules and its encodings agree

@@ -3,15 +3,10 @@
 bench-tagged query at sf0.1, with a one-line shuffle/broadcast/scan
 summary — the artifact to eyeball after any operator change.
 
-``--optimized OUT.json [--sf DIR]`` instead writes the normalized
-optimized logical plan of EVERY registry query (:func:`normalize`) as
-``{name: plan}``. Written from two checkouts, the two files diff to
-the queries whose plans a change really moved:
-
-    python tools/dump_plans.py --optimized /tmp/new.json --sf SF_DIR
-    (cd OTHER_CHECKOUT && python tools/dump_plans.py --optimized \
-        /tmp/old.json --sf SF_DIR)
-    python tools/dump_plans.py --diff /tmp/old.json /tmp/new.json
+``--optimized OUT.json [--sf DIR]`` instead writes the optimized
+logical plan of EVERY registry query as ``{name: plan}``. Both kinds
+are normalized (:func:`normalize`), so two dumps written from two
+checkouts compare equal wherever a change left a plan alone.
 """
 
 from __future__ import annotations
@@ -60,32 +55,35 @@ def normalize(plan: str) -> str:
     return plan
 
 
-def optimized_plans(sf_dir: str) -> dict[str, str]:
-    """``{name: normalized optimized logical plan}`` of every registry
-    query; a query that fails to build maps to its error."""
-    spark = get_spark("plans", cpus=8, shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
+def spec_plans(spark, spec, sf_dir: str, optimized: bool) -> dict:
+    """``{"result": plan}`` of one registry query, plus ``"step"``, the
+    per-round iteration step of a driver-iterative query, for the
+    physical kind — each normalized. Empty if the query does not
+    build lazily (streaming/iterative queries run jobs eagerly)."""
+
+    def plan(df) -> str:
+        qe = df._jdf.queryExecution()
+        p = qe.optimizedPlan() if optimized else qe.executedPlan()
+        return normalize(p.toString())
+
+    builders = {"result": spec.fn}
+    if spec.step_fn is not None and not optimized:
+        builders["step"] = spec.step_fn
     out = {}
-    for spec in all_specs():
-        release_caches()
+    for part, fn in builders.items():
         try:
-            df = spec.fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().optimizedPlan().toString()
-        except Exception as ex:  # streaming queries run eagerly
-            plan = f"error: {type(ex).__name__}"
-        out[spec.name] = normalize(plan)
-    release_caches()
+            # drop caches a previous spec registered BEFORE planning:
+            # a persisted lineage from an earlier query rewrites this
+            # one's plan as InMemoryTableScan, making the recorded
+            # plan depend on registry ORDER (the r12 GATE_PRIORITY
+            # reorder shifted four summaries with zero code change) —
+            # the canonical uncached plan is the comparable artifact
+            release_caches()
+            out[part] = plan(fn(spark, sf_dir))
+        except Exception as ex:
+            print(f"skip {spec.name} {part}: {ex}", file=sys.stderr)
+            break
     return out
-
-
-def diff(old_path: str, new_path: str) -> list[str]:
-    """Names whose normalized plans differ (or exist on one side)."""
-    with open(old_path) as f:
-        old = json.load(f)
-    with open(new_path) as f:
-        new = json.load(f)
-    return sorted(n for n in old.keys() | new.keys()
-                  if old.get(n) != new.get(n))
 
 
 def _render(plan: str) -> str:
@@ -112,9 +110,7 @@ def summarize(plan: str) -> str:
     )
 
 
-def main() -> None:
-    spark = get_spark("plans", cpus=8, shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
+def _markdown(plans: dict[str, dict]) -> str:
     out = [
         "# PLANS — physical plans of the benchmarked queries (sf0.1)",
         "",
@@ -125,72 +121,51 @@ def main() -> None:
         "instead.",
         "",
     ]
-    for spec in all_specs():
-        if not spec.bench and spec.name not in EXTRA_PLANS:
-            continue
-        try:
-            # drop caches a previous spec registered BEFORE planning:
-            # a persisted lineage from an earlier query rewrites this
-            # one's plan as InMemoryTableScan, making the recorded
-            # summary depend on registry ORDER (the r12 GATE_PRIORITY
-            # reorder shifted four summaries with zero code change) —
-            # the canonical uncached plan is the comparable artifact
-            release_caches()
-            df = spec.fn(spark, SF_DIR)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as ex:  # streaming/iterative: runs jobs eagerly
-            print(f"skip {spec.name}: {ex}", file=sys.stderr)
-            continue
-        out.append(f"## {spec.name}")
-        out.append("")
-        out.append(f"`{summarize(plan)}`")
-        out.append("")
-        out.append("```")
-        out.append(_render(plan))
-        out.append("```")
-        out.append("")
+    for name, parts in plans.items():
+        out += [f"## {name}", "", f"`{summarize(parts['result'])}`", "",
+                "```", _render(parts["result"]), "```", ""]
         # driver-iterative queries checkpoint every round, so the
         # result plan above is a bare checkpoint scan (shuffles=0) —
         # dump the representative per-round step plan too, or the
         # audit is blind to the real shuffle shape (r12 verdict #3)
-        if spec.step_fn is not None:
-            try:
-                release_caches()
-                step = spec.step_fn(spark, SF_DIR)
-                splan = (
-                    step._jdf.queryExecution().executedPlan().toString()
-                )
-            except Exception as ex:
-                print(f"skip {spec.name} step: {ex}", file=sys.stderr)
-                continue
-            out.append(f"### {spec.name} — per-round iteration step")
-            out.append("")
-            out.append(f"`{summarize(splan)}` (×rounds; inputs are "
-                       "checkpointed state)")
-            out.append("")
-            out.append("```")
-            out.append(_render(splan))
-            out.append("```")
-            out.append("")
-    with open("PLANS.md", "w") as f:
-        f.write("\n".join(out))
-    print("wrote PLANS.md")
+        if "step" in parts:
+            out += [
+                f"### {name} — per-round iteration step", "",
+                f"`{summarize(parts['step'])}` (×rounds; inputs are "
+                "checkpointed state)", "",
+                "```", _render(parts["step"]), "```", "",
+            ]
+    return "\n".join(out)
 
 
-if __name__ == "__main__":
+def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--optimized", metavar="OUT.json")
     ap.add_argument("--sf", default=SF_DIR)
-    ap.add_argument("--diff", nargs=2, metavar=("OLD.json", "NEW.json"))
     args = ap.parse_args()
-    if args.diff:
-        changed = diff(*args.diff)
-        print("\n".join(changed))
-        print(f"# {len(changed)} queries with changed plans")
-    elif args.optimized:
-        plans = optimized_plans(args.sf)
+    optimized = args.optimized is not None
+    spark = get_spark("plans", cpus=8, shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    plans = {}
+    for spec in all_specs():
+        if not optimized and not (
+            spec.bench or spec.name in EXTRA_PLANS
+        ):
+            continue
+        parts = spec_plans(spark, spec, args.sf, optimized)
+        if parts:
+            plans[spec.name] = parts
+    release_caches()
+    if optimized:
         with open(args.optimized, "w") as f:
-            json.dump(plans, f, indent=0, sort_keys=True)
+            json.dump({n: p["result"] for n, p in plans.items()}, f,
+                      indent=0, sort_keys=True)
         print(f"wrote {len(plans)} plans to {args.optimized}")
     else:
-        main()
+        with open("PLANS.md", "w") as f:
+            f.write(_markdown(plans))
+        print("wrote PLANS.md")
+
+
+if __name__ == "__main__":
+    main()
