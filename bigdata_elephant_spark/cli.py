@@ -97,7 +97,7 @@ from bigdata_elephant_spark.operators.search import (
     search,
 )
 from bigdata_elephant_spark.operators.vocab import build_vocabulary
-from bigdata_elephant_spark.session import get_spark
+from bigdata_elephant_spark.session import get_spark, local_relation
 from bigdata_elephant_spark.sources.corpus import read_corpus
 
 
@@ -802,8 +802,7 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
              "0" if tomb is None else str(tomb.count())),
         ]
         _print_rows(
-            spark.createDataFrame(stats, "stat string, value string"),
-            out,
+            local_relation(spark, stats, "stat string, value string"), out
         )
     elif args.cmd == "batch":
         qmap = {i + 1: q for i, q in enumerate(args.queries)}

@@ -14,13 +14,19 @@
   at 100 TB with the table *partitioned by bucket*, that is partition
   pruning: only 1/2^planes of the data is scanned. Recall is tunable
   by multi-probing neighboring buckets.
-- Each inline vector family — exact cosine, IVF, PQ, SQ8 (with
-  IVF,SQ8) and IVF-PQ — has one batch-first core
-  (``*_topk_batch``); the single-query function is a batch of one
-  through it. Every probe, shortlist and top-k cut goes through
-  :func:`_topk` (``orderBy.limit`` for one distinct query, a
-  ``row_number`` rank window for more) and every exact score
-  through :func:`_exact_rerank`.
+- Each vector family has one batch-first query core; the
+  single-query function is a batch of one through it. Exact cosine,
+  flat PQ and flat SQ8 each have their own (``*_topk_batch``). The
+  three IVF families — IVF, IVF,SQ8 and IVF-PQ, inline or indexed —
+  share ONE core, :func:`_ivf_indexed_search`, over an
+  :class:`AnnIndex` handle with two constructors:
+  :meth:`AnnIndex.read` opens a saved index (through
+  :func:`open_ann_index`) and :meth:`AnnIndex.train` trains the same
+  layout in memory for the inline calls. Every probe runs on the
+  driver (:func:`_probe_cells`), every shortlist and top-k cut goes
+  through :func:`_topk` (``orderBy.limit`` for one distinct query, a
+  ``row_number`` rank window for more) and every exact score through
+  :func:`_exact_rerank`.
 
 All floats are cast to double before any arithmetic (float32 ->
 float64 is exact) so cross-engine comparison is deterministic.
@@ -40,6 +46,7 @@ from pyspark.sql import functions as F
 
 from bigdata_elephant_spark.functions.numeric import spark_round
 from bigdata_elephant_spark.operators import search as _search
+from bigdata_elephant_spark.session import local_relation
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -348,7 +355,7 @@ def mmr_topk(
     rows = cand.collect()  # shortlist-sized: the reranker window
     schema = f"rank long, {id_col} long, mmr_score double"
     if not rows:
-        return spark.createDataFrame([], schema)
+        return local_relation(spark, [], schema)
     # pair similarities over the collected window — a tiny local
     # relation, but scored JVM-side so the fold order (and therefore
     # every bit of the greedy transcript) matches the corpus scan's.
@@ -356,7 +363,7 @@ def mmr_topk(
     # constant-folds the Project over the LocalRelation at OPTIMIZER
     # time — interpreted, per-row, no codegen — and the shortlist²
     # higher-order cosine expressions take seconds instead of ms
-    cdf = spark.createDataFrame(rows, cand.schema).repartition(1)
+    cdf = local_relation(spark, rows, cand.schema).repartition(1)
     sims = {
         (r["ia"], r["ib"]): r["s"]
         for r in (
@@ -403,7 +410,7 @@ def mmr_topk(
         chosen.append(vid)
         remaining.remove(vid)
     return (
-        spark.createDataFrame(selected, schema)
+        local_relation(spark, selected, schema)
         # output rounding JVM-side: Spark round is HALF_UP (ties away
         # from zero), same as the oracle engine's round — Python's
         # round() is half-even and must not touch these values
@@ -782,25 +789,50 @@ def _l2sq(a: Column, b: Column) -> Column:
     )
 
 
-def ivf_assign(
-    embeddings: DataFrame,
+def _assigned(
+    rows: DataFrame,
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """``(id, cell_id)``: nearest centroid by (rounded) squared L2,
-    ties to the lowest cell id. The centroid table is broadcast; the
-    argmin is a ``min(struct(dist, cell_id))`` — one partial-aggregated
-    groupBy, no window, no shuffle of the vectors beyond the id."""
-    scored = embeddings.crossJoin(F.broadcast(centroids)).select(
-        id_col,
+    """The one cell assignment: every column of ``rows`` plus
+    ``cell_id``, the nearest centroid by (rounded) squared L2, ties to
+    the lowest cell id. The centroid table is broadcast; the argmin is
+    a ``min(struct(dist, cell_id))`` that carries each row's other
+    columns THROUGH its aggregate (``first`` over the single-source-row
+    group — every crossJoin row of a group holds the identical row, so
+    ``first`` is deterministic) instead of joining the rows back to
+    themselves on id: ONE partial-aggregated exchange instead of two
+    corpus-sized exchange inputs plus a sort-merge join (r15: warm A/B
+    1.53 → 1.44 s min at sf0.1, rows bit-identical). Relies on
+    ``id_col`` being unique (the embeddings table's contract, as
+    everywhere in this module)."""
+    rest = [c for c in rows.columns if c != id_col]
+    scored = rows.crossJoin(F.broadcast(centroids)).select(
+        *rows.columns,
         F.struct(
             F.round(_l2sq(F.col(vec_col), F.col("cvec")), 6).alias("d"),
             F.col("cell_id").alias("c"),
         ).alias("dc"),
     )
     return scored.groupBy(id_col).agg(
-        F.min("dc").getField("c").alias("cell_id")
+        F.min("dc").getField("c").alias("cell_id"),
+        *[F.first(c).alias(c) for c in rest],
+    ).select(*rows.columns, "cell_id")
+
+
+def ivf_assign(
+    embeddings: DataFrame,
+    centroids: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """``(id, cell_id)``: the :func:`_assigned` projection — the
+    optimizer prunes the carried columns, so the plan is the bare
+    argmin groupBy (no window, no shuffle of the vectors beyond the
+    id)."""
+    return _assigned(embeddings, centroids, id_col, vec_col).select(
+        id_col, "cell_id"
     )
 
 
@@ -815,70 +847,26 @@ def ivf_topk_batch(
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k for a BATCH of query vectors in one
-    plan → ``(q_id, vec_id, cos_sim)``: the inline IVF family's one
-    core — amortize the corpus scan across the whole probe set while
-    still scoring only each query's ``n_probe`` nearest cells.
-
-    1. probe — each query's ``n_probe`` nearest centroids by rounded
-       squared L2, ``cell_id`` tie-break (:func:`_topk` over the
-       ``|Q| × n_cells`` distance table, metadata-sized);
-    2. candidates — every vector's nearest cell; a vector is fanned
-       out to exactly the queries probing its cell through the
-       broadcast ``(q_id, cell_id)`` equi-join, so fan-out per vector
-       is bounded by queries-per-cell, not batch size;
-    3. score and top-k — :func:`_exact_rerank`.
-
-    The assignment argmin (``min(dc).c``) carries each vector THROUGH
-    its aggregate (``first`` over the single-source-row group — every
-    crossJoin row of a group holds the identical vector, so ``first``
-    is deterministic) instead of joining the corpus back to itself on
-    id: at scale ONE partial-aggregated Exchange instead of two
-    corpus-sized Exchange inputs plus a sort-merge join (r15: warm
-    A/B 1.53 → 1.44 s min at sf0.1, rows bit-identical; a
-    driver-collected LocalRelation variant measured 2.03 s). Relies
-    on ``id_col`` being unique (the embeddings table's contract, as
-    everywhere in this module). At 100 TB the table is
-    cell_id-partitioned and the union of probed cells prunes the
-    scan, exactly as in :func:`ivf_topk_indexed`.
+    plan → ``(q_id, vec_id, cos_sim)``: :func:`_ivf_indexed_search`
+    over an in-memory plain-IVF handle (:meth:`AnnIndex.train`), the
+    same core that answers :func:`ivf_topk_batch_indexed` — the corpus
+    scan is amortized across the whole probe set while each query
+    scores only its ``n_probe`` nearest cells. The centroids are
+    collected once and the queries once; each query's cells are
+    probed on the driver and every vector's nearest cell
+    (:func:`_assigned`) is pruned by the static ``cell_id IN (...)``
+    filter of the probed cells and fanned out to the queries probing
+    it, then scored and cut by :func:`_topk`. At 100 TB the table is
+    cell_id-partitioned and that filter prunes the scan, as in
+    :func:`ivf_topk_indexed`.
 
     ``allowed`` is filtered search with :func:`ivf_topk`'s semantics:
     the candidates semi-join the allowed ids, the probe geometry is
     unchanged."""
-    cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    q = _query_vectors(embeddings, query_ids, id_col, vec_col)
-    single = len(set(query_ids)) == 1
-    probes = _topk(
-        cents.crossJoin(F.broadcast(q)).select(
-            "q_id",
-            "cell_id",
-            F.round(_l2sq(F.col("cvec"), F.col("_qvec")), 6).alias("d"),
-        ),
-        n_probe, [F.col("d"), F.col("cell_id")], single, "n_probe",
-    ).select("q_id", "cell_id")
-    assigned = (
-        embeddings.crossJoin(F.broadcast(cents))
-        .select(
-            id_col,
-            vec_col,
-            F.struct(
-                F.round(_l2sq(F.col(vec_col), F.col("cvec")), 6).alias("d"),
-                F.col("cell_id").alias("c"),
-            ).alias("dc"),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.min("dc").getField("c").alias("cell_id"),
-            F.first(vec_col).alias(vec_col),
-        )
+    h = AnnIndex.train(embeddings, "ivf", n_cells, id_col, vec_col)
+    return _ivf_indexed_search(
+        h, query_ids, embeddings, n_probe, k, allowed
     )
-    candidates = assigned.join(F.broadcast(probes), "cell_id")
-    if allowed is not None:
-        candidates = candidates.join(
-            F.broadcast(_allowed_ids(allowed, id_col)),
-            id_col,
-            "left_semi",
-        )
-    return _exact_rerank(candidates, q, k, id_col, vec_col, single)
 
 
 def ivf_topk(
@@ -1121,8 +1109,8 @@ def delete_from_index(
         if not ids:
             return  # nothing to delete; don't flip into
             # "deletes pending" (every read would pay the anti-join)
-        tomb = spark.createDataFrame(
-            [(int(i),) for i in ids], f"{id_col} long"
+        tomb = local_relation(
+            spark, [(int(i),) for i in ids], f"{id_col} long"
         ).distinct()
     existing = _tombstoned(spark, path, id_col)
     if existing is not None:
@@ -1328,20 +1316,24 @@ def _gate_build_input(
 # Every layout is a coarse quantizer (``centroids``), one
 # cell_id-partitioned corpus table and the layout's quantizer side
 # tables. A build and an append share everything but the ENCODER,
-# which turns rows plus their cell assignment into corpus-table rows:
-# ``encode(rows, assign, cents, path, man, stored, id_col, vec_col)``
-# → ``(rows with cell_id, side tables)``. At build ``stored`` is None
-# and the encoder trains its quantizer from the manifest fields
-# ``man``; at append ``stored`` holds the side tables as written and
-# ``man`` is the stored manifest, so the quantizer stays frozen.
+# which turns the rows, assigned once (:func:`_assigned`, so they
+# already carry ``cell_id``), into corpus-table rows:
+# ``encode(rows, assigned, cents, path, man, stored, id_col, vec_col)``
+# → ``(rows with cell_id, side tables)``; ``rows`` are the same rows
+# before the assignment, which the quantizers train and range-check
+# on. At build ``stored`` is None and the encoder trains its quantizer
+# from the manifest fields ``man``; at append ``stored`` holds the
+# side tables as written and ``man`` is the stored manifest, so the
+# quantizer stays frozen. :meth:`AnnIndex.train` calls the same
+# encoders and writes nothing.
 
 
-def _encode_ivf(rows, assign, cents, path, man, stored, id_col, vec_col):
+def _encode_ivf(rows, assigned, cents, path, man, stored, id_col, vec_col):
     """Plain IVF stores the raw rows."""
-    return rows.join(assign, id_col), {}
+    return assigned, {}
 
 
-def _encode_sq8(rows, assign, cents, path, man, stored, id_col, vec_col):
+def _encode_sq8(rows, assigned, cents, path, man, stored, id_col, vec_col):
     """IVF,SQ8: :func:`sq8_encode` with the per-dimension range trained
     by :func:`sq8_stats` at build, or the stored range at append —
     where any delta component outside the trained ``[vmin, vmax]``
@@ -1397,16 +1389,16 @@ def _encode_sq8(rows, assign, cents, path, man, stored, id_col, vec_col):
                 "build_ivfsq8_index over base+delta (FAISS retrains the "
                 "scalar quantizer on rebuild for the same reason)."
             )
-    codes = sq8_encode(rows, stats, id_col, vec_col)
-    return codes.join(assign, id_col), {"sq8_stats": stats}
+    codes = sq8_encode(assigned, stats, id_col, vec_col)
+    return codes, {"sq8_stats": stats}
 
 
-def _encode_pq(rows, assign, cents, path, man, stored, id_col, vec_col):
+def _encode_pq(rows, assigned, cents, path, man, stored, id_col, vec_col):
     """IVF-PQ: :func:`pq_encode` of the rows' residuals
     (:func:`_residuals`) against codebooks trained by
     :func:`pq_codebooks` at build, or the stored ones at append (the
     geometry from :func:`_pq_geometry`)."""
-    resid = _residuals(rows, assign, cents, id_col, vec_col)
+    resid = _residuals(assigned, cents, id_col, vec_col)
     cbooks = stored["codebooks"] if stored is not None else pq_codebooks(
         resid, man["n_sub"], man["sub_dim"], man["n_codes"], id_col,
         "resid",
@@ -1441,7 +1433,7 @@ def _build_index(
     """The one build of every :data:`_LAYOUTS` kind (the
     ``build_*_index`` functions and the CLI ``ann-build``): gate the
     input (:func:`_gate_build_input`), train the coarse quantizer
-    (:func:`ivf_centroids`), assign every row once (:func:`ivf_assign`)
+    (:func:`ivf_centroids`), assign every row once (:func:`_assigned`)
     and let the layout's encoder train its quantizer and encode. Then
     write the corpus table partitioned by ``cell_id``, the centroids
     and the side tables, and commit ``manifest.json`` (``kind``,
@@ -1459,9 +1451,9 @@ def _build_index(
     man = dict(kind=kind, dim=dim, n_cells=n_cells, **geom)
     with scoped_caches():
         cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-        assign = ivf_assign(embeddings, cents, id_col, vec_col)
         rows, side = encode(
-            embeddings, assign, cents, path, man, None, id_col, vec_col
+            embeddings, _assigned(embeddings, cents, id_col, vec_col),
+            cents, path, man, None, id_col, vec_col,
         )
         (
             rows.write.mode("overwrite")
@@ -1513,11 +1505,10 @@ def _append_to_index(
         spark, path, delta, id_col, vec_col, f"update_{found}_index"
     )
     stored = {t: spark.read.parquet(f"{path}/{t}") for t in side}
-    assign = ivf_assign(delta, cents, id_col, vec_col)
     with scoped_caches():
         rows, _ = encode(
-            delta, assign, cents, path, read_index_manifest(path) or {},
-            stored, id_col, vec_col,
+            delta, _assigned(delta, cents, id_col, vec_col), cents, path,
+            read_index_manifest(path) or {}, stored, id_col, vec_col,
         )
         (
             rows.write.mode("append")
@@ -1691,36 +1682,34 @@ def compact_index(spark, path: str) -> None:
 def _driver_vectors(df: DataFrame, id_name: str, vec_name: str) -> list:
     """``[(id, vector)]`` of a metadata-sized frame (centroids, a
     query batch), collected once over Arrow. ``array<float>`` widens
-    to double exactly; a vector that is null or holds a null element
-    becomes ``None`` (null distance to everything, as in Spark)."""
+    to double exactly; a null vector or element stays ``None``."""
     tbl = df.select(id_name, vec_name).toArrow()
-    return [
-        (i, None if v is None or None in v else v)
-        for i, v in zip(
-            tbl.column(id_name).to_pylist(), tbl.column(vec_name).to_pylist()
-        )
-    ]
+    return list(zip(
+        tbl.column(id_name).to_pylist(), tbl.column(vec_name).to_pylist()
+    ))
 
 
 def _probe_cells(cents: list, queries: list, n_probe: int) -> dict:
-    """The probe stage shared by every indexed layout →
+    """The probe stage of the IVF query core →
     ``{cell_id: [q_id, ...]}``, on the driver over
     :func:`_driver_vectors` pairs: each query's ``n_probe`` nearest
     cells, exactly as Spark's per-query
     ``orderBy(round(_l2sq, 6), cell_id).limit(n_probe)`` — a
     left-fold double sum (``np.cumsum``; ``np.sum`` is pairwise) of
     the widened float32 inputs, :func:`spark_round`, then
-    ``(d, cell_id)`` in Spark's ascending order: nulls (a null element
-    or another dimension, which ``zip_with`` pads with nulls) first,
-    NaN last. ONE definition pins the probe contract across the IVF,
-    IVF-PQ and IVF,SQ8 layouts and their oracles; the cells become a
-    STATIC partition filter on the cell_id layout."""
+    ``(d, cell_id)`` in Spark's ascending order: nulls (a null vector
+    or element, or another dimension, which ``zip_with`` pads with
+    nulls) first, NaN last. ONE definition pins the probe contract
+    across the IVF, IVF-PQ and IVF,SQ8 layouts, inline and indexed,
+    and their oracles; the cells become a STATIC partition filter on
+    the cell_id layout."""
     _search._check_count(n_probe, "n_probe")
     ranked = []
     for qid, qv in queries:
         for cid, cv in cents:
             d = None
-            if qv is not None and cv is not None and len(qv) == len(cv):
+            ok = qv is not None and cv is not None and len(qv) == len(cv)
+            if ok and None not in cv and None not in qv:
                 diff = np.subtract(cv, qv, dtype=np.float64)
                 d = np.cumsum(diff * diff)[-1] if len(diff) else 0.0
                 d = float(spark_round(d))
@@ -1764,9 +1753,9 @@ def _probe_candidates(
     id_col: str,
     allowed: DataFrame | None,
 ) -> DataFrame:
-    """The candidate stage shared by every indexed layout: ``rows`` (a
-    cell_id-partitioned index table) fanned out to the queries
-    probing each row's cell (:func:`_fan_out`), the self-match
+    """The candidate stage of the IVF query core: ``rows`` (an
+    index's live rows, each with its ``cell_id``) fanned out to the
+    queries probing each row's cell (:func:`_fan_out`), the self-match
     dropped, and the optional filtered-search id set applied as a
     broadcast semi-join ON the pruned scan."""
     cand = _fan_out(rows, cells).filter(F.col(id_col) != F.col("q_id"))
@@ -1785,69 +1774,116 @@ def _probe_candidates(
 # keep-hot-state-resident design): reopening a saved index per query
 # costs schema jobs for every artifact and a probe job before the one
 # scan that matters. Open handles, least recently used first, keyed by
-# path; a handle persists nothing, so retiring one just drops it.
-_ANN_INDEXES: OrderedDict[str, AnnIndex] = OrderedDict()
+# path, each stored with the (session, data-file listing, columns) it
+# was opened for; a handle persists nothing, so retiring one just
+# drops it.
+_ANN_INDEXES: OrderedDict[str, tuple] = OrderedDict()
 _ANN_INDEXES_LOCK = threading.Lock()
 
 
 class AnnIndex:
-    """Session-scoped handle over an IVF, IVF,SQ8 or IVF-PQ index
-    (:func:`index_kind`): its ``kind`` and ``dim`` (:func:`index_dim`),
-    the centroids as the ``centroids`` frame and as driver-side
-    ``cents`` pairs (:func:`_driver_vectors` — n_cells × dim floats on
-    the driver), and the ``live`` rows with tombstones hidden
-    (:func:`_index_rows`; ``None`` for the empty index): the vectors
-    with ``_nrm`` added and zero norms dropped for plain IVF, the
-    codes for the quantized layouts. The quantizer state is opened
-    once too: the layout's ``side`` tables (:data:`_LAYOUTS` —
-    IVF,SQ8's one-row ``sq8_stats``, IVF-PQ's ``codebooks``) and
-    IVF-PQ's ``geom`` ``(n_sub, sub_dim)`` (:func:`_pq_geometry`).
-    Get one with :func:`open_ann_index`."""
+    """One IVF, IVF,SQ8 or IVF-PQ index, as :func:`_ivf_indexed_search`
+    queries it: its ``kind``, ``dim`` (``None`` when unchecked) and
+    ``cols`` (id and vector column), the centroids as the
+    ``centroids`` frame and as driver-side ``cents`` pairs
+    (:func:`_driver_vectors` — n_cells × dim floats on the driver),
+    and the ``live`` rows, each with its ``cell_id`` (``None`` for the
+    empty index): the vectors with ``_nrm`` added and zero norms
+    dropped for plain IVF, the codes for the quantized layouts. The
+    quantizer state is held once too: the layout's ``side`` tables
+    (:data:`_LAYOUTS` — IVF,SQ8's one-row ``sq8_stats``, IVF-PQ's
+    ``codebooks``) and IVF-PQ's ``geom`` ``(n_sub, sub_dim)``
+    (:func:`_pq_geometry`, from the manifest fields ``man``). Two
+    constructors: :meth:`read` opens a saved index (a session-cached
+    one comes from :func:`open_ann_index`) and :meth:`train` trains
+    one in memory."""
 
-    def __init__(self, spark, path, files, id_col, vec_col):
-        self.spark, self.files, self.cols = spark, files, (id_col, vec_col)
-        self.kind = index_kind(path)
+    def __init__(
+        self, spark, kind, dim, cols, centroids, cents, live, side, man
+    ):
+        self.spark, self.kind, self.dim, self.cols = spark, kind, dim, cols
+        self.centroids, self.cents, self.side = centroids, cents, side
+        if kind == "ivf" and live is not None:
+            live = live.withColumn(
+                "_nrm", F.sqrt(_norm2(F.col(cols[1])))
+            ).filter(F.col("_nrm") > 0)
+        self.live = live
+        if kind == "ivfpq":
+            self.geom = _pq_geometry(man, side["codebooks"])
+
+    @classmethod
+    def read(cls, spark, path, id_col="vec_id", vec_col="embedding"):
+        """The index saved at ``path``: kind from :func:`index_kind`,
+        ``dim`` from :func:`index_dim`, live rows with tombstones
+        hidden (:func:`_index_rows`)."""
+        kind = index_kind(path)
         # centroids first: a bogus/missing index path must surface as
         # the read error, not be mistaken for the (legitimate) empty
         # generation a delete-everything compaction leaves behind
-        self.centroids = spark.read.parquet(f"{path}/centroids")
-        self.cents = _driver_vectors(self.centroids, "cell_id", "cvec")
-        self.dim = index_dim(spark, path)
-        table, side, _ = _LAYOUTS[self.kind]
-        self.live = _index_rows(spark, path, table, id_col)
-        if self.kind == "ivf" and self.live is not None:
-            self.live = self.live.withColumn(
-                "_nrm", F.sqrt(_norm2(F.col(vec_col)))
-            ).filter(F.col("_nrm") > 0)
-        self.side = {t: spark.read.parquet(f"{path}/{t}") for t in side}
-        if self.kind == "ivfpq":
-            self.geom = _pq_geometry(
-                read_index_manifest(path) or {}, self.side["codebooks"]
+        centroids = spark.read.parquet(f"{path}/centroids")
+        cents = _driver_vectors(centroids, "cell_id", "cvec")
+        table, side, _ = _LAYOUTS[kind]
+        return cls(
+            spark, kind, index_dim(spark, path), (id_col, vec_col),
+            centroids, cents, _index_rows(spark, path, table, id_col),
+            {t: spark.read.parquet(f"{path}/{t}") for t in side},
+            read_index_manifest(path) or {},
+        )
+
+    @classmethod
+    def train(
+        cls, embeddings, kind, n_cells, id_col="vec_id",
+        vec_col="embedding", **geom,
+    ):
+        """The ``kind`` index :func:`_build_index` would build over
+        ``embeddings`` (``geom``: IVF-PQ's ``n_sub``/``sub_dim``/
+        ``n_codes``), trained in memory and written nowhere: the
+        centroids (:func:`ivf_centroids`) collected once and re-entered
+        as a job-free ``LocalRelation`` (so the assignment does not
+        re-run their scan), every row assigned once (:func:`_assigned`)
+        and the layout's encoder called with ``stored=None``. Unlike a
+        build the input is not gated (:func:`_gate_build_input`): the
+        inline queries answer on the rows as given, and IVF,SQ8 trains
+        its range over the first row's dimension (:func:`_vec_dim`) —
+        on an empty input that is the empty index."""
+        spark = embeddings.sparkSession
+        seeds = ivf_centroids(embeddings, n_cells, id_col, vec_col)
+        cents = _driver_vectors(seeds, "cell_id", "cvec")
+        centroids = local_relation(spark, cents, seeds.schema)
+        dim = _vec_dim(embeddings, vec_col) if kind == "ivfsq8" else None
+        man = dict(kind=kind, dim=dim, n_cells=n_cells, **geom)
+        live, side = None, {}
+        if kind != "ivfsq8" or dim is not None:
+            live, side = _LAYOUTS[kind][2](
+                embeddings, _assigned(embeddings, centroids, id_col, vec_col),
+                centroids, None, man, None, id_col, vec_col,
             )
+        return cls(
+            spark, kind, dim, (id_col, vec_col), centroids, cents, live,
+            side, man,
+        )
 
 
 def open_ann_index(
     spark, path: str, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> AnnIndex:
-    """The session's :class:`AnnIndex` over the index at ``path``,
-    from an LRU with the text handles' bound
+    """The session's :class:`AnnIndex` over the index at ``path``
+    (:meth:`AnnIndex.read`), from an LRU with the text handles' bound
     (``search.TEXT_INDEX_LRU_MAX``). Every call re-lists the index's
     data files (``search._data_files``, no Spark job) and reopens on
     any change: a rebuild, an ``update_*_index`` append and a
     :func:`delete_from_index` tombstone add files without touching
     the manifest, and a :func:`compact_index` flip rewrites it.
     ``session.release_caches()`` closes every handle."""
-    files = _search._data_files(spark, path)
+    key = (spark, _search._data_files(spark, path), (id_col, vec_col))
     with _ANN_INDEXES_LOCK:
-        h = _ANN_INDEXES.pop(path, None)
-        if h is None or (h.spark, h.files, h.cols) != (
-            spark, files, (id_col, vec_col)
-        ):
-            h = AnnIndex(spark, path, files, id_col, vec_col)
-        _ANN_INDEXES[path] = h
+        hit = _ANN_INDEXES.pop(path, None)
+        if hit is None or hit[0] != key:
+            hit = (key, AnnIndex.read(spark, path, id_col, vec_col))
+        _ANN_INDEXES[path] = hit
         while len(_ANN_INDEXES) > _search.TEXT_INDEX_LRU_MAX:
             _ANN_INDEXES.popitem(last=False)
-        return h
+        return hit[1]
 
 
 def close_ann_indexes() -> None:
@@ -1856,22 +1892,30 @@ def close_ann_indexes() -> None:
         _ANN_INDEXES.clear()
 
 
+def _check_counts(k: int, n_probe: int, shortlist: int = 50) -> None:
+    """``ValueError`` for an out-of-range ``k``, ``n_probe`` or
+    ``shortlist``: the IVF core checks them, and each indexed reader
+    before it opens any index file."""
+    _search._check_count(k)
+    _search._check_count(n_probe, "n_probe")
+    _search._check_count(shortlist, "shortlist")
+
+
 def _ivf_indexed_search(
-    spark,
-    index_path: str,
+    h: AnnIndex,
     query_ids: list[int],
     source: DataFrame | None,
     n_probe: int,
     k: int,
     allowed: DataFrame | None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     vec: list[float] | None = None,
     shortlist: int = 50,
 ) -> DataFrame:
-    """The one indexed query core over the three IVF layouts →
-    ``(q_id, vec_id, score)`` top-k per query, over the session's
-    :func:`open_ann_index` handle. Three shared stages:
+    """The one query core of the three IVF layouts, inline and
+    indexed → ``(q_id, vec_id, score)`` top-k per query, over the
+    :class:`AnnIndex` ``h`` — a saved index's (:func:`open_ann_index`)
+    or one trained in memory (:meth:`AnnIndex.train`). Three shared
+    stages:
 
     1. queries — a literal ``vec`` is query ``query_ids[0]``, rounded
        to float32, its norm a driver double, and enters the plan as
@@ -1883,27 +1927,24 @@ def _ivf_indexed_search(
 
     then the layout's scoring tail, batch-first over ``q_id``: plain
     IVF scores the cosine (:func:`_cos6`, then :func:`_topk`);
-    IVF,SQ8 decodes the codes with the cached stats and exact-scores
-    the reconstructions (:func:`_exact_rerank`, ``sq8_sim``); IVF-PQ
+    IVF,SQ8 decodes the codes with the stats and exact-scores the
+    reconstructions (:func:`_exact_rerank`, ``sq8_sim``); IVF-PQ
     builds each query's ADC lookup table against its residual in
-    every probed cell (summed in exact ``decimal(18,6)``), cuts the
-    ``shortlist`` through :func:`_topk` and exact-re-ranks it against
-    the raw vectors in ``source``. The quantized layouts store codes
-    only, so their stored-id queries, and IVF-PQ's re-rank, need
-    ``source``. An all-tombstoned compacted index and zero-norm or
-    absent queries give the typed empty frame. Bad counts, and a
-    ``vec`` of the wrong length or not finite in float32, raise
-    ``ValueError``."""
-    _search._check_count(k)
-    _search._check_count(n_probe, "n_probe")
-    _search._check_count(shortlist, "shortlist")
-    h = open_ann_index(spark, index_path, id_col, vec_col)
+    every probed cell and cuts and re-ranks a ``shortlist``
+    (:func:`_adc_rerank`, the flat PQ tail too) against the raw
+    vectors in ``source``. The quantized layouts hold codes only, so
+    their stored-id queries, and IVF-PQ's re-rank, need ``source``.
+    An empty index and zero-norm or absent queries give the typed
+    empty frame. Bad counts (:func:`_check_counts`), and a ``vec`` of
+    the wrong length or not finite in float32, raise ``ValueError``."""
+    _check_counts(k, n_probe, shortlist)
+    spark, (id_col, vec_col) = h.spark, h.cols
     if source is None and h.kind != "ivf" and (
         vec is None or h.kind == "ivfpq"
     ):
         raise ValueError(
-            f"index at {index_path!r} is kind={h.kind!r}, which stores "
-            "quantized codes only: pass source, the raw vector table"
+            f"a kind={h.kind!r} index stores quantized codes only: "
+            "pass source, the raw vector table"
         )
     empty = (
         f"q_id long, {id_col} long, "
@@ -1935,9 +1976,8 @@ def _ivf_indexed_search(
     single = len({i for qs in cells.values() for i in qs}) == 1
     cand = _probe_candidates(h.live, cells, id_col, allowed)
     if h.kind == "ivfsq8":
-        st = F.arrays_zip(F.col("vmin"), F.col("vstep"))
         recon = cand.crossJoin(F.broadcast(h.side["sq8_stats"])).select(
-            "q_id", id_col, _sq8_recon(F.col("codes"), st).alias("_recon")
+            "q_id", id_col, _sq8_recon(F.col("codes")).alias("_recon")
         )
         return _exact_rerank(
             recon, q, k, id_col, "_recon", single, "sq8_sim"
@@ -1952,23 +1992,9 @@ def _ivf_indexed_search(
                 _residual(qvec, F.col("cvec")), n_sub, sub_dim, "qvec"
             ),
         ).select("q_id", "cell_id", "s.sub", "s.qvec")
-        lut = h.side["codebooks"].join(F.broadcast(qslices), "sub").select(
-            "q_id",
-            "cell_id",
-            "sub",
-            F.col("code_id").alias("code"),
-            F.round(_dot(F.col("cvec"), F.col("qvec")), 6)
-            .cast("decimal(18,6)")
-            .alias("pd"),
-        )
-        short = _topk(
-            cand.join(F.broadcast(lut), ["q_id", "cell_id", "sub", "code"])
-            .groupBy("q_id", id_col)
-            .agg(F.sum("pd").alias("adc")),
-            shortlist, [F.desc("adc"), F.asc(id_col)], single, "shortlist",
-        ).select("q_id", id_col)
-        return _exact_rerank(
-            source.join(short, id_col), q, k, id_col, vec_col, single
+        return _adc_rerank(
+            cand, qslices, h.side["codebooks"], source, q, shortlist, k,
+            id_col, vec_col, single,
         )
     cand, qvec, qnrm = _with_query(cand, q)
     scored = cand.select(
@@ -2005,9 +2031,10 @@ def ivf_topk_indexed(
     the semi-join lands ON the statically pruned scan, so filtered
     search still touches only the probed partitions. Results match
     the inline :func:`ivf_topk` row-for-row (equivalence-tested)."""
+    _check_counts(k, n_probe)
     return _ivf_indexed_search(
-        spark, index_path, [query_vec_id], source, n_probe, k, allowed,
-        id_col, vec_col, vec,
+        open_ann_index(spark, index_path, id_col, vec_col),
+        [query_vec_id], source, n_probe, k, allowed, vec,
     ).drop("q_id")
 
 
@@ -2032,9 +2059,10 @@ def ivf_topk_batch_indexed(
     Results match :func:`ivf_topk_batch` row-for-row when the index
     was built with the same ``n_cells`` (equivalence-tested; shares
     its oracle)."""
+    _check_counts(k, n_probe)
     return _ivf_indexed_search(
-        spark, index_path, query_ids, source, n_probe, k, None,
-        id_col, vec_col,
+        open_ann_index(spark, index_path, id_col, vec_col),
+        query_ids, source, n_probe, k, None,
     )
 
 
@@ -2130,23 +2158,13 @@ def kmeanspp_seeds(
     oversampling, O(rounds) passes independent of k); every
     downstream consumer (ivf_centroids -> assign -> kmeans) takes
     either function's seeds unchanged."""
+    schema = f"seed_rank long, {id_col} long"
     rows = embeddings.orderBy(id_col).limit(1).collect()
     if not rows:
-        return embeddings.sparkSession.createDataFrame(
-            [], f"seed_rank long, {id_col} long"
-        )
+        return local_relation(embeddings.sparkSession, [], schema)
     seeds = [(0, rows[0][id_col], rows[0][vec_col])]
-    best = None  # running min distance column, rebuilt per round
     for r in range(1, k):
-        dists = [
-            F.round(
-                _l2sq(F.col(vec_col), F.array(*[F.lit(float(x))
-                                                for x in vec])),
-                6,
-            )
-            for _, _, vec in seeds
-        ]
-        d = dists[0] if len(dists) == 1 else F.least(*dists)
+        d = _d2_min(vec_col, [vec for _, _, vec in seeds])
         cand = (
             embeddings.filter(
                 ~F.col(id_col).isin([sid for _, sid, _ in seeds])
@@ -2163,10 +2181,23 @@ def kmeanspp_seeds(
             .collect()[0]
         )
         seeds.append((r, cand[id_col], cand[vec_col]))
-    return embeddings.sparkSession.createDataFrame(
-        [(r, sid) for r, sid, _ in seeds],
-        f"seed_rank long, {id_col} long",
+    return local_relation(
+        embeddings.sparkSession, [(r, sid) for r, sid, _ in seeds], schema
     )
+
+
+def _d2_min(vec_col: str, seed_vecs: list) -> Column:
+    """Each row's rounded squared L2 distance to the nearest of the
+    ``seed_vecs`` (driver-side vectors, entered as literals) — the
+    k-means seeding distance."""
+    ds = [
+        F.round(
+            _l2sq(F.col(vec_col), F.array(*[F.lit(float(x)) for x in v])),
+            6,
+        )
+        for v in seed_vecs
+    ]
+    return ds[0] if len(ds) == 1 else F.least(*ds)
 
 
 def kmeans_parallel_seeds(
@@ -2200,30 +2231,16 @@ def kmeans_parallel_seeds(
     deterministic, and only reachable when n is comparable to k.
     """
     l = oversample if oversample is not None else 2 * k
+    spark = embeddings.sparkSession
+    schema = f"seed_rank long, {id_col} long"
     first = embeddings.orderBy(id_col).limit(1).collect()
     if not first:
-        return embeddings.sparkSession.createDataFrame(
-            [], f"seed_rank long, {id_col} long"
-        )
+        return local_relation(spark, [], schema)
     cand: dict[int, list[float]] = {
         int(first[0][id_col]): [float(x) for x in first[0][vec_col]]
     }
-
-    def _d2_to(seed_vecs: list[list[float]]) -> Column:
-        ds = [
-            F.round(
-                _l2sq(
-                    F.col(vec_col),
-                    F.array(*[F.lit(float(x)) for x in v]),
-                ),
-                6,
-            )
-            for v in seed_vecs
-        ]
-        return ds[0] if len(ds) == 1 else F.least(*ds)
-
     for r in range(rounds):
-        d2 = _d2_to(list(cand.values()))
+        d2 = _d2_min(vec_col, list(cand.values()))
         # phi summed as exact DECIMAL over the already-6-decimal
         # d2 values (the repo's decimal-sum discipline): a plain
         # double sum is partial-aggregation-order nondeterministic,
@@ -2264,10 +2281,8 @@ def kmeans_parallel_seeds(
 
     # weight candidates by attraction: nearest candidate per point,
     # ties to the lowest candidate id (broadcast argmin, one scan).
-    spark = embeddings.sparkSession
-    cand_df = spark.createDataFrame(
-        [(cid, vec) for cid, vec in cand.items()],
-        f"cell_id long, cvec array<double>",
+    cand_df = local_relation(
+        spark, list(cand.items()), "cell_id long, cvec array<double>"
     )
     weights = {
         int(row["cell_id"]): int(row["n"])
@@ -2304,9 +2319,8 @@ def kmeans_parallel_seeds(
         d2min = np.minimum(
             d2min, np.round(((mat - mat[nxt]) ** 2).sum(axis=1), 6)
         )
-    return spark.createDataFrame(
-        [(rank, ids[i]) for rank, i in enumerate(chosen)],
-        f"seed_rank long, {id_col} long",
+    return local_relation(
+        spark, [(rank, ids[i]) for rank, i in enumerate(chosen)], schema
     )
 
 
@@ -2352,17 +2366,16 @@ def _residual(v: Column, c: Column) -> Column:
     return F.zip_with(v, c, lambda a, b: a.cast("double") - b.cast("double"))
 
 
-def _residuals(rows, assign, cents, id_col, vec_col) -> DataFrame:
-    """``(id, cell_id, resid)``: every row's :func:`_residual` against
-    its assigned centroid — what IVF-PQ trains its codebooks on and
-    encodes. Persisted (``persist_tracked``): codebook training, the
-    encode and the cell lookup all read it; the build or append that
-    made it releases it when its write commits."""
+def _residuals(assigned, cents, id_col, vec_col) -> DataFrame:
+    """``(id, cell_id, resid)``: every :func:`_assigned` row's
+    :func:`_residual` against its centroid — what IVF-PQ trains its
+    codebooks on and encodes. Persisted (``persist_tracked``):
+    codebook training, the encode and the cell lookup all read it; the
+    build or append that made it releases it when its write commits."""
     from bigdata_elephant_spark.session import persist_tracked
 
     return persist_tracked(
-        rows.join(assign, id_col)
-        .join(F.broadcast(cents), "cell_id")
+        assigned.join(F.broadcast(cents), "cell_id")
         .select(
             id_col,
             "cell_id",
@@ -2464,27 +2477,55 @@ def pq_topk_batch(
         embeddings, cbooks, n_sub, sub_dim, id_col, vec_col
     )
     q = _query_vectors(embeddings, query_ids, id_col, vec_col)
-    single = len(set(query_ids)) == 1
     q_slices = q.select(
         "q_id", _sub_slices(F.col("_qvec"), n_sub, sub_dim, "qvec")
     ).select("q_id", "s.sub", "s.qvec")
-    lut = cbooks.join(F.broadcast(q_slices), "sub").select(
-        "q_id",
-        "sub",
+    return _adc_rerank(
+        codes, q_slices, cbooks, embeddings, q, shortlist, k, id_col,
+        vec_col, len(set(query_ids)) == 1,
+    )
+
+
+def _adc_rerank(
+    codes: DataFrame,
+    qslices: DataFrame,
+    codebooks: DataFrame,
+    source: DataFrame,
+    q,
+    shortlist: int,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    single: bool,
+) -> DataFrame:
+    """The ADC shortlist and exact re-rank of flat PQ and IVF-PQ:
+    each query's lookup table — its ``qslices`` ``(q_id, [cell_id,]
+    sub, qvec)`` dotted with every codebook entry of the subspace,
+    rounded to 6 decimals — joins the ``codes`` on every key the two
+    share (``(sub, code)`` flat, ``(q_id, cell_id, sub, code)`` over
+    IVF-PQ's fanned-out candidates); the sum per (query, vector) runs
+    in exact ``decimal(18,6)``, so addend order can never flip the
+    shortlist boundary. Self-matches dropped, each query's
+    ``shortlist`` best by (adc desc, id), then the exact cosine
+    re-rank of the shortlist against the raw vectors in ``source``
+    (a point-lookup join at scale) — both cuts :func:`_topk`."""
+    lut = codebooks.join(F.broadcast(qslices), "sub").select(
+        *[c for c in qslices.columns if c != "qvec"],
         F.col("code_id").alias("code"),
         F.round(_dot(F.col("cvec"), F.col("qvec")), 6)
         .cast("decimal(18,6)")
         .alias("pd"),
     )
+    keys = [c for c in lut.columns if c in codes.columns]
     short = _topk(
-        codes.join(F.broadcast(lut), ["sub", "code"])
+        codes.join(F.broadcast(lut), keys)
         .filter(F.col(id_col) != F.col("q_id"))
         .groupBy("q_id", id_col)
         .agg(F.sum("pd").alias("adc")),
         shortlist, [F.desc("adc"), F.asc(id_col)], single, "shortlist",
     ).select("q_id", id_col)
     return _exact_rerank(
-        embeddings.join(short, id_col), q, k, id_col, vec_col, single
+        source.join(short, id_col), q, k, id_col, vec_col, single
     )
 
 
@@ -2573,12 +2614,15 @@ def sq8_encode(
 ) -> DataFrame:
     """``(vec_id, codes: array<int>)`` — 4x smaller than float32 (the
     arrays would pack to 1 byte/dim in a binary sink; int keeps them
-    oracle-comparable). One scan, expression-only: the stats frame is
-    a 1-row broadcast cross join, the per-dim encode runs inside
-    codegen via a zip over the pre-zipped (min, step) pairs."""
+    oracle-comparable) — with ``cell_id`` kept when the rows carry it
+    (the index encoder's :func:`_assigned` rows). One scan,
+    expression-only: the stats frame is a 1-row broadcast cross join,
+    the per-dim encode runs inside codegen via a zip over the
+    pre-zipped (min, step) pairs."""
     st = F.arrays_zip(F.col("vmin"), F.col("vstep"))
     return embeddings.crossJoin(F.broadcast(stats)).select(
         id_col,
+        *[c for c in ("cell_id",) if c in embeddings.columns],
         F.zip_with(
             F.col(vec_col),
             st,
@@ -2589,12 +2633,13 @@ def sq8_encode(
     )
 
 
-def _sq8_recon(codes: Column, stats_zip: Column) -> Column:
-    """Decode: ``vmin + code*step`` per dimension (exactly two IEEE
-    ops, same shape both engines)."""
+def _sq8_recon(codes: Column) -> Column:
+    """Decode against the broadcast stats row's ``vmin``/``vstep``:
+    ``vmin + code*step`` per dimension (exactly two IEEE ops, same
+    shape both engines)."""
     return F.zip_with(
         codes,
-        stats_zip,
+        F.arrays_zip(F.col("vmin"), F.col("vstep")),
         lambda c, s: s.getField("vmin")
         + c.cast("double") * s.getField("vstep"),
     )
@@ -2606,11 +2651,9 @@ def sq8_topk_batch(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_cells: int | None = None,
-    n_probe: int = 4,
 ) -> DataFrame:
     """Asymmetric SQ8 top-k for a BATCH of queries →
-    ``(q_id, vec_id, sq8_sim)``: the SQ8 family's one core. The
+    ``(q_id, vec_id, sq8_sim)``: the flat SQ8 family's one core. The
     queries stay exact float; every database vector is scored from
     its decoded 8-bit reconstruction (the FAISS ``SQ8,Flat`` scan).
     The decode is QUERY-INDEPENDENT, so one encode+reconstruct pass
@@ -2618,16 +2661,8 @@ def sq8_topk_batch(
     ordering and the id tie-break are :func:`_exact_rerank`'s, but
     over the reconstruction — the honest compressed-domain ranking,
     quantization error included, which ``sq8_reconstruction_report``
-    then bounds.
-
-    With ``n_cells`` set this is the ``IVF{n},SQ8`` composition:
-    each query scores only the codes of its ``n_probe`` nearest
-    cells (:func:`ivf_topk_batch`'s probe — at scale, static
-    partition pruning over a cell_id layout). Both quantizers train
-    on the FULL table (FAISS semantics: pruning restricts
-    candidates, never the quantizers); the code table is 4x smaller
-    than the vectors, so the probed read is n_probe/n_cells of a
-    quarter of the raw bytes.
+    then bounds. The ``IVF{n},SQ8`` composition is
+    :func:`ivf_sq8_topk`.
 
     Zero-norm reconstructions are dropped before the division — a
     NONZERO vector whose every component lies within half a step of
@@ -2637,8 +2672,6 @@ def sq8_topk_batch(
     — excluding it is the ranking the exact scorer would give the
     true zero vector. Empty input returns the typed empty frame."""
     _search._check_count(k)
-    if n_cells is not None:
-        _search._check_count(n_probe, "n_probe")
     dim = _vec_dim(embeddings, vec_col)
     if dim is None:
         return embeddings.sparkSession.createDataFrame(
@@ -2647,26 +2680,12 @@ def sq8_topk_batch(
     stats = sq8_stats(embeddings, dim, vec_col)
     codes = sq8_encode(embeddings, stats, id_col, vec_col)
     q = _query_vectors(embeddings, query_ids, id_col, vec_col)
-    single = len(set(query_ids)) == 1
-    if n_cells is not None:
-        cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-        probes = _topk(
-            cents.crossJoin(F.broadcast(q)).select(
-                "q_id",
-                "cell_id",
-                F.round(_l2sq(F.col("cvec"), F.col("_qvec")), 6).alias("d"),
-            ),
-            n_probe, [F.col("d"), F.col("cell_id")], single, "n_probe",
-        ).select("q_id", "cell_id")
-        codes = codes.join(
-            ivf_assign(embeddings, cents, id_col, vec_col), id_col
-        ).join(F.broadcast(probes), "cell_id")
-    st = F.arrays_zip(F.col("vmin"), F.col("vstep"))
     recon = codes.crossJoin(F.broadcast(stats)).withColumn(
-        "_recon", _sq8_recon(F.col("codes"), st)
+        "_recon", _sq8_recon(F.col("codes"))
     )
     return _exact_rerank(
-        recon, q, k, id_col, "_recon", single, "sq8_sim"
+        recon, q, k, id_col, "_recon", len(set(query_ids)) == 1,
+        "sq8_sim",
     )
 
 
@@ -2694,11 +2713,17 @@ def ivf_sq8_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The ``IVF{n},SQ8`` factory composition → ``(vec_id,
-    sq8_sim)``: :func:`sq8_topk_batch` with coarse-quantizer cell
-    pruning, run as a batch of one."""
-    return sq8_topk_batch(
-        embeddings, [query_vec_id], k, id_col, vec_col,
-        n_cells=n_cells, n_probe=n_probe,
+    sq8_sim)``: :func:`_ivf_indexed_search` over an in-memory IVF,SQ8
+    handle (:meth:`AnnIndex.train`), run as a batch of one — each
+    query scores only the codes of its ``n_probe`` nearest cells (at
+    scale, static partition pruning over a cell_id layout). Both
+    quantizers train on the FULL table (FAISS semantics: pruning
+    restricts candidates, never the quantizers); the code table is 4x
+    smaller than the vectors, so the probed read is n_probe/n_cells
+    of a quarter of the raw bytes. Scoring is :func:`sq8_topk`'s."""
+    h = AnnIndex.train(embeddings, "ivfsq8", n_cells, id_col, vec_col)
+    return _ivf_indexed_search(
+        h, [query_vec_id], embeddings, n_probe, k, None
     ).drop("q_id")
 
 
@@ -2724,12 +2749,11 @@ def sq8_reconstruction_report(
         )
     stats = sq8_stats(embeddings, dim, vec_col)
     codes = sq8_encode(embeddings, stats, id_col, vec_col)
-    st = F.arrays_zip(F.col("vmin"), F.col("vstep"))
     err2 = F.round(
         F.aggregate(
             F.zip_with(
                 F.col(vec_col),
-                _sq8_recon(F.col("codes"), st),
+                _sq8_recon(F.col("codes")),
                 lambda x, r: (x.cast("double") - r)
                 * (x.cast("double") - r),
             ),
@@ -2845,9 +2869,10 @@ def ivfsq8_topk_indexed(
     identical to :func:`ivf_sq8_topk`, row-for-row
     (equivalence-tested); ``allowed`` composes filtered search on the
     pruned scan exactly like the IVF/IVF-PQ layouts."""
+    _check_counts(k, n_probe)
     return _ivf_indexed_search(
-        spark, index_path, [query_vec_id], source, n_probe, k, allowed,
-        id_col, vec_col, vec,
+        open_ann_index(spark, index_path, id_col, vec_col),
+        [query_vec_id], source, n_probe, k, allowed, vec,
     ).drop("q_id")
 
 
@@ -2927,24 +2952,25 @@ def ivfpq_topk_batch(
     cos_sim)``: coarse quantizer + product quantization of the
     RESIDUALS + ADC probe + exact re-rank — the full FAISS
     ``IVFx,PQy`` architecture, the standard shape for billion-vector
-    ANN, and the IVF-PQ family's one core. Composes the audited
-    pieces:
+    ANN: :func:`_ivf_indexed_search` over an in-memory IVF-PQ handle
+    (:meth:`AnnIndex.train`), the core :func:`ivfpq_topk_indexed`
+    runs over a saved one:
 
-    1. coarse: :func:`ivf_centroids` + :func:`ivf_assign` (broadcast
-       argmin; vectors never shuffle),
+    1. coarse: :func:`ivf_centroids`, collected once, and
+       :func:`_assigned` (broadcast argmin; vectors never shuffle),
     2. compress: residual ``v − centroid(cell)`` per vector, then
        :func:`pq_codebooks` / :func:`pq_encode` ON THE RESIDUALS —
        residuals are far more compressible than raw vectors, which
        is why IVFPQ quantizes them (Jégou et al., PQ for nearest
        neighbor search),
-    3. probe: each query's ``n_probe`` nearest cells; one LUT per
-       probed cell against the QUERY's residual in that cell
-       (``n_probe × n_sub × n_codes`` doubles per query — broadcast),
-       matched by a three-key equi-join on ``(cell_id, sub, code)``
-       (every equality in the join key: no per-row n_codes match
-       fan-out),
-    4. ADC shortlist in exact decimal, then exact cosine re-rank —
-       the probe, shortlist and final cuts are all :func:`_topk`.
+    3. probe: each query's ``n_probe`` nearest cells, on the driver;
+       one LUT per probed cell against the QUERY's residual in that
+       cell (``n_probe × n_sub × n_codes`` doubles per query —
+       broadcast), matched by an equi-join on ``(q_id, cell_id, sub,
+       code)`` (every equality in the join key: no per-row n_codes
+       match fan-out),
+    4. ADC shortlist in exact decimal, then exact cosine re-rank
+       (:func:`_adc_rerank`, shared with flat PQ).
 
     Corpus-sized work (assignment, residuals, PQ encode) is
     query-independent and paid once for the whole batch. At scale the
@@ -2953,54 +2979,12 @@ def ivfpq_topk_batch(
     :func:`ivfpq_topk_indexed`); raw vectors are read only for the
     ``shortlist`` point lookups.
     """
-    cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    assign = ivf_assign(embeddings, cents, id_col, vec_col)
-    # the build's encoder: codes with the cell_id of the PERSISTED
-    # residuals (their inner joins preserve the assignment row for
-    # row), so no second assign lineage recomputes the argmin pass
-    codes, side = _encode_pq(
-        embeddings, assign, cents, None,
-        dict(n_sub=n_sub, sub_dim=sub_dim, n_codes=n_codes), None,
-        id_col, vec_col,
+    h = AnnIndex.train(
+        embeddings, "ivfpq", n_cells, id_col, vec_col,
+        n_sub=n_sub, sub_dim=sub_dim, n_codes=n_codes,
     )
-    q = _query_vectors(embeddings, query_ids, id_col, vec_col)
-    single = len(set(query_ids)) == 1
-    probe = _topk(
-        cents.crossJoin(F.broadcast(q)).select(
-            "q_id",
-            "cell_id",
-            "cvec",
-            "_qvec",
-            F.round(_l2sq(F.col("cvec"), F.col("_qvec")), 6).alias("d"),
-        ),
-        n_probe, [F.col("d"), F.col("cell_id")], single, "n_probe",
-    )
-    qslices = probe.select(
-        "q_id",
-        "cell_id",
-        _sub_slices(
-            _residual(F.col("_qvec"), F.col("cvec")), n_sub, sub_dim,
-            "qvec",
-        ),
-    ).select("q_id", "cell_id", "s.sub", "s.qvec")
-    lut = side["codebooks"].join(F.broadcast(qslices), "sub").select(
-        "q_id",
-        "cell_id",
-        "sub",
-        F.col("code_id").alias("code"),
-        F.round(_dot(F.col("cvec"), F.col("qvec")), 6)
-        .cast("decimal(18,6)")
-        .alias("pd"),
-    )
-    short = _topk(
-        codes.join(F.broadcast(lut), ["cell_id", "sub", "code"])
-        .filter(F.col(id_col) != F.col("q_id"))
-        .groupBy("q_id", id_col)
-        .agg(F.sum("pd").alias("adc")),
-        shortlist, [F.desc("adc"), F.asc(id_col)], single, "shortlist",
-    ).select("q_id", id_col)
-    return _exact_rerank(
-        embeddings.join(short, id_col), q, k, id_col, vec_col, single
+    return _ivf_indexed_search(
+        h, query_ids, embeddings, n_probe, k, None, shortlist=shortlist
     )
 
 
@@ -3117,9 +3101,10 @@ def ivfpq_topk_indexed(
     lookups at scale). The PQ geometry comes from the index, so the
     query needs no training parameters. Scoring is identical to
     :func:`ivfpq_topk`, row-for-row (equivalence-tested)."""
+    _check_counts(k, n_probe, shortlist)
     return _ivf_indexed_search(
-        spark, index_path, [query_vec_id], source, n_probe, k, allowed,
-        id_col, vec_col, shortlist=shortlist,
+        open_ann_index(spark, index_path, id_col, vec_col),
+        [query_vec_id], source, n_probe, k, allowed, shortlist=shortlist,
     ).drop("q_id")
 
 
@@ -3150,8 +3135,9 @@ def ivf_probe_recall_sweep(
     4. hits against the exact cosine top-k (one corpus pass via
        :func:`cosine_topk_batch`'s construction), pooled per level.
 
-    Corpus-sized work: one assignment pass + one scored candidate
-    pass + the exact baseline — independent of ``max_probe``; the
+    Corpus-sized work: one assignment pass (:func:`_assigned`, which
+    carries the vectors) + one scored candidate pass + the exact
+    baseline — independent of ``max_probe``; the
     replication factor applies only to candidate SCORES (a k-free
     column slice), not to vectors.
     """
@@ -3173,15 +3159,12 @@ def ivf_probe_recall_sweep(
         .filter(F.col("crank") <= max_probe)
         .select("q_id", "cell_id", "crank")
     )
-    assigned = ivf_assign(embeddings, cents, id_col, vec_col)
     scored = (
-        embeddings.withColumn(
-            "_nrm", F.sqrt(_norm2(F.col(vec_col)))
-        )
+        _assigned(embeddings, cents, id_col, vec_col)
+        .withColumn("_nrm", F.sqrt(_norm2(F.col(vec_col))))
         # zero-norm guard on the data side (_exact_rerank contract);
         # norm projected once, reused by the score
         .filter(F.col("_nrm") > 0)
-        .join(assigned, id_col)
         .join(F.broadcast(cell_rank), "cell_id")
         .join(F.broadcast(q), "q_id")
         .filter(F.col(id_col) != F.col("q_id"))
@@ -3306,10 +3289,21 @@ def embedding_novelty_admission(
         )
     )
     nn = scored.groupBy("q_id").agg(F.max("sim").alias("nn_sim"))
-    # Alias the aggregated side's key before the self-derived join
-    # (both frames descend from `delta`; an unaliased equi-join
-    # raises AMBIGUOUS_SELF_JOIN).
-    nn = nn.select(F.col("q_id").alias("_nnid"), "nn_sim")
+    return _novelty_verdict(
+        q, nn.select(F.col("q_id").alias("_nnid"), "nn_sim"), threshold,
+        id_col,
+    )
+
+
+def _novelty_verdict(
+    q: DataFrame, nn: DataFrame, threshold: float, id_col: str
+) -> DataFrame:
+    """The admission verdict of both novelty gates → ``(vec_id,
+    nn_sim, admit)``: every query of ``q`` LEFT-joined to its nearest
+    similarity in ``nn`` ``(_nnid, nn_sim)`` — the key aliased, since
+    both sides descend from the delta and an unaliased equi-join
+    raises AMBIGUOUS_SELF_JOIN — admitted below ``threshold`` or
+    when it has no neighbor (maximal novelty)."""
     return (
         q.select("q_id")
         .join(nn, F.col("q_id") == F.col("_nnid"), "left")
@@ -3364,82 +3358,59 @@ def embedding_novelty_indexed(
     RE-INGESTED under an id already indexed must score against its
     own index row (``nn_sim`` 1.0 → reject) exactly as the exact
     ``embedding_novelty_admission`` gate and the replayed oracle
-    score it (r10 ADVICE).
+    score it (r10 ADVICE). The index is read through the session's
+    :func:`open_ann_index` handle (its ``centroids`` and ``live``
+    rows, zero norms already dropped); novelty scores raw vectors, so
+    an IVF,SQ8 or IVF-PQ index raises ``ValueError``.
     """
     from bigdata_elephant_spark.session import maybe_broadcast
 
+    h = open_ann_index(spark, index_path, id_col, vec_col)
+    if h.kind != "ivf":
+        raise ValueError(
+            f"embedding_novelty_indexed: index at {index_path!r} is "
+            f"kind={h.kind!r}; novelty scores raw vectors, which only "
+            "a plain IVF index stores"
+        )
     q = _query_vectors(delta, None, id_col, vec_col)
-    verdict = lambda nn: (  # noqa: E731 — shared verdict projection
-        q.select("q_id")
-        .join(nn, F.col("q_id") == F.col("_nnid"), "left")
-        .select(
-            F.col("q_id").alias(id_col),
-            "nn_sim",
-            F.coalesce(
-                F.col("nn_sim") < F.lit(threshold), F.lit(True)
-            ).alias("admit"),
+    # every row tombstoned + compacted: the empty index, no neighbor
+    nn = local_relation(spark, [], "_nnid long, nn_sim double")
+    if h.live is not None:
+        w_p = Window.partitionBy("q_id").orderBy(
+            F.col("d").asc(), F.col("cell_id").asc()
         )
-    )
-    # centroids first: a bogus index path must raise, not read as
-    # the legitimately-empty compacted index (_ivf_indexed_search rule)
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    vecs = _index_rows(spark, index_path, "vectors", id_col)
-    if vecs is None:  # every row tombstoned + compacted: empty index
-        empty_nn = spark.createDataFrame(
-            [], "_nnid long, nn_sim double"
+        probes = (
+            h.centroids.crossJoin(maybe_broadcast(q, size_of=delta))
+            .select(
+                "q_id",
+                "cell_id",
+                F.round(_l2sq(F.col("cvec"), F.col("_qvec")), 6).alias(
+                    "d"
+                ),
+            )
+            .withColumn("_rn", F.row_number().over(w_p))
+            .filter(F.col("_rn") <= n_probe)
+            .select("q_id", "cell_id")
         )
-        return verdict(empty_nn)
-    w_p = Window.partitionBy("q_id").orderBy(
-        F.col("d").asc(), F.col("cell_id").asc()
-    )
-    probes = (
-        cents.crossJoin(maybe_broadcast(q, size_of=delta))
-        .select(
-            "q_id",
-            "cell_id",
-            F.round(_l2sq(F.col("cvec"), F.col("_qvec")), 6).alias(
-                "d"
-            ),
+        # union of probed cells: index METADATA (<= n_cells ints) —
+        # the static partition filter on the cell-partitioned layout,
+        # the same pruning as the IVF core's candidate stage
+        cell_union = [
+            r["cell_id"]
+            for r in probes.select("cell_id").distinct().collect()
+        ]
+        nn = (
+            h.live.filter(F.col("cell_id").isin(cell_union))
+            .join(maybe_broadcast(probes, size_of=delta), "cell_id")
+            .join(maybe_broadcast(q, size_of=delta), "q_id")
+            .groupBy("q_id")
+            .agg(F.max(_cos6(
+                F.col(vec_col), F.col("_qvec"), F.col("_nrm"),
+                F.col("_qnrm"),
+            )).alias("nn_sim"))
+            .select(F.col("q_id").alias("_nnid"), "nn_sim")
         )
-        .withColumn("_rn", F.row_number().over(w_p))
-        .filter(F.col("_rn") <= n_probe)
-        .select("q_id", "cell_id")
-    )
-    # NOTE r15: the probe table (<= |delta| x n_probe id pairs) is
-    # already collected below for the cell union, so it could re-
-    # enter the plan as a LocalRelation and spare the second run of
-    # the cents-crossJoin-window lineage under the scored join — an
-    # identified optimization deliberately NOT taken this round: it
-    # changes this query's executed definition and the r15 gate
-    # window had no slot left after the mandatory r9 drain (changed
-    # queries must gate the round they ship).
-    #
-    # union of probed cells: index METADATA (<= n_cells ints) —
-    # becomes the static partition filter on the cell-partitioned
-    # layout, the same pruning as the IVF core's candidate stage
-    cell_union = [
-        r["cell_id"]
-        for r in probes.select("cell_id").distinct().collect()
-    ]
-    scored = (
-        vecs.filter(F.col("cell_id").isin(cell_union))
-        .filter(_norm2(F.col(vec_col)) > 0)
-        .join(maybe_broadcast(probes, size_of=delta), "cell_id")
-        .join(maybe_broadcast(q, size_of=delta), "q_id")
-        .select(
-            "q_id",
-            _cos6(
-                F.col(vec_col), F.col("_qvec"),
-                F.sqrt(_norm2(F.col(vec_col))), F.col("_qnrm"),
-            ).alias("sim"),
-        )
-    )
-    nn = (
-        scored.groupBy("q_id")
-        .agg(F.max("sim").alias("nn_sim"))
-        .select(F.col("q_id").alias("_nnid"), "nn_sim")
-    )
-    return verdict(nn)
+    return _novelty_verdict(q, nn, threshold, id_col)
 
 
 def power_iteration_top_eigvec(
@@ -3477,8 +3448,8 @@ def power_iteration_top_eigvec(
         (i, float(Decimal(xi).scaleb(-6)), eig)
         for i, xi in enumerate(x)
     ]
-    return spark.createDataFrame(
-        rows, "i int, v double, eigval double"
+    return local_relation(
+        spark, rows, "i int, v double, eigval double"
     ).orderBy("i")
 
 

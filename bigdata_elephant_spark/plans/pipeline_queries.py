@@ -1763,12 +1763,9 @@ def q_sq8_recall_report(
     ex = cosine_topk_batch(emb, BATCH_QUERY_IDS, k=BATCH_K)
     stats = sq8_stats(emb, _vec_dim(emb, "embedding"))
     codes = sq8_encode(emb, stats)
-    st = F.arrays_zip(F.col("vmin"), F.col("vstep"))
     recon = (
         codes.crossJoin(F.broadcast(stats))
-        .select(
-            "vec_id", _sq8_recon(F.col("codes"), st).alias("_rv")
-        )
+        .select("vec_id", _sq8_recon(F.col("codes")).alias("_rv"))
         .withColumn("_nrm", F.sqrt(_norm2(F.col("_rv"))))
         .filter(F.col("_nrm") > 0)
     )

@@ -93,10 +93,11 @@ def release_caches() -> None:
 
 
 def local_relation(
-    spark: SparkSession, rows: list[tuple], schema: StructType
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
 ) -> DataFrame:
     """``spark.createDataFrame(rows, schema)`` as a ``LocalRelation``,
-    for results computed on the driver.
+    for results computed on the driver. ``schema`` is a ``StructType``
+    or a DDL string such as ``"id long, v double"``.
 
     In PySpark classic a list of tuples becomes a ``LogicalRDD``: every
     action on it runs a Python-worker job (about 0.4 s for 1,000 rows
@@ -106,7 +107,10 @@ def local_relation(
     plans on real statistics. Columns keep ``schema``'s nullability."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
 
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
     arrow = to_arrow_schema(schema)
     cols = list(zip(*rows)) or [()] * len(arrow)
     table = pa.Table.from_arrays(

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -18,6 +19,25 @@ TABLES = (
 def spark():
     s = get_spark("elephant-tests", cpus=8, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)``: the Spark jobs ``fn()`` runs, counted by the
+    status tracker under a job group of its own."""
+
+    def count(fn) -> int:
+        sc = spark.sparkContext
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job budget")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -4,7 +4,6 @@ them) must produce the same ranking as the inline pipeline."""
 from __future__ import annotations
 
 import io
-import uuid
 
 import pytest
 
@@ -42,20 +41,6 @@ def _run(spark, argv):
     buf = io.StringIO()
     assert main(argv, spark=spark, out=buf) == 0
     return buf.getvalue()
-
-
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn()`` runs, counted by the status tracker under
-    a job group of its own."""
-    sc = spark.sparkContext
-    group = f"cli-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job budget")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _parse(out: str) -> list[dict]:
@@ -236,7 +221,9 @@ def test_cli_ann_pq_build_then_query(spark, sf_dir, tmp_path):
     ]
 
 
-def test_cli_ann_vec_dim_validation(spark, sf_dir, tmp_path, capsys):
+def test_cli_ann_vec_dim_validation(
+    spark, sf_dir, tmp_path, capsys, count_jobs
+):
     """ann-build writes a manifest.json; ann-query --vec validates
     the literal vector's dimension against it with a plain file read
     (no Spark job per query), falls back to one centroids footer
@@ -300,7 +287,7 @@ def test_cli_ann_vec_dim_validation(spark, sf_dir, tmp_path, capsys):
                 main(argv, spark=spark, out=io.StringIO())
             assert exc.value.code == 2, argv
 
-        assert _jobs(spark, usage_error) == 0, argv
+        assert count_jobs(usage_error) == 0, argv
         assert message in capsys.readouterr().err, argv
 
     # pre-manifest dir: the footer fallback still catches it
@@ -571,7 +558,7 @@ def test_cli_ann_batch_matches_single_queries(spark, sf_dir, tmp_path, layout):
 
 
 @pytest.mark.parametrize("layout", sorted(LAYOUT_FLAGS))
-def test_cli_ann_job_budget(spark, sf_dir, tmp_path, layout):
+def test_cli_ann_job_budget(spark, sf_dir, tmp_path, layout, count_jobs):
     """A warm `ann-query` runs at most WARM_ANN_QUERY_MAX_JOBS Spark
     jobs with `--vec` on a plain IVF index, and at most the
     WARM_QUANTIZED_QUERY_MAX_JOBS pins on the quantized layouts;
@@ -595,12 +582,12 @@ def test_cli_ann_job_budget(spark, sf_dir, tmp_path, layout):
         query = ["ann-query", "--index", idx, "-k", "5", *src,
                  f"--vec={vec}" if form == "--vec" else "--vec-id=5"]
         _run(spark, query)  # warm-up
-        jobs = _jobs(spark, lambda: _run(spark, query))
+        jobs = count_jobs(lambda: _run(spark, query))
         assert 0 < jobs <= bound, (form, jobs)
 
     def batch(n):
         ids = ",".join(str(i) for i in range(n))
-        return _jobs(spark, lambda: _run(spark, [
+        return count_jobs(lambda: _run(spark, [
             "ann-batch", "--index", idx, "--vec-ids", ids, "-k", "5",
             *src,
         ]))
@@ -613,7 +600,9 @@ def test_cli_ann_job_budget(spark, sf_dir, tmp_path, layout):
 
 
 @pytest.mark.parametrize("layout", sorted(LAYOUT_FLAGS))
-def test_cli_ann_write_job_budget(spark, sf_dir, tmp_path, layout):
+def test_cli_ann_write_job_budget(
+    spark, sf_dir, tmp_path, layout, count_jobs
+):
     """`ann-build` and one `ann-add` run at most their ANN_WRITE_JOBS
     pins: a build or append path that re-read its input or added a
     pass per layout would push the count over."""
@@ -628,8 +617,8 @@ def test_cli_ann_write_job_budget(spark, sf_dir, tmp_path, layout):
     argv = ["ann-build", "--embeddings", emb_path, "--out", idx,
             "--cells", "8", *LAYOUT_FLAGS[layout]]
     _run(spark, argv)  # warm-up
-    build = _jobs(spark, lambda: _run(spark, argv))
-    add = _jobs(spark, lambda: _run(spark, [
+    build = count_jobs(lambda: _run(spark, argv))
+    add = count_jobs(lambda: _run(spark, [
         "ann-add", "--index", idx, "--embeddings", delta,
     ]))
     pin_build, pin_add = ANN_WRITE_JOBS[layout]

@@ -456,27 +456,11 @@ def test_duplicate_groups_driver_path_max_iter_truncation(spark):
         assert fast == slow, cap
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn()`` runs, counted by the status tracker under
-    a job group of its own."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"dedup-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job budget")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _plan_node(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
 
 
-def test_duplicate_groups_driver_result_is_job_free(spark):
+def test_duplicate_groups_driver_result_is_job_free(spark, count_jobs):
     """The driver path's groups are a LocalRelation: collecting them
     runs no Spark job."""
     from bigdata_elephant_spark.operators.dedup import duplicate_groups
@@ -488,7 +472,7 @@ def test_duplicate_groups_driver_result_is_job_free(spark):
     assert _plan_node(groups) == "LocalRelation"
     assert [f.nullable for f in groups.schema] == [False, False]
     rows = []
-    assert _jobs(spark, lambda: rows.extend(groups.collect())) == 0
+    assert count_jobs(lambda: rows.extend(groups.collect())) == 0
     assert sorted(map(tuple, rows)) == [
         (1, 1), (2, 1), (3, 1), (10, 10), (11, 10)
     ]
@@ -521,7 +505,7 @@ def test_duplicate_groups_gate_boundary(spark):
 DEDUP_PASS_JOBS = 15
 
 
-def test_dedup_pass_job_budget(spark, sf_dir):
+def test_dedup_pass_job_budget(spark, sf_dir, count_jobs):
     """One dedup pass runs at most DEDUP_PASS_JOBS jobs: a groups step
     that re-ran the candidate join or added a count would push the
     count over."""
@@ -539,5 +523,5 @@ def test_dedup_pass_job_budget(spark, sf_dir):
         release_caches()
 
     dedup_pass()  # warm-up
-    jobs = _jobs(spark, dedup_pass)
+    jobs = count_jobs(dedup_pass)
     assert 0 < jobs <= DEDUP_PASS_JOBS, jobs

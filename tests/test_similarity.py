@@ -480,8 +480,11 @@ def test_ivfpq_indexed_matches_inline(spark, sf_dir):
 
 # family -> (single-query call, batch call, score column); the IVF
 # calls probe 3 of 8 cells, the inline PQ calls shortlist 20 and the
-# indexed IVF-PQ calls the batch reader's 50; the indexed families
-# read the module's ann_indexes, with the queries from the source
+# indexed IVF-PQ calls the batch reader's 50. Every IVF family, inline
+# or indexed, is the one core _ivf_indexed_search: the inline ones
+# over a handle AnnIndex.train builds in memory (the inline IVF,SQ8
+# batch calls the core directly, as ivf_sq8_topk does), the indexed
+# ones over the module's ann_indexes, with the queries from the source
 _ZERO_ID, _ABSENT_ID = 10_000, 20_000
 _INDEXES: dict[str, str] = {}
 
@@ -528,8 +531,9 @@ _FAMILIES = {
         lambda e, i: similarity.ivf_sq8_topk(
             e, i, n_cells=8, n_probe=3, k=5
         ),
-        lambda e, ids: similarity.sq8_topk_batch(
-            e, ids, k=5, n_cells=8, n_probe=3
+        # the core ivf_sq8_topk runs, over the same in-memory handle
+        lambda e, ids: similarity._ivf_indexed_search(
+            similarity.AnnIndex.train(e, "ivfsq8", 8), ids, e, 3, 5, None
         ),
         "sq8_sim",
     ),
@@ -645,6 +649,63 @@ def test_core_cuts_follow_batch_size(spark, sf_dir, ann_indexes, family):
     assert "WindowGroupLimit" in plan([0, 3, 7, 11])
 
 
+# Measured on the tier-1 fixture (8 cells, probe 3): the Spark jobs of
+# building and collecting one inline IVF-family query through the
+# shared core — the centroid collect, the query collect and the scored
+# collect's stages, plus IVF,SQ8's dimension read and range stats, and
+# IVF-PQ's persisted residuals and codebook training. The Spark-side
+# probes they replace counted 6, 7, 10 and 16.
+INLINE_IVF_JOBS = {
+    "ivf_topk": 6,
+    "ivf_topk_batch": 7,
+    "ivf_sq8_topk": 9,
+    "ivfpq_topk": 17,
+}
+_INLINE_IVF = {
+    "ivf_topk": lambda e: similarity.ivf_topk(e, 3, 8, 3, 5),
+    "ivf_topk_batch": lambda e: similarity.ivf_topk_batch(
+        e, [0, 3, 7], 8, 3, 5
+    ),
+    "ivf_sq8_topk": lambda e: similarity.ivf_sq8_topk(e, 3, 8, 3, 5),
+    "ivfpq_topk": lambda e: similarity.ivfpq_topk(
+        e, 3, 8, 3, shortlist=20, k=5
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(INLINE_IVF_JOBS))
+def test_inline_ivf_job_budget(spark, sf_dir, count_jobs, name):
+    """An inline IVF-family query runs at most its INLINE_IVF_JOBS pin:
+    a second probe, assignment or training pass would push it over."""
+    from bigdata_elephant_spark.session import release_caches
+    from bigdata_elephant_spark.sources.corpus import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    _INLINE_IVF[name](emb).collect()  # warm-up
+    release_caches()  # no residual cache left from the warm-up
+    jobs = count_jobs(lambda: _INLINE_IVF[name](emb).collect())
+    release_caches()
+    assert 0 < jobs <= INLINE_IVF_JOBS[name], jobs
+
+
+@pytest.mark.parametrize("name", ["ivf_topk_batch", "ivf_sq8_topk"])
+def test_inline_ivf_plan_prunes_without_self_join(spark, sf_dir, name):
+    """The optimized plan of an inline IVF query holds the static
+    ``cell_id IN (...)`` filter of the driver probe and no join of the
+    corpus back to itself on ``vec_id``: the assignment carries each
+    row through its aggregate."""
+    import re
+
+    from bigdata_elephant_spark.sources.corpus import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    plan = _INLINE_IVF[name](emb)._jdf.queryExecution().optimizedPlan()
+    text = plan.toString()
+    assert re.search(r"cell_id#\d+L? IN \(", text), text
+    joins = re.findall(r"Join \w+.*", text)
+    assert not [j for j in joins if "vec_id#" in j], joins
+
+
 def test_ivf_batch_indexed_matches_inline_batch(spark, sf_dir, tmp_path):
     """The indexed batch scorer is the inline batch scorer over the
     materialized layout — identical rows per query, and the whole
@@ -708,7 +769,8 @@ def test_ivf_batch_indexed_matches_inline_batch(spark, sf_dir, tmp_path):
             ).collect()
         else:  # the batch shape of the core, with a filter
             batch = sim._ivf_indexed_search(
-                spark, path, qids, source, n_probe, k, filt
+                sim.open_ann_index(spark, path), qids, source, n_probe, k,
+                filt,
             ).collect()
         want = per_query(batch)
         for q in qids:
@@ -1608,9 +1670,8 @@ def test_sq8_constant_dimension_roundtrip(spark):
     ).repartition(2)
     stats = sim.sq8_stats(emb, 2)
     codes = sim.sq8_encode(emb, stats)
-    st = F.arrays_zip(F.col("vmin"), F.col("vstep"))
     recon = codes.crossJoin(F.broadcast(stats)).select(
-        "vec_id", sim._sq8_recon(F.col("codes"), st).alias("rv")
+        "vec_id", sim._sq8_recon(F.col("codes")).alias("rv")
     ).collect()
     for r in recon:
         assert r["rv"][1] == 7.5  # constant dim reconstructs exactly
@@ -2229,8 +2290,8 @@ def test_counts_rejected_at_entry(spark, sf_dir, tmp_path):
         ("n_probe", lambda: sim.ivfsq8_topk_indexed(
             spark, nowhere, 0, emb, n_probe=0)),
         ("k", lambda: sim.sq8_topk(emb.limit(0), 3, k=-1)),
-        ("n_probe", lambda: sim.sq8_topk_batch(
-            emb.limit(0), [3], n_cells=4, n_probe=0)),
+        ("n_probe", lambda: sim.ivf_sq8_topk(
+            emb.limit(0), 3, n_cells=4, n_probe=0)),
     ]:
         with pytest.raises(ValueError, match=f"{name} must be >= "):
             call()

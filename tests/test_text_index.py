@@ -6,7 +6,6 @@ warm CLI query stays within its Spark job budget."""
 from __future__ import annotations
 
 import io
-import uuid
 
 import pytest
 
@@ -53,20 +52,6 @@ def _no_open_handles():
     S.close_text_indexes()
     yield
     S.close_text_indexes()
-
-
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn()`` runs, counted by the status tracker under
-    a job group of its own."""
-    sc = spark.sparkContext
-    group = f"text-index-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job budget")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _cached(df) -> bool:
@@ -235,7 +220,7 @@ def test_handles_over_one_index_share_doc_lengths(
     assert _cached(b.dl)
 
 
-def test_batch_reuses_open_meta_handle(spark, artifacts):
+def test_batch_reuses_open_meta_handle(spark, artifacts, count_jobs):
     """A CLI `batch` over the vocab and index of an open `query --meta`
     handle reuses it (`query_batch` reads no metadata): its first run
     costs what a warm one does — no second open re-reading both
@@ -249,8 +234,8 @@ def test_batch_reuses_open_meta_handle(spark, artifacts):
              "the good person", "hash join", "spark table", "join",
              "person"]
     out = []
-    first = _jobs(spark, lambda: out.append(_run(spark, batch)))
-    warm = _jobs(spark, lambda: out.append(_run(spark, batch)))
+    first = count_jobs(lambda: out.append(_run(spark, batch)))
+    warm = count_jobs(lambda: out.append(_run(spark, batch)))
     assert first == warm, (first, warm)
     assert [k for k in S._TEXT_INDEXES if k[1] == i] == [(v, i, m)]
     S.close_text_indexes()
@@ -286,7 +271,7 @@ def test_release_caches_closes_handles(spark, artifacts):
     assert h2 is not h and _cached(h2.dl)
 
 
-def test_warm_bm25_query_job_budget(spark, artifacts):
+def test_warm_bm25_query_job_budget(spark, artifacts, count_jobs):
     """A warm CLI BM25 query runs at most WARM_QUERY_MAX_JOBS Spark
     jobs, counted under this test's own job group: a per-query pass
     over the whole postings table (doc lengths, N) or per-query
@@ -296,7 +281,7 @@ def test_warm_bm25_query_job_budget(spark, artifacts):
             "--scoring", "bm25", "-k", "10"]
     _run(spark, [*argv, "the good person"])  # opens the handle
     rows = []
-    jobs = _jobs(spark, lambda: rows.extend(
+    jobs = count_jobs(lambda: rows.extend(
         _parse(_run(spark, [*argv, "spark table join"]))
     ))
     assert rows
