@@ -806,7 +806,10 @@ def _assigned(
     corpus-sized exchange inputs plus a sort-merge join (r15: warm A/B
     1.53 → 1.44 s min at sf0.1, rows bit-identical). Relies on
     ``id_col`` being unique (the embeddings table's contract, as
-    everywhere in this module)."""
+    everywhere in this module): a repeated id keeps one row. The
+    in-memory indexes (:meth:`AnnIndex.train`) assign with it; the
+    index writes, which must store every row they are given, use
+    :func:`_joined_assignment`."""
     rest = [c for c in rows.columns if c != id_col]
     scored = rows.crossJoin(F.broadcast(centroids)).select(
         *rows.columns,
@@ -836,6 +839,16 @@ def ivf_assign(
     )
 
 
+def _joined_assignment(rows, centroids, id_col, vec_col) -> DataFrame:
+    """The index writes' assignment: ``rows`` joined on id to their
+    :func:`ivf_assign` cells, so every input row is kept, also when a
+    build input or an append delta repeats an id (FAISS
+    ``add_with_ids`` stores each row it is given); the copies of a
+    repeated id share one cell, the nearest to any of them.
+    :func:`_assigned` would keep one row per id."""
+    return rows.join(ivf_assign(rows, centroids, id_col, vec_col), id_col)
+
+
 def ivf_topk_batch(
     embeddings: DataFrame,
     query_ids: list[int],
@@ -863,6 +876,7 @@ def ivf_topk_batch(
     ``allowed`` is filtered search with :func:`ivf_topk`'s semantics:
     the candidates semi-join the allowed ids, the probe geometry is
     unchanged."""
+    _check_counts(k, n_probe)
     h = AnnIndex.train(embeddings, "ivf", n_cells, id_col, vec_col)
     return _ivf_indexed_search(
         h, query_ids, embeddings, n_probe, k, allowed
@@ -1316,8 +1330,9 @@ def _gate_build_input(
 # Every layout is a coarse quantizer (``centroids``), one
 # cell_id-partitioned corpus table and the layout's quantizer side
 # tables. A build and an append share everything but the ENCODER,
-# which turns the rows, assigned once (:func:`_assigned`, so they
-# already carry ``cell_id``), into corpus-table rows:
+# which turns the rows, assigned once (:func:`_joined_assignment` on
+# a write, :func:`_assigned` in memory, so they already carry
+# ``cell_id``), into corpus-table rows:
 # ``encode(rows, assigned, cents, path, man, stored, id_col, vec_col)``
 # → ``(rows with cell_id, side tables)``; ``rows`` are the same rows
 # before the assignment, which the quantizers train and range-check
@@ -1389,7 +1404,9 @@ def _encode_sq8(rows, assigned, cents, path, man, stored, id_col, vec_col):
                 "build_ivfsq8_index over base+delta (FAISS retrains the "
                 "scalar quantizer on rebuild for the same reason)."
             )
-    codes = sq8_encode(assigned, stats, id_col, vec_col)
+    codes = sq8_encode(
+        assigned.select(id_col, vec_col, "cell_id"), stats, id_col, vec_col
+    )
     return codes, {"sq8_stats": stats}
 
 
@@ -1433,12 +1450,12 @@ def _build_index(
     """The one build of every :data:`_LAYOUTS` kind (the
     ``build_*_index`` functions and the CLI ``ann-build``): gate the
     input (:func:`_gate_build_input`), train the coarse quantizer
-    (:func:`ivf_centroids`), assign every row once (:func:`_assigned`)
-    and let the layout's encoder train its quantizer and encode. Then
-    write the corpus table partitioned by ``cell_id``, the centroids
-    and the side tables, and commit ``manifest.json`` (``kind``,
-    ``dim``, ``n_cells`` and the layout's ``geom``, IVF-PQ's
-    ``n_sub``/``sub_dim``/``n_codes``). A build starts a new index
+    (:func:`ivf_centroids`), assign every row once
+    (:func:`_joined_assignment`) and let the layout's encoder train its
+    quantizer and encode. Then write the corpus table partitioned by
+    ``cell_id``, the centroids and the side tables, and commit
+    ``manifest.json`` (``kind``, ``dim``, ``n_cells`` and the layout's
+    ``geom``, IVF-PQ's ``n_sub``/``sub_dim``/``n_codes``). A build starts a new index
     lifetime: the manifest has no ``tables`` pointer
     (:func:`_verify_pointer_reset`), and older generations and pending
     tombstones are expired. What the build persisted (IVF-PQ's
@@ -1452,7 +1469,8 @@ def _build_index(
     with scoped_caches():
         cents = ivf_centroids(embeddings, n_cells, id_col, vec_col)
         rows, side = encode(
-            embeddings, _assigned(embeddings, cents, id_col, vec_col),
+            embeddings,
+            _joined_assignment(embeddings, cents, id_col, vec_col),
             cents, path, man, None, id_col, vec_col,
         )
         (
@@ -1507,7 +1525,8 @@ def _append_to_index(
     stored = {t: spark.read.parquet(f"{path}/{t}") for t in side}
     with scoped_caches():
         rows, _ = encode(
-            delta, _assigned(delta, cents, id_col, vec_col), cents, path,
+            delta, _joined_assignment(delta, cents, id_col, vec_col),
+            cents, path,
             read_index_manifest(path) or {}, stored, id_col, vec_col,
         )
         (
@@ -1679,11 +1698,11 @@ def compact_index(spark, path: str) -> None:
         _expire_versions(path, "tombstones", keep=(tcur,))
 
 
-def _driver_vectors(df: DataFrame, id_name: str, vec_name: str) -> list:
+def _driver_vectors(tbl, id_name: str, vec_name: str) -> list:
     """``[(id, vector)]`` of a metadata-sized frame (centroids, a
-    query batch), collected once over Arrow. ``array<float>`` widens
-    to double exactly; a null vector or element stays ``None``."""
-    tbl = df.select(id_name, vec_name).toArrow()
+    query batch) collected once to the Arrow table ``tbl``.
+    ``array<float>`` widens to double exactly; a null vector or
+    element stays ``None``."""
     return list(zip(
         tbl.column(id_name).to_pylist(), tbl.column(vec_name).to_pylist()
     ))
@@ -1821,7 +1840,7 @@ class AnnIndex:
         # the read error, not be mistaken for the (legitimate) empty
         # generation a delete-everything compaction leaves behind
         centroids = spark.read.parquet(f"{path}/centroids")
-        cents = _driver_vectors(centroids, "cell_id", "cvec")
+        cents = _driver_vectors(centroids.toArrow(), "cell_id", "cvec")
         table, side, _ = _LAYOUTS[kind]
         return cls(
             spark, kind, index_dim(spark, path), (id_col, vec_col),
@@ -1848,7 +1867,7 @@ class AnnIndex:
         on an empty input that is the empty index."""
         spark = embeddings.sparkSession
         seeds = ivf_centroids(embeddings, n_cells, id_col, vec_col)
-        cents = _driver_vectors(seeds, "cell_id", "cvec")
+        cents = _driver_vectors(seeds.toArrow(), "cell_id", "cvec")
         centroids = local_relation(spark, cents, seeds.schema)
         dim = _vec_dim(embeddings, vec_col) if kind == "ivfsq8" else None
         man = dict(kind=kind, dim=dim, n_cells=n_cells, **geom)
@@ -1894,8 +1913,9 @@ def close_ann_indexes() -> None:
 
 def _check_counts(k: int, n_probe: int, shortlist: int = 50) -> None:
     """``ValueError`` for an out-of-range ``k``, ``n_probe`` or
-    ``shortlist``: the IVF core checks them, and each indexed reader
-    before it opens any index file."""
+    ``shortlist``: every caller of :func:`_ivf_indexed_search` checks
+    them first — an indexed reader before it opens any index file, an
+    inline query before it trains anything."""
     _search._check_count(k)
     _search._check_count(n_probe, "n_probe")
     _search._check_count(shortlist, "shortlist")
@@ -1921,7 +1941,8 @@ def _ivf_indexed_search(
        to float32, its norm a driver double, and enters the plan as
        one ``array(CAST(… AS FLOAT), …)`` SQL literal; otherwise the
        :func:`_query_vectors` frame over ``source`` (plain IVF: the
-       live rows when None), collected once and broadcast;
+       live rows when None), collected once and re-entered as a
+       ``LocalRelation``, so scoring does not scan ``source`` again;
     2. probe — :func:`_probe_cells` on the driver;
     3. candidates — :func:`_probe_candidates` over the live rows;
 
@@ -1935,9 +1956,9 @@ def _ivf_indexed_search(
     vectors in ``source``. The quantized layouts hold codes only, so
     their stored-id queries, and IVF-PQ's re-rank, need ``source``.
     An empty index and zero-norm or absent queries give the typed
-    empty frame. Bad counts (:func:`_check_counts`), and a ``vec`` of
-    the wrong length or not finite in float32, raise ``ValueError``."""
-    _check_counts(k, n_probe, shortlist)
+    empty frame. A ``vec`` of the wrong length or not finite in
+    float32 raises ``ValueError``; the counts are the caller's to
+    check (:func:`_check_counts`)."""
     spark, (id_col, vec_col) = h.spark, h.cols
     if source is None and h.kind != "ivf" and (
         vec is None or h.kind == "ivfpq"
@@ -1961,11 +1982,12 @@ def _ivf_indexed_search(
     if h.live is None:  # every row tombstoned + compacted: empty index
         return spark.createDataFrame([], empty)
     if vec is None:
-        q = _query_vectors(
+        tbl = _query_vectors(
             source if source is not None else h.live,
             query_ids, id_col, vec_col,
-        )
-        queries = _driver_vectors(q, "q_id", "_qvec")
+        ).toArrow()
+        q = spark.createDataFrame(tbl)  # a LocalRelation: no re-scan
+        queries = _driver_vectors(tbl, "q_id", "_qvec")
     cells = _probe_cells(h.cents, queries, n_probe)
     if not cells:  # zero-norm or absent queries: no probe map
         return spark.createDataFrame([], empty)
@@ -1993,8 +2015,9 @@ def _ivf_indexed_search(
             ),
         ).select("q_id", "cell_id", "s.sub", "s.qvec")
         return _adc_rerank(
-            cand, qslices, h.side["codebooks"], source, q, shortlist, k,
-            id_col, vec_col, single,
+            cand, qslices, ["q_id", "cell_id", "sub", "code"],
+            h.side["codebooks"], source, q, shortlist, k, id_col, vec_col,
+            single,
         )
     cand, qvec, qnrm = _with_query(cand, q)
     scored = cand.select(
@@ -2367,7 +2390,7 @@ def _residual(v: Column, c: Column) -> Column:
 
 
 def _residuals(assigned, cents, id_col, vec_col) -> DataFrame:
-    """``(id, cell_id, resid)``: every :func:`_assigned` row's
+    """``(id, cell_id, resid)``: every assigned row's
     :func:`_residual` against its centroid — what IVF-PQ trains its
     codebooks on and encodes. Persisted (``persist_tracked``):
     codebook training, the encode and the cell lookup all read it; the
@@ -2481,14 +2504,15 @@ def pq_topk_batch(
         "q_id", _sub_slices(F.col("_qvec"), n_sub, sub_dim, "qvec")
     ).select("q_id", "s.sub", "s.qvec")
     return _adc_rerank(
-        codes, q_slices, cbooks, embeddings, q, shortlist, k, id_col,
-        vec_col, len(set(query_ids)) == 1,
+        codes, q_slices, ["sub", "code"], cbooks, embeddings, q,
+        shortlist, k, id_col, vec_col, len(set(query_ids)) == 1,
     )
 
 
 def _adc_rerank(
     codes: DataFrame,
     qslices: DataFrame,
+    keys: list[str],
     codebooks: DataFrame,
     source: DataFrame,
     q,
@@ -2501,8 +2525,8 @@ def _adc_rerank(
     """The ADC shortlist and exact re-rank of flat PQ and IVF-PQ:
     each query's lookup table — its ``qslices`` ``(q_id, [cell_id,]
     sub, qvec)`` dotted with every codebook entry of the subspace,
-    rounded to 6 decimals — joins the ``codes`` on every key the two
-    share (``(sub, code)`` flat, ``(q_id, cell_id, sub, code)`` over
+    rounded to 6 decimals — joins the ``codes`` on ``keys``
+    (``(sub, code)`` flat, ``(q_id, cell_id, sub, code)`` over
     IVF-PQ's fanned-out candidates); the sum per (query, vector) runs
     in exact ``decimal(18,6)``, so addend order can never flip the
     shortlist boundary. Self-matches dropped, each query's
@@ -2516,7 +2540,6 @@ def _adc_rerank(
         .cast("decimal(18,6)")
         .alias("pd"),
     )
-    keys = [c for c in lut.columns if c in codes.columns]
     short = _topk(
         codes.join(F.broadcast(lut), keys)
         .filter(F.col(id_col) != F.col("q_id"))
@@ -2612,17 +2635,15 @@ def sq8_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """``(vec_id, codes: array<int>)`` — 4x smaller than float32 (the
-    arrays would pack to 1 byte/dim in a binary sink; int keeps them
-    oracle-comparable) — with ``cell_id`` kept when the rows carry it
-    (the index encoder's :func:`_assigned` rows). One scan,
+    """Every input column but the vector, then ``codes: array<int>`` —
+    4x smaller than float32 (the arrays would pack to 1 byte/dim in a
+    binary sink; int keeps them oracle-comparable). One scan,
     expression-only: the stats frame is a 1-row broadcast cross join,
     the per-dim encode runs inside codegen via a zip over the
     pre-zipped (min, step) pairs."""
     st = F.arrays_zip(F.col("vmin"), F.col("vstep"))
     return embeddings.crossJoin(F.broadcast(stats)).select(
-        id_col,
-        *[c for c in ("cell_id",) if c in embeddings.columns],
+        *[c for c in embeddings.columns if c != vec_col],
         F.zip_with(
             F.col(vec_col),
             st,
@@ -2721,6 +2742,7 @@ def ivf_sq8_topk(
     restricts candidates, never the quantizers); the code table is 4x
     smaller than the vectors, so the probed read is n_probe/n_cells
     of a quarter of the raw bytes. Scoring is :func:`sq8_topk`'s."""
+    _check_counts(k, n_probe)
     h = AnnIndex.train(embeddings, "ivfsq8", n_cells, id_col, vec_col)
     return _ivf_indexed_search(
         h, [query_vec_id], embeddings, n_probe, k, None
@@ -2763,7 +2785,7 @@ def sq8_reconstruction_report(
         6,
     )
     per_row = (
-        embeddings.join(codes, id_col)
+        embeddings.join(codes.select(id_col, "codes"), id_col)
         .crossJoin(F.broadcast(stats))
         .select(label_col, err2.alias("_err2"))
     )
@@ -2957,7 +2979,7 @@ def ivfpq_topk_batch(
     runs over a saved one:
 
     1. coarse: :func:`ivf_centroids`, collected once, and
-       :func:`_assigned` (broadcast argmin; vectors never shuffle),
+       :func:`_assigned` (broadcast argmin, one exchange),
     2. compress: residual ``v − centroid(cell)`` per vector, then
        :func:`pq_codebooks` / :func:`pq_encode` ON THE RESIDUALS —
        residuals are far more compressible than raw vectors, which
@@ -2979,6 +3001,7 @@ def ivfpq_topk_batch(
     :func:`ivfpq_topk_indexed`); raw vectors are read only for the
     ``shortlist`` point lookups.
     """
+    _check_counts(k, n_probe, shortlist)
     h = AnnIndex.train(
         embeddings, "ivfpq", n_cells, id_col, vec_col,
         n_sub=n_sub, sub_dim=sub_dim, n_codes=n_codes,
@@ -3343,12 +3366,13 @@ def embedding_novelty_indexed(
     the driver hash pins the pruned search exactly. Unlike the
     retrievers' :func:`_probe_cells`, which collects the queries and
     ranks every query's cells on the driver, the probe here stays a
-    Spark-side per-query rank window: the query set is a delta batch
-    that can be corpus-sized, so it cannot be collected to the driver
-    (only the union of probed cells, at most n_cells ids, is). The
-    recall-vs-threshold trade of probing is measured separately
-    (``ivf_probe_recall_sweep``), same as every indexed retriever
-    here. Verdicts mirror the exact operator: zero-norm delta
+    Spark-side per-query rank window (:func:`_topk`): the query set
+    is a delta batch that can be corpus-sized, so it cannot be
+    collected to the driver (only the union of probed cells, at most
+    n_cells ids, is); an ``n_probe`` below 1 raises ``ValueError``, as
+    in every IVF reader. The recall-vs-threshold trade of probing is
+    measured separately (``ivf_probe_recall_sweep``), same as every
+    indexed retriever here. Verdicts mirror the exact operator: zero-norm delta
     vectors drop (cosine undefined), zero-norm INDEX rows are
     excluded from scoring, and every surviving delta id gets a row —
     no candidates in the probed cells (empty index, empty probed
@@ -3365,6 +3389,7 @@ def embedding_novelty_indexed(
     """
     from bigdata_elephant_spark.session import maybe_broadcast
 
+    _search._check_count(n_probe, "n_probe")
     h = open_ann_index(spark, index_path, id_col, vec_col)
     if h.kind != "ivf":
         raise ValueError(
@@ -3376,22 +3401,13 @@ def embedding_novelty_indexed(
     # every row tombstoned + compacted: the empty index, no neighbor
     nn = local_relation(spark, [], "_nnid long, nn_sim double")
     if h.live is not None:
-        w_p = Window.partitionBy("q_id").orderBy(
-            F.col("d").asc(), F.col("cell_id").asc()
-        )
-        probes = (
-            h.centroids.crossJoin(maybe_broadcast(q, size_of=delta))
-            .select(
-                "q_id",
-                "cell_id",
-                F.round(_l2sq(F.col("cvec"), F.col("_qvec")), 6).alias(
-                    "d"
-                ),
-            )
-            .withColumn("_rn", F.row_number().over(w_p))
-            .filter(F.col("_rn") <= n_probe)
-            .select("q_id", "cell_id")
-        )
+        probes = _topk(
+            h.centroids.crossJoin(maybe_broadcast(q, size_of=delta)).select(
+                "q_id", "cell_id",
+                F.round(_l2sq(F.col("cvec"), F.col("_qvec")), 6).alias("d"),
+            ),
+            n_probe, [F.col("d"), F.col("cell_id")], False, "n_probe",
+        ).select("q_id", "cell_id")
         # union of probed cells: index METADATA (<= n_cells ints) —
         # the static partition filter on the cell-partitioned layout,
         # the same pruning as the IVF core's candidate stage

@@ -837,8 +837,8 @@ def _driver_probe(cents, q, n_probe) -> dict:
     from bigdata_elephant_spark.operators import similarity as sim
 
     return sim._probe_cells(
-        sim._driver_vectors(cents, "cell_id", "cvec"),
-        sim._driver_vectors(q, "q_id", "_qvec"),
+        sim._driver_vectors(cents.toArrow(), "cell_id", "cvec"),
+        sim._driver_vectors(q.toArrow(), "q_id", "_qvec"),
         n_probe,
     )
 
@@ -2218,6 +2218,36 @@ def test_updates_gate_delta_but_keep_dim_raise(spark, tmp_path, layout):
         update(spark, path, bad)
 
 
+@pytest.mark.parametrize("layout", ["ivf", "sq8"])
+def test_writes_keep_every_row_of_a_repeated_id(spark, tmp_path, layout):
+    """A build input or an append delta that repeats an id with two
+    different vectors stores both rows: the write path joins the rows
+    to their cells (``_joined_assignment``) instead of collapsing them
+    by id. The repeated vectors are base ones, so they stay inside the
+    IVF,SQ8 trained range."""
+    from bigdata_elephant_spark.operators import similarity as sim
+
+    build, update = _layout(layout)
+    rng = np.random.default_rng(5)
+    rows = [
+        (i, [float(x) for x in rng.normal(size=4).astype(np.float32)])
+        for i in range(20)
+    ]
+    schema = "vec_id long, embedding array<float>"
+    path = str(tmp_path / layout)
+    build(spark.createDataFrame(rows + [(7, rows[2][1])], schema), path,
+          n_cells=2)
+    update(spark, path, spark.createDataFrame(
+        [(50, rows[3][1]), (50, rows[4][1])], schema
+    ))
+    table = sim._LAYOUTS[sim.index_kind(path)][0]
+    stored = spark.read.parquet(sim._table_path(path, table)).collect()
+    assert len(stored) == 23
+    col = "embedding" if layout == "ivf" else "codes"
+    for i in (7, 50):
+        assert len({tuple(r[col]) for r in stored if r["vec_id"] == i}) == 2
+
+
 def test_builder_gate_survives_corrupt_first_row(spark, tmp_path):
     """r14 review finding: the dim probe must not read the RAW
     first row — a wrong-dim leading row would otherwise pin
@@ -2265,12 +2295,13 @@ def test_sq8_build_raises_on_fully_out_of_contract_corpus(spark, tmp_path):
         )
 
 
-def test_counts_rejected_at_entry(spark, sf_dir, tmp_path):
+def test_counts_rejected_at_entry(spark, sf_dir, tmp_path, count_jobs):
     """An out-of-range ``k`` (below 0), ``n_probe`` or ``shortlist``
-    (below 1) raises ``ValueError`` at every indexed reader's entry,
-    also where the answer would be empty — an absent query id, an
-    empty input — and before any index file is read (the quantized
-    readers get a path that does not exist)."""
+    (below 1) raises ``ValueError`` at every IVF-family entry, also
+    where the answer would be empty — an absent query id, an empty
+    input — before any index file is read (the quantized readers get
+    a path that does not exist) and before an inline query trains
+    anything: a refused call runs no Spark job."""
     from bigdata_elephant_spark.operators import similarity as sim
     from bigdata_elephant_spark.sources.corpus import read_table
 
@@ -2290,9 +2321,21 @@ def test_counts_rejected_at_entry(spark, sf_dir, tmp_path):
         ("n_probe", lambda: sim.ivfsq8_topk_indexed(
             spark, nowhere, 0, emb, n_probe=0)),
         ("k", lambda: sim.sq8_topk(emb.limit(0), 3, k=-1)),
-        ("n_probe", lambda: sim.ivf_sq8_topk(
-            emb.limit(0), 3, n_cells=4, n_probe=0)),
+        ("n_probe", lambda: sim.ivf_sq8_topk(emb, 3, n_cells=4, n_probe=0)),
+        ("k", lambda: sim.ivf_sq8_topk(emb, 3, n_cells=4, k=-1)),
+        ("n_probe", lambda: sim.ivf_topk(emb, 3, n_cells=4, n_probe=0)),
+        ("k", lambda: sim.ivf_topk_batch(emb, [3], n_cells=4, k=-1)),
+        ("n_probe", lambda: sim.ivfpq_topk_batch(
+            emb, [3], n_cells=4, n_probe=0)),
+        ("shortlist", lambda: sim.ivfpq_topk(
+            emb, 3, n_cells=4, shortlist=0)),
+        ("n_probe", lambda: sim.embedding_novelty_indexed(
+            spark, nowhere, emb, n_probe=0)),
     ]:
-        with pytest.raises(ValueError, match=f"{name} must be >= "):
-            call()
+
+        def refused():
+            with pytest.raises(ValueError, match=f"{name} must be >= "):
+                call()
+
+        assert count_jobs(refused) == 0, name
     assert sim.ivf_topk_indexed(spark, idx, 99999, k=0).collect() == []
